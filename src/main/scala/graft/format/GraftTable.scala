@@ -646,22 +646,21 @@ object GraftTable {
       // resolution rule shallow clones use: an absolute child wins in
       // `new Path(tableRoot, path)`)
       val rel = if (absolutePaths) dest.getFileSystem(conf).makeQualified(dest).toString
-                else relativize(spark, dest)
+                else relativize(dest)
       (FragmentMeta(id, rel, rows, len, version, stats,
         rowIdStart = start, rowIdStored = storedRowIds), dest)
     }
     (out.map(_._1), out.map(_._2))
   }
 
-  private def relativize(spark: SparkSession, p: Path): String = {
-    // table-relative: keep from "data/" onwards
-    val s = p.toString
-    val i = s.indexOf("/data/")
-    if (i >= 0) s.substring(i + 1)
-    else {
-      val j = s.indexOf("/deletes/")
-      if (j >= 0) s.substring(j + 1) else p.getName
-    }
+  /** Table-relative path of a fragment file. Every fragment lives at
+    * `<table>/data/<txn>/<file>` ([[stageFragments]]), so the path relative
+    * to the table root is its last three components — never a cut at the
+    * first `/data/` of the absolute path, which may belong to a directory
+    * ABOVE the table. */
+  private def relativize(p: Path): String = {
+    val txn = p.getParent
+    s"${txn.getParent.getName}/${txn.getName}/${p.getName}"
   }
 
   // ------------------------------------------------------------------ write
@@ -3593,7 +3592,7 @@ object GraftTable {
         if (txn.isDirectory) {
           var removed = false
           f.listStatus(txn.getPath).foreach { file =>
-            val rel = relativize(spark, file.getPath)
+            val rel = relativize(file.getPath)
             if (file.getPath.getName.endsWith(".parquet") &&
                 deletable(rel, file.getPath.toString, file.getModificationTime)) {
               filesRemoved += 1; bytesRemoved += file.getLen

@@ -673,13 +673,18 @@ object ScalarIndex {
   * full non-distinct trigram array, and a lambda invocation per position
   * for every document. Windows are CODE-POINT based, exactly like Spark's
   * `substr`/`length`, so the produced posting set is bit-identical to the
-  * r16 shape; fewer than 3 code points yields the empty array (the same
-  * `otherwise` arm the Column pipeline had). */
+  * r16 shape; fewer than 3 code points — or a NULL input — yields the
+  * empty array (the same `otherwise` arm the Column pipeline had). */
 case class TrigramSet(child: org.apache.spark.sql.catalyst.expressions.Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.types._
-  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = false
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    else nullSafeEval(v)
+  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "trigram_set"
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =

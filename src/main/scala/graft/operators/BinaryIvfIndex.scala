@@ -203,7 +203,8 @@ object BinaryIvfIndex {
   // ------------------------------------------------------------------
 
   val ServeCodesBudgetKey = "spark.graft.cache.hamming.serve.partitions"
-  private val serveCodes = new ServeCodesCache(ServeCodesBudgetKey, 256)
+  private val serveCodes =
+    new ServeCache[Array[(Long, Array[Byte])]](ServeCodesBudgetKey, 256)
   def currentServeCapacity: Int = serveCodes.currentCapacity
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
@@ -230,12 +231,12 @@ object BinaryIvfIndex {
 
   private def serveCodesPartition(spark: SparkSession, indexPath: String,
                                   idCol: String, vecCol: String,
-                                  pid: Int): Array[(Long, Array[Byte], Float)] =
+                                  pid: Int): Array[(Long, Array[Byte])] =
     serveCodes.getOrLoad(spark, indexPath, pid) {
       spark.read.parquet(s"$indexPath/vectors")
         .filter(col(PidCol) === pid)
         .select(col(idCol).cast("long"), col(vecCol)).collect()
-        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1), 0f))
+        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
     }
 
   /** Preload the serve cache; returns resident row count. */
@@ -244,10 +245,7 @@ object BinaryIvfIndex {
     ensureServeFresh(spark, indexPath)
     val model = serveModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
-    val cap = serveCodes.refresh(spark)
-    require(targets.size <= cap,
-      s"serveWarm(${targets.size} partitions) exceeds the code-cache budget " +
-        s"$cap — raise $ServeCodesBudgetKey or warm a pid subset")
+    serveCodes.requireFits(spark, targets.size, "code-cache")
     targets.map(p =>
       serveCodesPartition(spark, indexPath, idCol, vecCol, p).length.toLong).sum
   }
@@ -266,7 +264,7 @@ object BinaryIvfIndex {
     val keep = allowed.getOrElse((_: Long) => true)
     probes.iterator.flatMap { pid =>
       serveCodesPartition(spark, indexPath, idCol, vecCol, pid).iterator
-        .collect { case (id, bits, _) if keep(id) => (id, hamming(bits, query)) }
+        .collect { case (id, bits) if keep(id) => (id, hamming(bits, query)) }
     }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)
   }
 }

@@ -364,20 +364,12 @@ object HnswIndex {
           ColumnBridge.expression(col(PidCol)), model.centroids)))
         val pq = PqIndex.train(spaceDf, idCol, "__pq_space", pqM, pqK)
         PqIndex.writePq(spark, indexPath, pq)
-        val cents = model.centroids
-        Some((v, pid) => {
-          val c = cents(pid)
-          val r = new Array[Float](v.length)
-          var i = 0; while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
-          PqIndex.encodeVec(r, pq, pqBits)
-        })
+        Some(pqEncoder(pq, pqBits, Some(model.centroids)))
       case _ => None
     }
     writeGraphRows(df, idCol, vecCol, model.centroids, encode, m,
       efConstruction, s"$indexPath/graph")
-    val cents = model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    spark.createDataFrame(cents.toSeq).toDF("pid", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
+    IvfIndex.writeCentroids(spark, indexPath, model)
     model
   }
 
@@ -440,6 +432,20 @@ object HnswIndex {
       .write.mode(SaveMode.Overwrite).partitionBy(PidCol).parquet(outPath)
   }
 
+  /** PQ node encoder: residual space against the node's partition centroid
+    * when `centroids` is given, raw space otherwise. */
+  private def pqEncoder(pq: PqIndex.PqModel, bits: Int,
+                        centroids: Option[Array[Array[Float]]])
+      : (Array[Float], Int) => Array[Byte] = centroids match {
+    case Some(cents) => (v, pid) => {
+      val c = cents(pid)
+      val r = new Array[Float](v.length)
+      var i = 0; while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
+      PqIndex.encodeVec(r, pq, bits)
+    }
+    case None => (v, _) => PqIndex.encodeVec(v, pq, bits)
+  }
+
   /** The persisted codec's encoder, reloaded for delta builds — the delta
     * MUST encode with the ORIGINAL codec (and, for residual PQ, the
     * original centroids): retraining would silently shift the code space
@@ -451,17 +457,17 @@ object HnswIndex {
       val sq = SqIndex.loadSq(spark, indexPath)
       Some((v, _) => SqIndex.encodeVec(v, sq))
     case "pq" =>
-      val pq = PqIndex.loadPq(spark, indexPath)
-      val bits = IvfIndex.readPqBits(spark, indexPath)
-      if (IvfIndex.readPqVariant(spark, indexPath) == "residual")
-        Some((v, pid) => {
-          val c = centroids(pid)
-          val r = new Array[Float](v.length)
-          var i = 0; while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
-          PqIndex.encodeVec(r, pq, bits)
-        })
-      else Some((v, _) => PqIndex.encodeVec(v, pq, bits))
+      val meta = IvfIndex.vectorMeta(spark, indexPath)
+      Some(pqEncoder(PqIndex.loadPq(spark, indexPath), meta.pqBits,
+        if (meta.pqVariant == "residual") Some(centroids) else None))
     case _ => None
+  }
+
+  /** Manifest index type of a node storage. */
+  private def indexType(storage: String): String = storage match {
+    case "sq" => "IVF_HNSW_SQ"
+    case "pq" => "IVF_HNSW_PQ"
+    case _    => "IVF_HNSW"
   }
 
   /** Graph build params sidecar — lets [[optimizeForTable]] rebuild or
@@ -572,13 +578,8 @@ object HnswIndex {
         withRowId = idCol == graft.format.GraftTable.RowIdCol),
       idCol, vecCol, indexPath, nlist, m, efConstruction, metric, storage,
       pqM, pqK, pqBits)
-    val indexType = storage match {
-      case "sq" => "IVF_HNSW_SQ"
-      case "pq" => "IVF_HNSW_PQ"
-      case _    => "IVF_HNSW"
-    }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      indexType, vecCol, mf,
+      indexType(storage), vecCol, mf,
       Map("idCol" -> idCol, "nlist" -> nlist.toString, "m" -> m.toString,
         "efConstruction" -> efConstruction.toString, "metric" -> metric,
         "storage" -> storage) ++
@@ -615,10 +616,9 @@ object HnswIndex {
     // manifest params win; bare index dirs fall back to the build sidecar
     val params = readHnswParams(spark, indexPath) ++
       entry.map(_.params).getOrElse(Map.empty[String, String])
-    val storage = params.getOrElse("storage",
-      IvfIndex.readVectorStorage(spark, indexPath))
-    val metric = params.getOrElse("metric",
-      IvfIndex.readVectorMeta(spark, indexPath))
+    lazy val meta = IvfIndex.vectorMeta(spark, indexPath)
+    val storage = params.getOrElse("storage", meta.storage)
+    val metric = params.getOrElse("metric", meta.metric)
     val m = params.getOrElse("m", "16").toInt
     val efc = params.getOrElse("efConstruction", "64").toInt
     // compaction retired covered fragments: REMAP every generation's
@@ -630,11 +630,6 @@ object HnswIndex {
       if (covered.diff(liveIds).isEmpty) covered
       else remapGraphs(spark, tablePath, mf, indexPath, idCol)
     val freshFrags = mf.fragments.filterNot(f => coveredNow.contains(f.id))
-    val indexType = storage match {
-      case "sq" => "IVF_HNSW_SQ"
-      case "pq" => "IVF_HNSW_PQ"
-      case _    => "IVF_HNSW"
-    }
     if (freshFrags.nonEmpty) {
       // a prior merge whose process died mid-swap is finished forward
       // before anything lists generations
@@ -665,7 +660,7 @@ object HnswIndex {
       invalidateCache(indexPath)
     }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      indexType, vecCol, mf, params ++ Map("idCol" -> idCol))
+      indexType(storage), vecCol, mf, params ++ Map("idCol" -> idCol))
     freshFrags.map(_.rows).sum
   }
 
@@ -853,27 +848,21 @@ object HnswIndex {
     * ([[ServeCacheBudgetKey]], LRU) — at ~sqrt(n)-sized IVF partitions a
     * budget of 64 holds ~64·sqrt(n) nodes resident. */
   val ServeCacheBudgetKey = "spark.graft.cache.hnsw.serve.partitions"
-  @volatile private var serveCapacity = 64
-  def currentServeCapacity: Int = serveCapacity
-  val serveHits = new java.util.concurrent.atomic.AtomicLong(0)
-  val serveMisses = new java.util.concurrent.atomic.AtomicLong(0)
-  def serveCacheSize: Int = serveGraphs.synchronized(serveGraphs.size())
   // Node payload is Array[Float] under flat storage or Array[Byte] (SQ /
   // PQ codes) under quantized storage — [[searchGraph]] is generic in it.
   // The entry's second slot is the per-partition float lookup a quantized
   // graph's refine pass reads (null under flat storage, where the payload
   // IS the float vector); loading it with the codes costs the SAME one
   // pruned read, and keeps the "zero Spark jobs warm" contract the other
-  // serve paths honor — the PQ/SQ serve twins make the identical
+  // serve paths honor — the PQ/SQ serve paths make the identical
   // memory-for-latency trade through [[IvfIndex.servePartition]].
   private type ServeGraph = mutable.Map[Long, (AnyRef, Int, Array[Array[Long]], Boolean)]
   private type ServeEntry = (Seq[ServeGraph], java.util.HashMap[Long, Array[Float]])
-  private val serveGraphs =
-    new java.util.LinkedHashMap[(String, Int), ServeEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), ServeEntry]): Boolean =
-        size() > serveCapacity
-    }
+  private val serveGraphs = new ServeCache[ServeEntry](ServeCacheBudgetKey, 64)
+  def currentServeCapacity: Int = serveGraphs.currentCapacity
+  val serveHits: java.util.concurrent.atomic.AtomicLong = serveGraphs.hits
+  val serveMisses: java.util.concurrent.atomic.AtomicLong = serveGraphs.misses
+  def serveCacheSize: Int = serveGraphs.size
   /** Per-index serve state: IVF model + metric + node storage kind, plus
     * the quantized codec (SQ bounds or PQ codebook/bits/variant) when the
     * graph carries codes. */
@@ -886,108 +875,76 @@ object HnswIndex {
 
   /** Drop an index's driver-resident serve state (after optimize/rebuild,
     * or to release driver memory). */
-  def serveUnpersist(indexPath: String): Unit = serveGraphs.synchronized {
+  def serveUnpersist(indexPath: String): Unit = {
     serveModels.remove(indexPath)
     serveFresh.forget(indexPath)
-    val it = serveGraphs.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == indexPath) it.remove()
+    serveGraphs.purge(indexPath)
   }
 
   // Staleness guard (r15, VERDICT r14 #7): the serve LRU is keyed on
   // (indexPath, pid), so a DROP + retrain at the same path would keep
   // serving the dead index's partitions. Every serveLocal/serveWarm first
-  // compares the index's on-disk epoch — ONE root listing, child
-  // name:len:mtime, which moves on base-graph Overwrite (the graph/ dir is
-  // recreated), delta add/merge/drop (the name set changes), and retrain —
-  // against the epoch the resident entries were loaded under, and purges
-  // the index's graphs + model on mismatch. Granularity caveat: a rebuild
-  // completing within the same millisecond with identical child names and
-  // lengths is indistinguishable; real rebuilds rewrite part files over
-  // many ms. Cost: one fs listing per query, the same order as the
-  // centroid-cache fingerprint the batched path already pays.
-  // r16 (ADVICE r15 #4): bounded deep listing ([[ServeEpoch]]) so nested
-  // file rewrites move the token on object stores too; the guard itself
-  // is the shared [[ServeFreshness]].
-  private val serveFresh = new ServeFreshness(p => serveGraphs.synchronized {
+  // compares the index's on-disk epoch — [[ServeEpoch]]'s bounded deep
+  // listing (r16, ADVICE r15 #4), which moves on base-graph Overwrite,
+  // delta add/merge/drop and retrain, also for nested file rewrites on
+  // object stores — against the epoch the resident entries were loaded
+  // under, and purges the index's graphs + model on mismatch.
+  // Granularity caveat: a rebuild completing within the same millisecond
+  // with identical names and lengths is indistinguishable; real rebuilds
+  // rewrite part files over many ms.
+  private val serveFresh = new ServeFreshness(p => {
     serveModels.remove(p)
-    val it = serveGraphs.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == p) it.remove()
+    serveGraphs.purge(p)
   })
   private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)
 
   private def serveModel(spark: SparkSession, indexPath: String): ServeState =
     serveModels.computeIfAbsent(indexPath, { _ =>
-      val base = ServeState(IvfIndex.loadModel(spark, indexPath),
-        IvfIndex.readVectorMeta(spark, indexPath),
-        IvfIndex.readVectorStorage(spark, indexPath))
+      val meta = IvfIndex.vectorMeta(spark, indexPath)
+      val base = ServeState(IvfIndex.loadModel(spark, indexPath), meta.metric,
+        meta.storage)
       base.storage match {
         case "flat" => base
         case "sq" => base.copy(sq = SqIndex.loadSq(spark, indexPath))
         case "pq" => base.copy(pq = PqIndex.loadPq(spark, indexPath),
-          pqBits = IvfIndex.readPqBits(spark, indexPath),
-          pqVariant = IvfIndex.readPqVariant(spark, indexPath))
+          pqBits = meta.pqBits, pqVariant = meta.pqVariant)
         case other => throw new IllegalArgumentException(
           s"serveLocal: unknown node storage '$other' at $indexPath")
       }
     })
 
-  private def refreshServeCapacity(spark: SparkSession): Int = {
-    val cap = math.max(1,
-      scala.util.Try(spark.conf.get(ServeCacheBudgetKey, "64").toInt).getOrElse(64))
-    // a SHRUNK budget releases driver memory NOW (ADVICE r14): evict LRU
-    // entries down to the new capacity under the lock, instead of waiting
-    // for removeEldestEntry to reap one entry per future cold load
-    if (cap < serveCapacity) serveGraphs.synchronized {
-      serveCapacity = cap
-      val it = serveGraphs.entrySet().iterator() // access-order: LRU first
-      while (serveGraphs.size() > cap && it.hasNext) { it.next(); it.remove() }
-    } else serveCapacity = cap
-    cap
-  }
-
+  // the cold path's ONE ranged read runs outside the cache lock
+  // ([[ServeCache.getOrLoad]]): pid is a pushed-down parquet predicate, so
+  // only the partition's row groups are touched; a quantized graph reads
+  // codes (the beam payload) AND vec (the refine lookup) in the same pass
   private def servePartition(spark: SparkSession, indexPath: String,
-                             pid: Int, storage: String): ServeEntry = {
-    refreshServeCapacity(spark)
-    // fast path under the lock; the COLD read runs OUTSIDE it — a
-    // multi-hundred-ms Spark collect must not block concurrent warm
-    // queries on unrelated partitions (a racing duplicate load is benign:
-    // last put wins, same content)
-    serveGraphs.synchronized {
-      val hit = serveGraphs.get((indexPath, pid))
-      if (hit != null) { serveHits.incrementAndGet(); return hit }
+                             pid: Int, storage: String): ServeEntry =
+    serveGraphs.getOrLoad(spark, indexPath, pid) {
+      val quant = storage != "flat"
+      val refine =
+        if (quant) new java.util.HashMap[Long, Array[Float]]() else null
+      val dirs = "graph" +: deltaDirs(spark, indexPath)
+      val loaded = dirs.map { d =>
+        val cols = Seq(col("id"),
+          (if (quant) col("codes") else col("vec")).as("__payload"),
+          col("level"), col("nbrs")) ++ (if (quant) Seq(col("vec")) else Nil)
+        val rows = spark.read.parquet(s"$indexPath/$d")
+          .filter(col(PidCol) === pid)
+          .select(cols: _*)
+          .collect()
+        val g: ServeGraph = mutable.Map.empty
+        rows.foreach { r =>
+          val payload: AnyRef =
+            if (quant) r.getAs[Array[Byte]](1) else r.getSeq[Float](1).toArray
+          g(r.getLong(0)) = (payload, r.getInt(2),
+            r.getSeq[scala.collection.Seq[Long]](3).map(_.toArray).toArray, false)
+          if (quant) refine.put(r.getLong(0), r.getSeq[Float](4).toArray)
+        }
+        g
+      }.filter(_.nonEmpty)
+      (loaded, refine)
     }
-    serveMisses.incrementAndGet()
-    val quant = storage != "flat"
-    val refine =
-      if (quant) new java.util.HashMap[Long, Array[Float]]() else null
-    // the cold path's ONE ranged read: pid is a pushed-down parquet
-    // predicate, so only the partition's row groups are touched; a
-    // quantized graph reads codes (the beam payload) AND vec (the refine
-    // lookup) in the same pass
-    val dirs = "graph" +: deltaDirs(spark, indexPath)
-    val loaded = dirs.map { d =>
-      val cols = Seq(col("id"),
-        (if (quant) col("codes") else col("vec")).as("__payload"),
-        col("level"), col("nbrs")) ++ (if (quant) Seq(col("vec")) else Nil)
-      val rows = spark.read.parquet(s"$indexPath/$d")
-        .filter(col(PidCol) === pid)
-        .select(cols: _*)
-        .collect()
-      val g: ServeGraph = mutable.Map.empty
-      rows.foreach { r =>
-        val payload: AnyRef =
-          if (quant) r.getAs[Array[Byte]](1) else r.getSeq[Float](1).toArray
-        g(r.getLong(0)) = (payload, r.getInt(2),
-          r.getSeq[scala.collection.Seq[Long]](3).map(_.toArray).toArray, false)
-        if (quant) refine.put(r.getLong(0), r.getSeq[Float](4).toArray)
-      }
-      g
-    }.filter(_.nonEmpty)
-    val entry: ServeEntry = (loaded, refine)
-    serveGraphs.synchronized { serveGraphs.put((indexPath, pid), entry) }
-    entry
-  }
 
   /** Preload the serve cache for an index — every partition (default) or a
     * chosen subset; returns resident node count. Books the cold-read cost
@@ -998,13 +955,7 @@ object HnswIndex {
     ensureServeFresh(spark, indexPath)
     val st = serveModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until st.model.nlist
-    // warming more partitions than the LRU can hold would evict most of
-    // what was just loaded and report an inflated resident count while
-    // every later query pays cold reads anyway — fail fast instead
-    val cap = refreshServeCapacity(spark)
-    require(targets.size <= cap,
-      s"serveWarm(${targets.size} partitions) exceeds the serve budget " +
-        s"$cap — raise $ServeCacheBudgetKey or warm a pid subset")
+    serveGraphs.requireFits(spark, targets.size, "serve")
     targets.map(p =>
       servePartition(spark, indexPath, p, st.storage)._1.map(_.size.toLong).sum).sum
   }
@@ -1113,7 +1064,7 @@ object HnswIndex {
         // for the refine pass only (the whole point of quantized node
         // storage)
         val payload =
-          if (IvfIndex.readVectorStorage(spark, indexPath) != "flat") col("codes")
+          if (IvfIndex.vectorMeta(spark, indexPath).storage != "flat") col("codes")
           else col("vec")
         // base graph = generation 0; each delta-optimize dataset is its own
         // generation: (pid, gen) pairs beam independently and merge in the
@@ -1148,8 +1099,9 @@ object HnswIndex {
              distanceRange: Option[(Double, Double)] = None): DataFrame = {
     import spark.implicits._
     val model = IvfIndex.loadModel(spark, s"$indexPath")
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val storage = IvfIndex.readVectorStorage(spark, indexPath)
+    val meta = IvfIndex.vectorMeta(spark, indexPath)
+    val metric = meta.metric
+    val storage = meta.storage
     val query2 = if (metric == "cosine") IvfIndex.normalize(query) else query
     val probes = model.rank(query2).take(math.min(nprobes, model.nlist))
     val efq = math.max(ef, k)
@@ -1164,7 +1116,7 @@ object HnswIndex {
       // graph, then exact refine: survivors' float vectors are read from
       // the graph parquet (column-pruned to id+vec, semi-joined to
       // ≤ k·refineFactor candidate ids) and re-ranked exactly — same
-      // two-pass contract as [[SqIndex.search]]/[[PqIndex.search]], with
+      // two-pass contract as [[IvfQuantized.search]], with
       // the beam replacing the partition scan.
       // distance closure per PARTITION: residual-PQ graphs rank against a
       // per-probed-pid ADC table over q − centroid(pid) (nprobes·m·k
@@ -1174,9 +1126,9 @@ object HnswIndex {
           val sq = SqIndex.loadSq(spark, indexPath)
           val lo = sq.lo; val step = sq.steps
           _ => c => SqIndex.adc(query2, c, lo, step)
-        } else if (IvfIndex.readPqVariant(spark, indexPath) == "residual") {
+        } else if (meta.pqVariant == "residual") {
           val pq = PqIndex.loadPq(spark, indexPath)
-          val bits = IvfIndex.readPqBits(spark, indexPath)
+          val bits = meta.pqBits
           val tables: Map[Int, Array[Array[Float]]] = probes.map { p =>
             val cent = model.centroids(p)
             p -> pq.adcTable(Array.tabulate(query2.length)(i => query2(i) - cent(i)))
@@ -1188,7 +1140,7 @@ object HnswIndex {
         } else {
           // per-query lookup table (pqM × pqK floats) ships to tasks once
           val table = PqIndex.loadPq(spark, indexPath).adcTable(query2)
-          val bits = IvfIndex.readPqBits(spark, indexPath)
+          val bits = meta.pqBits
           _ => c => PqIndex.adc(table, c, bits)
         }
       // (pid, gen) keys: each delta generation is an independent sub-graph

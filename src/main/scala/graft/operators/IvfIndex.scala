@@ -30,9 +30,10 @@ import org.apache.spark.sql.types._
   *    the data — the 100 TB path. With nprobes = nlist the result is
   *    EXACTLY flat search (gate-checkable against the brute-force oracle).
   *
-  * [[PqIndex]] adds PQ sub-quantization within partitions (`vector/pq/`)
-  * and [[HnswIndex]] adds per-partition graph sub-indexes (`vector/hnsw/`);
-  * all three share this coarse IVF layout.
+  * [[IvfQuantized]] adds a quantizer's codes within partitions (PQ, SQ,
+  * RQ: `vector/pq/`, `sq/`, `bq/`) and [[HnswIndex]] adds per-partition
+  * graph sub-indexes (`vector/hnsw/`); all of them share this coarse IVF
+  * layout.
   */
 object IvfIndex {
   val PidCol = "__ivf_pid"
@@ -180,11 +181,17 @@ object IvfIndex {
     * free re-index without re-running training. */
   def saveModelTo(spark: SparkSession, modelPath: String, model: Model,
                   metric: String = "l2"): Unit = {
-    val rows = model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    spark.createDataFrame(rows.toSeq).toDF("pid", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$modelPath/centroids")
+    writeCentroids(spark, modelPath, model)
     writeVectorMeta(spark, modelPath, metric)
   }
+
+  /** Persist centroids under `path/centroids` ([[loadModel]]'s layout),
+    * shared by every IVF-family index directory and standalone models. */
+  private[operators] def writeCentroids(spark: SparkSession, path: String,
+                                        model: Model): Unit =
+    spark.createDataFrame(model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq)
+      .toDF("pid", "centroid")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
 
   /** Train centroids over a table column and persist them standalone —
     * the train-once half of the precomputed-model flow (reference
@@ -229,21 +236,15 @@ object IvfIndex {
   def build(df: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, maxIter: Int = 10,
             precomputed: Option[Model] = None): Model = {
-    val f16 = isF16(df, vecCol)
-    val trainDf =
-      if (f16) df.withColumn(vecCol, floatSide(df, vecCol)) else df
     val model = precomputed match {
       case Some(m) => requireDim(m, df, vecCol); m
-      case None => train(trainDf, idCol, vecCol, nlist, maxIter)
+      case None => train(floatView(df, vecCol), idCol, vecCol, nlist, maxIter)
     }
     val assigned = df.withColumn(PidCol,
       ColumnBridge.column(IvfAssign(
         ColumnBridge.expression(floatSide(df, vecCol)), model.centroids)))
     assigned.write.mode(SaveMode.Overwrite).partitionBy(PidCol).parquet(s"$indexPath/vectors")
-    val spark = df.sparkSession
-    val rows = model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    spark.createDataFrame(rows.toSeq).toDF("pid", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
+    writeCentroids(df.sparkSession, indexPath, model)
     model
   }
 
@@ -296,8 +297,9 @@ object IvfIndex {
   // Driver-local single-query serving (r14) — the IVF_FLAT twin of
   // [[HnswIndex.serveLocal]] for the interactive regime: centroids rank
   // on the driver (the loadModel cache), probed partitions' (id, vec)
-  // rows come from a driver-local LRU (each cold partition costs ONE
-  // directory-pruned read of `vectors/` — it is partitioned BY pid), and
+  // rows come from a driver-local [[ServeCache]] (each cold partition costs
+  // ONE directory-pruned read of `vectors/` — it is partitioned BY pid;
+  // the quantized families refine from the same LRU), and
   // ranking is an exact brute-force scan replicating [[Knn.flatSearch]]'s
   // kernel arithmetic bit-for-bit. Zero Spark jobs once warm. Float
   // storage only; serves the index dataset as-is (no DV/coverage
@@ -305,56 +307,30 @@ object IvfIndex {
   // ------------------------------------------------------------------
 
   val ServeCacheBudgetKey = "spark.graft.cache.ivf.serve.partitions"
-  @volatile private var serveCapacity = 64
-  def currentServeCapacity: Int = serveCapacity
-  val serveHits = new java.util.concurrent.atomic.AtomicLong(0)
-  val serveMisses = new java.util.concurrent.atomic.AtomicLong(0)
-  def serveCacheSize: Int = serveRows.synchronized(serveRows.size())
   private val serveRows =
-    new java.util.LinkedHashMap[(String, Int), Array[(Long, Array[Float])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), Array[(Long, Array[Float])]]): Boolean =
-        size() > serveCapacity
-    }
+    new ServeCache[Array[(Long, Array[Float])]](ServeCacheBudgetKey, 64)
+  def currentServeCapacity: Int = serveRows.currentCapacity
+  val serveHits: java.util.concurrent.atomic.AtomicLong = serveRows.hits
+  val serveMisses: java.util.concurrent.atomic.AtomicLong = serveRows.misses
+  def serveCacheSize: Int = serveRows.size
 
   /** Drop an index's driver-resident serve rows (after rebuild/optimize). */
-  def serveUnpersist(indexPath: String): Unit = serveRows.synchronized {
+  def serveUnpersist(indexPath: String): Unit = {
     serveFresh.forget(indexPath)
     serveStorageF16.remove(indexPath)
-    val it = serveRows.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == indexPath) it.remove()
+    serveRows.purge(indexPath)
   }
 
-  // Staleness guard (r15, VERDICT r14 #7) — the HNSW twin's design: the
-  // serve LRU would otherwise keep serving a dropped/retrained index's
-  // partitions from (indexPath, pid) keys. One root listing per
-  // serveLocal/serveWarm (child name:len:mtime — Overwrite recreates
-  // vectors/, retrain rewrites centroids/) purges the index's rows on
-  // mismatch. The model itself is already fingerprint-guarded inside
-  // loadModel.
-  // r16 (ADVICE r15 #4): the epoch is [[ServeEpoch]]'s bounded deep listing,
-  // not a one-level root listing — object-store rebuilds that only rewrite
-  // files nested under vectors/__ivf_pid=N/ still move the token. The
-  // guard itself is the shared [[ServeFreshness]].
-  private val serveFresh = new ServeFreshness(p => serveRows.synchronized {
-    val it = serveRows.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == p) it.remove()
-  })
+  // Staleness guard (r15, VERDICT r14 #7): the serve LRU would otherwise
+  // keep serving a dropped/retrained index's partitions from (indexPath,
+  // pid) keys. The epoch is [[ServeEpoch]]'s bounded deep listing (r16,
+  // ADVICE r15 #4 — object-store rebuilds that only rewrite files nested
+  // under vectors/__ivf_pid=N/ still move the token); on mismatch the
+  // index's rows are purged. The model itself is already
+  // fingerprint-guarded inside loadModel.
+  private val serveFresh = new ServeFreshness(serveRows.purge)
   private[operators] def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)
-
-  private def refreshServeCapacity(spark: SparkSession): Int = {
-    val cap = math.max(1,
-      scala.util.Try(spark.conf.get(ServeCacheBudgetKey, "64").toInt).getOrElse(64))
-    // shrinking the budget releases memory immediately (ADVICE r14), same
-    // as the HNSW twin: evict LRU-first down to the new capacity
-    if (cap < serveCapacity) serveRows.synchronized {
-      serveCapacity = cap
-      val it = serveRows.entrySet().iterator() // access-order: LRU first
-      while (serveRows.size() > cap && it.hasNext) { it.next(); it.remove() }
-    } else serveCapacity = cap
-    cap
-  }
 
   // storage flavor of an index's resident partitions (r16: f16 serving —
   // the last "falls back to batched" storage refusal). Set on first
@@ -367,25 +343,17 @@ object IvfIndex {
 
   private[operators] def servePartition(spark: SparkSession, indexPath: String,
                              idCol: String, vecCol: String,
-                             pid: Int): Array[(Long, Array[Float])] = {
-    refreshServeCapacity(spark)
-    // cold read OUTSIDE the lock (see HnswIndex.servePartition): a racing
-    // duplicate load is benign, a blocked warm query is not
-    serveRows.synchronized {
-      val hit = serveRows.get((indexPath, pid))
-      if (hit != null) { serveHits.incrementAndGet(); return hit }
-    }
-    serveMisses.incrementAndGet()
-    val df = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col(PidCol) === pid)
-    // packed f16 storage (r16): decode ONCE at load into resident floats.
-    // Every decoded value is an exact f16, and the batched kernels
-    // ([[graft.functions.F16L2Distance]] etc.) also just decode-and-widen
-    // per element, so [[serveDist]] over these floats with an f16-ROUNDED
-    // query ([[serveLocal]]) is bit-identical to the batched f16 ranking.
-    val f16 = isF16(df, vecCol)
-    serveStorageF16.put(indexPath, f16)
-    val rows =
+                             pid: Int): Array[(Long, Array[Float])] =
+    serveRows.getOrLoad(spark, indexPath, pid) {
+      val df = spark.read.parquet(s"$indexPath/vectors")
+        .filter(col(PidCol) === pid)
+      // packed f16 storage (r16): decode ONCE at load into resident floats.
+      // Every decoded value is an exact f16, and the batched kernels
+      // ([[graft.functions.F16L2Distance]] etc.) also just decode-and-widen
+      // per element, so [[serveDist]] over these floats with an f16-ROUNDED
+      // query ([[serveLocal]]) is bit-identical to the batched f16 ranking.
+      val f16 = isF16(df, vecCol)
+      serveStorageF16.put(indexPath, f16)
       if (f16)
         df.select(col(idCol).cast("long"), col(vecCol)).collect()
           .map(r => (r.getLong(0),
@@ -393,9 +361,7 @@ object IvfIndex {
       else
         df.select(col(idCol).cast("long"), col(vecCol)).collect()
           .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    serveRows.synchronized { serveRows.put((indexPath, pid), rows) }
-    rows
-  }
+    }
 
   /** Preload the serve cache (all partitions by default); returns resident
     * row count. */
@@ -404,10 +370,7 @@ object IvfIndex {
     ensureServeFresh(spark, indexPath)
     val model = loadModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
-    val cap = refreshServeCapacity(spark)
-    require(targets.size <= cap,
-      s"serveWarm(${targets.size} partitions) exceeds the serve budget " +
-        s"$cap — raise $ServeCacheBudgetKey or warm a pid subset")
+    serveRows.requireFits(spark, targets.size, "serve")
     targets.map(p => servePartition(spark, indexPath, idCol, vecCol, p).length.toLong).sum
   }
 
@@ -540,10 +503,6 @@ object IvfIndex {
         m.fragments.filter(_.addedVersion <= vi).map(_.id).toSet
     }
 
-  /** Keep only candidate rows whose fragment still exists in the snapshot —
-    * the compaction guard (rewritten fragments get NEW ids, so rows filed
-    * under a dead id are duplicates of rows the flat side now serves).
-    * Small id sets inline as an `isin`; larger ones broadcast-semi-join. */
   /** addr-frame split by fragment-id membership: isin for small sets,
     * broadcast semi/anti joins beyond the same 1000-id bound
     * [[liveFragmentFilter]] uses (a many-thousand-literal `In()` costs
@@ -563,6 +522,10 @@ object IvfIndex {
     }
   }
 
+  /** Keep only candidate rows whose fragment still exists in the snapshot —
+    * the compaction guard (rewritten fragments get NEW ids, so rows filed
+    * under a dead id are duplicates of rows the flat side now serves).
+    * Small id sets inline as an `isin`; larger ones broadcast-semi-join. */
   private[operators] def liveFragmentFilter(spark: SparkSession, df: DataFrame,
                                             keepIds: Set[Long]): DataFrame = {
     val addrCol = graft.format.GraftTable.RowAddrCol
@@ -728,15 +691,18 @@ object IvfIndex {
           .otherwise(v))
     }
 
-  /** Per-index vector metadata sidecar (build metric + node storage codec),
-    * so search paths serve what the index was built for. Absent marker =
-    * legacy l2/flat index. */
+  private val VectorMetaFile = "_GRAFT_VECTOR_META"
+
+  /** Per-index vector metadata sidecar `_GRAFT_VECTOR_META` (build metric,
+    * node storage codec, PQ code space and width), so search paths serve
+    * what the index was built for. The PQ fields are written only when they
+    * differ from the legacy defaults. */
   private[graft] def writeVectorMeta(spark: SparkSession, indexPath: String,
                                          metric: String,
                                          storage: String = "flat",
                                          pqVariant: String = "",
                                          pqBits: Int = 8): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_GRAFT_VECTOR_META")
+    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$VectorMetaFile")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
     val pqField = if (pqVariant.isEmpty) "" else s""", "pq": "$pqVariant""""
@@ -747,55 +713,43 @@ object IvfIndex {
     finally out.close()
   }
 
-  /** PQ code space the index was built with ("residual" | "raw"). Absent
-    * field (legacy / non-PQ indexes) reads as "raw". */
-  private[graft] def readPqVariant(spark: SparkSession, indexPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_GRAFT_VECTOR_META")
+  /** The sidecar's fields. `pqVariant` is the PQ code space ("residual" |
+    * "raw"); `pqBits` the PQ code width (reference `num_bits`,
+    * `rust/lance-index/src/vector/pq.rs:44`: 4 = two nibble codes per
+    * byte, 8 = one per byte). An absent file or field reads as the legacy
+    * default: l2 / flat / raw / 8. */
+  private[graft] case class VectorMeta(metric: String = "l2", storage: String = "flat",
+                                       pqVariant: String = "raw", pqBits: Int = 8)
+
+  /** Read the sidecar once (one open; no existence probe). */
+  private[graft] def vectorMeta(spark: SparkSession, indexPath: String): VectorMeta = {
+    import org.json4s._
+    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$VectorMetaFile")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) "raw"
-    else {
-      val in = fs.open(p)
-      val s = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      "\"pq\"\\s*:\\s*\"(\\w+)\"".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("raw")
+    val in = try fs.open(p) catch { case _: java.io.FileNotFoundException => return VectorMeta() }
+    val json = try org.json4s.jackson.JsonMethods.parse(in) finally in.close()
+    def str(field: String, dflt: String): String = json \ field match {
+      case JString(v) => v
+      case _ => dflt
     }
+    VectorMeta(str("metric", "l2"), str("storage", "flat"), str("pq", "raw"),
+      json \ "pq_bits" match {
+        case JInt(b) => b.toInt
+        case _ => 8
+      })
   }
 
-  /** PQ code width the index stores (reference `num_bits`,
-    * `rust/lance-index/src/vector/pq.rs:44`): 4 = two nibble codes per
-    * byte, 8 = one per byte. Absent field (legacy) reads as 8. */
-  private[graft] def readPqBits(spark: SparkSession, indexPath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_GRAFT_VECTOR_META")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 8
-    else {
-      val in = fs.open(p)
-      val s = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      "\"pq_bits\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(8)
-    }
-  }
+  /** The index's build metric ([[vectorMeta]]`.metric`). */
+  private[graft] def readVectorMeta(spark: SparkSession, indexPath: String): String =
+    vectorMeta(spark, indexPath).metric
 
-  /** Node storage codec the index was built with ("flat" | "sq"). */
-  private[operators] def readVectorStorage(spark: SparkSession, indexPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_GRAFT_VECTOR_META")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) "flat"
-    else {
-      val in = fs.open(p)
-      val s = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      "\"storage\"\\s*:\\s*\"(\\w+)\"".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("flat")
-    }
-  }
+  /** [[vectorMeta]]`.pqVariant`. */
+  private[graft] def readPqVariant(spark: SparkSession, indexPath: String): String =
+    vectorMeta(spark, indexPath).pqVariant
 
-  private[graft] def readVectorMeta(spark: SparkSession, indexPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_GRAFT_VECTOR_META")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) "l2"
-    else {
-      val in = fs.open(p)
-      val s = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      "\"metric\"\\s*:\\s*\"(\\w+)\"".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("l2")
-    }
-  }
+  /** [[vectorMeta]]`.pqBits`. */
+  private[graft] def readPqBits(spark: SparkSession, indexPath: String): Int =
+    vectorMeta(spark, indexPath).pqBits
 
   /** Metadata-only serving decision for retired coverage (reference
     * `defer_index_remap` + FragReuseIndex, `optimize.rs:155-166`):
@@ -887,7 +841,7 @@ object IvfIndex {
   }
 
   /** Shared combined-search skeleton for EVERY index family (IVF_FLAT here;
-    * [[PqIndex.searchCombined]] / [[SqIndex.searchCombined]] reuse it;
+    * [[IvfQuantized.searchCombined]] reuses it for PQ/SQ/RQ;
     * [[HnswIndex.searchCombined]] mirrors it with graph-specific routing):
     * builds the DV/liveness candidate transform, runs the family's indexed
     * search with it, and unions a flat search over fragments the index does

@@ -8,24 +8,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** IVF_PQ: product quantization inside IVF partitions.
-  *
-  * Capability mirror of the reference's PQ family
-  * (`rust/lance-index/src/vector/pq/`, ~2,616 LoC; search pattern
+/** IVF_PQ: product quantization inside IVF partitions — the
+  * [[IvfQuantized]] skeleton with PQ codes (reference
+  * `rust/lance-index/src/vector/pq/`, ~2,616 LoC; search pattern
   * `ANNIvfSubIndexExec`, `io/exec/knn.rs:579`; refine `scanner.rs:1194`):
   *
   *  - **train**: per-subspace k-means codebooks on a driver-side sample
   *    (deterministic Lloyd's, same recipe as [[IvfIndex.train]]).
-  *  - **encode**: one distributed pass, [[PqEncode]] → `m` one-byte codes
-  *    per vector; stored next to `__ivf_pid` in the partitioned index
-  *    dataset. A 64-dim float vector (256 B) becomes 8 B — the IO ratio
-  *    that makes the ADC pass cheap at 100 TB.
-  *  - **search** (two column-pruned passes over only the probed partitions):
-  *    pass 1 reads (id, codes) and ranks by ADC — asymmetric distance
-  *    computed against a per-query lookup table ([[PqAdc]]) — keeping
-  *    k·refineFactor candidates; pass 2 re-reads (id, vector) for the
-  *    candidates only (semi join) and re-ranks by exact distance
-  *    (the reference's `refine_factor` step).
+  *  - **encode** ([[PqEncode]]): `m` one-byte codes per vector (or ⌈m/2⌉
+  *    at 4 bits) in `__pq_codes`. A 64-dim float vector (256 B) becomes
+  *    8 B — the IO ratio that makes the candidate pass cheap at 100 TB.
+  *  - **score**: asymmetric distance against a per-query lookup table
+  *    ([[PqAdcByPid]]; driver side [[adc]]).
   *
   * **Residual quantization** (default, reference
   * `rust/lance-index/src/vector/residual.rs`): codes are computed over
@@ -43,7 +37,7 @@ import org.apache.spark.sql.types._
   * reference's SIFT table (BASELINE.md); quality is asserted by the recall
   * spec, not by the hash gate (PQ is lossy by design).
   */
-object PqIndex {
+object PqIndex extends IvfQuantized {
   val CodeCol = "__pq_codes"
 
   /** codebooks(sub)(code) = centroid (dsub floats) */
@@ -129,19 +123,14 @@ object PqIndex {
                           ivfCentroidsFile: Option[String]): (Int, Int, String) = {
     val df0 = graft.format.GraftTable.read(spark, tablePath,
       withRowId = idCol == graft.format.GraftTable.RowIdCol)
-    val df = IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
     val (trainDf, trainCol, variant) = ivfCentroidsFile match {
       case Some(f) =>
-        val ivf = IvfIndex.loadModel(spark, f)
-        IvfIndex.requireDim(ivf, df, vecCol)
-        val withPid = df.withColumn(IvfIndex.PidCol,
-          ColumnBridge.column(IvfAssign(
-            ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-        (withPid.withColumn("__pq_space", ColumnBridge.column(ResidualByPid(
-          ColumnBridge.expression(col(vecCol)),
-          ColumnBridge.expression(col(IvfIndex.PidCol)), ivf.centroids))),
+        val (df, ivf) = prepare(df0, idCol, vecCol, 0, metric,
+          Some(IvfIndex.loadModel(spark, f)))
+        (assign(df, vecCol, ivf).withColumn("__pq_space", space(vecCol, ivf, residual = true)),
           "__pq_space", "residual")
-      case None => (df, vecCol, "raw")
+      case None =>
+        (IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric), vecCol, "raw")
     }
     val pq = train(trainDf, idCol, trainCol, m, k)
     saveCodebookTo(spark, dest, pq, variant, metric)
@@ -164,42 +153,21 @@ object PqIndex {
             prePq: Option[PqModel] = None): (IvfIndex.Model, PqModel) = {
     require(numBits == 8 || numBits == 4, s"numBits must be 4 or 8, got $numBits")
     require(k <= (1 << numBits), s"k=$k codes do not fit numBits=$numBits")
-    // packed f16 input decodes ONCE at the boundary (see IvfIndex.floatView)
-    val df = IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
-    val ivf = preIvf match {
-      case Some(pm) => IvfIndex.requireDim(pm, df, vecCol); pm
-      case None => IvfIndex.train(df, idCol, vecCol, nlist)
-    }
-    val withPid = df.withColumn(IvfIndex.PidCol,
-      ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-    // the column PQ quantizes: the residual (assignment already computed) or
-    // the raw vector
-    def pqSpace(base: DataFrame): Column =
-      if (residual) ColumnBridge.column(ResidualByPid(
-        ColumnBridge.expression(col(vecCol)),
-        ColumnBridge.expression(col(IvfIndex.PidCol)), ivf.centroids))
-      else col(vecCol)
+    val (df, ivf) = prepare(df0, idCol, vecCol, nlist, metric, preIvf)
+    val withPid = assign(df, vecCol, ivf)
     val pq = prePq match {
       case Some(pm) =>
         require(pm.codebooks.length == m,
           s"precomputed codebook has m=${pm.codebooks.length} subspaces, " +
             s"build asked for m=$m")
         pm
-      case None => train(withPid.withColumn("__pq_space", pqSpace(withPid)),
+      case None => train(withPid.withColumn("__pq_space", space(vecCol, ivf, residual)),
         idCol, "__pq_space", m, k)
     }
     IvfIndex.writeVectorMeta(df.sparkSession, indexPath, metric,
       pqVariant = if (residual) "residual" else "raw", pqBits = numBits)
-    val assigned = withPid
-      .withColumn(CodeCol,
-        ColumnBridge.column(PqEncode(ColumnBridge.expression(pqSpace(withPid)), pq, numBits)))
-    assigned.write.mode(SaveMode.Overwrite)
-      .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-    val spark = df.sparkSession
-    spark.createDataFrame(ivf.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq)
-      .toDF("pid", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
-    writePq(spark, indexPath, pq)
+    writeIndex(withPid, vecCol, indexPath, ivf, Codec(pq, residual, numBits))
+    writePq(df.sparkSession, indexPath, pq)
     (ivf, pq)
   }
 
@@ -213,120 +181,87 @@ object PqIndex {
                     numBits: Int = 8,
                     ivfCentroidsFile: Option[String] = None,
                     pqCodebookFile: Option[String] = None): (IvfIndex.Model, PqModel) = {
-    val mft = graft.format.GraftTable.loadManifest(spark, tablePath)
     val preIvf = ivfCentroidsFile.map(IvfIndex.loadModel(spark, _))
     // a precomputed codebook dictates the code SPACE it was trained in and
     // its own (m, k); silently re-spacing it would encode garbage
     val prePq = pqCodebookFile.map(loadPq(spark, _))
-    val residual = pqCodebookFile
-      .map(f => IvfIndex.readPqVariant(spark, f) == "residual")
-      .getOrElse(true)
-    pqCodebookFile.foreach { f =>
-      val mm = IvfIndex.readVectorMeta(spark, f)
-      require(mm == metric,
-        s"codebook $f was trained for metric '$mm', build asked for '$metric'")
+    val bookMeta = pqCodebookFile.map(IvfIndex.vectorMeta(spark, _))
+    val residual = bookMeta.forall(_.pqVariant == "residual")
+    pqCodebookFile.zip(bookMeta).foreach { case (f, bm) =>
+      require(bm.metric == metric,
+        s"codebook $f was trained for metric '${bm.metric}', build asked for '$metric'")
       if (residual) require(ivfCentroidsFile.nonEmpty,
         "residual-space codebook requires ivf_centroids_file — the codes are " +
           "only meaningful relative to the centroids they were trained against")
     }
     val mEff = prePq.map(_.codebooks.length).getOrElse(m)
     val kEff = prePq.map(_.codebooks.head.length).getOrElse(k)
-    val out = build(graft.format.GraftTable.read(spark, tablePath, withRowAddr = true,
-        withRowId = idCol == graft.format.GraftTable.RowIdCol),
-      idCol, vecCol, indexPath, preIvf.map(_.nlist).getOrElse(nlist),
-      mEff, kEff, metric, residual = residual, numBits = numBits,
-      preIvf = preIvf, prePq = prePq)
-    graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      "IVF_PQ", vecCol, mft, Map("idCol" -> idCol,
-        "nlist" -> out._1.nlist.toString,
+    buildOverTable(spark, tablePath, idCol, vecCol, indexPath) { df =>
+      build(df, idCol, vecCol, indexPath, preIvf.map(_.nlist).getOrElse(nlist),
+        mEff, kEff, metric, residual = residual, numBits = numBits,
+        preIvf = preIvf, prePq = prePq)
+    } { out =>
+      Map("nlist" -> out._1.nlist.toString,
         "pqM" -> mEff.toString, "pqK" -> kEff.toString, "metric" -> metric,
         "numBits" -> numBits.toString) ++
         ivfCentroidsFile.map("centroidsFile" -> _) ++
-        pqCodebookFile.map("codebookFile" -> _))
-    out
+        pqCodebookFile.map("codebookFile" -> _)
+    }
   }
 
-  /** Incremental maintenance (reference `optimize_indices`): assign + PQ-
-    * encode ONLY the fragments the index does not cover yet with the
-    * EXISTING centroids/codebooks — O(delta) IO; codebook drift is the same
-    * trade the reference makes. Like [[IvfIndex.optimizeForTable]], a
-    * compaction that removed covered fragments triggers a filtered rewrite
-    * (drop dead-fragment rows, no retrain) instead of appending duplicates. */
-  def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
-                       vecCol: String, indexPath: String): Long = {
-    import graft.format.GraftTable
-    val mft = GraftTable.loadManifest(spark, tablePath)
-    val covered = IvfIndex.coveredFragmentIds(spark, indexPath, mft)
-    val liveIds = mft.fragments.map(_.id).toSet
-    val staleIds = covered.diff(liveIds)
-    val freshFrags = mft.fragments.filterNot(f => covered.contains(f.id))
-    val ivf = IvfIndex.loadModel(spark, indexPath)
-    val pq = loadPq(spark, indexPath)
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val variant = IvfIndex.readPqVariant(spark, indexPath)
-    val numBits = IvfIndex.readPqBits(spark, indexPath)
-    val encode = (df0: DataFrame) => {
-      val withPid = IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
-        .withColumn(IvfIndex.PidCol,
-          ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-      // fresh rows must encode in the SAME space the index was built in
-      val space =
-        if (variant == "residual") ColumnBridge.column(ResidualByPid(
-          ColumnBridge.expression(col(vecCol)),
-          ColumnBridge.expression(col(IvfIndex.PidCol)), ivf.centroids))
-        else col(vecCol)
-      withPid.withColumn(CodeCol,
-        ColumnBridge.column(PqEncode(ColumnBridge.expression(space), pq, numBits)))
-    }
-    // legacy (version-marker-only) indexes can't name dead fragments, so
-    // always prove the dataset clean via the filtered rewrite before
-    // recording a coverage marker (same reasoning as IvfIndex.optimizeForTable)
-    val legacy = graft.index.ScalarIndex.readCoverage(spark, indexPath).isEmpty
-    val needRid = idCol == GraftTable.RowIdCol
-    var newlyEncoded = freshFrags.map(_.rows).sum
-    if (!legacy && staleIds.nonEmpty) {
-      // compaction retired covered fragments: remap the dataset to the
-      // rows' new addresses (O(delta) join, codes and assignments
-      // untouched -- [[IndexRemap]]), then append what stays uncovered
-      val cov = IndexRemap.remapVectors(spark, tablePath, mft, indexPath, idCol)
-      val fresh2 = mft.fragments.filterNot(f => cov.contains(f.id))
-      newlyEncoded = fresh2.map(_.rows).sum
-      if (fresh2.nonEmpty) {
-        encode(GraftTable.readFragments(spark, tablePath, mft, fresh2,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append)
-          .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-      }
-    } else if (staleIds.isEmpty && !legacy) {
-      if (freshFrags.nonEmpty) {
-        encode(GraftTable.readFragments(spark, tablePath, mft, freshFrags,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append)
-          .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-      }
-    } else {
-      // legacy (version-marker-only) index: prove the dataset clean via a
-      // filtered rewrite before recording the first real coverage marker
-      val keep = IvfIndex.liveFragmentFilter(spark,
-        spark.read.parquet(s"$indexPath/vectors"), covered.intersect(liveIds))
-      val freshEncoded =
-        if (freshFrags.isEmpty) None
-        else Some(encode(GraftTable.readFragments(spark, tablePath, mft, freshFrags,
-          withRowAddr = true, withRowId = needRid)))
-      freshEncoded.map(keep.unionByName(_, allowMissingColumns = true))
-        .getOrElse(keep)
-        .write.mode(SaveMode.Overwrite).partitionBy(IvfIndex.PidCol)
-        .parquet(s"$indexPath/vectors__fresh")
-      IvfIndex.swapInDir(spark, s"$indexPath/vectors__fresh", s"$indexPath/vectors")
-    }
-    graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      "IVF_PQ", vecCol, mft, Map("idCol" -> idCol))
-    newlyEncoded
+  // ------------------------------------------------------------ quantizer
+
+  protected case class Codec(pq: PqModel, residual: Boolean, numBits: Int)
+  protected val indexType = "IVF_PQ"
+  val ServeCodesBudgetKey = "spark.graft.cache.pq.serve.partitions"
+  protected val codeCols = Seq(CodeCol)
+
+  protected def loadCodec(spark: SparkSession, indexPath: String,
+                          meta: IvfIndex.VectorMeta): Codec =
+    Codec(loadPq(spark, indexPath), meta.pqVariant == "residual", meta.pqBits)
+
+  /** The column PQ quantizes: the residual against the row's (already
+    * assigned) centroid, or the raw vector. */
+  private def space(vecCol: String, ivf: IvfIndex.Model, residual: Boolean): Column =
+    if (residual) ColumnBridge.column(ResidualByPid(
+      ColumnBridge.expression(col(vecCol)),
+      ColumnBridge.expression(col(IvfIndex.PidCol)), ivf.centroids))
+    else col(vecCol)
+
+  protected def encode(withPid: DataFrame, vecCol: String, ivf: IvfIndex.Model,
+                       c: Codec): DataFrame =
+    withPid.withColumn(CodeCol, ColumnBridge.column(PqEncode(
+      ColumnBridge.expression(space(vecCol, ivf, c.residual)), c.pq, c.numBits)))
+
+  /** ADC table of one probed partition: over `q − centroid(pid)` for the
+    * residual variant, over `q` for raw. */
+  private def table(ivf: IvfIndex.Model, c: Codec, q: Array[Float], pid: Int): Array[Array[Float]] =
+    if (c.residual) {
+      val cent = ivf.centroids(pid)
+      c.pq.adcTable(Array.tabulate(q.length)(i => q(i) - cent(i)))
+    } else c.pq.adcTable(q)
+
+  protected def scoreColumn(ivf: IvfIndex.Model, c: Codec, q: Array[Float],
+                            probes: Seq[Int]): Column = {
+    // one table per probed partition (nprobes·m·k floats); the raw
+    // variant's single table serves every probed partition
+    val raw = if (c.residual) null else c.pq.adcTable(q)
+    val tables = new Array[Array[Array[Float]]](ivf.nlist)
+    probes.foreach(pid => tables(pid) = if (c.residual) table(ivf, c, q, pid) else raw)
+    ColumnBridge.column(PqAdcByPid(ColumnBridge.expression(col(CodeCol)),
+      ColumnBridge.expression(col(IvfIndex.PidCol).cast("int")), tables, c.numBits))
   }
 
-  /** Encode one in-memory vector (nearest code per subspace). Plain-array
-    * twin of [[PqEncode]] for driver/executor-local callers — HNSW quantized
-    * node storage encodes graph nodes with this. */
+  protected def scorer(ivf: IvfIndex.Model, c: Codec, q: Array[Float],
+                       pid: Int): IvfQuantized.CodeScorer = {
+    val t = table(ivf, c, q, pid)
+    val bits = c.numBits
+    (codes, _) => adc(t, codes, bits)
+  }
+
+  /** Encode one in-memory vector (nearest code per subspace) — the
+    * interpreted face of [[PqEncode]]; HNSW quantized node storage encodes
+    * graph nodes with it. */
   private[graft] def encodeVec(v: Array[Float], model: PqModel,
                                numBits: Int = 8): Array[Byte] = {
     val dsub = model.dsub
@@ -366,7 +301,7 @@ object PqIndex {
     else codes(s) & 0xff
 
   /** ADC distance of one code array against a per-query lookup table —
-    * the scalar twin of the codegen'd [[PqAdc]]. */
+    * the scalar form of the codegen'd [[PqAdcByPid]]. */
   private[graft] def adc(table: Array[Array[Float]], codes: Array[Byte],
                              numBits: Int = 8): Double = {
     var acc = 0.0
@@ -395,201 +330,6 @@ object PqIndex {
     rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
     PqModel(books.map(_.toArray))
   }
-
-  // ------------------------------------------------------------------
-  // Driver-local single-query serving (r16, VERDICT r15 #2) — the IVF_PQ
-  // twin of [[IvfIndex.serveLocal]], matching the reference's headline
-  // interactive config (SIFT-1M IVF512/PQ16 at 1.24–2.15 ms/query,
-  // `benchmarks/sift/lance_sift1m_stats.csv:2-6`). Memory model mirrors
-  // the batched two-pass plan:
-  //  - the CODES of probed partitions live in their own LRU — m bytes per
-  //    vector (the 32× ratio that makes PQ the serve-scale index), budget
-  //    [[ServeCodesBudgetKey]];
-  //  - ADC ranks driver-side against per-query lookup tables ([[PqModel
-  //    .adcTable]], residual variant per-probed-pid) — bit-identical to
-  //    the codegen'd [[PqAdc]]/[[PqAdcByPid]] arithmetic;
-  //  - the top k·refineFactor candidates exact-refine against float
-  //    vectors from [[IvfIndex.servePartition]]'s shared LRU (a cold
-  //    partition costs one directory-pruned read; zero Spark jobs warm),
-  //    replicating [[Knn.flatSearch]]'s kernels via [[IvfIndex.serveDist]].
-  // Same epoch-staleness and budget-refusal contract as the serve twins.
-  // ------------------------------------------------------------------
-
-  val ServeCodesBudgetKey = "spark.graft.cache.pq.serve.partitions"
-  private val serveCodes = new ServeCodesCache(ServeCodesBudgetKey, 256)
-  def currentServeCapacity: Int = serveCodes.currentCapacity
-  def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
-  def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
-  def serveCacheSize: Int = serveCodes.size
-  private case class ServeState(ivf: IvfIndex.Model, pq: PqModel,
-                                metric: String, variant: String, numBits: Int)
-  private val serveStates =
-    new java.util.concurrent.ConcurrentHashMap[String, ServeState]()
-  private val serveFresh = new ServeFreshness(p => {
-    serveStates.remove(p)
-    serveCodes.purge(p)
-  })
-
-  /** Drop an index's driver-resident serve state (after rebuild/optimize).
-    * The refine vectors live in [[IvfIndex]]'s shared serve LRU — dropped
-    * through its own unpersist so both caches retire together. */
-  def serveUnpersist(indexPath: String): Unit = {
-    serveStates.remove(indexPath)
-    serveFresh.forget(indexPath)
-    serveCodes.purge(indexPath)
-    IvfIndex.serveUnpersist(indexPath)
-  }
-
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit = {
-    serveFresh.ensure(spark, indexPath)
-    // keep the shared refine-vector LRU on the same epoch
-    IvfIndex.ensureServeFresh(spark, indexPath)
-  }
-
-  private def serveState(spark: SparkSession, indexPath: String): ServeState =
-    serveStates.computeIfAbsent(indexPath, { _ =>
-      ServeState(IvfIndex.loadModel(spark, indexPath), loadPq(spark, indexPath),
-        IvfIndex.readVectorMeta(spark, indexPath),
-        IvfIndex.readPqVariant(spark, indexPath),
-        IvfIndex.readPqBits(spark, indexPath))
-    })
-
-  private def serveCodesPartition(spark: SparkSession, indexPath: String,
-                                  idCol: String, pid: Int): Array[(Long, Array[Byte], Float)] =
-    serveCodes.getOrLoad(spark, indexPath, pid) {
-      spark.read.parquet(s"$indexPath/vectors")
-        .filter(col(IvfIndex.PidCol) === pid)
-        .select(col(idCol).cast("long"), col(CodeCol)).collect()
-        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1), 0f))
-    }
-
-  /** Preload the serve caches (codes + refine vectors; all partitions by
-    * default); returns resident code-row count. */
-  def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
-                vecCol: String, pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
-    val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
-    val cap = serveCodes.refresh(spark)
-    require(targets.size <= cap,
-      s"serveWarm(${targets.size} partitions) exceeds the code-cache budget " +
-        s"$cap — raise $ServeCodesBudgetKey or warm a pid subset")
-    val n = targets.map(p =>
-      serveCodesPartition(spark, indexPath, idCol, p).length.toLong).sum
-    IvfIndex.serveWarm(spark, indexPath, idCol, vecCol, targets)
-    n
-  }
-
-  /** Answer one query driver-locally: centroid ranking + ADC over the
-    * probed partitions' resident codes + exact refine of the global top
-    * k·refineFactor against resident float vectors. Ids AND distances are
-    * bit-identical to [[search]] at equal refineFactor — same ADC
-    * arithmetic, same (adc, id) candidate cut, same exact kernels and
-    * (distance, id) tie-break. No Spark job once the partitions are warm. */
-  def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
-                 vecCol: String, query: Array[Float], k: Int, nprobes: Int,
-                 refineFactor: Int = 10,
-                 allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
-    val q = if (st.metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = st.ivf.rank(q).take(math.min(nprobes, st.ivf.nlist))
-    // prefilter (r16): applied BEFORE the ADC ranking, like the batched
-    // path — filtered-out rows never occupy candidate slots
-    val keep = allowed.getOrElse((_: Long) => true)
-    // pass 1: ADC over resident codes — residual variant builds one table
-    // per probed pid over q − centroid(pid), exactly like the batched plan
-    val cands = probes.iterator.flatMap { pid =>
-      val table =
-        if (st.variant == "residual") {
-          val cent = st.ivf.centroids(pid)
-          st.pq.adcTable(Array.tabulate(q.length)(i => q(i) - cent(i)))
-        } else st.pq.adcTable(q)
-      serveCodesPartition(spark, indexPath, idCol, pid).iterator
-        .collect { case (id, codes, _) if keep(id) =>
-          (id, adc(table, codes, st.numBits), pid) }
-    }.toSeq.sortBy { case (id, d, _) => (d, id) }.take(k * refineFactor)
-    // pass 2: exact refine from the shared float-vector serve LRU
-    val byPid = cands.groupBy(_._3)
-    byPid.iterator.flatMap { case (pid, cs) =>
-      val vecs = IvfIndex.servePartition(spark, indexPath, idCol, vecCol, pid)
-      val lookup = new java.util.HashMap[Long, Array[Float]](vecs.length * 2)
-      vecs.foreach { case (id, v) => lookup.put(id, v) }
-      cs.iterator.flatMap { case (id, _, _) =>
-        Option(lookup.get(id)).map(v => (id, IvfIndex.serveDist(st.metric, q, v)))
-      }
-    }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)
-  }
-
-  /** ANN search: ADC candidate pass + exact-refine pass, both restricted to
-    * the probed partitions and column-pruned.
-    *
-    * @param prefilter predicate over the index dataset's columns, applied to
-    *   the candidates BEFORE the ADC ranking (reference prefiltered ANN,
-    *   `prefilter.rs`): both passes and the final top-k see only matching
-    *   rows, so the result is the true top-k of the filtered set.
-    */
-  def search(spark: SparkSession, indexPath: String, idCol: String, vecCol: String,
-             query: Array[Float], kNeighbors: Int, nprobes: Int,
-             refineFactor: Int = 10,
-             prefilter: Option[Column] = None,
-             candidateTransform: DataFrame => DataFrame = identity,
-             distanceRange: Option[(Double, Double)] = None): DataFrame = {
-    val ivf = IvfIndex.loadModel(spark, indexPath)
-    val pq = loadPq(spark, indexPath)
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val variant = IvfIndex.readPqVariant(spark, indexPath)
-    val numBits = IvfIndex.readPqBits(spark, indexPath)
-    val q = if (metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = ivf.rank(q).take(math.min(nprobes, ivf.nlist))
-    val part0 = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col(IvfIndex.PidCol).isin(probes: _*))
-    // transform (DV/liveness) BEFORE the ADC ranking so dead rows cannot
-    // occupy candidate slots
-    val part = candidateTransform(prefilter.map(part0.filter).getOrElse(part0))
-    // pass 1: (id, codes) only — ADC ranking. Residual variant: one table
-    // per probed partition over q − centroid(pid) (nprobes·m·k floats).
-    val adcCol =
-      if (variant == "residual") {
-        val tables = new Array[Array[Array[Float]]](ivf.nlist)
-        probes.foreach { pid =>
-          val cent = ivf.centroids(pid)
-          val qr = Array.tabulate(q.length)(i => q(i) - cent(i))
-          tables(pid) = pq.adcTable(qr)
-        }
-        ColumnBridge.column(PqAdcByPid(ColumnBridge.expression(col(CodeCol)),
-          ColumnBridge.expression(col(IvfIndex.PidCol).cast("int")), tables, numBits))
-      } else
-        ColumnBridge.column(PqAdc(ColumnBridge.expression(col(CodeCol)), pq.adcTable(q), numBits))
-    val cands = part.select(col(idCol), col(CodeCol), col(IvfIndex.PidCol))
-      .withColumn("_adc", adcCol)
-      .orderBy(col("_adc"), col(idCol))
-      .limit(kNeighbors * refineFactor)
-      .select(col(idCol))
-    // pass 2: exact distances for the candidates only (stored vectors are
-    // normalized under cosine; cosine is magnitude-invariant)
-    Knn.flatSearch(
-      part.join(cands, Seq(idCol), "left_semi"),
-      vecCol, q, kNeighbors, metric, tieBreakers = Seq(col(idCol)),
-      distanceRange = distanceRange)
-      .drop(IvfIndex.PidCol, CodeCol)
-  }
-
-  /** Delete/compaction-safe combined search (same contract as
-    * [[IvfIndex.searchCombined]]): DV and fragment liveness applied to the
-    * probed candidates before ADC ranking, fresh fragments flat-searched
-    * and unioned. l2 only (ADC is an l2² table). */
-  def searchCombined(spark: SparkSession, tablePath: String, indexPath: String,
-                     idCol: String, vecCol: String, query: Array[Float],
-                     k: Int, nprobes: Int, refineFactor: Int = 10,
-                     prefilter: Option[Column] = None,
-                     fastSearch: Boolean = false,
-                     distanceRange: Option[(Double, Double)] = None): DataFrame =
-    IvfIndex.combined(spark, tablePath, indexPath, idCol, vecCol, query, k,
-      IvfIndex.readVectorMeta(spark, indexPath), prefilter, fastSearch, distanceRange)(
-      transform => search(spark, indexPath, idCol, vecCol, query, k, nprobes,
-        refineFactor, prefilter, candidateTransform = transform,
-        distanceRange = distanceRange))
 }
 
 /** (vector, ivf pid) → residual `v − centroid(pid)` as array<float>.
@@ -647,10 +387,12 @@ case class ResidualByPid(left: Expression, right: Expression,
 
 /** (PQ codes, ivf pid) → approximate l2² against the pid's OWN per-query
   * ADC table (residual variant: the table for partition p is built from
-  * `q − centroid(p)`). `tables` is dense-indexed by pid with nulls for
-  * unprobed partitions — rows only reach this expression through the
-  * probe-pid filter, but a null table fails soft (+∞) rather than NPE.
-  * Codegen'd: same hot-loop shape as [[PqAdc]] plus one indexed load. */
+  * `q − centroid(p)`; raw variant: every probed pid shares the table of
+  * `q`). `tables` is dense-indexed by pid with nulls for unprobed
+  * partitions — rows only reach this expression through the probe-pid
+  * filter, but a null table fails soft (+∞) rather than NPE. Codegen'd —
+  * the hot loop of the ANN candidate pass; the tables are per-query
+  * constants shipped as a codegen reference object. */
 case class PqAdcByPid(left: Expression, right: Expression,
                       tables: Array[Array[Array[Float]]],
                       numBits: Int = 8)
@@ -722,34 +464,8 @@ case class PqEncode(child: Expression, model: PqIndex.PqModel,
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(s"pq_encode requires array<float>, got ${t.catalogString}")
   }
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val dsub = model.dsub
-    val out = new Array[Byte](PqIndex.codeBytes(model.m, numBits))
-    var s = 0
-    while (s < model.m) {
-      val books = model.codebooks(s)
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < books.length) {
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val d = arr.getFloat(s * dsub + i).toDouble - books(c)(i)
-          acc += d * d
-          i += 1
-        }
-        if (acc < bestD) { bestD = acc; best = c }
-        c += 1
-      }
-      if (numBits == 4)
-        out(s >> 1) = (out(s >> 1) | (best << ((s & 1) * 4))).toByte
-      else out(s) = best.toByte
-      s += 1
-    }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqIndex.encodeVec(input.asInstanceOf[ArrayData].toFloatArray(), model, numBits)
 
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
@@ -788,44 +504,5 @@ case class PqEncode(child: Expression, model: PqIndex.PqModel,
          |${ev.value} = $out;
        """.stripMargin
     })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** PQ codes + per-query ADC table → approximate l2² distance. Codegen'd —
-  * this is the hot loop of the ANN candidate pass; the lookup table is a
-  * per-query constant shipped as a codegen reference object. */
-case class PqAdc(child: Expression, table: Array[Array[Float]],
-                 numBits: Int = 8)
-    extends UnaryExpression {
-  require(numBits == 8 || numBits == 4, s"numBits must be 4 or 8, got $numBits")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"pq_adc requires binary codes")
-  override def nullSafeEval(input: Any): Any =
-    PqIndex.adc(table, input.asInstanceOf[Array[Byte]], numBits)
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val tableRef = ctx.addReferenceObj("adcTable", table, "float[][]")
-    nullSafeCodeGen(ctx, ev, codes => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val codeOf =
-        if (numBits == 4) s"(($codes[$i >> 1] >> (($i & 1) * 4)) & 0xf)"
-        else s"($codes[$i] & 0xff)"
-      val subCount =
-        if (numBits == 4) s"$codes.length * 2" else s"$codes.length"
-      s"""
-         |int $n = java.lang.Math.min($subCount, $tableRef.length);
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $tableRef[$i][$codeOf];
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

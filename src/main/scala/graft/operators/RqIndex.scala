@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
@@ -14,291 +14,82 @@ import org.apache.spark.sql.types._
   * `rust/lance-index/src/vector/bq/`, `IndexType::IvfRq`, `lib.rs:98-130`;
   * the construction is the public RaBitQ idea: sign-quantize the CENTROID
   * RESIDUAL and correct the estimated distance with the stored residual
-  * norm).
+  * norm). The [[IvfQuantized]] skeleton with sign codes plus a norm column:
   *
   *  - **encode** ([[RqEncode]]): residual `r = v - c(pid)`; code bit i =
-  *    `sign(r_i)` packed 8/byte, plus one float `‖r‖`. A 64-dim vector
-  *    (256 B) becomes 8 B + 4 B.
-  *  - **estimate** ([[RqAdc]], codegen'd): with the unit direction
+  *    `sign(r_i)` packed 8/byte in `__rq_codes`, plus one float `‖r‖` in
+  *    `__rq_norm`. A 64-dim vector (256 B) becomes 8 B + 4 B. No model
+  *    beyond the centroids.
+  *  - **score** ([[RqAdc]], codegen'd): with the unit direction
   *    approximation `r̂ = sign(r)/√d`,
   *    `l2²(q, v) ≈ ‖q − c‖² + ‖r‖² − 2·‖r‖·⟨q − c, r̂⟩`, and the inner
   *    product needs only one pass over the bits:
   *    `⟨q − c, r̂⟩ = (2·T − S)/√d` where `S = Σ(q_i − c_i)` is precomputed
   *    per probed partition and `T = Σ_{bit i set}(q_i − c_i)` per row.
-  *  - **search**: identical two-pass shape to [[SqIndex.search]] /
-  *    [[PqIndex.search]] — pass 1 ranks (id, codes, norm) by estimated
-  *    distance keeping k·refineFactor candidates, pass 2 re-reads the float
-  *    vectors for candidates only and re-ranks exactly. The estimator is
-  *    coarser than SQ/PQ (1 bit/dim), so exactness at the gate comes from
-  *    the refine pass; realistic-config quality is gated by the recall spec.
-  *
-  * Layout, coverage markers, incremental maintenance, and the combined
-  * (delete/compaction-safe) search all mirror [[SqIndex]]: one partitioned
-  * parquet dataset under `vectors/`, centroids under `centroids/`.
+  *    The estimator is coarser than SQ/PQ (1 bit/dim), so exactness at the
+  *    gate comes from the refine pass; realistic-config quality is gated by
+  *    the recall spec.
   */
-object RqIndex {
+object RqIndex extends IvfQuantized {
   val CodeCol = "__rq_codes"
   val NormCol = "__rq_norm"
 
   /** IVF assignment (coarse) + sign codes & residual norm (fine), one
     * distributed pass, partitioned parquet layout shared with IVF/PQ/SQ.
-    * cosine: stores NORMALIZED vectors (rank-equivalence route shared with
-    * SQ/PQ; the refine pass computes true cosine). */
+    * cosine: normalized storage (see [[IvfQuantized]]). */
   def build(df0: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, metric: String = "l2"): IvfIndex.Model = {
-    // packed f16 input decodes ONCE at the boundary (see IvfIndex.floatView)
-    val df = IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
-    val ivf = IvfIndex.train(df, idCol, vecCol, nlist)
+    val (df, ivf) = prepare(df0, idCol, vecCol, nlist, metric)
     IvfIndex.writeVectorMeta(df.sparkSession, indexPath, metric)
-    df.withColumn(IvfIndex.PidCol,
-        ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-      .withColumn("__rq", ColumnBridge.column(RqEncode(
-        ColumnBridge.expression(col(vecCol)),
-        ColumnBridge.expression(col(IvfIndex.PidCol)), ivf.centroids)))
-      .withColumn(CodeCol, col("__rq.codes"))
-      .withColumn(NormCol, col("__rq.rnorm"))
-      .drop("__rq")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-    val spark = df.sparkSession
-    spark.createDataFrame(ivf.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq)
-      .toDF("pid", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
+    writeIndex(assign(df, vecCol, ivf), vecCol, indexPath, ivf, ())
     ivf
   }
 
-  /** Build over a graft table snapshot with a coverage marker, like
-    * [[SqIndex.buildForTable]]. */
+  /** Build over a graft table snapshot with a coverage marker
+    * ([[IvfQuantized.buildOverTable]]). */
   def buildForTable(spark: SparkSession, tablePath: String, idCol: String,
                     vecCol: String, indexPath: String, nlist: Int,
-                    metric: String = "l2"): IvfIndex.Model = {
-    val mft = graft.format.GraftTable.loadManifest(spark, tablePath)
-    val out = build(graft.format.GraftTable.read(spark, tablePath, withRowAddr = true,
-        withRowId = idCol == graft.format.GraftTable.RowIdCol),
-      idCol, vecCol, indexPath, nlist, metric)
-    graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      "IVF_RQ", vecCol, mft, Map("idCol" -> idCol, "nlist" -> nlist.toString,
-        "metric" -> metric))
-    out
-  }
+                    metric: String = "l2"): IvfIndex.Model =
+    buildOverTable(spark, tablePath, idCol, vecCol, indexPath)(
+      build(_, idCol, vecCol, indexPath, nlist, metric))(
+      _ => Map("nlist" -> nlist.toString, "metric" -> metric))
 
-  /** Incremental maintenance: encode ONLY uncovered fragments with the
-    * EXISTING centroids (O(delta) IO); a compaction that removed covered
-    * fragments triggers the filtered rewrite, exactly like
-    * [[SqIndex.optimizeForTable]]. */
-  def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
-                       vecCol: String, indexPath: String): Long = {
-    import graft.format.GraftTable
-    val mft = GraftTable.loadManifest(spark, tablePath)
-    val covered = IvfIndex.coveredFragmentIds(spark, indexPath, mft)
-    val liveIds = mft.fragments.map(_.id).toSet
-    val staleIds = covered.diff(liveIds)
-    val freshFrags = mft.fragments.filterNot(f => covered.contains(f.id))
-    val ivf = IvfIndex.loadModel(spark, indexPath)
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val encode = (df0: DataFrame) =>
-      IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
-      .withColumn(IvfIndex.PidCol,
-        ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-      .withColumn("__rq", ColumnBridge.column(RqEncode(
+  // ------------------------------------------------------------ quantizer
+
+  protected type Codec = Unit
+  protected val indexType = "IVF_RQ"
+  val ServeCodesBudgetKey = "spark.graft.cache.rq.serve.partitions"
+  protected val codeCols = Seq(CodeCol, NormCol)
+
+  protected def loadCodec(spark: SparkSession, indexPath: String,
+                          meta: IvfIndex.VectorMeta): Unit = ()
+
+  protected def encode(withPid: DataFrame, vecCol: String, ivf: IvfIndex.Model,
+                       codec: Unit): DataFrame =
+    withPid.withColumn("__rq", ColumnBridge.column(RqEncode(
         ColumnBridge.expression(col(vecCol)),
         ColumnBridge.expression(col(IvfIndex.PidCol)), ivf.centroids)))
       .withColumn(CodeCol, col("__rq.codes"))
       .withColumn(NormCol, col("__rq.rnorm"))
       .drop("__rq")
-    val legacy = graft.index.ScalarIndex.readCoverage(spark, indexPath).isEmpty
-    val needRid = idCol == GraftTable.RowIdCol
-    var newlyEncoded = freshFrags.map(_.rows).sum
-    if (!legacy && staleIds.nonEmpty) {
-      // compaction retired covered fragments: remap the dataset to the
-      // rows' new addresses (O(delta) join, codes and assignments
-      // untouched -- [[IndexRemap]]), then append what stays uncovered
-      val cov = IndexRemap.remapVectors(spark, tablePath, mft, indexPath, idCol)
-      val fresh2 = mft.fragments.filterNot(f => cov.contains(f.id))
-      newlyEncoded = fresh2.map(_.rows).sum
-      if (fresh2.nonEmpty) {
-        encode(GraftTable.readFragments(spark, tablePath, mft, fresh2,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append)
-          .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-      }
-    } else if (staleIds.isEmpty && !legacy) {
-      if (freshFrags.nonEmpty) {
-        encode(GraftTable.readFragments(spark, tablePath, mft, freshFrags,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append)
-          .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-      }
-    } else {
-      // legacy (version-marker-only) index: prove the dataset clean via a
-      // filtered rewrite before recording the first real coverage marker
-      val keep = IvfIndex.liveFragmentFilter(spark,
-        spark.read.parquet(s"$indexPath/vectors"), covered.intersect(liveIds))
-      val freshEncoded =
-        if (freshFrags.isEmpty) None
-        else Some(encode(GraftTable.readFragments(spark, tablePath, mft, freshFrags,
-          withRowAddr = true, withRowId = needRid)))
-      freshEncoded.map(keep.unionByName(_, allowMissingColumns = true))
-        .getOrElse(keep)
-        .write.mode(SaveMode.Overwrite).partitionBy(IvfIndex.PidCol)
-        .parquet(s"$indexPath/vectors__fresh")
-      IvfIndex.swapInDir(spark, s"$indexPath/vectors__fresh", s"$indexPath/vectors")
-    }
-    graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      "IVF_RQ", vecCol, mft, Map("idCol" -> idCol))
-    newlyEncoded
-  }
 
-  /** ANN search: binary asymmetric candidate pass + exact refine pass, both
-    * restricted to the probed partitions and column-pruned; `prefilter` is
-    * applied before ranking (reference prefiltered ANN). */
-  def search(spark: SparkSession, indexPath: String, idCol: String, vecCol: String,
-             query: Array[Float], kNeighbors: Int, nprobes: Int,
-             refineFactor: Int = 10,
-             prefilter: Option[Column] = None,
-             candidateTransform: DataFrame => DataFrame = identity,
-             distanceRange: Option[(Double, Double)] = None): DataFrame = {
-    val ivf = IvfIndex.loadModel(spark, indexPath)
-    require(query.length == ivf.centroids.headOption.map(_.length).getOrElse(query.length),
-      s"rq search: query dimension ${query.length} != index dimension " +
-        s"${ivf.centroids.head.length}")
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val q = if (metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = ivf.rank(q).take(math.min(nprobes, ivf.nlist))
-    val part0 = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col(IvfIndex.PidCol).isin(probes: _*))
-    // transform (DV/liveness) BEFORE ranking so dead rows cannot occupy
-    // candidate slots
-    val part = candidateTransform(prefilter.map(part0.filter).getOrElse(part0))
-    // pass 1: (id, codes, norm) only — binary asymmetric ranking
-    val cands = part.select(col(idCol), col(CodeCol), col(NormCol),
-        col(IvfIndex.PidCol))
-      .withColumn("_rqd", ColumnBridge.column(RqAdc(
-        ColumnBridge.expression(col(CodeCol)),
-        ColumnBridge.expression(col(NormCol)),
-        ColumnBridge.expression(col(IvfIndex.PidCol)), q, ivf.centroids)))
-      .orderBy(col("_rqd"), col(idCol))
-      .limit(kNeighbors * refineFactor)
-      .select(col(idCol))
-    // pass 2: exact distances for the candidates only (stored vectors are
-    // normalized under cosine; cosine is magnitude-invariant)
-    Knn.flatSearch(
-      part.join(cands, Seq(idCol), "left_semi"),
-      vecCol, q, kNeighbors, metric, tieBreakers = Seq(col(idCol)),
-      distanceRange = distanceRange)
-      .drop(IvfIndex.PidCol, CodeCol, NormCol)
-  }
+  protected def scoreColumn(ivf: IvfIndex.Model, codec: Unit, q: Array[Float],
+                            probes: Seq[Int]): Column =
+    ColumnBridge.column(RqAdc(
+      ColumnBridge.expression(col(CodeCol)),
+      ColumnBridge.expression(col(NormCol)),
+      ColumnBridge.expression(col(IvfIndex.PidCol)), q, ivf.centroids))
 
-  /** Delete/compaction-safe combined search (same contract as
-    * [[IvfIndex.searchCombined]]): DV and fragment liveness applied to the
-    * probed candidates before ranking, fresh fragments flat-searched and
-    * unioned. Serves the index's stored metric: l2 directly, cosine via
-    * normalized stored vectors + exact-cosine refine. */
-  def searchCombined(spark: SparkSession, tablePath: String, indexPath: String,
-                     idCol: String, vecCol: String, query: Array[Float],
-                     k: Int, nprobes: Int, refineFactor: Int = 10,
-                     prefilter: Option[Column] = None,
-                     fastSearch: Boolean = false,
-                     distanceRange: Option[(Double, Double)] = None): DataFrame =
-    IvfIndex.combined(spark, tablePath, indexPath, idCol, vecCol, query, k,
-      IvfIndex.readVectorMeta(spark, indexPath), prefilter, fastSearch, distanceRange)(
-      transform => search(spark, indexPath, idCol, vecCol, query, k, nprobes,
-        refineFactor, prefilter, candidateTransform = transform,
-        distanceRange = distanceRange))
-
-  // ------------------------------------------------------------------
-  // Driver-local single-query serving (r16 — completing the serve matrix
-  // across ALL quantized families): the IVF_RQ twin of
-  // [[PqIndex.serveLocal]]. Resident state is (id, codes, rnorm) per
-  // probed partition — d/8 + 4 bytes per vector — ranked by the SAME
-  // binary-asymmetric arithmetic as the codegen'd [[RqAdc]] (per-probed-
-  // pid q−centroid tables), then exact refine from [[IvfIndex]]'s shared
-  // float LRU. Ids AND distances equal [[search]] at equal refineFactor.
-  // Same epoch-staleness and budget-refusal contract as the serve twins.
-  // ------------------------------------------------------------------
-
-  val ServeCodesBudgetKey = "spark.graft.cache.rq.serve.partitions"
-  private val serveCodes = new ServeCodesCache(ServeCodesBudgetKey, 256)
-  def currentServeCapacity: Int = serveCodes.currentCapacity
-  def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
-  def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
-  def serveCacheSize: Int = serveCodes.size
-  private case class ServeState(ivf: IvfIndex.Model, metric: String)
-  private val serveStates =
-    new java.util.concurrent.ConcurrentHashMap[String, ServeState]()
-  private val serveFresh = new ServeFreshness(p => {
-    serveStates.remove(p)
-    serveCodes.purge(p)
-  })
-
-  /** Drop an index's driver-resident serve state (after rebuild/optimize).
-    * Refine vectors live in [[IvfIndex]]'s shared LRU — retired together. */
-  def serveUnpersist(indexPath: String): Unit = {
-    serveStates.remove(indexPath)
-    serveFresh.forget(indexPath)
-    serveCodes.purge(indexPath)
-    IvfIndex.serveUnpersist(indexPath)
-  }
-
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit = {
-    serveFresh.ensure(spark, indexPath)
-    IvfIndex.ensureServeFresh(spark, indexPath)
-  }
-
-  private def serveState(spark: SparkSession, indexPath: String): ServeState =
-    serveStates.computeIfAbsent(indexPath, { _ =>
-      ServeState(IvfIndex.loadModel(spark, indexPath),
-        IvfIndex.readVectorMeta(spark, indexPath))
-    })
-
-  private def serveCodesPartition(spark: SparkSession, indexPath: String,
-                                  idCol: String, pid: Int): Array[(Long, Array[Byte], Float)] =
-    serveCodes.getOrLoad(spark, indexPath, pid) {
-      spark.read.parquet(s"$indexPath/vectors")
-        .filter(col(IvfIndex.PidCol) === pid)
-        .select(col(idCol).cast("long"), col(CodeCol), col(NormCol)).collect()
-        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1), r.getFloat(2)))
-    }
-
-  /** Preload the serve caches (codes+norms + refine vectors); returns
-    * resident code-row count. */
-  def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
-                vecCol: String, pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
-    val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
-    val cap = serveCodes.refresh(spark)
-    require(targets.size <= cap,
-      s"serveWarm(${targets.size} partitions) exceeds the code-cache budget " +
-        s"$cap — raise $ServeCodesBudgetKey or warm a pid subset")
-    val n = targets.map(p =>
-      serveCodesPartition(spark, indexPath, idCol, p).length.toLong).sum
-    IvfIndex.serveWarm(spark, indexPath, idCol, vecCol, targets)
-    n
-  }
-
-  /** Answer one query driver-locally: centroid ranking + binary-asymmetric
-    * ranking over resident (codes, rnorm) + exact refine of the global top
-    * k·refineFactor. Ids AND distances are bit-identical to [[search]] at
-    * equal refineFactor; no Spark job once warm. */
-  def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
-                 vecCol: String, query: Array[Float], k: Int, nprobes: Int,
-                 refineFactor: Int = 10,
-                 allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
-    require(query.length == st.ivf.centroids.headOption.map(_.length).getOrElse(query.length),
-      s"rq serve: query dimension ${query.length} != index dimension " +
-        s"${st.ivf.centroids.head.length}")
-    val q = if (st.metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = st.ivf.rank(q).take(math.min(nprobes, st.ivf.nlist))
-    // the batched [[RqAdc]]'s per-partition precomputation, driver-side
-    val qc = st.ivf.centroids.map(c => Array.tabulate(c.length)(i => q(i) - c(i)))
-    val qcSum = qc.map(_.foldLeft(0.0)(_ + _))
-    val qcNorm2 = qc.map(_.foldLeft(0.0)((a, x) => a + x.toDouble * x))
+  /** [[RqAdc]]'s per-partition precomputation and row arithmetic,
+    * driver-side, for one probed partition. */
+  protected def scorer(ivf: IvfIndex.Model, codec: Unit, q: Array[Float],
+                       pid: Int): IvfQuantized.CodeScorer = {
+    val c = ivf.centroids(pid)
+    val qcp = Array.tabulate(c.length)(i => q(i) - c(i))
+    val qcSum = qcp.foldLeft(0.0)(_ + _)
+    val qcNorm2 = qcp.foldLeft(0.0)((a, x) => a + x.toDouble * x)
     val invSqrtD = 1.0 / math.sqrt(q.length.toDouble)
-    def rqd(pid: Int, codes: Array[Byte], rnorm: Float): Double = {
-      val qcp = qc(pid)
+    (codes, rnorm) => {
       var t = 0.0
       var i = 0
       val d = qcp.length
@@ -307,25 +98,8 @@ object RqIndex {
         i += 1
       }
       val rn = rnorm.toDouble
-      qcNorm2(pid) + rn * rn - 2.0 * rn * ((2.0 * t - qcSum(pid)) * invSqrtD)
+      qcNorm2 + rn * rn - 2.0 * rn * ((2.0 * t - qcSum) * invSqrtD)
     }
-    val keep = allowed.getOrElse((_: Long) => true)
-    val cands = probes.iterator.flatMap { pid =>
-      serveCodesPartition(spark, indexPath, idCol, pid).iterator
-        .collect { case (id, codes, rnorm) if keep(id) =>
-          (id, rqd(pid, codes, rnorm), pid) }
-    }.toSeq.sortBy { case (id, d, _) => (d, id) }.take(k * refineFactor)
-    // exact refine from the shared float-vector serve LRU (stored vectors
-    // are normalized under cosine, like the batched pass 2)
-    val byPid = cands.groupBy(_._3)
-    byPid.iterator.flatMap { case (pid, cs) =>
-      val vecs = IvfIndex.servePartition(spark, indexPath, idCol, vecCol, pid)
-      val lookup = new java.util.HashMap[Long, Array[Float]](vecs.length * 2)
-      vecs.foreach { case (id, v) => lookup.put(id, v) }
-      cs.iterator.flatMap { case (id, _, _) =>
-        Option(lookup.get(id)).map(v => (id, IvfIndex.serveDist(st.metric, q, v)))
-      }
-    }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)
   }
 }
 

@@ -11,32 +11,26 @@ import org.apache.spark.sql.types._
 /** IVF_SQ: int8 scalar quantization inside IVF partitions — the memory /
   * recall middle ground between IVF_FLAT and IVF_PQ (reference
   * `rust/lance-index/src/vector/sq.rs` + `vector/sq/`; `IndexType::IvfSq`,
-  * `lib.rs:98-130`).
+  * `lib.rs:98-130`). The [[IvfQuantized]] skeleton with SQ codes:
   *
   *  - **train**: per-dimension [lo, hi] bounds from ONE distributed
-  *    min/max aggregation (deterministic — no sampling or iteration).
-  *  - **encode**: each float dimension → one byte
-  *    `round((v - lo) / (hi - lo) * 255)`; a 64-dim vector (256 B)
-  *    becomes 64 B. 4× IO reduction with far better fidelity than PQ's
-  *    32× — exactly the reference's positioning.
-  *  - **search**: same two column-pruned passes as [[PqIndex.search]]:
-  *    pass 1 ranks (id, codes) by asymmetric distance ([[SqAdc]],
-  *    codegen'd — query stays float, codes decode on the fly), keeping
-  *    k·refineFactor candidates; pass 2 re-reads the float vectors for
-  *    candidates only and re-ranks exactly.
-  *
-  * Layout, coverage markers, and incremental maintenance mirror
-  * [[PqIndex]] — one partitioned parquet dataset under `vectors/`,
-  * bounds under `sq/`.
+  *    min/max aggregation (deterministic — no sampling or iteration),
+  *    persisted under `sq/`.
+  *  - **encode** ([[SqEncode]]): each float dimension → one byte
+  *    `round((v - lo) / (hi - lo) * 255)` in `__sq_codes`; a 64-dim vector
+  *    (256 B) becomes 64 B. 4× IO reduction with far better fidelity than
+  *    PQ's 32× — exactly the reference's positioning.
+  *  - **score**: asymmetric l2² — the query stays float, codes decode on
+  *    the fly ([[SqAdc]]; driver side [[adc]]).
   */
-object SqIndex {
+object SqIndex extends IvfQuantized {
   val CodeCol = "__sq_codes"
 
   /** Per-dimension quantization bounds. `step(i) = (hi-lo)/255`; dimensions
     * with hi == lo encode to 0 and decode to lo exactly. */
   case class SqModel(lo: Array[Float], hi: Array[Float]) {
     def d: Int = lo.length
-    def steps: Array[Float] = Array.tabulate(d) { i =>
+    lazy val steps: Array[Float] = Array.tabulate(d) { i =>
       val s = (hi(i) - lo(i)) / 255.0f
       if (s > 0f) s else 0f
     }
@@ -58,114 +52,55 @@ object SqIndex {
   }
 
   /** IVF assignment (coarse) + SQ codes (fine), one distributed pass,
-    * partitioned parquet layout shared with IVF/PQ.
-    *
-    * `metric` "l2" (default) or "cosine": cosine stores NORMALIZED vectors
-    * (reference sq/pq cosine route) — on the unit sphere l2-squared ranking
-    * is cosine-rank-equivalent, and the refine pass computes true cosine
-    * (magnitude-invariant, so normalized == original). */
+    * partitioned parquet layout shared with IVF/PQ. `metric` "l2"
+    * (default) or "cosine" (normalized storage, see [[IvfQuantized]]). */
   def build(df0: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, metric: String = "l2"): (IvfIndex.Model, SqModel) = {
-    // packed f16 input decodes ONCE at the boundary (see IvfIndex.floatView)
-    val df = IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
-    val ivf = IvfIndex.train(df, idCol, vecCol, nlist)
+    val (df, ivf) = prepare(df0, idCol, vecCol, nlist, metric)
     val sq = train(df, vecCol)
     IvfIndex.writeVectorMeta(df.sparkSession, indexPath, metric)
-    df.withColumn(IvfIndex.PidCol,
-        ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-      .withColumn(CodeCol,
-        ColumnBridge.column(SqEncode(ColumnBridge.expression(col(vecCol)), sq)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-    val spark = df.sparkSession
-    spark.createDataFrame(ivf.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq)
-      .toDF("pid", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
-    writeSq(spark, indexPath, sq)
+    writeIndex(assign(df, vecCol, ivf), vecCol, indexPath, ivf, sq)
+    writeSq(df.sparkSession, indexPath, sq)
     (ivf, sq)
   }
 
-  /** Build over a graft table snapshot with a coverage marker, like
-    * [[PqIndex.buildForTable]]. */
+  /** Build over a graft table snapshot with a coverage marker
+    * ([[IvfQuantized.buildOverTable]]). */
   def buildForTable(spark: SparkSession, tablePath: String, idCol: String,
                     vecCol: String, indexPath: String, nlist: Int,
-                    metric: String = "l2"): (IvfIndex.Model, SqModel) = {
-    val mft = graft.format.GraftTable.loadManifest(spark, tablePath)
-    val out = build(graft.format.GraftTable.read(spark, tablePath, withRowAddr = true,
-        withRowId = idCol == graft.format.GraftTable.RowIdCol),
-      idCol, vecCol, indexPath, nlist, metric)
-    graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      "IVF_SQ", vecCol, mft, Map("idCol" -> idCol, "nlist" -> nlist.toString,
-        "metric" -> metric))
-    out
+                    metric: String = "l2"): (IvfIndex.Model, SqModel) =
+    buildOverTable(spark, tablePath, idCol, vecCol, indexPath)(
+      build(_, idCol, vecCol, indexPath, nlist, metric))(
+      _ => Map("nlist" -> nlist.toString, "metric" -> metric))
+
+  // ------------------------------------------------------------ quantizer
+
+  protected type Codec = SqModel
+  protected val indexType = "IVF_SQ"
+  val ServeCodesBudgetKey = "spark.graft.cache.sq.serve.partitions"
+  protected val codeCols = Seq(CodeCol)
+
+  protected def loadCodec(spark: SparkSession, indexPath: String,
+                          meta: IvfIndex.VectorMeta): SqModel = loadSq(spark, indexPath)
+
+  protected def encode(withPid: DataFrame, vecCol: String, ivf: IvfIndex.Model,
+                       sq: SqModel): DataFrame =
+    withPid.withColumn(CodeCol,
+      ColumnBridge.column(SqEncode(ColumnBridge.expression(col(vecCol)), sq)))
+
+  protected def scoreColumn(ivf: IvfIndex.Model, sq: SqModel, q: Array[Float],
+                            probes: Seq[Int]): Column =
+    ColumnBridge.column(SqAdc(ColumnBridge.expression(col(CodeCol)), q, sq.lo, sq.steps))
+
+  protected def scorer(ivf: IvfIndex.Model, sq: SqModel, q: Array[Float],
+                       pid: Int): IvfQuantized.CodeScorer = {
+    val lo = sq.lo; val steps = sq.steps
+    (codes, _) => adc(q, codes, lo, steps)
   }
 
-  /** Incremental maintenance: encode ONLY uncovered fragments with the
-    * EXISTING centroids/bounds (O(delta) IO; bounds drift is the same trade
-    * the reference makes); a compaction that removed covered fragments
-    * triggers the filtered rewrite, exactly like [[PqIndex.optimizeForTable]]. */
-  def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
-                       vecCol: String, indexPath: String): Long = {
-    import graft.format.GraftTable
-    val mft = GraftTable.loadManifest(spark, tablePath)
-    val covered = IvfIndex.coveredFragmentIds(spark, indexPath, mft)
-    val liveIds = mft.fragments.map(_.id).toSet
-    val staleIds = covered.diff(liveIds)
-    val freshFrags = mft.fragments.filterNot(f => covered.contains(f.id))
-    val ivf = IvfIndex.loadModel(spark, indexPath)
-    val sq = loadSq(spark, indexPath)
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val encode = (df0: DataFrame) =>
-      IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
-      .withColumn(IvfIndex.PidCol,
-        ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
-      .withColumn(CodeCol,
-        ColumnBridge.column(SqEncode(ColumnBridge.expression(col(vecCol)), sq)))
-    val legacy = graft.index.ScalarIndex.readCoverage(spark, indexPath).isEmpty
-    val needRid = idCol == GraftTable.RowIdCol
-    var newlyEncoded = freshFrags.map(_.rows).sum
-    if (!legacy && staleIds.nonEmpty) {
-      // compaction retired covered fragments: remap the dataset to the
-      // rows' new addresses (O(delta) join, codes and assignments
-      // untouched -- [[IndexRemap]]), then append what stays uncovered
-      val cov = IndexRemap.remapVectors(spark, tablePath, mft, indexPath, idCol)
-      val fresh2 = mft.fragments.filterNot(f => cov.contains(f.id))
-      newlyEncoded = fresh2.map(_.rows).sum
-      if (fresh2.nonEmpty) {
-        encode(GraftTable.readFragments(spark, tablePath, mft, fresh2,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append)
-          .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-      }
-    } else if (staleIds.isEmpty && !legacy) {
-      if (freshFrags.nonEmpty) {
-        encode(GraftTable.readFragments(spark, tablePath, mft, freshFrags,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append)
-          .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
-      }
-    } else {
-      // legacy (version-marker-only) index: prove the dataset clean via a
-      // filtered rewrite before recording the first real coverage marker
-      val keep = IvfIndex.liveFragmentFilter(spark,
-        spark.read.parquet(s"$indexPath/vectors"), covered.intersect(liveIds))
-      val freshEncoded =
-        if (freshFrags.isEmpty) None
-        else Some(encode(GraftTable.readFragments(spark, tablePath, mft, freshFrags,
-          withRowAddr = true, withRowId = needRid)))
-      freshEncoded.map(keep.unionByName(_, allowMissingColumns = true))
-        .getOrElse(keep)
-        .write.mode(SaveMode.Overwrite).partitionBy(IvfIndex.PidCol)
-        .parquet(s"$indexPath/vectors__fresh")
-      IvfIndex.swapInDir(spark, s"$indexPath/vectors__fresh", s"$indexPath/vectors")
-    }
-    graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
-      "IVF_SQ", vecCol, mft, Map("idCol" -> idCol))
-    newlyEncoded
-  }
-
-  /** Plain-JVM encode (shared with the HNSW_SQ graph builder, which encodes
-    * inside mapPartitions rather than through a Catalyst expression). */
+  /** Plain-JVM encode — the interpreted face of [[SqEncode]], shared with
+    * the HNSW_SQ graph builder (which encodes inside mapPartitions rather
+    * than through a Catalyst expression). */
   private[operators] def encodeVec(v: Array[Float], model: SqModel): Array[Byte] = {
     if (v.length != model.d)
       throw new IllegalArgumentException(
@@ -182,8 +117,8 @@ object SqIndex {
     out
   }
 
-  /** Plain-JVM asymmetric l2² (codes decode on the fly) — the beam-search
-    * hot loop of HNSW_SQ. */
+  /** Plain-JVM asymmetric l2² (codes decode on the fly) — the IVF_SQ serve
+    * scorer and the beam-search hot loop of HNSW_SQ. */
   private[operators] def adc(q: Array[Float], codes: Array[Byte],
                              lo: Array[Float], step: Array[Float]): Double = {
     var acc = 0.0
@@ -212,169 +147,6 @@ object SqIndex {
     rows.foreach { r => lo(r.getInt(0)) = r.getFloat(1); hi(r.getInt(0)) = r.getFloat(2) }
     SqModel(lo, hi)
   }
-
-  /** ANN search: SQ asymmetric candidate pass + exact refine pass, both
-    * restricted to the probed partitions and column-pruned; `prefilter` is
-    * applied before ranking (reference prefiltered ANN). */
-  // ------------------------------------------------------------------
-  // Driver-local single-query serving (r16) — the IVF_SQ twin of
-  // [[PqIndex.serveLocal]], completing the quantized interactive matrix:
-  // probed partitions' d-byte SQ codes live in a [[ServeCodesCache]]
-  // (4× smaller than floats), rank by the same asymmetric l2² the
-  // codegen'd [[SqAdc]] computes (the [[adc]] scalar twin), and the top
-  // k·refineFactor candidates exact-refine against [[IvfIndex]]'s shared
-  // float LRU. Ids AND distances equal [[search]] at equal refineFactor;
-  // zero Spark jobs once warm; same epoch-staleness + budget contract.
-  // ------------------------------------------------------------------
-
-  val ServeCodesBudgetKey = "spark.graft.cache.sq.serve.partitions"
-  private val serveCodes = new ServeCodesCache(ServeCodesBudgetKey, 256)
-  def currentServeCapacity: Int = serveCodes.currentCapacity
-  def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
-  def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
-  def serveCacheSize: Int = serveCodes.size
-  private case class ServeState(ivf: IvfIndex.Model, sq: SqModel,
-                                metric: String) {
-    val steps: Array[Float] = sq.steps
-  }
-  private val serveStates =
-    new java.util.concurrent.ConcurrentHashMap[String, ServeState]()
-  private val serveFresh = new ServeFreshness(p => {
-    serveStates.remove(p)
-    serveCodes.purge(p)
-  })
-
-  /** Drop an index's driver-resident serve state (after rebuild/optimize);
-    * refine vectors retire through [[IvfIndex.serveUnpersist]]. */
-  def serveUnpersist(indexPath: String): Unit = {
-    serveStates.remove(indexPath)
-    serveFresh.forget(indexPath)
-    serveCodes.purge(indexPath)
-    IvfIndex.serveUnpersist(indexPath)
-  }
-
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit = {
-    serveFresh.ensure(spark, indexPath)
-    IvfIndex.ensureServeFresh(spark, indexPath)
-  }
-
-  private def serveState(spark: SparkSession, indexPath: String): ServeState =
-    serveStates.computeIfAbsent(indexPath, { _ =>
-      ServeState(IvfIndex.loadModel(spark, indexPath), loadSq(spark, indexPath),
-        IvfIndex.readVectorMeta(spark, indexPath))
-    })
-
-  private def serveCodesPartition(spark: SparkSession, indexPath: String,
-                                  idCol: String, pid: Int): Array[(Long, Array[Byte], Float)] =
-    serveCodes.getOrLoad(spark, indexPath, pid) {
-      spark.read.parquet(s"$indexPath/vectors")
-        .filter(col(IvfIndex.PidCol) === pid)
-        .select(col(idCol).cast("long"), col(CodeCol)).collect()
-        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1), 0f))
-    }
-
-  /** Preload the serve caches (codes + refine vectors); returns resident
-    * code-row count. */
-  def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
-                vecCol: String, pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
-    val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
-    val cap = serveCodes.refresh(spark)
-    require(targets.size <= cap,
-      s"serveWarm(${targets.size} partitions) exceeds the code-cache budget " +
-        s"$cap — raise $ServeCodesBudgetKey or warm a pid subset")
-    val n = targets.map(p =>
-      serveCodesPartition(spark, indexPath, idCol, p).length.toLong).sum
-    IvfIndex.serveWarm(spark, indexPath, idCol, vecCol, targets)
-    n
-  }
-
-  /** Answer one query driver-locally: centroid ranking + asymmetric SQ
-    * ranking over resident codes + exact refine of the global top
-    * k·refineFactor. Ids AND distances are bit-identical to [[search]] at
-    * equal refineFactor; no Spark job once warm. */
-  def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
-                 vecCol: String, query: Array[Float], k: Int, nprobes: Int,
-                 refineFactor: Int = 10,
-                 allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
-    require(query.length == st.sq.d,
-      s"sq serve: query dimension ${query.length} != index dimension ${st.sq.d}")
-    val q = if (st.metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = st.ivf.rank(q).take(math.min(nprobes, st.ivf.nlist))
-    // prefilter (r16): applied BEFORE the asymmetric ranking, like the
-    // batched path — filtered-out rows never occupy candidate slots
-    val keep = allowed.getOrElse((_: Long) => true)
-    val cands = probes.iterator.flatMap { pid =>
-      serveCodesPartition(spark, indexPath, idCol, pid).iterator
-        .collect { case (id, codes, _) if keep(id) =>
-          (id, adc(q, codes, st.sq.lo, st.steps), pid) }
-    }.toSeq.sortBy { case (id, d, _) => (d, id) }.take(k * refineFactor)
-    val byPid = cands.groupBy(_._3)
-    byPid.iterator.flatMap { case (pid, cs) =>
-      val vecs = IvfIndex.servePartition(spark, indexPath, idCol, vecCol, pid)
-      val lookup = new java.util.HashMap[Long, Array[Float]](vecs.length * 2)
-      vecs.foreach { case (id, v) => lookup.put(id, v) }
-      cs.iterator.flatMap { case (id, _, _) =>
-        Option(lookup.get(id)).map(v => (id, IvfIndex.serveDist(st.metric, q, v)))
-      }
-    }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)
-  }
-
-  def search(spark: SparkSession, indexPath: String, idCol: String, vecCol: String,
-             query: Array[Float], kNeighbors: Int, nprobes: Int,
-             refineFactor: Int = 10,
-             prefilter: Option[Column] = None,
-             candidateTransform: DataFrame => DataFrame = identity,
-             distanceRange: Option[(Double, Double)] = None): DataFrame = {
-    val ivf = IvfIndex.loadModel(spark, indexPath)
-    val sq = loadSq(spark, indexPath)
-    require(query.length == sq.d,
-      s"sq search: query dimension ${query.length} != index dimension ${sq.d}")
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
-    val q = if (metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = ivf.rank(q).take(math.min(nprobes, ivf.nlist))
-    val part0 = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col(IvfIndex.PidCol).isin(probes: _*))
-    // transform (DV/liveness) BEFORE ranking so dead rows cannot occupy
-    // candidate slots
-    val part = candidateTransform(prefilter.map(part0.filter).getOrElse(part0))
-    // pass 1: (id, codes) only — asymmetric SQ ranking
-    val cands = part.select(col(idCol), col(CodeCol))
-      .withColumn("_sqd", ColumnBridge.column(
-        SqAdc(ColumnBridge.expression(col(CodeCol)), q, sq.lo, sq.steps)))
-      .orderBy(col("_sqd"), col(idCol))
-      .limit(kNeighbors * refineFactor)
-      .select(col(idCol))
-    // pass 2: exact distances for the candidates only (stored vectors are
-    // normalized under cosine; cosine is magnitude-invariant)
-    Knn.flatSearch(
-      part.join(cands, Seq(idCol), "left_semi"),
-      vecCol, q, kNeighbors, metric, tieBreakers = Seq(col(idCol)),
-      distanceRange = distanceRange)
-      .drop(IvfIndex.PidCol, CodeCol)
-  }
-
-  /** Delete/compaction-safe combined search (same contract as
-    * [[IvfIndex.searchCombined]]): DV and fragment liveness applied to the
-    * probed candidates before ranking, fresh fragments flat-searched and
-    * unioned. Serves the index's stored metric: l2 directly (the asymmetric
-    * distance is l2²), cosine via normalized stored vectors — on the unit
-    * sphere l2² ranking is cosine-rank-equivalent, and the exact refine pass
-    * computes true cosine. */
-  def searchCombined(spark: SparkSession, tablePath: String, indexPath: String,
-                     idCol: String, vecCol: String, query: Array[Float],
-                     k: Int, nprobes: Int, refineFactor: Int = 10,
-                     prefilter: Option[Column] = None,
-                     fastSearch: Boolean = false,
-                     distanceRange: Option[(Double, Double)] = None): DataFrame =
-    IvfIndex.combined(spark, tablePath, indexPath, idCol, vecCol, query, k,
-      IvfIndex.readVectorMeta(spark, indexPath), prefilter, fastSearch, distanceRange)(
-      transform => search(spark, indexPath, idCol, vecCol, query, k, nprobes,
-        refineFactor, prefilter, candidateTransform = transform,
-        distanceRange = distanceRange))
 }
 
 /** vector → d scalar-quantized bytes. Codegen'd — runs once per corpus
@@ -388,28 +160,11 @@ case class SqEncode(child: Expression, model: SqIndex.SqModel)
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(s"sq_encode requires array<float>, got ${t.catalogString}")
   }
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    // fail fast: silently truncating a longer vector (or zero-padding a
-    // shorter one) would produce quietly wrong distances downstream
-    if (arr.numElements() != model.d)
-      throw new IllegalArgumentException(
-        s"sq_encode: vector dimension ${arr.numElements()} != trained dimension ${model.d}")
-    val d = model.d
-    val lo = model.lo
-    val hi = model.hi
-    val out = new Array[Byte](d)
-    var i = 0
-    while (i < d) {
-      val range = hi(i) - lo(i)
-      val q =
-        if (range <= 0f) 0
-        else math.round((arr.getFloat(i) - lo(i)) / range * 255.0f)
-      out(i) = math.max(0, math.min(255, q)).toByte
-      i += 1
-    }
-    out
-  }
+  // fails fast on a dimension mismatch: silently truncating a longer
+  // vector (or zero-padding a shorter one) would produce quietly wrong
+  // distances downstream
+  override def nullSafeEval(input: Any): Any =
+    SqIndex.encodeVec(input.asInstanceOf[ArrayData].toFloatArray(), model)
 
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,

@@ -431,6 +431,34 @@ class GraftTableSpec extends AnyFunSuite {
     // versions never leak into a plain read
     assert(!GraftTable.read(spark, t).columns.contains(GraftTable.RowOffsetCol))
   }
+
+  test("table under a .../data/... parent: table-relative paths through write, append, compact, cleanup") {
+    // the directories ABOVE the table contain `/data/`: committed fragment
+    // paths must still be relative to the table root
+    val t = Files.createTempDirectory("graft_tbl_").toString + "/data/lake/t"
+    GraftTable.write(people.repartition(2), t)
+    GraftTable.write(people.filter($"id" <= 2), t, "append")
+    val paths = GraftTable.loadManifest(spark, t).fragments.map(_.path)
+    assert(paths.forall(_.matches("data/txn-[^/]+/frag-\\d+\\.parquet")), paths)
+    assert(GraftTable.read(spark, t).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 1L, 2L, 2L, 3L, 4L, 5L))
+    GraftTable.compact(spark, t, targetRows = 1000)
+    val live = GraftTable.loadManifest(spark, t).fragments.map(_.path)
+    assert(live.length == 1 && !paths.contains(live.head), live)
+    val stats = GraftTable.cleanupOldVersions(spark, t, keepLast = 1,
+      unverifiedGraceMillis = 0L)
+    assert(stats.filesRemoved == paths.length, stats)
+    // exactly the live fragment survives under data/
+    val root = new java.io.File(t).toPath
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val onDisk = files(new java.io.File(t, "data"))
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => root.relativize(f.toPath).toString).toSet
+    assert(onDisk == live.toSet, onDisk)
+    assert(GraftTable.read(spark, t).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 1L, 2L, 2L, 3L, 4L, 5L))
+  }
 }
 
 /** Executor-visible (same-JVM local mode) probe for the addColumnsUdf

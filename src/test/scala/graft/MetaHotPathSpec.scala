@@ -148,7 +148,8 @@ class MetaHotPathSpec extends AnyFunSuite {
       "héllo", "ümläut straße",
       "a😀b😀c😀", // surrogate pairs
       "日本語のテキスト",
-      "xy", "zz z")
+      "xy", "zz z",
+      null) // NULL text: the empty array, like the pipeline's otherwise arm
     val df = cases.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
     val old = when(length(col("s")) >= 3,
       array_distinct(transform(sequence(lit(1), length(col("s")) - 2),

@@ -170,6 +170,22 @@ class RqSpec extends AnyFunSuite {
     }
   }
 
+  test("serveLocal prefilter at partial probes: applied before ranking, parity with batched") {
+    val idx = buildIdx()
+    RqIndex.serveUnpersist(idx)
+    RqIndex.serveWarm(spark, idx, "vec_id", "embedding")
+    val q = queryVec(0L)
+    val batched = RqIndex.search(spark, idx, "vec_id", "embedding", q, 10,
+        nprobes = 3, refineFactor = 6, prefilter = Some(col("vec_id") % 2 === 0))
+      .select(col("vec_id"), col(Knn.DistanceCol))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val served = RqIndex.serveLocal(spark, idx, "vec_id", "embedding", q, 10,
+      nprobes = 3, refineFactor = 6, allowed = Some(id => id % 2 == 0))
+    assert(served == batched, s"$served != $batched")
+    assert(served.size == 10 && served.forall(_._1 % 2 == 0))
+    RqIndex.serveUnpersist(idx)
+  }
+
   test("serveLocal staleness + budget: rebuild at the same path serves the NEW index; over-budget warm refuses (r16)") {
     spark.conf.set("spark.graft.serve.epoch.ttl.ms", "0")
     try {
