@@ -112,7 +112,8 @@ object BinaryIvfIndex {
 
   /** Train + partition the dataset by assigned centroid (mirrors
     * [[IvfIndex.build]]; the assignment expression keeps the corpus pass
-    * distributed and inside the scan stage). */
+    * distributed and inside the scan stage). Drops the index's in-JVM serve
+    * state. */
   def build(df: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, maxIter: Int = 10): Model = {
     val model = train(df, idCol, vecCol, nlist, maxIter)
@@ -124,6 +125,7 @@ object BinaryIvfIndex {
     spark.createDataFrame(rows.toSeq).toDF("pid", "centroid")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
     IvfIndex.writeVectorMeta(spark, indexPath, "hamming", storage = "binary")
+    serveUnpersist(indexPath)
     model
   }
 
@@ -165,15 +167,17 @@ object BinaryIvfIndex {
   /** Incremental maintenance — the shared PID-partitioned policy
     * ([[IvfIndex.maintainPartitionedVectors]]): REMAP compaction-moved rows
     * (addresses only, assignments untouched), append-assign fresh
-    * fragments with the hamming centroids. Returns rows newly encoded. */
+    * fragments with the hamming centroids. Drops the index's in-JVM serve
+    * state before it returns. Returns rows newly encoded. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String): Long = {
     val model = loadModel(spark, indexPath)
-    IvfIndex.maintainPartitionedVectors(spark, tablePath, idCol, vecCol,
+    try IvfIndex.maintainPartitionedVectors(spark, tablePath, idCol, vecCol,
       indexPath, "IVF_FLAT",
       df => df.withColumn(PidCol,
         ColumnBridge.column(BinaryIvfAssign(ColumnBridge.expression(col(vecCol)), model.centroids))),
       extraMeta = Map("metric" -> "hamming"))
+    finally serveUnpersist(indexPath)
   }
 
   /** Snapshot-consistent combined search — [[IvfIndex.combined]] skeleton
@@ -203,8 +207,8 @@ object BinaryIvfIndex {
   // ------------------------------------------------------------------
 
   val ServeCodesBudgetKey = "spark.graft.cache.hamming.serve.partitions"
-  private val serveCodes =
-    new ServeCache[Array[(Long, Array[Byte])]](ServeCodesBudgetKey, 256)
+  private type Codes = Array[(Long, Array[Byte])]
+  private val serveCodes = new ServeCache[Int, Codes](ServeCodesBudgetKey, 256)
   def currentServeCapacity: Int = serveCodes.currentCapacity
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
@@ -229,25 +233,26 @@ object BinaryIvfIndex {
   private def serveModel(spark: SparkSession, indexPath: String): Model =
     serveModels.computeIfAbsent(indexPath, _ => loadModel(spark, indexPath))
 
-  private def serveCodesPartition(spark: SparkSession, indexPath: String,
-                                  idCol: String, vecCol: String,
-                                  pid: Int): Array[(Long, Array[Byte])] =
-    serveCodes.getOrLoad(spark, indexPath, pid) {
-      spark.read.parquet(s"$indexPath/vectors")
-        .filter(col(PidCol) === pid)
-        .select(col(idCol).cast("long"), col(vecCol)).collect()
-        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
+  /** Resident (id, bits) rows of `pids`, in request order; the pids that
+    * miss load in ONE directory-pruned scan. */
+  private def serveCodesOf(spark: SparkSession, indexPath: String, idCol: String,
+                           vecCol: String, pids: Seq[Int]): Seq[Codes] =
+    serveCodes.getOrLoadAll(spark, indexPath, pids) { miss =>
+      val rows = spark.read.parquet(s"$indexPath/vectors")
+        .filter(col(PidCol).isin(miss: _*))
+        .select(col(PidCol), col(idCol).cast("long"), col(vecCol)).collect()
+      ServeCache.splitBy(miss, rows)(_.getInt(0))
+        .map(_.map(r => (r.getLong(1), r.getAs[Array[Byte]](2))))
     }
 
-  /** Preload the serve cache; returns resident row count. */
+  /** Preload the serve cache in one scan; returns resident row count. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
     ensureServeFresh(spark, indexPath)
     val model = serveModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
-    targets.map(p =>
-      serveCodesPartition(spark, indexPath, idCol, vecCol, p).length.toLong).sum
+    serveCodesOf(spark, indexPath, idCol, vecCol, targets).map(_.length.toLong).sum
   }
 
   /** Answer one query driver-locally: hamming centroid ranking + exact
@@ -262,8 +267,8 @@ object BinaryIvfIndex {
     val model = serveModel(spark, indexPath)
     val probes = model.rank(query).take(math.min(nprobes, model.nlist))
     val keep = allowed.getOrElse((_: Long) => true)
-    probes.iterator.flatMap { pid =>
-      serveCodesPartition(spark, indexPath, idCol, vecCol, pid).iterator
+    serveCodesOf(spark, indexPath, idCol, vecCol, probes).iterator.flatMap { rows =>
+      rows.iterator
         .collect { case (id, bits) if keep(id) => (id, hamming(bits, query)) }
     }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)
   }

@@ -846,6 +846,7 @@ object Fts {
     // adopt the freshly built segments as the merged base (sidecars were
     // dropped by the Overwrite) so later optimizes track only true deltas
     mergeDeltaSegments(df.sparkSession, indexPath)
+    serveUnpersist(indexPath)
     p
   }
 
@@ -953,6 +954,7 @@ object Fts {
     } finally postings.unpersist()
     clearOptimizeIntent(spark, indexPath) // stats rewritten from the parts
     mergeDeltaSegments(spark, indexPath)
+    serveUnpersist(indexPath)
     val mV = GraftTable.loadManifest(spark, tablePath, Some(v))
     val phys = mV.schema.fields.find(_.name == textCol)
       .map(mV.physicalName).getOrElse(textCol)
@@ -970,8 +972,9 @@ object Fts {
   /** Incremental FTS maintenance for a table-local index: tokenize ONLY the
     * fragments the coverage marker does not include yet, append their
     * postings/docstats/blockstats, recompute global stats, and move the
-    * coverage + manifest entry forward. O(delta) tokenization. Returns the
-    * number of newly indexed rows. */
+    * coverage + manifest entry forward. O(delta) tokenization. Drops the
+    * index's in-JVM serve state before it returns (as every build and
+    * optimize path does). Returns the number of newly indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        textCol: String, maxDeltaFiles: Int = 0): Long = {
     import graft.format.GraftTable
@@ -1023,6 +1026,7 @@ object Fts {
     }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
       "FTS", textCol, m, Map("idCol" -> idCol))
+    serveUnpersist(indexPath)
     freshFrags.map(_.rows).sum
   }
 
@@ -1135,6 +1139,7 @@ object Fts {
     fsys.delete(intent, false)
     mergeDeltaSegments(spark, indexPath,
       if (maxDeltaFiles > 0) maxDeltaFiles else 16)
+    serveUnpersist(indexPath)
     p
   }
 
@@ -1752,8 +1757,9 @@ object Fts {
   // reference serves from one native process: the dictionary (termstats:
   // token → df), per-doc lengths (docstats) and the global meta live
   // driver-resident per index; per-token POSTINGS live in a budgeted LRU
-  // (one pushdown-pruned read per cold token — postings are token-hash
-  // partitioned, so a token's rows sit in one file). A warm match/
+  // (a call reads all of its cold tokens in ONE pushdown-pruned scan —
+  // postings are token-hash partitioned, so a token's rows sit in one file
+  // per segment). A warm match/
   // boolean/fuzzy query runs ZERO Spark jobs and returns exactly
   // [[matchQuery]]/[[booleanQuery]]/[[fuzzyQuery]]'s top-k (same BM25
   // arithmetic, same (score desc, doc_id) tie-break). Long doc ids only.
@@ -1772,28 +1778,28 @@ object Fts {
 
   val serveHits = new java.util.concurrent.atomic.AtomicLong(0)
   val serveMisses = new java.util.concurrent.atomic.AtomicLong(0)
-  @volatile private var serveTermCapacity = 4096
-  def currentServeTermCapacity: Int = serveTermCapacity
 
   private case class ServeState(cfg: FtsConfig, nDocs: Double, avgdl: Double,
       df: java.util.HashMap[String, java.lang.Double],
       dl: java.util.HashMap[java.lang.Long, java.lang.Double])
   private val serveStates =
     new java.util.concurrent.ConcurrentHashMap[String, ServeState]()
-  private val servePostings =
-    new java.util.LinkedHashMap[(String, String), Array[(Long, Double)]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Array[(Long, Double)]]): Boolean =
-        size() > serveTermCapacity
-    }
-  def serveCacheSize: Int = servePostings.synchronized(servePostings.size())
+  /** Per-token (doc, tf) postings for scoring. */
+  private val servePostings = new ServeCache[String, Array[(Long, Double)]](
+    ServeTermBudgetKey, 4096, serveHits, serveMisses)
+  /** Positioned postings for [[servePhrase]] — separate from the scoring
+    * LRU so match/boolean/fuzzy serving never pays for position arrays it
+    * does not read. Shares the token budget, the counters and the epoch
+    * guard. */
+  private val servePosPostings = new ServeCache[String, Array[(Long, Array[Int])]](
+    ServeTermBudgetKey, 4096, serveHits, serveMisses)
+  def currentServeTermCapacity: Int = servePostings.currentCapacity
+  def serveCacheSize: Int = servePostings.size
 
-  private def purgeServe(indexPath: String): Unit = servePostings.synchronized {
+  private def purgeServe(indexPath: String): Unit = {
     serveStates.remove(indexPath)
-    val it = servePostings.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == indexPath) it.remove()
-    val pit = servePosPostings.keySet().iterator()
-    while (pit.hasNext) if (pit.next()._1 == indexPath) pit.remove()
+    servePostings.purge(indexPath)
+    servePosPostings.purge(indexPath)
   }
 
   /** Drop an index's driver-resident serve state. */
@@ -1806,25 +1812,11 @@ object Fts {
   // that only rewrites files nested under postings/docstats/termstats moves
   // the token even on object stores, where the r15 one-level root listing
   // (virtual directory entries: len 0, mtime 0) could stay unchanged. The
-  // guard itself is the shared [[ServeFreshness]].
+  // guard itself is the shared [[ServeFreshness]]; in-process builds and
+  // optimizes drop the state outright before they return.
   private val serveFresh = new ServeFreshness(purgeServe)
   private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)
-
-  private def refreshServeTermCapacity(spark: SparkSession): Int = {
-    val cap = math.max(1, scala.util.Try(
-      spark.conf.get(ServeTermBudgetKey, "4096").toInt).getOrElse(4096))
-    // a shrunk budget releases driver memory immediately (ADVICE r14 on
-    // the ANN twins): evict LRU-first down to the new capacity
-    if (cap < serveTermCapacity) servePostings.synchronized {
-      serveTermCapacity = cap
-      val it = servePostings.entrySet().iterator()
-      while (servePostings.size() > cap && it.hasNext) { it.next(); it.remove() }
-      val pit = servePosPostings.entrySet().iterator()
-      while (servePosPostings.size() > cap && pit.hasNext) { pit.next(); pit.remove() }
-    } else serveTermCapacity = cap
-    cap
-  }
 
   /** Per-index resident stats; the COLD load (three small reads: meta,
     * docstats, termstats) runs outside any lock — a racing duplicate load
@@ -1860,37 +1852,34 @@ object Fts {
     st
   }
 
-  private def servePosting(spark: SparkSession, indexPath: String,
-                           token: String): Array[(Long, Double)] = {
-    refreshServeTermCapacity(spark)
-    servePostings.synchronized {
-      val hit = servePostings.get((indexPath, token))
-      if (hit != null) { serveHits.incrementAndGet(); return hit }
-    }
-    serveMisses.incrementAndGet()
-    // cold: ONE token-pushdown read (postings are token-hash partitioned)
-    val rows = spark.read.parquet(paths(indexPath).postings)
-      .filter(col("token") === token)
-      .select(col("doc_id").cast("long"), col("tf").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    servePostings.synchronized { servePostings.put((indexPath, token), rows) }
-    rows
+  /** Resident scoring postings of `tokens`, by token. The tokens that
+    * miss load in ONE token-pushdown scan (postings are token-sorted per
+    * file, so row-group stats skip everything else). A budget shrink also
+    * evicts the positioned LRU at once. */
+  private def servePostingsOf(spark: SparkSession, indexPath: String,
+                              tokens: Seq[String]): Map[String, Array[(Long, Double)]] = {
+    servePosPostings.refresh(spark)
+    tokens.zip(servePostings.getOrLoadAll(spark, indexPath, tokens) { miss =>
+      val rows = spark.read.parquet(paths(indexPath).postings)
+        .filter(col("token").isin(miss: _*))
+        .select(col("token"), col("doc_id").cast("long"), col("tf").cast("double"))
+        .collect()
+      ServeCache.splitBy(miss, rows)(_.getString(0))
+        .map(_.map(r => (r.getLong(1), r.getDouble(2))))
+    }).toMap
   }
 
-  /** Preload serve state + the given query terms' postings; returns
-    * resident postings rows. Refuses term sets beyond the LRU budget
-    * instead of silently evicting what it just loaded. */
+  /** Preload serve state + the given query terms' postings (one scan);
+    * returns resident postings rows. Refuses term sets beyond the LRU
+    * budget instead of silently evicting what it just loaded. */
   def serveWarm(spark: SparkSession, indexPath: String,
                 terms: Seq[String] = Nil): Long = {
     ensureServeFresh(spark, indexPath)
     val st = serveStateOf(spark, indexPath)
     val toks = terms.flatMap(FtsTokenizer.tokens(_, st.cfg)).distinct
       .filter(t => st.df.containsKey(t))
-    val cap = refreshServeTermCapacity(spark)
-    require(toks.size <= cap,
-      s"serveWarm(${toks.size} terms) exceeds the serve budget $cap — " +
-        s"raise $ServeTermBudgetKey or warm fewer terms")
-    toks.map(t => servePosting(spark, indexPath, t).length.toLong).sum
+    servePostings.requireFits(spark, toks.size, "serve", "terms")
+    servePostingsOf(spark, indexPath, toks).valuesIterator.map(_.length.toLong).sum
   }
 
   /** Shared driver-side scorer: BM25 with EXACTLY [[bm25Term]]'s
@@ -1905,8 +1894,12 @@ object Fts {
                          st: ServeState, tokens: Seq[String], k: Int,
                          mustTokens: Seq[String] = Nil,
                          mustNotTokens: Seq[String] = Nil): Seq[(Long, Double)] = {
+    val scoring = tokens.distinct.filter(t => st.df.containsKey(t))
+    // every term the query reads, in the order a term-by-term load would
+    // touch them: the cold ones load together
+    val post = servePostingsOf(spark, indexPath, scoring ++ mustTokens ++ mustNotTokens)
     val acc = new java.util.HashMap[java.lang.Long, collection.mutable.ArrayBuffer[Double]]()
-    tokens.distinct.foreach { t =>
+    scoring.foreach { t =>
       val dfv = st.df.get(t)
       if (dfv != null) {
         // StrictMath.log, not math.log: whole-stage codegen evaluates the
@@ -1914,7 +1907,7 @@ object Fts {
         // one ulp — bit-parity with matchQuery requires the same function
         val idf = StrictMath.log(1.0 + (st.nDocs - dfv.doubleValue + 0.5) /
           (dfv.doubleValue + 0.5))
-        servePosting(spark, indexPath, t).foreach { case (doc, tf) =>
+        post(t).foreach { case (doc, tf) =>
           val dlv = st.dl.get(doc)
           if (dlv != null) {
             val s = idf * (tf * (K1 + 1)) /
@@ -1926,10 +1919,8 @@ object Fts {
         }
       }
     }
-    val mustSets = mustTokens.map(t =>
-      servePosting(spark, indexPath, t).iterator.map(_._1).toSet)
-    val notSet = mustNotTokens.iterator
-      .flatMap(t => servePosting(spark, indexPath, t).iterator.map(_._1)).toSet
+    val mustSets = mustTokens.map(t => post(t).iterator.map(_._1).toSet)
+    val notSet = mustNotTokens.iterator.flatMap(t => post(t).iterator.map(_._1)).toSet
     val out = collection.mutable.ArrayBuffer.empty[(Long, Double)]
     val it = acc.entrySet().iterator()
     while (it.hasNext) {
@@ -2018,39 +2009,22 @@ object Fts {
     serveScore(spark, indexPath, st, expanded.toSeq, k)
   }
 
-  /** Positioned postings LRU for [[servePhrase]] — separate from the
-    * scoring LRU so match/boolean/fuzzy serving never pays for position
-    * arrays it does not read. Shares the token budget and the epoch
-    * guard. */
-  private val servePosPostings =
-    new java.util.LinkedHashMap[(String, String), Array[(Long, Array[Int])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Array[(Long, Array[Int])]]): Boolean =
-        size() > serveTermCapacity
-    }
-
-  private def servePosPosting(spark: SparkSession, indexPath: String,
-                              token: String): Array[(Long, Array[Int])] = {
-    refreshServeTermCapacity(spark)
-    // single coarse lock (servePostings' monitor) guards BOTH LRUs — the
-    // purge/shrink paths iterate them together
-    servePostings.synchronized {
-      val hit = servePosPostings.get((indexPath, token))
-      if (hit != null) { serveHits.incrementAndGet(); return hit }
-    }
-    serveMisses.incrementAndGet()
-    val post = spark.read.parquet(paths(indexPath).postings)
-    require(post.columns.contains("positions"),
-      "phrase serving needs positions; this index was built with " +
-        "storePositions = false — rebuild with positions to use phrases")
-    val rows = post.filter(col("token") === token)
-      .select(col("doc_id").cast("long"), col("positions"))
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Int](1).toArray))
-    servePostings.synchronized {
-      servePosPostings.put((indexPath, token), rows)
-    }
-    rows
+  /** Resident positioned postings of `tokens`, by token; the tokens that
+    * miss load in ONE token-pushdown scan. */
+  private def servePosPostingsOf(spark: SparkSession, indexPath: String,
+                                 tokens: Seq[String]): Map[String, Array[(Long, Array[Int])]] = {
+    servePostings.refresh(spark)
+    tokens.zip(servePosPostings.getOrLoadAll(spark, indexPath, tokens) { miss =>
+      val post = spark.read.parquet(paths(indexPath).postings)
+      require(post.columns.contains("positions"),
+        "phrase serving needs positions; this index was built with " +
+          "storePositions = false — rebuild with positions to use phrases")
+      val rows = post.filter(col("token").isin(miss: _*))
+        .select(col("token"), col("doc_id").cast("long"), col("positions"))
+        .collect()
+      ServeCache.splitBy(miss, rows)(_.getString(0))
+        .map(_.map(r => (r.getLong(1), r.getSeq[Int](2).toArray)))
+    }).toMap
   }
 
   /** Driver-local [[phraseQuery]]: same consecutive-position (or slop)
@@ -2062,12 +2036,12 @@ object Fts {
     val st = serveStateOf(spark, indexPath)
     val terms = rawTerms.flatMap(FtsTokenizer.tokens(_, st.cfg))
     require(terms.nonEmpty)
+    val post = servePosPostingsOf(spark, indexPath, terms)
     // valid(doc) = positions where a prefix of the phrase ends
-    var valid: Map[Long, Array[Int]] =
-      servePosPosting(spark, indexPath, terms.head).toMap
+    var valid: Map[Long, Array[Int]] = post(terms.head).toMap
     terms.tail.foreach { t =>
       if (valid.nonEmpty) {
-        val next = servePosPosting(spark, indexPath, t)
+        val next = post(t)
         valid = next.iterator.flatMap { case (doc, ps) =>
           valid.get(doc) match {
             case None => Iterator.empty

@@ -370,6 +370,7 @@ object HnswIndex {
     writeGraphRows(df, idCol, vecCol, model.centroids, encode, m,
       efConstruction, s"$indexPath/graph")
     IvfIndex.writeCentroids(spark, indexPath, model)
+    serveUnpersist(indexPath)
     model
   }
 
@@ -600,10 +601,16 @@ object HnswIndex {
     * global top-k — covered partitions' graph files are NEVER rewritten,
     * so optimize cost is O(delta), not O(corpus). A compaction that
     * retires covered fragments invalidates node addresses ⇒ full rebuild
-    * (which collapses the deltas), same contract as the other families. */
+    * (which collapses the deltas), same contract as the other families.
+    * Drops the index's in-JVM serve state before it returns. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String,
-                       maxDeltas: Int = 0): Long = {
+                       maxDeltas: Int = 0): Long =
+    try maintain(spark, tablePath, idCol, vecCol, indexPath, maxDeltas)
+    finally serveUnpersist(indexPath)
+
+  private def maintain(spark: SparkSession, tablePath: String, idCol: String,
+                       vecCol: String, indexPath: String, maxDeltas: Int): Long = {
     import graft.format.GraftTable
     val mf = GraftTable.loadManifest(spark, tablePath)
     val cov = graft.index.ScalarIndex.readCoverage(spark, indexPath)
@@ -828,10 +835,10 @@ object HnswIndex {
   // dwarfs the actual beam (the reference's SIFT-1M headline is 1–2 ms per
   // query, a serving regime; BASELINE.md). serveLocal answers ONE query
   // from driver-resident structures: centroids rank on the driver, the
-  // probed partitions' graphs come from a driver-local LRU (each cold
-  // partition costs ONE pushdown-pruned ranged read of the graph parquet;
-  // steady state launches no Spark job at all), and the layer-0 beam is
-  // the same [[searchGraph]] the distributed path runs.
+  // probed partitions' graphs come from a driver-local LRU (a call loads
+  // every partition it misses in ONE pushdown-pruned read per graph
+  // generation; steady state launches no Spark job at all), and the
+  // layer-0 beam is the same [[searchGraph]] the distributed path runs.
   //
   // Scope (documented, not silent): every node storage — flat (exact l2²
   // beam), SQ and PQ (r16: ADC beam + exact refine against resident float
@@ -852,13 +859,13 @@ object HnswIndex {
   // PQ codes) under quantized storage — [[searchGraph]] is generic in it.
   // The entry's second slot is the per-partition float lookup a quantized
   // graph's refine pass reads (null under flat storage, where the payload
-  // IS the float vector); loading it with the codes costs the SAME one
+  // IS the float vector); loading it with the codes costs the SAME
   // pruned read, and keeps the "zero Spark jobs warm" contract the other
   // serve paths honor — the PQ/SQ serve paths make the identical
-  // memory-for-latency trade through [[IvfIndex.servePartition]].
+  // memory-for-latency trade through [[IvfIndex.servePartitions]].
   private type ServeGraph = mutable.Map[Long, (AnyRef, Int, Array[Array[Long]], Boolean)]
   private type ServeEntry = (Seq[ServeGraph], java.util.HashMap[Long, Array[Float]])
-  private val serveGraphs = new ServeCache[ServeEntry](ServeCacheBudgetKey, 64)
+  private val serveGraphs = new ServeCache[Int, ServeEntry](ServeCacheBudgetKey, 64)
   def currentServeCapacity: Int = serveGraphs.currentCapacity
   val serveHits: java.util.concurrent.atomic.AtomicLong = serveGraphs.hits
   val serveMisses: java.util.concurrent.atomic.AtomicLong = serveGraphs.misses
@@ -914,50 +921,55 @@ object HnswIndex {
       }
     })
 
-  // the cold path's ONE ranged read runs outside the cache lock
-  // ([[ServeCache.getOrLoad]]): pid is a pushed-down parquet predicate, so
-  // only the partition's row groups are touched; a quantized graph reads
-  // codes (the beam payload) AND vec (the refine lookup) in the same pass
-  private def servePartition(spark: SparkSession, indexPath: String,
-                             pid: Int, storage: String): ServeEntry =
-    serveGraphs.getOrLoad(spark, indexPath, pid) {
+  // the partitions a call misses load outside the cache lock
+  // ([[ServeCache.getOrLoadAll]]) in ONE scan per generation directory:
+  // pid is a pushed-down parquet predicate, so only the partitions' row
+  // groups are touched; a quantized graph reads codes (the beam payload)
+  // AND vec (the refine lookup) in the same pass
+  private def servePartitions(spark: SparkSession, indexPath: String,
+                              pids: Seq[Int], storage: String): Seq[ServeEntry] =
+    serveGraphs.getOrLoadAll(spark, indexPath, pids) { miss =>
       val quant = storage != "flat"
-      val refine =
-        if (quant) new java.util.HashMap[Long, Array[Float]]() else null
-      val dirs = "graph" +: deltaDirs(spark, indexPath)
-      val loaded = dirs.map { d =>
-        val cols = Seq(col("id"),
-          (if (quant) col("codes") else col("vec")).as("__payload"),
-          col("level"), col("nbrs")) ++ (if (quant) Seq(col("vec")) else Nil)
+      val cols = Seq(col(PidCol), col("id"),
+        (if (quant) col("codes") else col("vec")).as("__payload"),
+        col("level"), col("nbrs")) ++ (if (quant) Seq(col("vec")) else Nil)
+      val perGen = ("graph" +: deltaDirs(spark, indexPath)).map { d =>
         val rows = spark.read.parquet(s"$indexPath/$d")
-          .filter(col(PidCol) === pid)
+          .filter(col(PidCol).isin(miss: _*))
           .select(cols: _*)
           .collect()
-        val g: ServeGraph = mutable.Map.empty
-        rows.foreach { r =>
-          val payload: AnyRef =
-            if (quant) r.getAs[Array[Byte]](1) else r.getSeq[Float](1).toArray
-          g(r.getLong(0)) = (payload, r.getInt(2),
-            r.getSeq[scala.collection.Seq[Long]](3).map(_.toArray).toArray, false)
-          if (quant) refine.put(r.getLong(0), r.getSeq[Float](4).toArray)
-        }
-        g
-      }.filter(_.nonEmpty)
-      (loaded, refine)
+        ServeCache.splitBy(miss, rows)(_.getInt(0))
+      }
+      miss.indices.map { i =>
+        val refine =
+          if (quant) new java.util.HashMap[Long, Array[Float]]() else null
+        val loaded = perGen.map { groups =>
+          val g: ServeGraph = mutable.Map.empty
+          groups(i).foreach { r =>
+            val payload: AnyRef =
+              if (quant) r.getAs[Array[Byte]](2) else r.getSeq[Float](2).toArray
+            g(r.getLong(1)) = (payload, r.getInt(3),
+              r.getSeq[scala.collection.Seq[Long]](4).map(_.toArray).toArray, false)
+            if (quant) refine.put(r.getLong(1), r.getSeq[Float](5).toArray)
+          }
+          g
+        }.filter(_.nonEmpty)
+        (loaded, refine)
+      }
     }
 
   /** Preload the serve cache for an index — every partition (default) or a
-    * chosen subset; returns resident node count. Books the cold-read cost
-    * ahead of the first interactive query, like [[warm]] does for the
-    * batched cache. */
+    * chosen subset, one scan per graph generation; returns resident node
+    * count. Books the cold-read cost ahead of the first interactive query,
+    * like [[warm]] does for the batched cache. */
   def serveWarm(spark: SparkSession, indexPath: String,
                 pids: Seq[Int] = Nil): Long = {
     ensureServeFresh(spark, indexPath)
     val st = serveModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until st.model.nlist
     serveGraphs.requireFits(spark, targets.size, "serve")
-    targets.map(p =>
-      servePartition(spark, indexPath, p, st.storage)._1.map(_.size.toLong).sum).sum
+    servePartitions(spark, indexPath, targets, st.storage)
+      .map(_._1.map(_.size.toLong).sum).sum
   }
 
   /** Answer one query driver-locally: centroid ranking, per-probed-pid
@@ -989,9 +1001,10 @@ object HnswIndex {
       case Some(keep) => id => !keep(id)
       case None       => _ => false
     }
+    val entries = probes.zip(servePartitions(spark, indexPath, probes, st.storage))
     if (st.storage == "flat") {
-      probes.iterator.flatMap { pid =>
-        servePartition(spark, indexPath, pid, st.storage)._1.iterator.flatMap { g =>
+      entries.iterator.flatMap { case (_, (graphs, _)) =>
+        graphs.iterator.flatMap { g =>
           searchGraph[AnyRef](g,
             v => l2sq(query2, v.asInstanceOf[Array[Float]]), k, efq, extraDead)
         }
@@ -1020,8 +1033,6 @@ object HnswIndex {
       // batched pool sizing (ef must cover the refine pool), then the
       // global (adc, id) cut at k·refineFactor
       val pool = math.max(k * refineFactor, efq)
-      val entries =
-        probes.map(pid => pid -> servePartition(spark, indexPath, pid, st.storage))
       val cands = entries.iterator.flatMap { case (pid, (graphs, _)) =>
         val dist = codeDistFor(pid)
         graphs.iterator.flatMap { g =>

@@ -232,7 +232,9 @@ object IvfIndex {
     * the index stores the PACKED bytes. `precomputed` (reference
     * `create_index(ivf_centroids=..., train=False)`, `dataset.py:2525`)
     * skips training and partitions under the given model — the assignment
-    * pass (the corpus-sized work) still runs distributed. */
+    * pass (the corpus-sized work) still runs distributed. Drops the
+    * index's in-JVM serve state, so serving never answers from the index
+    * this build replaced. */
   def build(df: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, maxIter: Int = 10,
             precomputed: Option[Model] = None): Model = {
@@ -245,6 +247,7 @@ object IvfIndex {
         ColumnBridge.expression(floatSide(df, vecCol)), model.centroids)))
     assigned.write.mode(SaveMode.Overwrite).partitionBy(PidCol).parquet(s"$indexPath/vectors")
     writeCentroids(df.sparkSession, indexPath, model)
+    serveUnpersist(indexPath)
     model
   }
 
@@ -296,27 +299,36 @@ object IvfIndex {
   // ------------------------------------------------------------------
   // Driver-local single-query serving (r14) — the IVF_FLAT twin of
   // [[HnswIndex.serveLocal]] for the interactive regime: centroids rank
-  // on the driver (the loadModel cache), probed partitions' (id, vec)
-  // rows come from a driver-local [[ServeCache]] (each cold partition costs
-  // ONE directory-pruned read of `vectors/` — it is partitioned BY pid;
-  // the quantized families refine from the same LRU), and
-  // ranking is an exact brute-force scan replicating [[Knn.flatSearch]]'s
-  // kernel arithmetic bit-for-bit. Zero Spark jobs once warm. Float
-  // storage only; serves the index dataset as-is (no DV/coverage
-  // subtraction — the fastSearch contract), like the HNSW twin.
+  // on the driver (the model is held in a per-index serve state), probed
+  // partitions' (id, vec) rows come from a driver-local [[ServeCache]]
+  // (every partition a call misses loads in ONE directory-pruned scan of
+  // `vectors/` — it is partitioned BY pid — split by pid on the driver;
+  // the quantized families refine from the same LRU), and ranking is an
+  // exact brute-force scan replicating [[Knn.flatSearch]]'s kernel
+  // arithmetic bit-for-bit. Zero Spark jobs once warm. Float or packed f16
+  // storage; serves the index dataset as-is (no DV/coverage subtraction —
+  // the fastSearch contract), like the HNSW twin.
   // ------------------------------------------------------------------
 
   val ServeCacheBudgetKey = "spark.graft.cache.ivf.serve.partitions"
-  private val serveRows =
-    new ServeCache[Array[(Long, Array[Float])]](ServeCacheBudgetKey, 64)
+  /** One resident partition: (id, vector) rows. */
+  private[operators] type FloatRows = Array[(Long, Array[Float])]
+  private val serveRows = new ServeCache[Int, FloatRows](ServeCacheBudgetKey, 64)
   def currentServeCapacity: Int = serveRows.currentCapacity
   val serveHits: java.util.concurrent.atomic.AtomicLong = serveRows.hits
   val serveMisses: java.util.concurrent.atomic.AtomicLong = serveRows.misses
   def serveCacheSize: Int = serveRows.size
+  private val serveModels =
+    new java.util.concurrent.ConcurrentHashMap[String, Model]()
 
-  /** Drop an index's driver-resident serve rows (after rebuild/optimize). */
+  /** Drop an index's driver-resident serve state (after rebuild/optimize). */
   def serveUnpersist(indexPath: String): Unit = {
     serveFresh.forget(indexPath)
+    purgeServe(indexPath)
+  }
+
+  private def purgeServe(indexPath: String): Unit = {
+    serveModels.remove(indexPath)
     serveStorageF16.remove(indexPath)
     serveRows.purge(indexPath)
   }
@@ -325,53 +337,71 @@ object IvfIndex {
   // keep serving a dropped/retrained index's partitions from (indexPath,
   // pid) keys. The epoch is [[ServeEpoch]]'s bounded deep listing (r16,
   // ADVICE r15 #4 — object-store rebuilds that only rewrite files nested
-  // under vectors/__ivf_pid=N/ still move the token); on mismatch the
-  // index's rows are purged. The model itself is already
-  // fingerprint-guarded inside loadModel.
-  private val serveFresh = new ServeFreshness(serveRows.purge)
+  // under vectors/__ivf_pid=N/ or centroids/ still move the token); on
+  // mismatch the index's model and rows are purged. In-process builds and
+  // optimizes drop the state outright before they return.
+  private val serveFresh = new ServeFreshness(purgeServe)
   private[operators] def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)
 
+  private def serveModel(spark: SparkSession, indexPath: String): Model =
+    serveModels.computeIfAbsent(indexPath, _ => loadModel(spark, indexPath))
+
+  /** Refuse a warm of `partitions` float partitions the budget cannot hold. */
+  private[operators] def requireServeFits(spark: SparkSession, partitions: Int): Unit =
+    serveRows.requireFits(spark, partitions, "serve")
+
   // storage flavor of an index's resident partitions (r16: f16 serving —
-  // the last "falls back to batched" storage refusal). Set on first
-  // partition load, purged with the serve rows; consistent per index
-  // since every partition shares the build's storage.
+  // the last "falls back to batched" storage refusal). Set on partition
+  // load, purged with the serve rows; consistent per index since every
+  // partition shares the build's storage.
   private val serveStorageF16 =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private[operators] def serveIsF16(indexPath: String): Boolean =
     serveStorageF16.getOrDefault(indexPath, java.lang.Boolean.FALSE)
 
-  private[operators] def servePartition(spark: SparkSession, indexPath: String,
-                             idCol: String, vecCol: String,
-                             pid: Int): Array[(Long, Array[Float])] =
-    serveRows.getOrLoad(spark, indexPath, pid) {
-      val df = spark.read.parquet(s"$indexPath/vectors")
-        .filter(col(PidCol) === pid)
-      // packed f16 storage (r16): decode ONCE at load into resident floats.
-      // Every decoded value is an exact f16, and the batched kernels
-      // ([[graft.functions.F16L2Distance]] etc.) also just decode-and-widen
-      // per element, so [[serveDist]] over these floats with an f16-ROUNDED
-      // query ([[serveLocal]]) is bit-identical to the batched f16 ranking.
-      val f16 = isF16(df, vecCol)
-      serveStorageF16.put(indexPath, f16)
-      if (f16)
-        df.select(col(idCol).cast("long"), col(vecCol)).collect()
-          .map(r => (r.getLong(0),
-            graft.functions.Float16.unpack(r.getAs[Array[Byte]](1))))
-      else
-        df.select(col(idCol).cast("long"), col(vecCol)).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+  /** Resident (id, vec) rows of `pids`, in request order. The partitions
+    * that miss load in ONE scan, except those whose rows a caller's own
+    * batched scan already `fetched` (the quantized families read codes and
+    * refine vectors together). */
+  private[operators] def servePartitions(spark: SparkSession, indexPath: String,
+                                         idCol: String, vecCol: String, pids: Seq[Int],
+                                         fetched: collection.Map[Int, FloatRows] = Map.empty)
+      : Seq[FloatRows] =
+    serveRows.getOrLoadAll(spark, indexPath, pids) { miss =>
+      val rest = miss.filterNot(fetched.contains)
+      val scanned =
+        if (rest.isEmpty) Map.empty[Int, FloatRows]
+        else rest.zip(scanPartitions(spark, indexPath, idCol, vecCol, rest)).toMap
+      miss.map(p => fetched.getOrElse(p, scanned(p)))
     }
 
-  /** Preload the serve cache (all partitions by default); returns resident
-    * row count. */
+  private def scanPartitions(spark: SparkSession, indexPath: String, idCol: String,
+                             vecCol: String, pids: Seq[Int]): Seq[FloatRows] = {
+    val df = spark.read.parquet(s"$indexPath/vectors")
+      .filter(col(PidCol).isin(pids: _*))
+    // packed f16 storage (r16): decode ONCE at load into resident floats.
+    // Every decoded value is an exact f16, and the batched kernels
+    // ([[graft.functions.F16L2Distance]] etc.) also just decode-and-widen
+    // per element, so [[serveDist]] over these floats with an f16-ROUNDED
+    // query ([[serveLocal]]) is bit-identical to the batched f16 ranking.
+    val f16 = isF16(df, vecCol)
+    serveStorageF16.put(indexPath, f16)
+    val rows = df.select(col(PidCol), col(idCol).cast("long"), col(vecCol)).collect()
+    ServeCache.splitBy(pids, rows)(_.getInt(0)).map(_.map(r => (r.getLong(1),
+      if (f16) graft.functions.Float16.unpack(r.getAs[Array[Byte]](2))
+      else r.getSeq[Float](2).toArray)))
+  }
+
+  /** Preload the serve cache (all partitions by default) in one scan;
+    * returns resident row count. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
     ensureServeFresh(spark, indexPath)
-    val model = loadModel(spark, indexPath)
+    val model = serveModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
-    serveRows.requireFits(spark, targets.size, "serve")
-    targets.map(p => servePartition(spark, indexPath, idCol, vecCol, p).length.toLong).sum
+    requireServeFits(spark, targets.size)
+    servePartitions(spark, indexPath, idCol, vecCol, targets).map(_.length.toLong).sum
   }
 
   /** Same accumulation order and widening as the codegen'd distance
@@ -407,23 +437,23 @@ object IvfIndex {
                  metric: String = "l2",
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
     ensureServeFresh(spark, indexPath)
-    val model = loadModel(spark, indexPath)
+    val model = serveModel(spark, indexPath)
     // centroid ranking always uses the raw float query (the batched path
     // does too: [[Model.rank]] precedes any storage-flavor handling)
     val probes = model.rank(query).take(math.min(nprobes, model.nlist))
     // packed-f16 storage (r16): the batched ranking compares f16 query
     // bytes against f16 stored bytes, so the serve query must round
-    // through f16 exactly like f16Lit's pack — computed once, lazily
-    // (the flag is set by the first servePartition load)
-    lazy val q16 = graft.functions.Float16.unpack(
-      graft.functions.Float16.pack(query))
+    // through f16 exactly like f16Lit's pack (the flag is set by the
+    // partition load)
+    val parts = servePartitions(spark, indexPath, idCol, vecCol, probes)
+    val qq = if (serveIsF16(indexPath))
+      graft.functions.Float16.unpack(graft.functions.Float16.pack(query))
+    else query
     // prefilter (r16): dropped BEFORE the top-k cut, the batched
     // `prefilter` contract — the result is the true top-k of the
     // allowed set, never a short post-filtered list
     val keep = allowed.getOrElse((_: Long) => true)
-    probes.iterator.flatMap { pid =>
-      val rows = servePartition(spark, indexPath, idCol, vecCol, pid)
-      val qq = if (serveIsF16(indexPath)) q16 else query
+    parts.iterator.flatMap { rows =>
       rows.iterator.collect {
         case (id, v) if keep(id) => (id, serveDist(metric, qq, v))
       }
@@ -561,14 +591,17 @@ object IvfIndex {
     * no retrain, O(delta) IO. If compaction removed covered fragments, the
     * stale rows are dropped by a filtered rewrite of the index dataset
     * (O(index) IO, still no retrain) so the index never holds duplicate
-    * rows. Returns the number of newly indexed rows. */
+    * rows. Drops the index's in-JVM serve state before it returns, so the
+    * next `serveLocal` reloads the grown index. Returns the number of newly
+    * indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String): Long = {
     val model = loadModel(spark, indexPath)
-    maintainPartitionedVectors(spark, tablePath, idCol, vecCol, indexPath,
+    try maintainPartitionedVectors(spark, tablePath, idCol, vecCol, indexPath,
       "IVF_FLAT", df => df.withColumn(PidCol,
         ColumnBridge.column(IvfAssign(
           ColumnBridge.expression(floatSide(df, vecCol)), model.centroids))))
+    finally serveUnpersist(indexPath)
   }
 
   /** Incremental maintenance shared by every PID-partitioned vector layout

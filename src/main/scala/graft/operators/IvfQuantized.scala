@@ -29,11 +29,12 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   *    filtered-out or dead rows never occupy candidate slots.
   *  - **serving** ([[serveLocal]]): the same two passes driver-side. The
   *    probed partitions' codes live in a [[ServeCache]] budgeted by
-  *    [[ServeCodesBudgetKey]]; a driver scorer per probed partition
-  *    reproduces the batched column's arithmetic bit for bit; the exact
-  *    refine reads [[IvfIndex]]'s shared float LRU. Ids AND distances
-  *    equal [[search]] at equal refineFactor, and a warm query runs no
-  *    Spark job. Epoch staleness and budget refusal follow the contract of
+  *    [[ServeCodesBudgetKey]], and the partitions a call misses load in
+  *    ONE scan that also fills the refine vectors; a driver scorer per
+  *    probed partition reproduces the batched column's arithmetic bit for
+  *    bit; the exact refine reads [[IvfIndex]]'s shared float LRU. Ids
+  *    AND distances equal [[search]] at equal refineFactor, and a warm
+  *    query runs no Spark job. Epoch staleness and budget refusal follow the contract of
   *    every serve path ([[ServeFreshness]], [[ServeCache]]).
   *
   * Cosine indexes store NORMALIZED vectors: on the unit sphere the l2²
@@ -100,7 +101,9 @@ trait IvfQuantized {
     df.withColumn(IvfIndex.PidCol,
       ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
 
-  /** Encode the assigned rows and write `vectors/` and `centroids/`. */
+  /** Encode the assigned rows and write `vectors/` and `centroids/`. Each
+    * quantizer's `build` drops the index's in-JVM serve state
+    * ([[serveUnpersist]]) once its codec is written too. */
   protected final def writeIndex(withPid: DataFrame, vecCol: String, indexPath: String,
                                  ivf: IvfIndex.Model, codec: Codec): Unit = {
     encode(withPid, vecCol, ivf, codec).write.mode(SaveMode.Overwrite)
@@ -129,14 +132,16 @@ trait IvfQuantized {
     * the fragments the index does not cover yet, with the EXISTING
     * centroids and codec, in the space the index was built in; remap after
     * compaction and the legacy filtered rewrite are
-    * [[IvfIndex.maintainPartitionedVectors]]'s. Returns newly indexed rows. */
+    * [[IvfIndex.maintainPartitionedVectors]]'s. Drops the index's in-JVM
+    * serve state before it returns. Returns newly indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String): Long = {
     val ix = load(spark, indexPath)
-    IvfIndex.maintainPartitionedVectors(spark, tablePath, idCol, vecCol, indexPath,
+    try IvfIndex.maintainPartitionedVectors(spark, tablePath, idCol, vecCol, indexPath,
       indexType, df0 => encode(assign(
         IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, ix.metric),
         vecCol, ix.ivf), vecCol, ix.ivf, ix.codec))
+    finally serveUnpersist(indexPath)
   }
 
   // ------------------------------------------------------------ search
@@ -223,8 +228,8 @@ trait IvfQuantized {
 
   // ------------------------------------------------------------ serving
 
-  private lazy val serveCodes =
-    new ServeCache[Array[(Long, Array[Byte], Float)]](ServeCodesBudgetKey, 256)
+  private type Codes = Array[(Long, Array[Byte], Float)]
+  private lazy val serveCodes = new ServeCache[Int, Codes](ServeCodesBudgetKey, 256)
   def currentServeCapacity: Int = serveCodes.currentCapacity
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
@@ -255,28 +260,41 @@ trait IvfQuantized {
   private def serveState(spark: SparkSession, indexPath: String): Loaded =
     serveStates.computeIfAbsent(indexPath, _ => load(spark, indexPath))
 
-  private def serveCodesPartition(spark: SparkSession, indexPath: String,
-                                  idCol: String, pid: Int): Array[(Long, Array[Byte], Float)] =
-    serveCodes.getOrLoad(spark, indexPath, pid) {
+  /** Resident codes (+ norm) of `pids`, in request order. The pids that
+    * miss load in ONE scan that reads their refine vectors too: those go
+    * into `fetched`, for [[IvfIndex.servePartitions]] to take instead of
+    * scanning again. */
+  private def serveCodesOf(spark: SparkSession, indexPath: String, idCol: String,
+                           vecCol: String, pids: Seq[Int],
+                           fetched: collection.mutable.Map[Int, IvfIndex.FloatRows])
+      : Seq[Codes] =
+    serveCodes.getOrLoadAll(spark, indexPath, pids) { miss =>
       val withNorm = codeCols.size > 1
-      spark.read.parquet(s"$indexPath/vectors")
-        .filter(col(IvfIndex.PidCol) === pid)
-        .select((col(idCol).cast("long") +: codeCols.map(col)): _*).collect()
-        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1),
-          if (withNorm) r.getFloat(2) else 0f))
+      val rows = spark.read.parquet(s"$indexPath/vectors")
+        .filter(col(IvfIndex.PidCol).isin(miss: _*))
+        .select((Seq(col(IvfIndex.PidCol), col(idCol).cast("long"), col(vecCol)) ++
+          codeCols.map(col)): _*).collect()
+      miss.zip(ServeCache.splitBy(miss, rows)(_.getInt(0))).map { case (pid, rs) =>
+        fetched(pid) = rs.map(r => (r.getLong(1), r.getSeq[Float](2).toArray))
+        rs.map(r => (r.getLong(1), r.getAs[Array[Byte]](3),
+          if (withNorm) r.getFloat(4) else 0f))
+      }
     }
 
   /** Preload the serve caches (codes + refine vectors; all partitions by
-    * default); returns the resident code-row count. */
+    * default) in one scan; returns the resident code-row count. Both
+    * budgets are checked before anything is read. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
     ensureServeFresh(spark, indexPath)
     val st = serveState(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
-    val n = targets.map(p =>
-      serveCodesPartition(spark, indexPath, idCol, p).length.toLong).sum
-    IvfIndex.serveWarm(spark, indexPath, idCol, vecCol, targets)
+    IvfIndex.requireServeFits(spark, targets.size)
+    val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]
+    val n = serveCodesOf(spark, indexPath, idCol, vecCol, targets, fetched)
+      .map(_.length.toLong).sum
+    IvfIndex.servePartitions(spark, indexPath, idCol, vecCol, targets, fetched)
     n
   }
 
@@ -287,7 +305,8 @@ trait IvfQuantized {
     * arithmetic, same (score, id) candidate cut, same exact kernels
     * ([[IvfIndex.serveDist]]) and (distance, id) tie-break. `allowed` is
     * the id prefilter, applied BEFORE the candidate cut like the batched
-    * `prefilter`. */
+    * `prefilter`. Cold probed partitions load codes and refine vectors in
+    * one scan. */
   def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
                  vecCol: String, query: Array[Float], k: Int, nprobes: Int,
                  refineFactor: Int = 10,
@@ -296,18 +315,22 @@ trait IvfQuantized {
     val st = serveState(spark, indexPath)
     val (q, probes) = probe(st, query, nprobes, "serve")
     val keep = allowed.getOrElse((_: Long) => true)
+    val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]
+    val resident = serveCodesOf(spark, indexPath, idCol, vecCol, probes, fetched)
     // pass 1: estimated distances over resident codes
-    val cands = probes.iterator.flatMap { pid =>
+    val cands = probes.iterator.zip(resident.iterator).flatMap { case (pid, rows) =>
       val score = scorer(st.ivf, st.codec, q, pid)
-      serveCodesPartition(spark, indexPath, idCol, pid).iterator
+      rows.iterator
         .collect { case (id, codes, norm) if keep(id) => (id, score(codes, norm), pid) }
     }.toSeq.sortBy { case (id, d, _) => (d, id) }.take(k * refineFactor)
     // pass 2: exact refine from the shared float-vector serve LRU (stored
     // vectors are normalized under cosine, like the batched pass 2)
-    cands.groupBy(_._3).iterator.flatMap { case (pid, cs) =>
-      val vecs = IvfIndex.servePartition(spark, indexPath, idCol, vecCol, pid)
-      val lookup = new java.util.HashMap[Long, Array[Float]](vecs.length * 2)
-      vecs.foreach { case (id, v) => lookup.put(id, v) }
+    val byPid = cands.groupBy(_._3).toSeq
+    val vecs = IvfIndex.servePartitions(spark, indexPath, idCol, vecCol,
+      byPid.map(_._1), fetched)
+    byPid.iterator.zip(vecs.iterator).flatMap { case ((_, cs), rows) =>
+      val lookup = new java.util.HashMap[Long, Array[Float]](rows.length * 2)
+      rows.foreach { case (id, v) => lookup.put(id, v) }
       cs.iterator.flatMap { case (id, _, _) =>
         Option(lookup.get(id)).map(v => (id, IvfIndex.serveDist(st.metric, q, v)))
       }

@@ -1,25 +1,28 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 
-/** Driver-resident per-partition LRU shared by every driver-local serve
-  * path: (indexPath, pid) → one partition's resident payload `V` — float
-  * rows ([[IvfIndex]]), quantized codes ([[IvfQuantized]],
-  * [[BinaryIvfIndex]]) or per-generation graphs ([[HnswIndex]]). One
-  * contract for all of them: an access-order LRU whose capacity (resident
-  * partitions) is read from the conf key `budgetKey`, immediate eviction
-  * when that budget shrinks (ADVICE r14), hit/miss counters for
-  * `cache_stats`, and per-index purge for the epoch staleness guard
-  * ([[ServeFreshness]]). */
-private[operators] final class ServeCache[V <: AnyRef](val budgetKey: String,
-                                                       defaultCapacity: Int) {
+/** Driver-resident LRU shared by every driver-local serve path:
+  * (indexPath, key) → one partition's or term's resident payload `V` —
+  * float rows ([[IvfIndex]]), quantized codes ([[IvfQuantized]],
+  * [[BinaryIvfIndex]]), per-generation graphs ([[HnswIndex]]) keyed by
+  * pid, or postings ([[Fts]]) keyed by token. One contract for all of
+  * them: an access-order LRU whose capacity (resident entries) is read from
+  * the conf key `budgetKey`, immediate eviction when that budget shrinks
+  * (ADVICE r14), per-entry hit/miss counters for `cache_stats` (pass shared
+  * counters to count several caches as one), per-index purge for the epoch
+  * staleness guard ([[ServeFreshness]]), and ONE batched load per call for
+  * every key that missed ([[getOrLoadAll]]). */
+private[operators] final class ServeCache[K, V <: AnyRef](
+    val budgetKey: String, defaultCapacity: Int,
+    val hits: AtomicLong = new AtomicLong(0),
+    val misses: AtomicLong = new AtomicLong(0)) {
   @volatile private var capacity = defaultCapacity
   def currentCapacity: Int = capacity
-  val hits = new java.util.concurrent.atomic.AtomicLong(0)
-  val misses = new java.util.concurrent.atomic.AtomicLong(0)
   private val rows =
-    new java.util.LinkedHashMap[(String, Int), V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(String, Int), V]): Boolean =
+    new java.util.LinkedHashMap[(String, K), V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(String, K), V]): Boolean =
         this.size() > capacity
     }
 
@@ -38,34 +41,70 @@ private[operators] final class ServeCache[V <: AnyRef](val budgetKey: String,
     cap
   }
 
-  /** Refuse a warm of `partitions` partitions the budget cannot hold: it
-    * would evict most of what it just loaded, report an inflated resident
-    * count, and leave every later query paying cold reads anyway. */
-  def requireFits(spark: SparkSession, partitions: Int, what: String): Unit = {
+  /** Refuse a warm of `entries` partitions or terms the budget cannot hold:
+    * it would evict most of what it just loaded, report an inflated
+    * resident count, and leave every later query paying cold reads anyway. */
+  def requireFits(spark: SparkSession, entries: Int, what: String,
+                  unit: String = "partitions"): Unit = {
     val cap = refresh(spark)
-    require(partitions <= cap,
-      s"serveWarm($partitions partitions) exceeds the $what budget " +
-        s"$cap — raise $budgetKey or warm a pid subset")
+    require(entries <= cap,
+      s"serveWarm($entries $unit) exceeds the $what budget " +
+        s"$cap — raise $budgetKey or warm a subset")
   }
 
-  /** Drop one index's resident partitions. */
+  /** Drop one index's resident entries. */
   def purge(indexPath: String): Unit = rows.synchronized {
     val it = rows.keySet().iterator()
     while (it.hasNext) if (it.next()._1 == indexPath) it.remove()
   }
 
-  /** Resident payload for (indexPath, pid), loading with `load` on a miss.
-    * The cold load runs OUTSIDE the lock (a racing duplicate load is
-    * benign, a blocked warm query is not). */
-  def getOrLoad(spark: SparkSession, indexPath: String, pid: Int)(load: => V): V = {
+  /** Resident payloads of `keys` of one index, in request order. Hits come
+    * from the cache; every distinct key that missed is loaded by ONE call
+    * of `loadMissing` (missed keys in request order → one payload each, in
+    * that order), outside the lock — a racing duplicate load is benign, a
+    * blocked warm query is not. Counting is per key, as if the keys were
+    * fetched one by one: each distinct missed key is one miss, every other
+    * access one hit. Entries are touched and inserted in request order, so
+    * the LRU order is the one a key-by-key load leaves. */
+  def getOrLoadAll(spark: SparkSession, indexPath: String, keys: Seq[K])
+                  (loadMissing: Seq[K] => Seq[V]): Seq[V] = {
     refresh(spark)
+    val found = new java.util.HashMap[K, V]()
+    val missed = scala.collection.mutable.LinkedHashSet.empty[K]
     rows.synchronized {
-      val hit = rows.get((indexPath, pid))
-      if (hit != null) { hits.incrementAndGet(); return hit }
+      keys.foreach { k =>
+        if (!found.containsKey(k) && !missed.contains(k)) {
+          val hit = rows.get((indexPath, k))
+          if (hit != null) found.put(k, hit) else missed += k
+        }
+      }
     }
-    misses.incrementAndGet()
-    val loaded = load
-    rows.synchronized { rows.put((indexPath, pid), loaded) }
-    loaded
+    hits.addAndGet(keys.size - missed.size)
+    if (missed.nonEmpty) {
+      misses.addAndGet(missed.size)
+      val want = missed.toSeq
+      val loaded = loadMissing(want)
+      require(loaded.size == want.size,
+        s"serve load returned ${loaded.size} payloads for ${want.size} keys")
+      want.iterator.zip(loaded.iterator).foreach { case (k, v) => found.put(k, v) }
+      rows.synchronized {
+        keys.foreach { k =>
+          if (missed.remove(k)) rows.put((indexPath, k), found.get(k))
+          else rows.get((indexPath, k)) // touch: keep key-by-key recency
+        }
+      }
+    }
+    keys.map(found.get)
+  }
+}
+
+private[operators] object ServeCache {
+  /** Split one batched scan's `rows` by key into one group per requested
+    * key, in request order; each group keeps the scan's row order, and a
+    * key with no rows gets an empty group. */
+  def splitBy[K, R: scala.reflect.ClassTag](keys: Seq[K], rows: Array[R])
+                                           (keyOf: R => K): Seq[Array[R]] = {
+    val groups = rows.groupBy(keyOf)
+    keys.map(k => groups.getOrElse(k, Array.empty[R]))
   }
 }
