@@ -205,7 +205,10 @@ object GraftTable {
     * the lineage numbering). While present, the forward probe above is
     * unsound — a walk could stop at a hole instead of HEAD — so
     * [[latestVersion]] reverts to the full listing for that lineage
-    * forever. Existence-only (no content), so concurrent cleanups cannot
+    * forever. The probe checks it before AND after its walk: a cleanup
+    * that starts mid-walk writes the sentinel before its first delete, so
+    * any hole the walk could have stopped at is announced by the second
+    * check. Existence-only (no content), so concurrent cleanups cannot
     * race its meaning; prefix-only cleanups never write it. */
   private val GapSentinel = "_GRAFT_GAP"
 
@@ -223,10 +226,13 @@ object GraftTable {
     val hinted = latestHint.get(key)
     if (hinted != null && f.exists(manifestPath(t, hinted.longValue(), branch)) &&
         !f.exists(gapSentinelPath(t, branch))) {
+      DmlTestHooks.beforeProbeWalk(tablePath)
       var v = hinted.longValue()
       while (f.exists(manifestPath(t, v + 1, branch))) v += 1
-      latestHint.put(key, java.lang.Long.valueOf(v))
-      return Some(v)
+      if (!f.exists(gapSentinelPath(t, branch))) {
+        latestHint.put(key, java.lang.Long.valueOf(v))
+        return Some(v)
+      }
     }
     if (hinted != null) latestHint.remove(key, hinted)
     val vs = versions(spark, tablePath, branch)
@@ -1876,6 +1882,10 @@ object GraftTable {
       * rename staged files) and its CAS — the window where a concurrent
       * commit forces a retry against work already renamed. */
     @volatile var beforeCas: String => Unit = _ => ()
+    /** Fires in [[latestVersion]]'s fast path between its gap-sentinel
+      * check and its forward walk — where a concurrent cleanup can punch a
+      * hole the walk would stop at. */
+    @volatile var beforeProbeWalk: String => Unit = _ => ()
   }
 
   /** DV-level conflict resolution for a mutation whose deletion vector was

@@ -112,8 +112,8 @@ object BinaryIvfIndex {
 
   /** Train + partition the dataset by assigned centroid (mirrors
     * [[IvfIndex.build]]; the assignment expression keeps the corpus pass
-    * distributed and inside the scan stage). Drops the index's in-JVM serve
-    * state. */
+    * distributed and inside the scan stage). Publishes a new
+    * [[IndexIdentity]]. */
   def build(df: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, maxIter: Int = 10): Model = {
     val model = train(df, idCol, vecCol, nlist, maxIter)
@@ -125,7 +125,7 @@ object BinaryIvfIndex {
     spark.createDataFrame(rows.toSeq).toDF("pid", "centroid")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
     IvfIndex.writeVectorMeta(spark, indexPath, "hamming", storage = "binary")
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(spark, indexPath)
     model
   }
 
@@ -167,8 +167,8 @@ object BinaryIvfIndex {
   /** Incremental maintenance — the shared PID-partitioned policy
     * ([[IvfIndex.maintainPartitionedVectors]]): REMAP compaction-moved rows
     * (addresses only, assignments untouched), append-assign fresh
-    * fragments with the hamming centroids. Drops the index's in-JVM serve
-    * state before it returns. Returns rows newly encoded. */
+    * fragments with the hamming centroids. Publishes a new
+    * [[IndexIdentity]] before it returns. Returns rows newly encoded. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String): Long = {
     val model = loadModel(spark, indexPath)
@@ -177,7 +177,7 @@ object BinaryIvfIndex {
       df => df.withColumn(PidCol,
         ColumnBridge.column(BinaryIvfAssign(ColumnBridge.expression(col(vecCol)), model.centroids))),
       extraMeta = Map("metric" -> "hamming"))
-    finally serveUnpersist(indexPath)
+    finally IndexIdentity.publish(spark, indexPath)
   }
 
   /** Snapshot-consistent combined search — [[IvfIndex.combined]] skeleton
@@ -203,7 +203,7 @@ object BinaryIvfIndex {
   // SMALLEST resident set of any family — and ranking is the exact
   // popcount(xor) the codegen'd kernel computes; no refine pass exists to
   // serve (the batched path has none either). Ids AND distances equal
-  // [[search]]. Same epoch/budget contract as the serve twins.
+  // [[search]]. Same freshness/budget contract as the serve twins.
   // ------------------------------------------------------------------
 
   val ServeCodesBudgetKey = "spark.graft.cache.hamming.serve.partitions"
@@ -220,7 +220,7 @@ object BinaryIvfIndex {
     serveCodes.purge(p)
   })
 
-  /** Drop an index's driver-resident serve state (after rebuild/optimize). */
+  /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
     serveModels.remove(indexPath)
     serveFresh.forget(indexPath)

@@ -607,7 +607,10 @@ object Fts {
   def tokenize(c: Column): Column =
     filter(split(lower(c), "[^a-z0-9]+"), t => t =!= lit(""))
 
-  case class Index(postings: String, termstats: String, docstats: String, meta: String)
+  case class Index(postings: String, termstats: String, docstats: String, meta: String) {
+    /** The index directory the four datasets live in. */
+    private[operators] def root: String = meta.stripSuffix("/meta")
+  }
 
   /** `contains_tokens(col, 'a b c')` — true iff every query token appears in
     * the tokenized column (reference `contains_tokens` UDF,
@@ -773,7 +776,6 @@ object Fts {
   def buildIndex(df: DataFrame, idCol: String, textCol: String, indexPath: String,
                  numPostingFiles: Int = -1, config: FtsConfig = FtsConfig()): Index = {
     val p = paths(indexPath)
-    invalidateMeta(indexPath)
     // a name-referenced dictionary resolves through the dict home HERE,
     // once; the stored config below carries the resolved entries
     val cfg = DictLoader.resolveConfig(df.sparkSession, config)
@@ -846,7 +848,7 @@ object Fts {
     // adopt the freshly built segments as the merged base (sidecars were
     // dropped by the Overwrite) so later optimizes track only true deltas
     mergeDeltaSegments(df.sparkSession, indexPath)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(df.sparkSession, indexPath)
     p
   }
 
@@ -917,7 +919,6 @@ object Fts {
         "terms could not segment like the corpus")
     val indexPath = s"$tablePath/_indices/fts_$textCol"
     val p = paths(indexPath)
-    invalidateMeta(indexPath)
     writeConfig(spark, indexPath, cfgs.head)
     // ONE postings exchange (r16, guide §2.4): hash-partition the merged
     // postings by token up front — the write layout AND the termstats df
@@ -954,7 +955,7 @@ object Fts {
     } finally postings.unpersist()
     clearOptimizeIntent(spark, indexPath) // stats rewritten from the parts
     mergeDeltaSegments(spark, indexPath)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(spark, indexPath)
     val mV = GraftTable.loadManifest(spark, tablePath, Some(v))
     val phys = mV.schema.fields.find(_.name == textCol)
       .map(mV.physicalName).getOrElse(textCol)
@@ -972,9 +973,10 @@ object Fts {
   /** Incremental FTS maintenance for a table-local index: tokenize ONLY the
     * fragments the coverage marker does not include yet, append their
     * postings/docstats/blockstats, recompute global stats, and move the
-    * coverage + manifest entry forward. O(delta) tokenization. Drops the
-    * index's in-JVM serve state before it returns (as every build and
-    * optimize path does). Returns the number of newly indexed rows. */
+    * coverage + manifest entry forward. O(delta) tokenization. Every
+    * branch that rewrites the index publishes a new [[IndexIdentity]]
+    * once; a coverage-only remap changes no cached content and publishes
+    * none. Returns the number of newly indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        textCol: String, maxDeltaFiles: Int = 0): Long = {
     import graft.format.GraftTable
@@ -1022,11 +1024,10 @@ object Fts {
       // (reference OptimizeOptions.num_indices_to_merge with no appends):
       // compact the existing deltas down to the requested count
       mergeDeltaSegments(spark, indexPath, maxDeltaFiles)
-      invalidateMeta(indexPath)
+      IndexIdentity.publish(spark, indexPath)
     }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
       "FTS", textCol, m, Map("idCol" -> idCol))
-    serveUnpersist(indexPath)
     freshFrags.map(_.rows).sum
   }
 
@@ -1042,7 +1043,6 @@ object Fts {
   def optimizeIndex(newDocs: DataFrame, idCol: String, textCol: String,
                     indexPath: String, maxDeltaFiles: Int = 0): Index = {
     val p = paths(indexPath)
-    invalidateMeta(indexPath)
     val spark = newDocs.sparkSession
     // Intent marker (r17, VERDICT r16 #2): the window between the delta
     // postings append and the termstats swap is not atomic. The O(delta)
@@ -1139,7 +1139,7 @@ object Fts {
     fsys.delete(intent, false)
     mergeDeltaSegments(spark, indexPath,
       if (maxDeltaFiles > 0) maxDeltaFiles else 16)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(spark, indexPath)
     p
   }
 
@@ -1311,45 +1311,33 @@ object Fts {
     idf(n) * (col("tf") * (K1 + 1)) /
       (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / lit(avgdl)))
 
-  /** (n_docs, avgdl) per index path, memoized — meta is a single parquet
-    * row yet costs a driver job per read; query paths (WAND especially —
-    * it builds three scored plans) were paying it repeatedly. Invalidated
-    * by in-JVM build/optimize AND by a content epoch folded into the key
-    * (max mtime under the meta dir, one FS listing per query): a rebuild
-    * or optimize from ANOTHER process changes the epoch, so a long-lived
-    * JVM never serves stale n_docs/avgdl/df — the same cross-process
-    * contract as the scalar-rule caches. */
+  /** (n_docs, avgdl) per (index path, [[IndexIdentity]]), memoized — meta
+    * is a single parquet row yet costs a driver job per read; query paths
+    * (WAND especially — it builds three scored plans) were paying it
+    * repeatedly. The identity is read per lookup (one small file read), so
+    * a rebuild or optimize by any process retires the entry and a
+    * long-lived JVM never serves stale n_docs/avgdl/df. */
   private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
-  private[operators] def invalidateMeta(indexPath: String): Unit = {
-    metaCache.clear()
-    termDfCache.clear()
-  }
-  /** Content token for an index stats dir: max file mtime (0 if absent).
-    * One listStatus — microseconds against the driver job it guards. */
-  private def epochOf(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).foldLeft(0L)((m, st) => math.max(m, st.getModificationTime))
-  }
   private def boundedGet[V](cache: java.util.concurrent.ConcurrentHashMap[String, V],
                             key: String, load: => V): V = {
-    if (cache.size > 1024) cache.clear() // epochs retire old keys; bound growth
+    if (cache.size > 1024) cache.clear() // identities retire old keys; bound growth
     cache.computeIfAbsent(key, _ => load)
   }
+  private def cacheKey(spark: SparkSession, index: Index): String =
+    IndexIdentity.read(spark, index.root) + "|" + index.root
   private def metaOf(spark: SparkSession, index: Index): (Double, Double) =
-    boundedGet(metaCache, s"${epochOf(spark, index.meta)}|${index.meta}", {
+    boundedGet(metaCache, cacheKey(spark, index), {
       val meta = spark.read.parquet(index.meta).head()
       (meta.getLong(0).toDouble, meta.getDouble(1))
     })
 
-  /** df per (termstats epoch+path, token), memoized — the WAND floor check
-    * and idf precompute collapse to one tiny lookup job per novel token
-    * set. */
+  /** df per (index path, identity, token set), memoized — the WAND floor
+    * check and idf precompute collapse to one tiny lookup job per novel
+    * token set. */
   private val termDfCache = new java.util.concurrent.ConcurrentHashMap[String, Map[String, Double]]()
   private def termDfs(spark: SparkSession, index: Index, tokens: Seq[String]): Map[String, Double] =
     boundedGet(termDfCache,
-      epochOf(spark, index.termstats) + "|" + index.termstats + "|" +
+      cacheKey(spark, index) + "|" +
         tokens.sorted.map(t => s"${t.length}:$t").mkString(" "), {
       spark.read.parquet(index.termstats)
         .filter(col("token").isin(tokens: _*))
@@ -1560,7 +1548,6 @@ object Fts {
     require(factor >= 1, "factor must be >= 1")
     val src = paths(srcPath)
     val dest = paths(destPath)
-    invalidateMeta(destPath)
     writeConfig(spark, destPath, loadConfig(spark, srcPath))
     val maxDoc = spark.read.parquet(src.docstats).agg(max(col("doc_id"))).head().getLong(0)
     val span = (maxDoc / WandBlockSize + 1L) * WandBlockSize // block-aligned
@@ -1584,6 +1571,7 @@ object Fts {
     spark.read.parquet(src.docstats)
       .agg((count(lit(1)) * factor).as("n_docs"), avg(col("dl")).as("avgdl"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dest.meta)
+    IndexIdentity.publish(spark, destPath)
   }
 
   /** Fuzzy match (reference MatchQuery `fuzziness` / `prefix_length`,
@@ -1763,8 +1751,8 @@ object Fts {
   // boolean/fuzzy query runs ZERO Spark jobs and returns exactly
   // [[matchQuery]]/[[booleanQuery]]/[[fuzzyQuery]]'s top-k (same BM25
   // arithmetic, same (score desc, doc_id) tie-break). Long doc ids only.
-  // Staleness: the same on-disk epoch guard as the ANN twins — one root
-  // listing per query purges resident state after rebuild/optimize.
+  // Freshness: the same [[IndexIdentity]] guard as the ANN twins purges
+  // resident state after a rebuild or optimize.
   // ------------------------------------------------------------------
 
   /** Max docstats rows resident per served index (driver memory guard):
@@ -1789,8 +1777,8 @@ object Fts {
     ServeTermBudgetKey, 4096, serveHits, serveMisses)
   /** Positioned postings for [[servePhrase]] — separate from the scoring
     * LRU so match/boolean/fuzzy serving never pays for position arrays it
-    * does not read. Shares the token budget, the counters and the epoch
-    * guard. */
+    * does not read. Shares the token budget, the counters and the
+    * freshness guard. */
   private val servePosPostings = new ServeCache[String, Array[(Long, Array[Int])]](
     ServeTermBudgetKey, 4096, serveHits, serveMisses)
   def currentServeTermCapacity: Int = servePostings.currentCapacity
@@ -1802,18 +1790,13 @@ object Fts {
     servePosPostings.purge(indexPath)
   }
 
-  /** Drop an index's driver-resident serve state. */
+  /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
     serveFresh.forget(indexPath)
     purgeServe(indexPath)
   }
 
-  // r16 (ADVICE r15 #4): bounded deep listing ([[ServeEpoch]]) — a rebuild
-  // that only rewrites files nested under postings/docstats/termstats moves
-  // the token even on object stores, where the r15 one-level root listing
-  // (virtual directory entries: len 0, mtime 0) could stay unchanged. The
-  // guard itself is the shared [[ServeFreshness]]; in-process builds and
-  // optimizes drop the state outright before they return.
+  // resident stats and postings are purged when the index's identity moves
   private val serveFresh = new ServeFreshness(purgeServe)
   private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)

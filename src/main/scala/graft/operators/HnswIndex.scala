@@ -71,11 +71,6 @@ object HnswIndex {
   private case class Node(id: Long, vec: Array[Float], level: Int,
                           nbrs: Array[mutable.ArrayBuffer[Long]])
 
-  /** Probe face for [[buildGraph]] (tools.BuildTime CPU isolation). */
-  private[graft] def buildGraphProbe(vecs: Seq[(Long, Array[Float])], m: Int,
-                                     efConstruction: Int): Int =
-    buildGraph(vecs, m, efConstruction).size
-
   /** Full-adjacency probe (r17 bit-identity audit of the primitive
     * rewrite: dump (id, level, neighbor lists) for checksum comparison
     * against the r16 boxed implementation). */
@@ -333,7 +328,6 @@ object HnswIndex {
     // carry their own SQ/PQ compression.
     val df = IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, metric)
     val spark = df.sparkSession
-    invalidateCache(indexPath)
     dropDeltaDirs(spark, indexPath) // a full rebuild collapses delta graphs
     IvfIndex.writeVectorMeta(spark, indexPath, metric, storage,
       pqVariant = if (storage == "pq") "residual" else "",
@@ -370,7 +364,7 @@ object HnswIndex {
     writeGraphRows(df, idCol, vecCol, model.centroids, encode, m,
       efConstruction, s"$indexPath/graph")
     IvfIndex.writeCentroids(spark, indexPath, model)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(spark, indexPath)
     model
   }
 
@@ -525,7 +519,8 @@ object HnswIndex {
     * surviving sources and renames the tmp dir into the head slot —
     * idempotent, safe to call from search and optimize paths. A tmp dir
     * WITHOUT a marker is an in-progress (or abandoned) write and is left
-    * for the single-writer optimize path to discard. */
+    * for the single-writer optimize path to discard. A finished merge
+    * changes the generations, so it publishes a new [[IndexIdentity]]. */
   private def recoverCompletedMerge(spark: SparkSession, indexPath: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -542,7 +537,7 @@ object HnswIndex {
     }
     fs.delete(marker, false) // the merged dir becomes a plain generation
     fs.rename(tmp, new org.apache.hadoop.fs.Path(p, head))
-    invalidateCache(indexPath)
+    IndexIdentity.publish(spark, indexPath)
   }
 
   /** Exact float vectors across the base graph AND every delta sub-graph —
@@ -602,21 +597,23 @@ object HnswIndex {
     * so optimize cost is O(delta), not O(corpus). A compaction that
     * retires covered fragments invalidates node addresses ⇒ full rebuild
     * (which collapses the deltas), same contract as the other families.
-    * Drops the index's in-JVM serve state before it returns. */
+    * Publishes a new [[IndexIdentity]] before it returns. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String,
-                       maxDeltas: Int = 0): Long =
-    try maintain(spark, tablePath, idCol, vecCol, indexPath, maxDeltas)
-    finally serveUnpersist(indexPath)
-
-  private def maintain(spark: SparkSession, tablePath: String, idCol: String,
-                       vecCol: String, indexPath: String, maxDeltas: Int): Long = {
-    import graft.format.GraftTable
-    val mf = GraftTable.loadManifest(spark, tablePath)
+                       maxDeltas: Int = 0): Long = {
+    // checked before the try: a path holding no index gets no identity
     val cov = graft.index.ScalarIndex.readCoverage(spark, indexPath)
       .getOrElse(throw new IllegalStateException(
         s"$indexPath has no coverage marker — build with buildForTable"))
-    val covered = cov.fragmentIds.toSet
+    try maintain(spark, tablePath, idCol, vecCol, indexPath, cov.fragmentIds.toSet, maxDeltas)
+    finally IndexIdentity.publish(spark, indexPath)
+  }
+
+  private def maintain(spark: SparkSession, tablePath: String, idCol: String,
+                       vecCol: String, indexPath: String, covered: Set[Long],
+                       maxDeltas: Int): Long = {
+    import graft.format.GraftTable
+    val mf = GraftTable.loadManifest(spark, tablePath)
     val liveIds = mf.fragments.map(_.id).toSet
     val entry = mf.indices.find(e => s"$tablePath/_indices/${e.name}" == indexPath ||
         indexPath.endsWith(s"/_indices/${e.name}"))
@@ -654,7 +651,6 @@ object HnswIndex {
         .map(_.stripPrefix("graph_delta_").toInt).maxOption.map(_ + 1).getOrElse(0)
       writeGraphRows(df, idCol, vecCol, model.centroids, encode, m, efc,
         f"$indexPath/graph_delta_$next%03d")
-      invalidateCache(indexPath)
       mergeDeltas(spark, indexPath, storage, m, efc,
         if (maxDeltas > 0) maxDeltas
         else params.getOrElse("maxDeltas", "4").toInt)
@@ -664,7 +660,6 @@ object HnswIndex {
       // appends): compact the existing generations down to the request
       recoverCompletedMerge(spark, indexPath)
       mergeDeltas(spark, indexPath, storage, m, efc, maxDeltas)
-      invalidateCache(indexPath)
     }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
       indexType(storage), vecCol, mf, params ++ Map("idCol" -> idCol))
@@ -758,7 +753,6 @@ object HnswIndex {
           .parquet(s"${d}__fresh")
         IvfIndex.swapInDir(spark, s"${d}__fresh", d)
       }
-      invalidateCache(indexPath)
       p.newCovered
     } finally p.done()
   }
@@ -771,8 +765,10 @@ object HnswIndex {
     * Bounded (VERDICT r4 #6): an access-ordered LRU of at most
     * [[cacheCapacity]] indexes — eviction unpersists, so a batch session
     * touching many indexes cannot pin unbounded storage and squeeze
-    * execution memory. Entries are also invalidated by rebuilds
-    * ([[invalidateCache]]) or explicitly ([[unpersist]]/[[unpersistAll]]).
+    * execution memory. Each entry holds the [[IndexIdentity]] it was
+    * loaded under; a search that reads another identity (a rebuild or
+    * optimize by any process) unpersists it and reloads. Entries are also
+    * released explicitly ([[unpersist]]/[[unpersistAll]]).
     * The budget is user-configurable via [[CacheBudgetKey]] (read on each
     * graph materialization) and observable — entries/capacity/hit/miss —
     * through `CALL g.system.cache_stats()` (VERDICT r12 #8; reference
@@ -783,26 +779,24 @@ object HnswIndex {
   val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
   val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
   private val graphCache =
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean = {
+    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, /*accessOrder=*/ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean = {
         val evict = size() > cacheCapacity
-        if (evict) e.getValue.unpersist(blocking = false)
+        if (evict) e.getValue._2.unpersist(blocking = false)
         evict
       }
     }
 
-  private def invalidateCache(indexPath: String): Unit = graphCache.synchronized {
-    val old = graphCache.remove(indexPath)
-    if (old != null) old.unpersist(blocking = false)
-  }
-
   /** Drop one index's cached graph and release its storage. */
-  def unpersist(indexPath: String): Unit = invalidateCache(indexPath)
+  def unpersist(indexPath: String): Unit = graphCache.synchronized {
+    val old = graphCache.remove(indexPath)
+    if (old != null) old._2.unpersist(blocking = false)
+  }
 
   /** Release every cached graph (bench/gate hygiene between suites). */
   def unpersistAll(): Unit = graphCache.synchronized {
     val it = graphCache.values().iterator()
-    while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }
+    while (it.hasNext) { it.next()._2.unpersist(blocking = false); it.remove() }
   }
 
   /** Paths currently cached, most-recently-used last (spec hook). */
@@ -817,7 +811,7 @@ object HnswIndex {
     * quantized index. */
   def cachedPayloadType(indexPath: String): Option[DataType] = graphCache.synchronized {
     Option(graphCache.get(indexPath))
-      .map(df => df.schema(df.schema.fieldIndex("__payload")).dataType)
+      .map { case (_, df) => df.schema(df.schema.fieldIndex("__payload")).dataType }
   }
 
   /** Materialize the partitioned+persisted graph for an index — lets a
@@ -870,35 +864,26 @@ object HnswIndex {
   val serveHits: java.util.concurrent.atomic.AtomicLong = serveGraphs.hits
   val serveMisses: java.util.concurrent.atomic.AtomicLong = serveGraphs.misses
   def serveCacheSize: Int = serveGraphs.size
-  /** Per-index serve state: IVF model + metric + node storage kind, plus
-    * the quantized codec (SQ bounds or PQ codebook/bits/variant) when the
-    * graph carries codes. */
-  private final case class ServeState(
+  /** An index's IVF model + metric + node storage kind, plus the quantized
+    * codec (SQ bounds or PQ codebook/bits/variant) when the graph carries
+    * codes — loaded per call by [[search]], held per index for serving. */
+  private final case class Loaded(
       model: IvfIndex.Model, metric: String, storage: String,
       sq: SqIndex.SqModel = null, pq: PqIndex.PqModel = null,
       pqBits: Int = 8, pqVariant: String = "raw")
   private val serveModels =
-    new java.util.concurrent.ConcurrentHashMap[String, ServeState]()
+    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
 
-  /** Drop an index's driver-resident serve state (after optimize/rebuild,
-    * or to release driver memory). */
+  /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
     serveModels.remove(indexPath)
     serveFresh.forget(indexPath)
     serveGraphs.purge(indexPath)
   }
 
-  // Staleness guard (r15, VERDICT r14 #7): the serve LRU is keyed on
-  // (indexPath, pid), so a DROP + retrain at the same path would keep
-  // serving the dead index's partitions. Every serveLocal/serveWarm first
-  // compares the index's on-disk epoch — [[ServeEpoch]]'s bounded deep
-  // listing (r16, ADVICE r15 #4), which moves on base-graph Overwrite,
-  // delta add/merge/drop and retrain, also for nested file rewrites on
-  // object stores — against the epoch the resident entries were loaded
-  // under, and purges the index's graphs + model on mismatch.
-  // Granularity caveat: a rebuild completing within the same millisecond
-  // with identical names and lengths is indistinguishable; real rebuilds
-  // rewrite part files over many ms.
+  // the serve LRU is keyed on (indexPath, pid): when the index's identity
+  // moves (rebuild, delta add/merge, remap), its graphs and model are
+  // purged
   private val serveFresh = new ServeFreshness(p => {
     serveModels.remove(p)
     serveGraphs.purge(p)
@@ -906,20 +891,49 @@ object HnswIndex {
   private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)
 
-  private def serveModel(spark: SparkSession, indexPath: String): ServeState =
-    serveModels.computeIfAbsent(indexPath, { _ =>
-      val meta = IvfIndex.vectorMeta(spark, indexPath)
-      val base = ServeState(IvfIndex.loadModel(spark, indexPath), meta.metric,
-        meta.storage)
-      base.storage match {
-        case "flat" => base
-        case "sq" => base.copy(sq = SqIndex.loadSq(spark, indexPath))
-        case "pq" => base.copy(pq = PqIndex.loadPq(spark, indexPath),
-          pqBits = meta.pqBits, pqVariant = meta.pqVariant)
-        case other => throw new IllegalArgumentException(
-          s"serveLocal: unknown node storage '$other' at $indexPath")
+  private def serveModel(spark: SparkSession, indexPath: String): Loaded =
+    serveModels.computeIfAbsent(indexPath, _ => load(spark, indexPath))
+
+  private def load(spark: SparkSession, indexPath: String): Loaded = {
+    val meta = IvfIndex.vectorMeta(spark, indexPath)
+    val base = Loaded(IvfIndex.loadModel(spark, indexPath), meta.metric,
+      meta.storage)
+    base.storage match {
+      case "flat" => base
+      case "sq" => base.copy(sq = SqIndex.loadSq(spark, indexPath))
+      case "pq" => base.copy(pq = PqIndex.loadPq(spark, indexPath),
+        pqBits = meta.pqBits, pqVariant = meta.pqVariant)
+      case other => throw new IllegalArgumentException(
+        s"unknown hnsw node storage '$other' at $indexPath")
+    }
+  }
+
+  /** ADC distance per probed partition over a quantized graph's codes, for
+    * a query already metric-adjusted — one closure for the batched beam
+    * ([[search]] ships it to tasks) and for [[serveLocal]]. Residual-PQ
+    * graphs rank against a per-probed-pid table over q − centroid(pid)
+    * (nprobes·m·k floats); SQ and legacy raw PQ use one global table. */
+  private def codeDistFor(st: Loaded, query: Array[Float], probes: Seq[Int])
+      : Int => Array[Byte] => Double =
+    if (st.storage == "sq") {
+      val lo = st.sq.lo; val step = st.sq.steps
+      _ => c => SqIndex.adc(query, c, lo, step)
+    } else {
+      val bits = st.pqBits
+      if (st.pqVariant == "residual") {
+        val tables: Map[Int, Array[Array[Float]]] = probes.map { p =>
+          val cent = st.model.centroids(p)
+          p -> st.pq.adcTable(Array.tabulate(query.length)(i => query(i) - cent(i)))
+        }.toMap
+        pid => tables.get(pid) match {
+          case Some(t) => c => PqIndex.adc(t, c, bits)
+          case None    => _ => Double.MaxValue // unprobed pid cannot occur
+        }
+      } else {
+        val table = st.pq.adcTable(query)
+        _ => c => PqIndex.adc(table, c, bits)
       }
-    })
+    }
 
   // the partitions a call misses load outside the cache lock
   // ([[ServeCache.getOrLoadAll]]) in ONE scan per generation directory:
@@ -1012,29 +1026,13 @@ object HnswIndex {
         (id, if (st.metric == "cosine") d / 2.0 else math.sqrt(d))
       }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)
     } else {
-      // ADC distance closure per PARTITION — the batched [[search]]'s
-      // codeDistFor, driver-side
-      val codeDistFor: Int => Array[Byte] => Double =
-        if (st.storage == "sq") {
-          val lo = st.sq.lo; val step = st.sq.steps
-          _ => c => SqIndex.adc(query2, c, lo, step)
-        } else if (st.pqVariant == "residual") {
-          val tables = probes.map { p =>
-            val cent = st.model.centroids(p)
-            p -> st.pq.adcTable(
-              Array.tabulate(query2.length)(i => query2(i) - cent(i)))
-          }.toMap
-          pid => { val t = tables(pid); c => PqIndex.adc(t, c, st.pqBits) }
-        } else {
-          val table = st.pq.adcTable(query2)
-          _ => c => PqIndex.adc(table, c, st.pqBits)
-        }
+      val distFor = codeDistFor(st, query2, probes)
       // pass 1: ADC beam per resident (pid, gen) sub-graph with the
       // batched pool sizing (ef must cover the refine pool), then the
       // global (adc, id) cut at k·refineFactor
       val pool = math.max(k * refineFactor, efq)
       val cands = entries.iterator.flatMap { case (pid, (graphs, _)) =>
-        val dist = codeDistFor(pid)
+        val dist = distFor(pid)
         graphs.iterator.flatMap { g =>
           searchGraph[AnyRef](g,
             c => dist(c.asInstanceOf[Array[Byte]]), pool, pool, extraDead)
@@ -1051,7 +1049,8 @@ object HnswIndex {
     }
   }
 
-  private def partitionedGraph(spark: SparkSession, indexPath: String): DataFrame =
+  private def partitionedGraph(spark: SparkSession, indexPath: String): DataFrame = {
+    val id = IndexIdentity.read(spark, indexPath)
     graphCache.synchronized {
       // budget refresh: cheap conf read; a shrink takes effect on the next
       // insertion's eviction pass
@@ -1059,16 +1058,18 @@ object HnswIndex {
         scala.util.Try(spark.conf.get(CacheBudgetKey, "4").toInt).getOrElse(4))
       while (graphCache.size() > cacheCapacity) {
         val it = graphCache.entrySet().iterator()
-        it.next().getValue.unpersist(blocking = false)
+        it.next().getValue._2.unpersist(blocking = false)
         it.remove()
       }
       val hit = graphCache.get(indexPath)
+      // a graph loaded under another identity is the dead index's: drop it
+      if (hit != null && hit._1 != id) hit._2.unpersist(blocking = false)
       // self-healing: an external spark.catalog.clearCache() may have
       // unpersisted the frame under us — re-pin and re-materialize
-      val live = hit != null &&
-        hit.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      val live = hit != null && hit._1 == id &&
+        hit._2.storageLevel != org.apache.spark.storage.StorageLevel.NONE
       if (live) cacheHits.incrementAndGet() else cacheMisses.incrementAndGet()
-      val df = if (live) hit
+      if (live) hit._2
       else {
         // quantized storage: the cached/shuffled graph carries codes, NOT
         // the float vectors — parquet column pruning leaves `vec` on disk
@@ -1090,11 +1091,11 @@ object HnswIndex {
           .repartition(col("pid"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         fresh.count() // materialize once so every query reuses the shuffle
-        graphCache.put(indexPath, fresh)
+        graphCache.put(indexPath, (id, fresh))
         fresh
       }
-      df
     }
+  }
 
   /** ANN search: greedy HNSW per probed partition, global top-k.
     *
@@ -1109,12 +1110,11 @@ object HnswIndex {
              refineFactor: Int = 10,
              distanceRange: Option[(Double, Double)] = None): DataFrame = {
     import spark.implicits._
-    val model = IvfIndex.loadModel(spark, s"$indexPath")
-    val meta = IvfIndex.vectorMeta(spark, indexPath)
-    val metric = meta.metric
-    val storage = meta.storage
+    val st = load(spark, indexPath)
+    val metric = st.metric
+    val storage = st.storage
     val query2 = if (metric == "cosine") IvfIndex.normalize(query) else query
-    val probes = model.rank(query2).take(math.min(nprobes, model.nlist))
+    val probes = st.model.rank(query2).take(math.min(nprobes, st.model.nlist))
     val efq = math.max(ef, k)
     val base = partitionedGraph(spark, indexPath)
       .filter(col("pid").isin(probes: _*))
@@ -1129,31 +1129,7 @@ object HnswIndex {
       // ≤ k·refineFactor candidate ids) and re-ranked exactly — same
       // two-pass contract as [[IvfQuantized.search]], with
       // the beam replacing the partition scan.
-      // distance closure per PARTITION: residual-PQ graphs rank against a
-      // per-probed-pid ADC table over q − centroid(pid) (nprobes·m·k
-      // floats shipped to tasks); sq / legacy raw-PQ use one global table
-      val codeDistFor: Int => Array[Byte] => Double =
-        if (storage == "sq") {
-          val sq = SqIndex.loadSq(spark, indexPath)
-          val lo = sq.lo; val step = sq.steps
-          _ => c => SqIndex.adc(query2, c, lo, step)
-        } else if (meta.pqVariant == "residual") {
-          val pq = PqIndex.loadPq(spark, indexPath)
-          val bits = meta.pqBits
-          val tables: Map[Int, Array[Array[Float]]] = probes.map { p =>
-            val cent = model.centroids(p)
-            p -> pq.adcTable(Array.tabulate(query2.length)(i => query2(i) - cent(i)))
-          }.toMap
-          pid => tables.get(pid) match {
-            case Some(t) => c => PqIndex.adc(t, c, bits)
-            case None    => _ => Double.MaxValue // unprobed pid cannot occur
-          }
-        } else {
-          // per-query lookup table (pqM × pqK floats) ships to tasks once
-          val table = PqIndex.loadPq(spark, indexPath).adcTable(query2)
-          val bits = meta.pqBits
-          _ => c => PqIndex.adc(table, c, bits)
-        }
+      val distFor = codeDistFor(st, query2, probes)
       // (pid, gen) keys: each delta generation is an independent sub-graph
       // beamed on its own entry point; heaps merge in the global top-k
       val cands = marked.as[(Long, Array[Byte], Int, Seq[Seq[Long]], Int, Int, Boolean)]
@@ -1168,7 +1144,7 @@ object HnswIndex {
             // ef must cover the refine pool: searchGraph's result heap is
             // capped at ef, so ef = efq alone would silently shrink the
             // k*refineFactor candidate set to efq
-            searchGraph[Array[Byte]](g, codeDistFor(pid),
+            searchGraph[Array[Byte]](g, distFor(pid),
               math.max(k * refineFactor, efq), math.max(efq, k * refineFactor))
           }
         }.toDF("id", "__adc")

@@ -183,6 +183,7 @@ object IvfIndex {
                   metric: String = "l2"): Unit = {
     writeCentroids(spark, modelPath, model)
     writeVectorMeta(spark, modelPath, metric)
+    IndexIdentity.publish(spark, modelPath)
   }
 
   /** Persist centroids under `path/centroids` ([[loadModel]]'s layout),
@@ -232,9 +233,9 @@ object IvfIndex {
     * the index stores the PACKED bytes. `precomputed` (reference
     * `create_index(ivf_centroids=..., train=False)`, `dataset.py:2525`)
     * skips training and partitions under the given model — the assignment
-    * pass (the corpus-sized work) still runs distributed. Drops the
-    * index's in-JVM serve state, so serving never answers from the index
-    * this build replaced. */
+    * pass (the corpus-sized work) still runs distributed. Publishes a new
+    * [[IndexIdentity]], so no per-JVM cache answers from the index this
+    * build replaced. */
   def build(df: DataFrame, idCol: String, vecCol: String, indexPath: String,
             nlist: Int, maxIter: Int = 10,
             precomputed: Option[Model] = None): Model = {
@@ -247,7 +248,7 @@ object IvfIndex {
         ColumnBridge.expression(floatSide(df, vecCol)), model.centroids)))
     assigned.write.mode(SaveMode.Overwrite).partitionBy(PidCol).parquet(s"$indexPath/vectors")
     writeCentroids(df.sparkSession, indexPath, model)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(df.sparkSession, indexPath)
     model
   }
 
@@ -258,10 +259,9 @@ object IvfIndex {
   val centroidCacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
   @volatile private var centroidCapacity = 64
   def currentCentroidCapacity: Int = centroidCapacity
-  // (fingerprint of the centroids files, parsed model); staleness is
-  // detected by the fingerprint (names+lengths+mtimes from ONE listing),
-  // never by trusting build paths to invalidate — retrain/rebuild rewrite
-  // the files and change it
+  // indexPath → (identity loaded under, parsed model): one read of the
+  // index's [[IndexIdentity]] per call decides a hit, so a rebuild by any
+  // process is never answered from the old centroids
   private val centroidCache =
     new java.util.LinkedHashMap[String, (String, Model)](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, (String, Model)]): Boolean =
@@ -271,11 +271,7 @@ object IvfIndex {
   def centroidCacheSize: Int = centroidCache.synchronized(centroidCache.size())
 
   def loadModel(spark: SparkSession, indexPath: String): Model = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/centroids")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fs.listStatus(dir).map(s =>
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(";")
+    val id = IndexIdentity.read(spark, indexPath)
     centroidCache.synchronized {
       centroidCapacity = math.max(1, scala.util.Try(
         spark.conf.get(CentroidCacheBudgetKey, "64").toInt).getOrElse(64))
@@ -283,7 +279,7 @@ object IvfIndex {
         val it = centroidCache.entrySet().iterator(); it.next(); it.remove()
       }
       val hit = centroidCache.get(indexPath)
-      if (hit != null && hit._1 == fp) {
+      if (hit != null && hit._1 == id) {
         centroidCacheHits.incrementAndGet()
         return hit._2
       }
@@ -292,7 +288,7 @@ object IvfIndex {
     val rows = spark.read.parquet(s"$indexPath/centroids")
       .orderBy("pid").collect()
     val model = Model(rows.map(r => r.getSeq[Float](1).toArray))
-    centroidCache.synchronized { centroidCache.put(indexPath, (fp, model)) }
+    centroidCache.synchronized { centroidCache.put(indexPath, (id, model)) }
     model
   }
 
@@ -321,7 +317,7 @@ object IvfIndex {
   private val serveModels =
     new java.util.concurrent.ConcurrentHashMap[String, Model]()
 
-  /** Drop an index's driver-resident serve state (after rebuild/optimize). */
+  /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
     serveFresh.forget(indexPath)
     purgeServe(indexPath)
@@ -333,13 +329,8 @@ object IvfIndex {
     serveRows.purge(indexPath)
   }
 
-  // Staleness guard (r15, VERDICT r14 #7): the serve LRU would otherwise
-  // keep serving a dropped/retrained index's partitions from (indexPath,
-  // pid) keys. The epoch is [[ServeEpoch]]'s bounded deep listing (r16,
-  // ADVICE r15 #4 — object-store rebuilds that only rewrite files nested
-  // under vectors/__ivf_pid=N/ or centroids/ still move the token); on
-  // mismatch the index's model and rows are purged. In-process builds and
-  // optimizes drop the state outright before they return.
+  // the serve LRU is keyed on (indexPath, pid): when the index's identity
+  // moves, its model and rows are purged
   private val serveFresh = new ServeFreshness(purgeServe)
   private[operators] def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
     serveFresh.ensure(spark, indexPath)
@@ -591,7 +582,7 @@ object IvfIndex {
     * no retrain, O(delta) IO. If compaction removed covered fragments, the
     * stale rows are dropped by a filtered rewrite of the index dataset
     * (O(index) IO, still no retrain) so the index never holds duplicate
-    * rows. Drops the index's in-JVM serve state before it returns, so the
+    * rows. Publishes a new [[IndexIdentity]] before it returns, so the
     * next `serveLocal` reloads the grown index. Returns the number of newly
     * indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
@@ -601,7 +592,7 @@ object IvfIndex {
       "IVF_FLAT", df => df.withColumn(PidCol,
         ColumnBridge.column(IvfAssign(
           ColumnBridge.expression(floatSide(df, vecCol)), model.centroids))))
-    finally serveUnpersist(indexPath)
+    finally IndexIdentity.publish(spark, indexPath)
   }
 
   /** Incremental maintenance shared by every PID-partitioned vector layout
@@ -729,21 +720,17 @@ object IvfIndex {
   /** Per-index vector metadata sidecar `_GRAFT_VECTOR_META` (build metric,
     * node storage codec, PQ code space and width), so search paths serve
     * what the index was built for. The PQ fields are written only when they
-    * differ from the legacy defaults. */
+    * differ from the legacy defaults. Written write-temp-then-rename, so a
+    * concurrent [[vectorMeta]] never reads an empty file as the defaults. */
   private[graft] def writeVectorMeta(spark: SparkSession, indexPath: String,
                                          metric: String,
                                          storage: String = "flat",
                                          pqVariant: String = "",
                                          pqBits: Int = 8): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$VectorMetaFile")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
     val pqField = if (pqVariant.isEmpty) "" else s""", "pq": "$pqVariant""""
     val bitsField = if (pqBits == 8) "" else s""", "pq_bits": $pqBits"""
-    try out.write(
-      s"""{"metric": "$metric", "storage": "$storage"$pqField$bitsField}"""
-        .getBytes("UTF-8"))
-    finally out.close()
+    graft.index.ScalarIndex.atomicWrite(spark, s"$indexPath/$VectorMetaFile",
+      s"""{"metric": "$metric", "storage": "$storage"$pqField$bitsField}""")
   }
 
   /** The sidecar's fields. `pqVariant` is the PQ code space ("residual" |

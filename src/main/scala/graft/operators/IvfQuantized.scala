@@ -34,8 +34,8 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   *    probed partition reproduces the batched column's arithmetic bit for
   *    bit; the exact refine reads [[IvfIndex]]'s shared float LRU. Ids
   *    AND distances equal [[search]] at equal refineFactor, and a warm
-  *    query runs no Spark job. Epoch staleness and budget refusal follow the contract of
-  *    every serve path ([[ServeFreshness]], [[ServeCache]]).
+  *    query runs no Spark job. Freshness and budget refusal follow the
+  *    contract of every serve path ([[ServeFreshness]], [[ServeCache]]).
   *
   * Cosine indexes store NORMALIZED vectors: on the unit sphere the l2²
   * estimators are cosine-rank-equivalent, and the exact refine computes
@@ -102,8 +102,8 @@ trait IvfQuantized {
       ColumnBridge.column(IvfAssign(ColumnBridge.expression(col(vecCol)), ivf.centroids)))
 
   /** Encode the assigned rows and write `vectors/` and `centroids/`. Each
-    * quantizer's `build` drops the index's in-JVM serve state
-    * ([[serveUnpersist]]) once its codec is written too. */
+    * quantizer's `build` publishes a new [[IndexIdentity]] once its codec
+    * is written too. */
   protected final def writeIndex(withPid: DataFrame, vecCol: String, indexPath: String,
                                  ivf: IvfIndex.Model, codec: Codec): Unit = {
     encode(withPid, vecCol, ivf, codec).write.mode(SaveMode.Overwrite)
@@ -132,8 +132,8 @@ trait IvfQuantized {
     * the fragments the index does not cover yet, with the EXISTING
     * centroids and codec, in the space the index was built in; remap after
     * compaction and the legacy filtered rewrite are
-    * [[IvfIndex.maintainPartitionedVectors]]'s. Drops the index's in-JVM
-    * serve state before it returns. Returns newly indexed rows. */
+    * [[IvfIndex.maintainPartitionedVectors]]'s. Publishes a new
+    * [[IndexIdentity]] before it returns. Returns newly indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String): Long = {
     val ix = load(spark, indexPath)
@@ -141,7 +141,7 @@ trait IvfQuantized {
       indexType, df0 => encode(assign(
         IvfIndex.forMetric(IvfIndex.floatView(df0, vecCol), vecCol, ix.metric),
         vecCol, ix.ivf), vecCol, ix.ivf, ix.codec))
-    finally serveUnpersist(indexPath)
+    finally IndexIdentity.publish(spark, indexPath)
   }
 
   // ------------------------------------------------------------ search
@@ -241,9 +241,9 @@ trait IvfQuantized {
     serveCodes.purge(p)
   })
 
-  /** Drop an index's driver-resident serve state (after rebuild/optimize).
-    * The refine vectors live in [[IvfIndex]]'s shared serve LRU and retire
-    * through its own unpersist, so both caches retire together. */
+  /** Release an index's driver-resident serve state. The refine vectors
+    * live in [[IvfIndex]]'s shared serve LRU and retire through its own
+    * unpersist, so both caches retire together. */
   def serveUnpersist(indexPath: String): Unit = {
     serveStates.remove(indexPath)
     serveFresh.forget(indexPath)
@@ -253,7 +253,7 @@ trait IvfQuantized {
 
   private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit = {
     serveFresh.ensure(spark, indexPath)
-    // keep the shared refine-vector LRU on the same epoch
+    // keep the shared refine-vector LRU on the same identity
     IvfIndex.ensureServeFresh(spark, indexPath)
   }
 

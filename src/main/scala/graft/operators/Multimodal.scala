@@ -60,10 +60,9 @@ object Multimodal {
       classOf[javax.sound.sampled.spi.AudioFileReader]).asScala.toSeq
     // probe MIDI-wrapping readers LAST: SoftMidiAudioFileReader's accept
     // probe itself calls MidiSystem.getMidiFileReaders — the synchronized
-    // global provider re-scan this cache exists to avoid (AudioLockProbe:
-    // 1681 blocked samples on that exact frame). WAV/AIFF/AU magic bytes
-    // are disjoint from MIDI's, so for any payload a real audio reader
-    // accepts the winning reader is unchanged.
+    // global provider re-scan this cache exists to avoid. WAV/AIFF/AU
+    // magic bytes are disjoint from MIDI's, so for any payload a real audio
+    // reader accepts the winning reader is unchanged.
     val (midi, sampled) = all.partition(_.getClass.getName.contains("Midi"))
     sampled ++ midi
   }
@@ -340,10 +339,6 @@ object Multimodal {
       }
     }
   }
-
-  /** Probe face for [[audioFeatures]] (tools.AudioLockProbe). */
-  private[graft] def audioFeaturesProbe(bytes: Array[Byte], bins: Int)
-      : Option[(Int, Int, Long, Float, Array[Float])] = audioFeatures(bytes, bins)
 
   /** Decode one payload to (sampleRate, channels, nSamples, rms, envelope);
     * None if the bytes are not supported audio. */

@@ -168,7 +168,7 @@ object PqIndex extends IvfQuantized {
       pqVariant = if (residual) "residual" else "raw", pqBits = numBits)
     writeIndex(withPid, vecCol, indexPath, ivf, Codec(pq, residual, numBits))
     writePq(df.sparkSession, indexPath, pq)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(df.sparkSession, indexPath)
     (ivf, pq)
   }
 

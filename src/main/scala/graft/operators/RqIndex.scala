@@ -42,7 +42,7 @@ object RqIndex extends IvfQuantized {
     val (df, ivf) = prepare(df0, idCol, vecCol, nlist, metric)
     IvfIndex.writeVectorMeta(df.sparkSession, indexPath, metric)
     writeIndex(assign(df, vecCol, ivf), vecCol, indexPath, ivf, ())
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(df.sparkSession, indexPath)
     ivf
   }
 

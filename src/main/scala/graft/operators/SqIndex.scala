@@ -61,7 +61,7 @@ object SqIndex extends IvfQuantized {
     IvfIndex.writeVectorMeta(df.sparkSession, indexPath, metric)
     writeIndex(assign(df, vecCol, ivf), vecCol, indexPath, ivf, sq)
     writeSq(df.sparkSession, indexPath, sq)
-    serveUnpersist(indexPath)
+    IndexIdentity.publish(df.sparkSession, indexPath)
     (ivf, sq)
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Opt-in packed group-key rewrite (r15, VERDICT r14 #2).
   *
-  * TPC-H Q1's residual over DuckDB was pinned by tools/Q1Lab to
+  * TPC-H Q1's residual over DuckDB was pinned to
   * UTF8String group-key handling in the aggregate hash map (~0.16 s at
   * SF1; a packed-numeric-key A/B ran 1.5×). This rule makes that rewrite
   * available as a user assertion: listing a column in

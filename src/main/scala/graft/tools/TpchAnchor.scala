@@ -26,7 +26,7 @@ object TpchAnchor {
 
   /** Dedicated anchor session: same SparkContext, plus GraftExtensions
     * and the opt-in packed group-key rewrite (r15, VERDICT r14 #2) for
-    * Q1's two single-char group keys — the user assertion Q1Lab's packed
+    * Q1's two single-char group keys — the user assertion a packed-key
     * A/B motivated. Both the graft leg and the raw-parquet control run
     * through it, so the format-overhead comparison stays apples-to-apples
     * and q1/q6 measure the same agg plan the rewrite produces (q6 has no
@@ -180,9 +180,8 @@ object TpchAnchor {
     ensureTable(spark)
     // warmup (JIT + codegen + footer caches), then best-of-7 like the
     // DuckDB side's best-of. TWENTY passes, not three (r15): the r14
-    // 3-pass protocol measured mid-tier JIT — PackProbe's interleaved
-    // cycles show Q1 at 0.45-0.48 s on the first post-3-warmup best-of
-    // dropping to a stable 0.27-0.31 s only after ~20 total invocations
+    // 3-pass protocol measured mid-tier JIT — interleaved cycles show Q1
+    // at 0.45-0.48 s on the first post-3-warmup best-of dropping to a stable 0.27-0.31 s only after ~20 total invocations
     // (a 10-pass warmup still paired at 0.38-0.42 s), while DuckDB
     // reaches its steady state within 2-3 runs. Best-of-N is only an
     // engine comparison when both sides are at steady state; the extra

@@ -71,6 +71,33 @@ class MetaHotPathSpec extends AnyFunSuite {
       "with the sentinel present the probe must yield to the full listing")
   }
 
+  test("latestVersion hint: a cleanup landing between the sentinel check and the walk never yields a non-head version") {
+    val t = tmp()
+    GraftTable.write(people, t, "overwrite")
+    GraftTable.write(people, t, "append")
+    assert(GraftTable.latestVersion(spark, t) == Some(2L)) // hint = 2
+    GraftTable.tag(spark, t, "pin", 2L)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(t).getFileSystem(conf)
+    // another process commits v3..v6 past our stale hint
+    for (v <- 3L to 6L)
+      org.apache.hadoop.fs.FileUtil.copy(fs, manifestFile(t, 2L),
+        fs, manifestFile(t, v), false, conf)
+    // ... and its cleanup runs after our probe saw no sentinel but before
+    // it walks: keep the pinned v2 and the head v6, drop v1 and v3..v5 —
+    // a hole right above the hint
+    GraftTable.DmlTestHooks.beforeProbeWalk = _ => {
+      GraftTable.DmlTestHooks.beforeProbeWalk = _ => ()
+      GraftTable.cleanupOldVersions(spark, t, keepLast = 1,
+        unverifiedGraceMillis = 0L, errorIfTaggedOldVersions = false)
+    }
+    try {
+      val head = GraftTable.latestVersion(spark, t)
+      assert(!fs.exists(manifestFile(t, 3L)), "the cleanup did not run mid-probe")
+      assert(head == Some(6L), s"the probe stopped at the hole: $head")
+    } finally GraftTable.DmlTestHooks.beforeProbeWalk = _ => ()
+  }
+
   test("cleanup writes the gap sentinel exactly when it punches a hole") {
     val t = tmp()
     GraftTable.write(people, t, "overwrite")

@@ -266,4 +266,91 @@ class ServeBatchSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** The family's table at a fresh path and where its index goes. */
+  private def tableAndIndex(f: Fresh, tag: String): (String, String) = {
+    val t = tmp(s"${tag}_${f.name}_") + "/t"
+    (t, if (f.name == "fts") s"$t/_indices/fts_text" else tmp(s"${tag}_${f.name}_idx_"))
+  }
+
+  /** Five copies of row 7 appended to table `t`, new ids 10000..10004. */
+  private def appendCopies(f: Fresh, t: String): Unit =
+    GraftTable.write(f.rows.filter(col(f.idCol) === 7L)
+      .crossJoin(spark.range(5).withColumnRenamed("id", "__k"))
+      .withColumn(f.idCol, col(f.idCol) + 10000L + col("__k")).drop("__k"), t, "append")
+
+  test("every build and optimize path publishes a new index identity (every family)") {
+    for (f <- freshFamilies) {
+      val (t, idx) = tableAndIndex(f, "ident")
+      GraftTable.write(f.rows, t, "overwrite")
+      // an optimize of a path that holds no index fails and publishes nothing
+      intercept[Exception](f.optimize(t, idx))
+      val idFile = new org.apache.hadoop.fs.Path(idx, IndexIdentity.FileName)
+      assert(!idFile.getFileSystem(spark.sessionState.newHadoopConf()).exists(idFile),
+        s"${f.name}: a failed optimize published an identity")
+      assert(IndexIdentity.of(spark, idx) == IndexIdentity.Legacy, f.name)
+      f.build(t, idx)
+      val built = IndexIdentity.of(spark, idx)
+      assert(built != IndexIdentity.Legacy, s"${f.name}: build published nothing")
+      assert(IndexIdentity.read(spark, idx) == built, s"${f.name}: memo != file after build")
+      appendCopies(f, t)
+      f.optimize(t, idx)
+      val optimized = IndexIdentity.of(spark, idx)
+      assert(optimized != built, s"${f.name}: optimize kept the identity")
+      assert(IndexIdentity.read(spark, idx) == optimized, s"${f.name}: memo != file after optimize")
+      f.unpersist(idx)
+    }
+    // the remaining writers of an index or model dir
+    def moves(dir: String)(write: => Any): Unit = {
+      val before = IndexIdentity.of(spark, dir)
+      write
+      assert(IndexIdentity.of(spark, dir) != before, s"$dir kept its identity")
+    }
+    val model = tmp("ident_model")
+    moves(model)(IvfIndex.saveModelTo(spark, model, IvfIndex.Model(Array(Array(0f, 1f)))))
+    val ftsSrc = tmp("ident_fts_src")
+    Fts.buildIndex(docs, "id", "text", ftsSrc)
+    val replica = tmp("ident_fts_replica")
+    moves(replica)(Fts.replicateIndex(spark, ftsSrc, replica, 2))
+    moves(ftsSrc)(Fts.optimizeIndex(docs.filter(col("id") < 5L)
+      .withColumn("id", col("id") + 1000L), "id", "text", ftsSrc))
+    val t = tmp("ident_fts_parts") + "/t"
+    GraftTable.write(docs, t, "overwrite")
+    val frags = GraftTable.loadManifest(spark, t).fragments.map(_.id)
+    val uuid = java.util.UUID.randomUUID().toString
+    Fts.buildPartForTable(spark, t, "id", "text", uuid, 0, frags)
+    moves(s"$t/_indices/fts_text")(Fts.mergePartsForTable(spark, t, "id", "text", uuid))
+  }
+
+  test("an index dir replaced out of band answers from the new index on serve and search (every family)") {
+    // index B is built elsewhere over the same rows with ids shifted by
+    // 100000, then copied over A's dir by plain filesystem calls: no engine
+    // code runs between the copy and the queries
+    spark.conf.set(IndexIdentity.TtlKey, "0")
+    try for (f <- freshFamilies) {
+      val (ta, a) = tableAndIndex(f, "oob_a")
+      val (tb, b) = tableAndIndex(f, "oob_b")
+      GraftTable.write(f.rows, ta, "overwrite")
+      GraftTable.write(f.rows.withColumn(f.idCol, col(f.idCol) + 100000L), tb, "overwrite")
+      f.build(ta, a)
+      f.build(tb, b)
+      // A resident in every cache: serve state, centroids, stats, graph
+      f.warm(a)
+      assert(f.serve(a) == f.search(a), s"${f.name}: A serve != search")
+      assert(f.search(a).forall(_._1 < 100000L), s"${f.name}: A answered from B")
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = new org.apache.hadoop.fs.Path(a).getFileSystem(conf)
+      fs.delete(new org.apache.hadoop.fs.Path(a), true)
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(b),
+        fs, new org.apache.hadoop.fs.Path(a), false, conf)
+      val served = f.serve(a)
+      val batched = f.search(a)
+      val fromB = f.search(b)
+      assert(fromB.nonEmpty && fromB.forall(_._1 >= 100000L), s"${f.name}: B answers $fromB")
+      assert(served == fromB, s"${f.name}: serve after the copy $served != B's $fromB")
+      assert(batched == fromB, s"${f.name}: search after the copy $batched != B's $fromB")
+      f.unpersist(a); f.unpersist(b)
+      HnswIndex.unpersist(a); HnswIndex.unpersist(b)
+    } finally spark.conf.unset(IndexIdentity.TtlKey)
+  }
 }
