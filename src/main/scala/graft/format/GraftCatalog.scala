@@ -735,8 +735,10 @@ private[format] object GraftProcedures {
   /** `CALL g.system.cache_stats()` — per-JVM index-cache observability
     * (reference `session.index_cache` size/hit-rate, `dataset.py:3039`):
     * entries vs configured budget and cumulative hits/misses for the
-    * HNSW graph LRU (`spark.graft.cache.hnsw.indexes`) and the IVF
-    * centroid cache (`spark.graft.cache.centroids.indexes`). */
+    * HNSW graph LRU (`spark.graft.cache.hnsw.indexes`), the IVF
+    * centroid cache (`spark.graft.cache.centroids.indexes`), the
+    * driver-local serve caches, and the driver-local take (`take_local`:
+    * takes answered on the driver vs Spark fallbacks). */
   def cacheStats(): UnboundProcedure =
     procRows("cache_stats", Array.empty[ProcedureParameter],
       StructType(Seq(StructField("cache", DT.StringType),
@@ -786,7 +788,12 @@ private[format] object GraftProcedures {
         Seq[Any]("fts_serve", graft.operators.Fts.serveCacheSize.toLong,
           graft.operators.Fts.currentServeTermCapacity.toLong,
           graft.operators.Fts.serveHits.get(),
-          graft.operators.Fts.serveMisses.get()))
+          graft.operators.Fts.serveMisses.get()),
+        // driver-local bounded take: hits are takes read on the driver,
+        // misses takes over the byte bound (the capacity) that ran as a
+        // Spark scan; entries are the cached parquet readers
+        Seq[Any]("take_local", LocalTake.readerCount.toLong, LocalTake.MaxBytes,
+          LocalTake.localTakes.get(), LocalTake.sparkTakes.get()))
     }
 
   def walCleanup(pathOf: String => String): UnboundProcedure =

@@ -111,7 +111,7 @@ object GraftTable {
   val RowOffsetCol = "_rowoffset"
   val RowCreatedCol = "_row_created_at_version"
   val RowLastUpdatedCol = "_row_last_updated_at_version"
-  private val FragRe = "frag-(\\d+)(?:_\\d+)?\\.parquet$"
+  private[format] val FragRe = "frag-(\\d+)(?:_\\d+)?\\.parquet$"
 
   // ---------------------------------------------------------------- metadata
 
@@ -1240,17 +1240,14 @@ object GraftTable {
       options = Map.empty)(spark)
     val base = ColumnBridge.ofRows(spark, LogicalRelation(relation, isStreaming = false))
 
-    val fragIdCol = regexp_extract(col("_metadata.file_name"), FragRe, 1).cast("long")
-    val addr = shiftleft(fragIdCol, 32).plus(col("_metadata.row_index"))
-
     // metadata-derived columns must be materialized ON the scan relation —
     // `_metadata` does not resolve across a join boundary
     val needAddr = withRowAddr || withRowVersions || m.dvFiles.nonEmpty || m.columnFiles.nonEmpty
-    val base1 = if (needAddr || needRowId) base.withColumn(RowAddrCol, addr) else base
+    val base1 = if (needAddr || needRowId) base.withColumn(RowAddrCol,
+      rowAddrOf(col("_metadata.file_name"), col("_metadata.row_index"))) else base
     val withAddr = if (!needRowId) base1 else {
-      val stored = if (hasStored) col(RowIdCol) else lit(null).cast("long")
       val ranged = m.fragments.filter(f => !f.rowIdStored && f.rowIdStart >= 0)
-      if (ranged.isEmpty) base1.withColumn(RowIdCol, stored)
+      if (ranged.isEmpty) base1.withColumn(RowIdCol, rowIdOf(hasStored, None))
       else {
         // fragment-id → range-start lookup via a broadcast of manifest
         // metadata (fragment-count-sized, never row-sized); fragment id and
@@ -1259,31 +1256,11 @@ object GraftTable {
           .toDF("__rid_frag", "__rid_start")
         base1.join(broadcast(meta),
             shiftrightunsigned(col(RowAddrCol), 32) === col("__rid_frag"), "left_outer")
-          .withColumn(RowIdCol,
-            coalesce(stored,
-              col("__rid_start") + (col(RowAddrCol).bitwiseAND(lit(0xFFFFFFFFL)))))
+          .withColumn(RowIdCol, rowIdOf(hasStored, Some(col("__rid_start"))))
           .drop("__rid_frag", "__rid_start")
       }
     }
-    // restore logical names in ONE projection (atomic — swap-renames can't
-    // collide); pushdown substitutes back through the aliases, so filters on
-    // renamed top-level columns still reach the parquet scan + zonemaps.
-    // NESTED renames restore via a struct→struct cast (positional field
-    // rename, null-safe) — see [[SchemaPaths]] for the pushdown trade-off.
-    val renamed =
-      if (!m.hasIndirection) withAddr
-      else {
-        val byPhys = m.schema.fields.map(f => m.physicalName(f) -> f).toMap
-        withAddr.select(withAddr.columns.toSeq.map { c =>
-          byPhys.get(c) match {
-            case Some(f) if SchemaPaths.hasNestedIndirection(f.dataType) =>
-              col(c).cast(SchemaPaths.nullableAll(SchemaPaths.cleanType(f.dataType)))
-                .as(f.name)
-            case Some(f) => col(c).as(f.name)
-            case None    => col(c) // _rowaddr / _rowid / stored-row-id helper
-          }
-        }: _*)
-      }
+    val renamed = restoreLogicalNames(m, withAddr)
     val live =
       if (m.dvFiles.isEmpty) renamed
       else {
@@ -1311,8 +1288,46 @@ object GraftTable {
     // fragment stores it) so callers need no schema branch
     val out = if (withOldAddr && !hasOldAddr)
       out1.withColumn(OldAddrCol, lit(null).cast("long")) else out1
-    // expose committed field metadata (updateFieldMetadata) on the result
-    // schema; the rename-indirection key stays internal
+    withFieldMetadata(m, out)
+  }
+
+  /** `_rowaddr` = fragment id (parsed from the data file's name) << 32 |
+    * the row's index in that file. */
+  private[format] def rowAddrOf(fileName: Column, rowIndex: Column): Column =
+    shiftleft(regexp_extract(fileName, FragRe, 1).cast("long"), 32).plus(rowIndex)
+
+  /** `_rowid`: the physically stored id (compaction outputs), else the
+    * fragment's id-range start (`rangeStart`, null off-range) plus the row
+    * index carried in the row's address. */
+  private[format] def rowIdOf(hasStored: Boolean, rangeStart: Option[Column],
+                              addr: Column = col(RowAddrCol)): Column = {
+    val stored = if (hasStored) col(RowIdCol) else lit(null).cast("long")
+    rangeStart.fold(stored)(s => coalesce(stored, s + addr.bitwiseAND(lit(0xFFFFFFFFL))))
+  }
+
+  /** Restore logical names in ONE projection (atomic — swap-renames can't
+    * collide); pushdown substitutes back through the aliases, so filters on
+    * renamed top-level columns still reach the parquet scan + zonemaps.
+    * NESTED renames restore via a struct→struct cast (positional field
+    * rename, null-safe) — see [[SchemaPaths]] for the pushdown trade-off. */
+  private[format] def restoreLogicalNames(m: GraftManifest, df: DataFrame): DataFrame =
+    if (!m.hasIndirection) df
+    else {
+      val byPhys = m.schema.fields.map(f => m.physicalName(f) -> f).toMap
+      df.select(df.columns.toSeq.map { c =>
+        byPhys.get(c) match {
+          case Some(f) if SchemaPaths.hasNestedIndirection(f.dataType) =>
+            col(c).cast(SchemaPaths.nullableAll(SchemaPaths.cleanType(f.dataType)))
+              .as(f.name)
+          case Some(f) => col(c).as(f.name)
+          case None    => col(c) // _rowaddr / _rowid / stored-row-id helper
+        }
+      }: _*)
+    }
+
+  /** Expose committed field metadata (updateFieldMetadata) on the result
+    * schema; the rename-indirection key stays internal. */
+  private[format] def withFieldMetadata(m: GraftManifest, df: DataFrame): DataFrame = {
     val fieldMeta: Map[String, org.apache.spark.sql.types.Metadata] =
       m.schema.fields.toSeq.flatMap { f =>
         val mb = new org.apache.spark.sql.types.MetadataBuilder()
@@ -1322,8 +1337,8 @@ object GraftTable {
         if (cleaned == org.apache.spark.sql.types.Metadata.empty) None
         else Some(f.name -> cleaned)
       }.toMap
-    if (fieldMeta.isEmpty) out
-    else out.select(out.columns.toSeq.map(c =>
+    if (fieldMeta.isEmpty) df
+    else df.select(df.columns.toSeq.map(c =>
       fieldMeta.get(c).map(md => col(c).as(c, md)).getOrElse(col(c))): _*)
   }
 
@@ -1510,12 +1525,19 @@ object GraftTable {
       val supp = spark.read.parquet(new Path(t, cf.path).toString)
         .select(col("addr").as("__cf_addr") +:
           cf.columns.map(c => col(c).as(s"__cf_$c")): _*)
-      val joined = d.join(supp, d(RowAddrCol) === supp("__cf_addr"), "left_outer")
-      cf.columns.foldLeft(joined) { (dd, c) =>
-        val lc = m.logicalName(c)
-        dd.withColumn(lc, coalesce(dd(lc), dd(s"__cf_$c")))
-      }.drop("__cf_addr" +: cf.columns.map(c => s"__cf_$c"): _*)
+      coalesceColumnFile(m, cf,
+        d.join(supp, d(RowAddrCol) === supp("__cf_addr"), "left_outer"))
     }
+
+  /** Fold a supplemental file's `__cf_<column>` values (null where the file
+    * has no row for the address) into the logical columns they back, then
+    * drop the helpers. */
+  private[format] def coalesceColumnFile(m: GraftManifest, cf: ColumnFileMeta,
+                                         d: DataFrame): DataFrame =
+    cf.columns.foldLeft(d) { (dd, c) =>
+      val lc = m.logicalName(c)
+      dd.withColumn(lc, coalesce(dd(lc), dd(s"__cf_$c")))
+    }.drop("__cf_addr" +: cf.columns.map(c => s"__cf_$c"): _*)
 
   /** Integrity check (reference `Dataset::validate`,
     * `rust/lance/src/dataset.rs` validate — manifest/fragment invariant
@@ -1673,11 +1695,20 @@ object GraftTable {
     loadManifest(spark, tablePath, version).liveRows
 
   /** Random access by row address (reference `Dataset::take`,
-    * `rust/lance/src/dataset/take.rs:103`): the scan touches ONLY the
+    * `rust/lance/src/dataset/take.rs:103`): the read touches ONLY the
     * fragments named by the addresses (manifest-level pruning — at 100 TB a
     * 100-row take reads ≤100 fragments no matter the table size), then
     * row-index filtering inside them. Output carries `_rowaddr`; join order
-    * back on it if request order matters. */
+    * back on it if request order matters.
+    *
+    * When the pruned fragments sum to at most [[LocalTake.MaxBytes]]
+    * (32 MiB) of `sizeBytes`, the take is read on the driver, only the row
+    * groups holding a wanted row, and returned as a local relation: a
+    * following `select(...).collect()` runs no Spark job. Larger takes
+    * return the lazy Spark scan. Either way the rows (and schema) are the
+    * same, and they are those of the manifest snapshot pinned at call time;
+    * the driver-local answer is also READ at call time, so files removed
+    * later (cleanup) no longer matter to it. */
   def take(spark: SparkSession, tablePath: String, addrs: Seq[Long],
            version: Option[Long] = None): DataFrame = {
     val m = loadManifest(spark, tablePath, version)
@@ -1685,7 +1716,9 @@ object GraftTable {
     val pruned = m.copy(fragments = m.fragments.filter(f => want.contains(f.id)))
     // full snapshot semantics (DV subtraction + supplemental columns) over
     // only the addressed fragments
-    readManifest(spark, tablePath, pruned, withRowAddr = true)
+    if (LocalTake.admit(pruned.fragments))
+      LocalTake.read(spark, tablePath, pruned, LocalTake.Addrs(addrs.toSet))
+    else readManifest(spark, tablePath, pruned, withRowAddr = true)
       .filter(col(RowAddrCol).isin(addrs: _*))
   }
 
@@ -1694,7 +1727,16 @@ object GraftTable {
     * contiguous ranges for freshly written fragments and the `_rowid` footer
     * min/max for compaction-rewritten ones — like [[take]], a k-row lookup
     * reads O(k) fragments no matter the table size. Unlike addresses, the
-    * ids keep resolving after compaction moves the rows. */
+    * ids keep resolving after compaction moves the rows. Output carries
+    * `_rowid`.
+    *
+    * Under the same byte bound as [[take]] ([[LocalTake.MaxBytes]], summed
+    * over the pruned fragments) the rows are read on the driver at call
+    * time from the snapshot pinned at call time, inside each fragment only
+    * the row groups whose row-index range or stored `_rowid` min/max can
+    * hold a wanted id, and returned as a local relation (no Spark job to
+    * collect). Over the bound the lazy Spark scan answers, with the same
+    * rows and schema. */
   def takeRows(spark: SparkSession, tablePath: String, rowIds: Seq[Long],
                version: Option[Long] = None): DataFrame = {
     val m = loadManifest(spark, tablePath, version)
@@ -1709,7 +1751,9 @@ object GraftTable {
         case _ => true // no stats: cannot prune this fragment
       }
     })
-    readManifest(spark, tablePath, pruned, withRowAddr = false, withRowId = true)
+    if (LocalTake.admit(pruned.fragments))
+      LocalTake.read(spark, tablePath, pruned, LocalTake.RowIds(rowIds.toSet))
+    else readManifest(spark, tablePath, pruned, withRowAddr = false, withRowId = true)
       .filter(col(RowIdCol).isin(rowIds: _*))
   }
 
@@ -1789,8 +1833,12 @@ object GraftTable {
   /** Blob access for INLINE binary columns (reference `take_blobs`,
     * `blob.rs:42-168`): fetch ONLY the blob column (plus id) for the
     * addressed rows — take's fragment pruning plus column pruning bounds
-    * payload IO by the request, not the table. Each addressed payload
-    * still materializes whole; for multi-GB payloads store the column
+    * payload IO by the request, not the table. Under [[take]]'s byte bound
+    * the take is read on the driver at call time (every column of the row
+    * groups that hold the addresses — the bound caps that read) and the
+    * result is a local relation; over it the lazy Spark scan reads only the
+    * blob column. Each addressed payload still materializes whole; for
+    * multi-GB payloads store the column
     * through [[BlobStore.packBlobs]] and use [[BlobStore.takeBlobRefs]] +
     * [[BlobStore.readRange]] — lazy descriptors with seek/read semantics
     * (the reference's `BlobFile`). */

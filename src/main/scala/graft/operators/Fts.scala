@@ -1323,8 +1323,23 @@ object Fts {
     if (cache.size > 1024) cache.clear() // identities retire old keys; bound growth
     cache.computeIfAbsent(key, _ => load)
   }
-  private def cacheKey(spark: SparkSession, index: Index): String =
-    IndexIdentity.read(spark, index.root) + "|" + index.root
+  /** Identity each index path's memo keys were last made under. */
+  private val keyIdentity = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def cacheKey(spark: SparkSession, index: Index): String = {
+    val id = IndexIdentity.read(spark, index.root)
+    if (keyIdentity.size > 1024) keyIdentity.clear()
+    // a new identity retires every key of the path made under another one
+    val prev = keyIdentity.put(index.root, id)
+    if (prev != null && prev != id) {
+      def retired(k: String): Boolean = {
+        val rest = k.substring(k.indexOf('|') + 1)
+        !k.startsWith(id + "|") && (rest == index.root || rest.startsWith(index.root + "|"))
+      }
+      metaCache.keySet.removeIf(retired)
+      termDfCache.keySet.removeIf(retired)
+    }
+    id + "|" + index.root
+  }
   private def metaOf(spark: SparkSession, index: Index): (Double, Double) =
     boundedGet(metaCache, cacheKey(spark, index), {
       val meta = spark.read.parquet(index.meta).head()
