@@ -110,9 +110,12 @@ object BlobStore {
     spark.createDataFrame(packed, outSchema)
   }
 
-  /** Lazy take (reference `take_blobs`): resolve the addressed rows'
-    * descriptors WITHOUT touching payload bytes — the scan reads only the
-    * descriptor struct of O(k) fragments. */
+  /** Resolve the addressed rows' descriptors (reference `take_blobs`)
+    * WITHOUT touching payload bytes, which live in the blob files. Under
+    * [[GraftTable.take]]'s byte bound (`LocalTake.MaxBytes`) the read is
+    * eager, on the driver, and covers every column of the row groups that
+    * hold the addresses in O(k) fragments; over it the Spark scan reads
+    * only the descriptor struct of those fragments. */
   def takeBlobRefs(spark: SparkSession, tablePath: String, addrs: Seq[Long],
                    blobCol: String): Seq[BlobRef] =
     GraftTable.take(spark, tablePath, addrs)

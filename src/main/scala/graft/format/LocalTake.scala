@@ -50,8 +50,11 @@ private[graft] object LocalTake {
   import GraftTable.{RowAddrCol, RowIdCol}
 
   /** Largest summed `sizeBytes` of a take's pruned fragments that is read
-    * on the driver. One driver thread decodes a few hundred MB/s, so at
-    * this size the read costs about what a Spark job's fixed cost does. */
+    * on the driver. Timed against the Spark scan on 4 local cores (tables
+    * of 4 one-row-group fragments of 32-d float rows; 4 or 1000 wanted
+    * rows), the driver took 0.25-0.74 of the scan's time from 1 to 32 MiB;
+    * at 64 MiB a 1000-row take broke even (0.93-0.98) and at 128 MiB it
+    * lost (1.09). The bound is the largest size with a clear win. */
   val MaxBytes: Long = 32L << 20
 
   /** The bound in force; specs move it to force either path. */
@@ -100,7 +103,8 @@ private[graft] object LocalTake {
     val rangeStarts = if (!byId) Map.empty[Long, Long] else m.fragments.collect {
       case f if !f.rowIdStored && f.rowIdStart >= 0 => f.id -> f.rowIdStart
     }.toMap
-    val reader = readerFor(spark, dataSchema, rowIndex = true)
+    val confs = Confs(spark)
+    val reader = readerFor(spark, confs, dataSchema, rowIndex = true)
 
     val hits = ArrayBuffer.empty[Hit]
     m.fragments.foreach { f =>
@@ -134,12 +138,13 @@ private[graft] object LocalTake {
       }
     }
     // deletion vectors, restricted to the kept rows' addresses
-    val dead = addrLookup(spark, reader.conf, t, m.dvFiles, Nil, hits.flatMap(_.addr).toSet)
+    val dead = addrLookup(spark, confs, reader.conf, t, m.dvFiles, Nil,
+      hits.flatMap(_.addr).toSet)
     val live = hits.filterNot(h => h.addr.exists(dead.rows.contains))
     // supplemental column files: `__cf_<column>` per column, null off-file
     val liveAddrs = live.flatMap(_.addr).toSet
     val supp = m.columnFiles.map(cf =>
-      cf -> addrLookup(spark, reader.conf, t, Seq(cf.path), cf.columns, liveAddrs))
+      cf -> addrLookup(spark, confs, reader.conf, t, Seq(cf.path), cf.columns, liveAddrs))
     val suppFields = supp.flatMap { case (cf, found) =>
       cf.columns.map(c => StructField(s"__cf_$c",
         SchemaPaths.nullableAll(found.schema(c).dataType), nullable = true))
@@ -193,7 +198,7 @@ private[graft] object LocalTake {
     * by their `addr` column. Only row groups whose `addr` min/max covers
     * a wanted address are read. */
   private final case class Found(schema: StructType, rows: Map[Long, InternalRow])
-  private def addrLookup(spark: SparkSession, conf: Configuration, t: Path,
+  private def addrLookup(spark: SparkSession, confs: Confs, conf: Configuration, t: Path,
                          paths: Seq[String], columns: Seq[String],
                          addrs: Set[Long]): Found = {
     if (paths.isEmpty || (addrs.isEmpty && columns.isEmpty))
@@ -209,7 +214,7 @@ private[graft] object LocalTake {
     }
     val schema = StructType(("addr" +: columns).map(inferred(_)))
     if (addrs.isEmpty) return Found(schema, Map.empty)
-    val reader = readerFor(spark, schema, rowIndex = false)
+    val reader = readerFor(spark, confs, schema, rowIndex = false)
     val rows = files.flatMap(st => scan(reader, st.getPath, st.getLen,
       (b, _) => covers(b, "addr", addrs))(r => !r.isNullAt(0) && addrs.contains(r.getLong(0))))
     Found(schema, rows.map(r => r.getLong(0) -> r).toMap)
@@ -291,13 +296,26 @@ private[graft] object LocalTake {
     try r.getFooter finally r.close()
   }
 
-  /** Spark's parquet reader for one schema under one session's confs (and
-    * the hadoop conf it reads with). Building one broadcasts the conf, so
-    * a few are kept; a conf change builds a new one. */
+  /** Spark's parquet reader for one schema, and the hadoop conf it reads
+    * with. Building one broadcasts the conf, so a few are kept, keyed by
+    * the effective hadoop conf (`sparkContext.hadoopConfiguration` overlaid
+    * with the session's SQL confs, as the Spark scan reads with): a change
+    * to either, e.g. rotated credentials, builds a new reader. The key
+    * names the SparkContext by its application id, so a reader never
+    * outlives the context its broadcast lives in, and holds no session. */
   private final class Reader(val read: PartitionedFile => Iterator[InternalRow],
                              val schema: StructType, val conf: Configuration)
-  private final case class ReaderKey(spark: SparkSession, schema: StructType,
-                                     rowIndex: Boolean, confs: Map[String, String])
+  private final case class Confs(app: String, hadoop: Map[String, String],
+                                 sql: Map[String, String])
+  private object Confs {
+    def apply(spark: SparkSession): Confs = {
+      val sc = spark.sparkContext
+      Confs(sc.applicationId,
+        sc.hadoopConfiguration.iterator.asScala.map(e => e.getKey -> e.getValue).toMap,
+        spark.sessionState.conf.getAllConfs)
+    }
+  }
+  private final case class ReaderKey(confs: Confs, schema: StructType, rowIndex: Boolean)
   private val readers = new java.util.LinkedHashMap[ReaderKey, Reader](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[ReaderKey, Reader]): Boolean =
       size > 16
@@ -305,8 +323,9 @@ private[graft] object LocalTake {
 
   def readerCount: Int = readers.synchronized(readers.size)
 
-  private def readerFor(spark: SparkSession, schema: StructType, rowIndex: Boolean): Reader = {
-    val key = ReaderKey(spark, schema, rowIndex, spark.sessionState.conf.getAllConfs)
+  private def readerFor(spark: SparkSession, confs: Confs, schema: StructType,
+                        rowIndex: Boolean): Reader = {
+    val key = ReaderKey(confs, schema, rowIndex)
     readers.synchronized(Option(readers.get(key))).getOrElse {
       val conf = spark.sessionState.newHadoopConf()
       val required =

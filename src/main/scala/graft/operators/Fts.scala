@@ -1311,53 +1311,46 @@ object Fts {
     idf(n) * (col("tf") * (K1 + 1)) /
       (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / lit(avgdl)))
 
-  /** (n_docs, avgdl) per (index path, [[IndexIdentity]]), memoized — meta
-    * is a single parquet row yet costs a driver job per read; query paths
-    * (WAND especially — it builds three scored plans) were paying it
-    * repeatedly. The identity is read per lookup (one small file read), so
-    * a rebuild or optimize by any process retires the entry and a
+  /** One index path's memos, made under one [[IndexIdentity]]: (n_docs,
+    * avgdl) — meta is a single parquet row yet costs a driver job per read;
+    * query paths (WAND especially — it builds three scored plans) were
+    * paying it repeatedly — and df per token set, so the WAND floor check
+    * and idf precompute collapse to one tiny lookup job per novel token
+    * set. */
+  private final class IndexMemo(val identity: String) {
+    @volatile var meta: Option[(Double, Double)] = None
+    val dfs = new java.util.concurrent.ConcurrentHashMap[Seq[String], Map[String, Double]]()
+  }
+  /** Bound on the memoized index paths, and on one path's token sets. */
+  private val MemoCap = 1024
+  private val memos = new java.util.concurrent.ConcurrentHashMap[String, IndexMemo]()
+  /** The path's memo under its current identity. The identity is read per
+    * lookup (one small file read); a new one replaces the path's memo
+    * whole, so a rebuild or optimize by any process retires it and a
     * long-lived JVM never serves stale n_docs/avgdl/df. */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
-  private def boundedGet[V](cache: java.util.concurrent.ConcurrentHashMap[String, V],
-                            key: String, load: => V): V = {
-    if (cache.size > 1024) cache.clear() // identities retire old keys; bound growth
-    cache.computeIfAbsent(key, _ => load)
-  }
-  /** Identity each index path's memo keys were last made under. */
-  private val keyIdentity = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cacheKey(spark: SparkSession, index: Index): String = {
+  private def memoOf(spark: SparkSession, index: Index): IndexMemo = {
     val id = IndexIdentity.read(spark, index.root)
-    if (keyIdentity.size > 1024) keyIdentity.clear()
-    // a new identity retires every key of the path made under another one
-    val prev = keyIdentity.put(index.root, id)
-    if (prev != null && prev != id) {
-      def retired(k: String): Boolean = {
-        val rest = k.substring(k.indexOf('|') + 1)
-        !k.startsWith(id + "|") && (rest == index.root || rest.startsWith(index.root + "|"))
-      }
-      metaCache.keySet.removeIf(retired)
-      termDfCache.keySet.removeIf(retired)
-    }
-    id + "|" + index.root
+    if (memos.size > MemoCap) memos.clear()
+    memos.compute(index.root, (_, m) => if (m != null && m.identity == id) m else new IndexMemo(id))
   }
-  private def metaOf(spark: SparkSession, index: Index): (Double, Double) =
-    boundedGet(metaCache, cacheKey(spark, index), {
+  private def metaOf(spark: SparkSession, index: Index): (Double, Double) = {
+    val memo = memoOf(spark, index)
+    memo.meta.getOrElse {
       val meta = spark.read.parquet(index.meta).head()
-      (meta.getLong(0).toDouble, meta.getDouble(1))
-    })
+      val v = (meta.getLong(0).toDouble, meta.getDouble(1))
+      memo.meta = Some(v)
+      v
+    }
+  }
 
-  /** df per (index path, identity, token set), memoized — the WAND floor
-    * check and idf precompute collapse to one tiny lookup job per novel
-    * token set. */
-  private val termDfCache = new java.util.concurrent.ConcurrentHashMap[String, Map[String, Double]]()
-  private def termDfs(spark: SparkSession, index: Index, tokens: Seq[String]): Map[String, Double] =
-    boundedGet(termDfCache,
-      cacheKey(spark, index) + "|" +
-        tokens.sorted.map(t => s"${t.length}:$t").mkString(" "), {
+  private def termDfs(spark: SparkSession, index: Index, tokens: Seq[String]): Map[String, Double] = {
+    val dfs = memoOf(spark, index).dfs
+    if (dfs.size > MemoCap) dfs.clear()
+    dfs.computeIfAbsent(tokens.sorted, _ =>
       spark.read.parquet(index.termstats)
         .filter(col("token").isin(tokens: _*))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    })
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+  }
 
   private def scored(spark: SparkSession, index: Index, terms: Seq[String],
                      postings: Option[DataFrame] = None): DataFrame = {
