@@ -287,19 +287,23 @@ final class ExternalKvCommitHandler(kv: CommitKv) extends CommitHandler {
       if (v != Final) {
         val dest = new Path(key)
         val staging = new Path(v)
-        if (fs.exists(staging)) {
-          val in = fs.open(staging)
-          val bytes = try org.apache.commons.io.IOUtils.toByteArray(in)
-          finally in.close()
+        // no existence probe: the claimant deletes its staging right after
+        // it writes dest and marks the claim FINAL, so staging can vanish
+        // between a probe and the open. Gone means that finalize (or a
+        // sweep of a crashed claimant's staging) happened: leave the entry
+        // for the next recover rather than guessing
+        val staged =
+          try {
+            val in = fs.open(staging)
+            try Some(org.apache.commons.io.IOUtils.toByteArray(in)) finally in.close()
+          } catch { case _: java.io.FileNotFoundException => None }
+        staged.foreach { bytes =>
           putObject(fs, dest, bytes)
           // finalize conditionally: the winner may be racing this same
           // finalize; either order leaves dest written and entry FINAL
           kv.replaceIf(key, v, Final)
           fs.delete(staging, false)
         }
-        // staging missing while non-FINAL cannot happen in-protocol
-        // (staging is written before the claim); tolerate by leaving the
-        // entry for the next recover rather than guessing
       }
     }
   }

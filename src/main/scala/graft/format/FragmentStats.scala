@@ -1,6 +1,11 @@
 package graft.format
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -18,6 +23,20 @@ import scala.jdk.CollectionConverters._
   * prune even with nulls present). Anything unrecognized ⇒ true (keep).
   */
 object FragmentStats {
+
+  /** One parquet file's footer, opened with read options built from
+    * `conf`: the no-options open builds and loads a fresh hadoop
+    * Configuration per call, which costs more than the footer read. Needs
+    * no session, so tasks call it too. */
+  def footer(conf: Configuration, status: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+      HadoopReadOptions.builder(conf, status.getPath).build())
+    try r.getFooter finally r.close()
+  }
+
+  /** Rows in a footer's row groups. */
+  def rowCount(footer: ParquetMetadata): Long =
+    footer.getBlocks.asScala.iterator.map(_.getRowCount).sum
 
   /** Extract per-column stats from a parquet footer. Columns whose type we
     * don't map (nested, int96 timestamps) are simply absent ⇒ never pruned. */

@@ -736,9 +736,12 @@ private[format] object GraftProcedures {
     * (reference `session.index_cache` size/hit-rate, `dataset.py:3039`):
     * entries vs configured budget and cumulative hits/misses for the
     * HNSW graph LRU (`spark.graft.cache.hnsw.indexes`), the IVF
-    * centroid cache (`spark.graft.cache.centroids.indexes`), the
-    * driver-local serve caches, and the driver-local take (`take_local`:
-    * takes answered on the driver vs Spark fallbacks). */
+    * centroid cache (`spark.graft.cache.centroids.indexes`; every IVF-
+    * family model lookup counts, the Spark paths' and serving's alike),
+    * the driver-local serve caches, and the driver-local take
+    * (`take_local`: takes answered on the driver vs Spark fallbacks).
+    * Every index row reports one [[graft.operators.ServeCache]]'s counters
+    * (fts_serve: the two postings LRUs, which share theirs). */
   def cacheStats(): UnboundProcedure =
     procRows("cache_stats", Array.empty[ProcedureParameter],
       StructType(Seq(StructField("cache", DT.StringType),

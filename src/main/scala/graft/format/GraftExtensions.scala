@@ -115,7 +115,7 @@ class GraftScalarIndexRule(session: SparkSession) extends Rule[LogicalPlan]
         val dirs = candidateNames(gfi, colName)
           .map(n => s"${gfi.tablePath}/_indices/" + graft.index.BloomIndex.dirName(n))
         firstUsable(gfi, colName, dirs).flatMap { case (dir, covered) =>
-          val cands = GraftScalarIndexRule.cachedBloom(dir, values.map(String.valueOf)) {
+          val cands = GraftScalarIndexRule.cachedBloom(session, dir, values.map(String.valueOf)) {
             graft.index.BloomIndex.candidateFragments(session, dir, values)
           }
           val keep = gfi.manifest.fragments.filter(fr =>
@@ -371,14 +371,14 @@ class GraftScalarIndexRule(session: SparkSession) extends Rule[LogicalPlan]
         if (!ids.subsetOf(current)) None // compacted away — dormant until optimize
         else {
           val markerUuid = GraftScalarIndexRule.cachedUuid(
-              gfi.tablePath.toString, m.version, dir) {
+              session, gfi.tablePath.toString, m.version, dir) {
             GraftScalarIndexRule.fsProbes.incrementAndGet()
             graft.index.ScalarIndex.readMarkerUuid(session, dir)
           }
           if (markerUuid.contains(e.uuid)) Some((ids, Some(e.column))) else None
         }
       }
-    } else GraftScalarIndexRule.cached(gfi.tablePath.toString, m.version, dir) {
+    } else GraftScalarIndexRule.cached(session, gfi.tablePath.toString, m.version, dir) {
       GraftScalarIndexRule.fsProbes.incrementAndGet()
       graft.index.ScalarIndex.readMarker(session, dir).flatMap { case (vi, idxCol, _) =>
         val current = m.fragments.map(_.id).toSet
@@ -488,8 +488,9 @@ class GraftScalarIndexRule(session: SparkSession) extends Rule[LogicalPlan]
 }
 
 object GraftScalarIndexRule {
-  /** Bumped on every in-JVM index-marker write: entries under older epochs
-    * become unreachable and age out of the LRU. Cross-process builds at the
+  /** Bumped on every in-JVM index-marker write: the caches below hold
+    * their entries under the epoch they were loaded in and drop an index
+    * dir's entries when a lookup passes a newer one. Cross-process builds at the
     * SAME table version are not seen until the next version (the reference
     * avoids this by committing index metadata into the manifest; our builds
     * do not commit a table version). */
@@ -505,71 +506,38 @@ object GraftScalarIndexRule {
     * recovery probe) share this cache's invalidation discipline. */
   def cacheEpoch: Long = epoch.get()
 
+  // Three index-dir-keyed index caches ([[graft.operators.ServeCache]]);
+  // the identity they are loaded under is the epoch above.
   private val Cap = 512
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[(Set[Long], Option[String])]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[(Set[Long], Option[String])]]): Boolean =
-        size > Cap
-    })
+  private val cache =
+    new graft.operators.ServeCache[String, Option[(Set[Long], Option[String])]](None, Cap)
 
-  private[format] def cached(tablePath: String, version: Long, dir: String)(
-      compute: => Option[(Set[Long], Option[String])]): Option[(Set[Long], Option[String])] = {
-    val key = s"${epoch.get()}|$tablePath|$version|$dir"
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val v = compute
-      cache.put(key, v)
-      v
-    }
-  }
+  private[format] def cached(spark: SparkSession, tablePath: String, version: Long, dir: String)(
+      compute: => Option[(Set[Long], Option[String])]): Option[(Set[Long], Option[String])] =
+    cache.getOrLoad(spark, dir, epoch.get().toString, s"$tablePath|$version")(compute)
 
   /** Marker-uuid verification for manifest-committed index entries: ONE
     * filesystem read per (epoch, table, snapshot version, dir), then pure
     * in-memory comparison against each entry's uuid. */
-  private val uuidCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[String]](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, Option[String]]): Boolean =
-        size > Cap
-    })
+  private val uuidCache = new graft.operators.ServeCache[String, Option[String]](None, Cap)
 
-  private[format] def cachedUuid(tablePath: String, version: Long, dir: String)(
-      compute: => Option[String]): Option[String] = {
-    val key = s"${epoch.get()}|$tablePath|$version|$dir"
-    val hit = uuidCache.get(key)
-    if (hit != null) hit
-    else {
-      val v = compute
-      uuidCache.put(key, v)
-      v
-    }
-  }
+  private[format] def cachedUuid(spark: SparkSession, tablePath: String, version: Long,
+                                 dir: String)(compute: => Option[String]): Option[String] =
+    uuidCache.getOrLoad(spark, dir, epoch.get().toString, s"$tablePath|$version")(compute)
 
   /** Bloom candidate-fragment sets are probe-value-dependent: cache per
     * (epoch, dir, values) so re-running the same query does not re-run the
     * one-row-per-fragment membership job at plan time. */
-  private val bloomCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Set[Long]](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, Set[Long]]): Boolean =
-        size > Cap
-    })
+  private val bloomCache = new graft.operators.ServeCache[String, Set[Long]](None, Cap)
 
-  private[format] def cachedBloom(dir: String, values: Seq[String])(
-      compute: => Set[Long]): Set[Long] = {
+  private[format] def cachedBloom(spark: SparkSession, dir: String, values: Seq[String])(
+      compute: => Set[Long]): Set[Long] =
     // Length-prefixed + separator-joined: an ambiguous encoding would let two
     // distinct probe sets (e.g. IN ('ab','c') vs IN ('a','bc')) share a key and
     // reuse each other's candidate-fragment mask — fragments wrongly pruned here
     // are never scanned, so the refine filter cannot recover the missing rows.
-    val key = s"${epoch.get()}|$dir|${values.sorted.map(v => s"${v.length}:$v").mkString(" ")}"
-    val hit = bloomCache.get(key)
-    if (hit != null) hit
-    else {
-      val v = compute
-      bloomCache.put(key, v)
-      v
-    }
-  }
+    bloomCache.getOrLoad(spark, dir, epoch.get().toString,
+      values.sorted.map(v => s"${v.length}:$v").mkString(" "))(compute)
 }
 
 /** Snapshot-semantics rule for `format("graft")` relations: applies the DV

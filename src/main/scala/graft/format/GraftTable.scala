@@ -4,8 +4,6 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -431,17 +429,15 @@ object GraftTable {
 
   // ------------------------------------------------------------- data files
 
-  private def parquetRowCount(conf: Configuration, status: org.apache.hadoop.fs.FileStatus): Long = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-    try r.getRecordCount finally r.close()
-  }
+  private def parquetRowCount(conf: Configuration, status: org.apache.hadoop.fs.FileStatus): Long =
+    FragmentStats.rowCount(FragmentStats.footer(conf, status))
 
   /** Footer read → (rows, per-column zone stats). One driver IO per fragment
     * at commit time; stats ride in the manifest and fund plan-time pruning. */
   private def parquetFooterInfo(conf: Configuration,
                                 status: org.apache.hadoop.fs.FileStatus): (Long, Map[String, ColumnStat]) = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-    try (r.getRecordCount, FragmentStats.fromFooter(r.getFooter)) finally r.close()
+    val f = FragmentStats.footer(conf, status)
+    (FragmentStats.rowCount(f), FragmentStats.fromFooter(f))
   }
 
   /** ONE footer open returning rows + stats + a CANONICAL schema
@@ -453,17 +449,15 @@ object GraftTable {
   private def parquetFooterAll(conf: Configuration,
                                status: org.apache.hadoop.fs.FileStatus):
       (Long, Map[String, ColumnStat], String) = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-    try {
-      import scala.jdk.CollectionConverters._
-      val canon = r.getFooter.getFileMetaData.getSchema.getColumns.asScala
-        .map { cd =>
-          val pt = cd.getPrimitiveType
-          cd.getPath.mkString(".") + ":" + pt.getPrimitiveTypeName + ":" +
-            String.valueOf(pt.getLogicalTypeAnnotation)
-        }.sorted.mkString(";")
-      (r.getRecordCount, FragmentStats.fromFooter(r.getFooter), canon)
-    } finally r.close()
+    import scala.jdk.CollectionConverters._
+    val f = FragmentStats.footer(conf, status)
+    val canon = f.getFileMetaData.getSchema.getColumns.asScala
+      .map { cd =>
+        val pt = cd.getPrimitiveType
+        cd.getPath.mkString(".") + ":" + pt.getPrimitiveTypeName + ":" +
+          String.valueOf(pt.getLogicalTypeAnnotation)
+      }.sorted.mkString(";")
+    (FragmentStats.rowCount(f), FragmentStats.fromFooter(f), canon)
   }
 
   /** Write `df`'s rows as new fragment files under a unique txn directory and
@@ -1663,13 +1657,10 @@ object GraftTable {
                 .filter(_.getPath.getName.endsWith(".parquet"))
             else Seq(fs.getFileStatus(p))
           files.flatMap { st =>
-            val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, c))
-            try {
-              import scala.jdk.CollectionConverters._
-              r.getFooter.getBlocks.asScala.flatMap(b =>
-                b.getColumns.asScala.map(cc =>
-                  (cc.getPath.toDotString, cc.getTotalSize))).toSeq
-            } finally r.close()
+            import scala.jdk.CollectionConverters._
+            FragmentStats.footer(c, st).getBlocks.asScala.flatMap(b =>
+              b.getColumns.asScala.map(cc =>
+                (cc.getPath.toDotString, cc.getTotalSize))).toSeq
           }
         }
       }

@@ -7,10 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -207,7 +204,7 @@ private[graft] object LocalTake {
     // the schema `spark.read.parquet` infers for the dataset: the Spark
     // schema its first part file records (the files of one write share it)
     val inferred = files.headOption.fold(new StructType()) { st =>
-      val fm = footer(conf, st.getPath, st.getLen).getFileMetaData
+      val fm = FragmentStats.footer(conf, st).getFileMetaData
       Option(fm.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
         .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(fm.getSchema))
@@ -253,7 +250,8 @@ private[graft] object LocalTake {
   private def scan(reader: Reader, p: Path, size: Long,
                    keepGroup: (BlockMetaData, Long) => Boolean)
                   (keep: InternalRow => Boolean): Seq[InternalRow] = {
-    val blocks = footer(reader.conf, p, size).getBlocks.asScala.toIndexedSeq
+    val blocks = FragmentStats.footer(reader.conf, new FileStatus(size, false, 1, 0L, 0L, p))
+      .getBlocks.asScala.toIndexedSeq
     val firsts = blocks.scanLeft(0L)(_ + _.getRowCount)
     val kept = blocks.indices.filter(i => keepGroup(blocks(i), firsts(i)))
     if (kept.isEmpty) return Nil
@@ -286,14 +284,6 @@ private[graft] object LocalTake {
       s"driver-local take read $read rows of $p where its row groups ${kept.mkString(",")} " +
         s"hold $want")
     out.toSeq
-  }
-
-  private def footer(conf: Configuration, p: Path, size: Long): ParquetMetadata = {
-    // read options from the session's hadoop conf: the no-conf default
-    // builds (and loads) a fresh Configuration per open
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(
-      new FileStatus(size, false, 1, 0L, 0L, p), conf), HadoopReadOptions.builder(conf, p).build())
-    try r.getFooter finally r.close()
   }
 
   /** Spark's parquet reader for one schema, and the hadoop conf it reads

@@ -208,36 +208,31 @@ object BinaryIvfIndex {
 
   val ServeCodesBudgetKey = "spark.graft.cache.hamming.serve.partitions"
   private type Codes = Array[(Long, Array[Byte])]
-  private val serveCodes = new ServeCache[Int, Codes](ServeCodesBudgetKey, 256)
+  private val serveCodes = new ServeCache[Int, Codes](Some(ServeCodesBudgetKey), 256)
   def currentServeCapacity: Int = serveCodes.currentCapacity
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
   def serveCacheSize: Int = serveCodes.size
-  private val serveModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
-  private val serveFresh = new ServeFreshness(p => {
-    serveModels.remove(p)
-    serveCodes.purge(p)
-  })
+  private val serveModels = new ServeCache[Unit, Model](None, ServeCache.IndexStates)
 
   /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveModels.remove(indexPath)
-    serveFresh.forget(indexPath)
+    serveModels.purge(indexPath)
     serveCodes.purge(indexPath)
+    IndexIdentity.forget(indexPath)
   }
 
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
-    serveFresh.ensure(spark, indexPath)
-
-  private def serveModel(spark: SparkSession, indexPath: String): Model =
-    serveModels.computeIfAbsent(indexPath, _ => loadModel(spark, indexPath))
+  /** The index's identity (one read per call) and its serve model. */
+  private def serveModel(spark: SparkSession, indexPath: String): (String, Model) = {
+    val ident = IndexIdentity.of(spark, indexPath)
+    (ident, serveModels.getOrLoad(spark, indexPath, ident, ())(loadModel(spark, indexPath)))
+  }
 
   /** Resident (id, bits) rows of `pids`, in request order; the pids that
     * miss load in ONE directory-pruned scan. */
-  private def serveCodesOf(spark: SparkSession, indexPath: String, idCol: String,
-                           vecCol: String, pids: Seq[Int]): Seq[Codes] =
-    serveCodes.getOrLoadAll(spark, indexPath, pids) { miss =>
+  private def serveCodesOf(spark: SparkSession, indexPath: String, identity: String,
+                           idCol: String, vecCol: String, pids: Seq[Int]): Seq[Codes] =
+    serveCodes.getOrLoadAll(spark, indexPath, identity, pids) { miss =>
       val rows = spark.read.parquet(s"$indexPath/vectors")
         .filter(col(PidCol).isin(miss: _*))
         .select(col(PidCol), col(idCol).cast("long"), col(vecCol)).collect()
@@ -248,11 +243,10 @@ object BinaryIvfIndex {
   /** Preload the serve cache in one scan; returns resident row count. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val model = serveModel(spark, indexPath)
+    val (ident, model) = serveModel(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
-    serveCodesOf(spark, indexPath, idCol, vecCol, targets).map(_.length.toLong).sum
+    serveCodesOf(spark, indexPath, ident, idCol, vecCol, targets).map(_.length.toLong).sum
   }
 
   /** Answer one query driver-locally: hamming centroid ranking + exact
@@ -263,11 +257,10 @@ object BinaryIvfIndex {
   def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
                  vecCol: String, query: Array[Byte], k: Int, nprobes: Int,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Long)] = {
-    ensureServeFresh(spark, indexPath)
-    val model = serveModel(spark, indexPath)
+    val (ident, model) = serveModel(spark, indexPath)
     val probes = model.rank(query).take(math.min(nprobes, model.nlist))
     val keep = allowed.getOrElse((_: Long) => true)
-    serveCodesOf(spark, indexPath, idCol, vecCol, probes).iterator.flatMap { rows =>
+    serveCodesOf(spark, indexPath, ident, idCol, vecCol, probes).iterator.flatMap { rows =>
       rows.iterator
         .collect { case (id, bits) if keep(id) => (id, hamming(bits, query)) }
     }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)

@@ -1311,46 +1311,34 @@ object Fts {
     idf(n) * (col("tf") * (K1 + 1)) /
       (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / lit(avgdl)))
 
-  /** One index path's memos, made under one [[IndexIdentity]]: (n_docs,
-    * avgdl) — meta is a single parquet row yet costs a driver job per read;
-    * query paths (WAND especially — it builds three scored plans) were
-    * paying it repeatedly — and df per token set, so the WAND floor check
-    * and idf precompute collapse to one tiny lookup job per novel token
-    * set. */
-  private final class IndexMemo(val identity: String) {
-    @volatile var meta: Option[(Double, Double)] = None
-    val dfs = new java.util.concurrent.ConcurrentHashMap[Seq[String], Map[String, Double]]()
-  }
-  /** Bound on the memoized index paths, and on one path's token sets. */
+  /** Per-index memos, kept under the [[IndexIdentity]] they were made
+    * under: (n_docs, avgdl) — meta is a single parquet row yet costs a
+    * driver job per read; query paths (WAND especially — it builds three
+    * scored plans) were paying it repeatedly — and df per token set, so the
+    * WAND floor check and idf precompute collapse to one tiny lookup job
+    * per novel token set. A rebuild or optimize by any process moves the
+    * identity and retires the index's memos, so a long-lived JVM never
+    * serves stale n_docs/avgdl/df. */
   private val MemoCap = 1024
-  private val memos = new java.util.concurrent.ConcurrentHashMap[String, IndexMemo]()
-  /** The path's memo under its current identity. The identity is read per
-    * lookup (one small file read); a new one replaces the path's memo
-    * whole, so a rebuild or optimize by any process retires it and a
-    * long-lived JVM never serves stale n_docs/avgdl/df. */
-  private def memoOf(spark: SparkSession, index: Index): IndexMemo = {
-    val id = IndexIdentity.read(spark, index.root)
-    if (memos.size > MemoCap) memos.clear()
-    memos.compute(index.root, (_, m) => if (m != null && m.identity == id) m else new IndexMemo(id))
-  }
-  private def metaOf(spark: SparkSession, index: Index): (Double, Double) = {
-    val memo = memoOf(spark, index)
-    memo.meta.getOrElse {
-      val meta = spark.read.parquet(index.meta).head()
-      val v = (meta.getLong(0).toDouble, meta.getDouble(1))
-      memo.meta = Some(v)
-      v
-    }
-  }
+  private val metas = new ServeCache[Unit, (Double, Double)](None, MemoCap)
+  private val dfMemos = new ServeCache[Seq[String], Map[String, Double]](None, MemoCap)
 
-  private def termDfs(spark: SparkSession, index: Index, tokens: Seq[String]): Map[String, Double] = {
-    val dfs = memoOf(spark, index).dfs
-    if (dfs.size > MemoCap) dfs.clear()
-    dfs.computeIfAbsent(tokens.sorted, _ =>
+  /** (n_docs, avgdl); reads the index's identity from disk. */
+  private def metaOf(spark: SparkSession, index: Index): (Double, Double) =
+    metaUnder(spark, index, IndexIdentity.read(spark, index.root))
+
+  private def metaUnder(spark: SparkSession, index: Index, identity: String): (Double, Double) =
+    metas.getOrLoad(spark, index.root, identity, ()) {
+      val meta = spark.read.parquet(index.meta).head()
+      (meta.getLong(0).toDouble, meta.getDouble(1))
+    }
+
+  private def termDfs(spark: SparkSession, index: Index, tokens: Seq[String]): Map[String, Double] =
+    dfMemos.getOrLoad(spark, index.root, IndexIdentity.read(spark, index.root), tokens.sorted) {
       spark.read.parquet(index.termstats)
         .filter(col("token").isin(tokens: _*))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
-  }
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    }
 
   private def scored(spark: SparkSession, index: Index, terms: Seq[String],
                      postings: Option[DataFrame] = None): DataFrame = {
@@ -1759,8 +1747,8 @@ object Fts {
   // boolean/fuzzy query runs ZERO Spark jobs and returns exactly
   // [[matchQuery]]/[[booleanQuery]]/[[fuzzyQuery]]'s top-k (same BM25
   // arithmetic, same (score desc, doc_id) tie-break). Long doc ids only.
-  // Freshness: the same [[IndexIdentity]] guard as the ANN twins purges
-  // resident state after a rebuild or optimize.
+  // Freshness: every serve cache drops an index's entries when its
+  // [[IndexIdentity]] moves ([[ServeCache]]), like the ANN twins.
   // ------------------------------------------------------------------
 
   /** Max docstats rows resident per served index (driver memory guard):
@@ -1775,51 +1763,50 @@ object Fts {
   val serveHits = new java.util.concurrent.atomic.AtomicLong(0)
   val serveMisses = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private case class ServeState(cfg: FtsConfig, nDocs: Double, avgdl: Double,
+  /** An index's tokenizer config and resident dictionary (token → df)
+    * and per-doc lengths. */
+  private case class ServeState(cfg: FtsConfig,
       df: java.util.HashMap[String, java.lang.Double],
       dl: java.util.HashMap[java.lang.Long, java.lang.Double])
-  private val serveStates =
-    new java.util.concurrent.ConcurrentHashMap[String, ServeState]()
+  private val serveStates = new ServeCache[Unit, ServeState](None, ServeCache.IndexStates)
   /** Per-token (doc, tf) postings for scoring. */
   private val servePostings = new ServeCache[String, Array[(Long, Double)]](
-    ServeTermBudgetKey, 4096, serveHits, serveMisses)
+    Some(ServeTermBudgetKey), 4096, serveHits, serveMisses)
   /** Positioned postings for [[servePhrase]] — separate from the scoring
     * LRU so match/boolean/fuzzy serving never pays for position arrays it
-    * does not read. Shares the token budget, the counters and the
-    * freshness guard. */
+    * does not read. Shares the token budget and the counters. */
   private val servePosPostings = new ServeCache[String, Array[(Long, Array[Int])]](
-    ServeTermBudgetKey, 4096, serveHits, serveMisses)
+    Some(ServeTermBudgetKey), 4096, serveHits, serveMisses)
   def currentServeTermCapacity: Int = servePostings.currentCapacity
   def serveCacheSize: Int = servePostings.size
 
-  private def purgeServe(indexPath: String): Unit = {
-    serveStates.remove(indexPath)
+  /** Release an index's driver-resident serve state. Its meta memo stays:
+    * the Spark paths read it too. */
+  def serveUnpersist(indexPath: String): Unit = {
+    serveStates.purge(indexPath)
     servePostings.purge(indexPath)
     servePosPostings.purge(indexPath)
+    IndexIdentity.forget(indexPath)
   }
 
-  /** Release an index's driver-resident serve state. */
-  def serveUnpersist(indexPath: String): Unit = {
-    serveFresh.forget(indexPath)
-    purgeServe(indexPath)
+  /** One serve call's view of an index: the identity it runs under (read
+    * once per call), the resident state and (n_docs, avgdl). */
+  private final case class Served(ident: String, st: ServeState, nDocs: Double, avgdl: Double)
+
+  private def serving(spark: SparkSession, indexPath: String): Served = {
+    val ident = IndexIdentity.of(spark, indexPath)
+    val (n, avgdl) = metaUnder(spark, paths(indexPath), ident)
+    Served(ident, serveStates.getOrLoad(spark, indexPath, ident, ())(
+      loadServeState(spark, indexPath, n)), n, avgdl)
   }
 
-  // resident stats and postings are purged when the index's identity moves
-  private val serveFresh = new ServeFreshness(purgeServe)
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
-    serveFresh.ensure(spark, indexPath)
-
-  /** Per-index resident stats; the COLD load (three small reads: meta,
-    * docstats, termstats) runs outside any lock — a racing duplicate load
-    * is benign, a blocked warm query is not. Refuses when docstats or the
-    * dictionary exceed their budgets instead of silently eating the
-    * driver's heap. */
-  private def serveStateOf(spark: SparkSession, indexPath: String): ServeState = {
-    val hit = serveStates.get(indexPath)
-    if (hit != null) return hit
+  /** Per-index resident stats: two small reads (docstats, termstats).
+    * Refuses when docstats or the dictionary exceed their budgets instead
+    * of silently eating the driver's heap. */
+  private def loadServeState(spark: SparkSession, indexPath: String,
+                             n: Double): ServeState = {
     val p = paths(indexPath)
     val cfg = loadConfig(spark, indexPath)
-    val (n, avgdl) = metaOf(spark, p)
     val docBudget = scala.util.Try(
       spark.conf.get(ServeDocBudgetKey, "2000000").toLong).getOrElse(2000000L)
     require(n <= docBudget,
@@ -1838,19 +1825,17 @@ object Fts {
         s"$dictBudget — raise the budget or use the batched matchQuery")
     val df = new java.util.HashMap[String, java.lang.Double]()
     ts.foreach(r => df.put(r.getString(0), r.getDouble(1)))
-    val st = ServeState(cfg, n, avgdl, df, dl)
-    serveStates.putIfAbsent(indexPath, st)
-    st
+    ServeState(cfg, df, dl)
   }
 
   /** Resident scoring postings of `tokens`, by token. The tokens that
     * miss load in ONE token-pushdown scan (postings are token-sorted per
     * file, so row-group stats skip everything else). A budget shrink also
     * evicts the positioned LRU at once. */
-  private def servePostingsOf(spark: SparkSession, indexPath: String,
+  private def servePostingsOf(spark: SparkSession, indexPath: String, identity: String,
                               tokens: Seq[String]): Map[String, Array[(Long, Double)]] = {
     servePosPostings.refresh(spark)
-    tokens.zip(servePostings.getOrLoadAll(spark, indexPath, tokens) { miss =>
+    tokens.zip(servePostings.getOrLoadAll(spark, indexPath, identity, tokens) { miss =>
       val rows = spark.read.parquet(paths(indexPath).postings)
         .filter(col("token").isin(miss: _*))
         .select(col("token"), col("doc_id").cast("long"), col("tf").cast("double"))
@@ -1865,12 +1850,11 @@ object Fts {
     * budget instead of silently evicting what it just loaded. */
   def serveWarm(spark: SparkSession, indexPath: String,
                 terms: Seq[String] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveStateOf(spark, indexPath)
-    val toks = terms.flatMap(FtsTokenizer.tokens(_, st.cfg)).distinct
-      .filter(t => st.df.containsKey(t))
+    val sv = serving(spark, indexPath)
+    val toks = terms.flatMap(FtsTokenizer.tokens(_, sv.st.cfg)).distinct
+      .filter(t => sv.st.df.containsKey(t))
     servePostings.requireFits(spark, toks.size, "serve", "terms")
-    servePostingsOf(spark, indexPath, toks).valuesIterator.map(_.length.toLong).sum
+    servePostingsOf(spark, indexPath, sv.ident, toks).valuesIterator.map(_.length.toLong).sum
   }
 
   /** Shared driver-side scorer: BM25 with EXACTLY [[bm25Term]]'s
@@ -1882,13 +1866,15 @@ object Fts {
     * of matched terms, not just the 1-2 where fp addition order cannot
     * matter. */
   private def serveScore(spark: SparkSession, indexPath: String,
-                         st: ServeState, tokens: Seq[String], k: Int,
+                         sv: Served, tokens: Seq[String], k: Int,
                          mustTokens: Seq[String] = Nil,
                          mustNotTokens: Seq[String] = Nil): Seq[(Long, Double)] = {
+    val st = sv.st
     val scoring = tokens.distinct.filter(t => st.df.containsKey(t))
     // every term the query reads, in the order a term-by-term load would
     // touch them: the cold ones load together
-    val post = servePostingsOf(spark, indexPath, scoring ++ mustTokens ++ mustNotTokens)
+    val post = servePostingsOf(spark, indexPath, sv.ident,
+      scoring ++ mustTokens ++ mustNotTokens)
     val acc = new java.util.HashMap[java.lang.Long, collection.mutable.ArrayBuffer[Double]]()
     scoring.foreach { t =>
       val dfv = st.df.get(t)
@@ -1896,13 +1882,13 @@ object Fts {
         // StrictMath.log, not math.log: whole-stage codegen evaluates the
         // batched idf through StrictMath, and the intrinsic can differ by
         // one ulp — bit-parity with matchQuery requires the same function
-        val idf = StrictMath.log(1.0 + (st.nDocs - dfv.doubleValue + 0.5) /
+        val idf = StrictMath.log(1.0 + (sv.nDocs - dfv.doubleValue + 0.5) /
           (dfv.doubleValue + 0.5))
         post(t).foreach { case (doc, tf) =>
           val dlv = st.dl.get(doc)
           if (dlv != null) {
             val s = idf * (tf * (K1 + 1)) /
-              (tf + K1 * (1 - B + B * dlv.doubleValue / st.avgdl))
+              (tf + K1 * (1 - B + B * dlv.doubleValue / sv.avgdl))
             var buf = acc.get(doc)
             if (buf == null) { buf = collection.mutable.ArrayBuffer.empty[Double]; acc.put(doc, buf) }
             buf += s
@@ -1927,10 +1913,9 @@ object Fts {
     * (doc_id AND score) with zero Spark jobs once the terms are warm. */
   def serveLocal(spark: SparkSession, indexPath: String, terms: Seq[String],
                  k: Int): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveStateOf(spark, indexPath)
-    serveScore(spark, indexPath, st,
-      terms.flatMap(FtsTokenizer.tokens(_, st.cfg)), k)
+    val sv = serving(spark, indexPath)
+    serveScore(spark, indexPath, sv,
+      terms.flatMap(FtsTokenizer.tokens(_, sv.st.cfg)), k)
   }
 
   /** Driver-local [[multiMatch]] (r16): per-field scores from each field
@@ -1943,10 +1928,9 @@ object Fts {
                       terms: Seq[String], k: Int): Seq[(Long, Double)] = {
     val best = new java.util.HashMap[java.lang.Long, java.lang.Double]()
     fieldIndexPaths.foreach { case (idxPath, boost) =>
-      ensureServeFresh(spark, idxPath)
-      val st = serveStateOf(spark, idxPath)
-      serveScore(spark, idxPath, st,
-        terms.flatMap(FtsTokenizer.tokens(_, st.cfg)), Int.MaxValue)
+      val sv = serving(spark, idxPath)
+      serveScore(spark, idxPath, sv,
+        terms.flatMap(FtsTokenizer.tokens(_, sv.st.cfg)), Int.MaxValue)
         .foreach { case (doc, s) =>
           val f = s * boost
           val prev = best.get(doc)
@@ -1966,8 +1950,8 @@ object Fts {
   def serveBoolean(spark: SparkSession, indexPath: String, must: Seq[String],
                    should: Seq[String], mustNot: Seq[String],
                    k: Int): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveStateOf(spark, indexPath)
+    val sv = serving(spark, indexPath)
+    val st = sv.st
     val mustT = must.flatMap(FtsTokenizer.tokens(_, st.cfg))
     val shouldT = should.flatMap(FtsTokenizer.tokens(_, st.cfg))
     val mustNotT = mustNot.flatMap(FtsTokenizer.tokens(_, st.cfg))
@@ -1975,7 +1959,7 @@ object Fts {
     // a must token absent from the dictionary empties the intersection —
     // exactly like the batched path's intersect over an empty postings leg
     if (mustT.exists(t => !st.df.containsKey(t))) return Nil
-    serveScore(spark, indexPath, st, mustT ++ shouldT, k,
+    serveScore(spark, indexPath, sv, mustT ++ shouldT, k,
       mustTokens = mustT, mustNotTokens = mustNotT)
   }
 
@@ -1985,11 +1969,10 @@ object Fts {
     * scores the expansion set. */
   def serveFuzzy(spark: SparkSession, indexPath: String, terms: Seq[String],
                  fuzziness: Int, prefixLength: Int, k: Int): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveStateOf(spark, indexPath)
-    val qs = terms.flatMap(FtsTokenizer.tokens(_, st.cfg))
+    val sv = serving(spark, indexPath)
+    val qs = terms.flatMap(FtsTokenizer.tokens(_, sv.st.cfg))
     val expanded = collection.mutable.LinkedHashSet.empty[String]
-    val dictIt = st.df.keySet().iterator()
+    val dictIt = sv.st.df.keySet().iterator()
     while (dictIt.hasNext) {
       val tok = dictIt.next()
       if (qs.exists { q =>
@@ -1997,15 +1980,15 @@ object Fts {
           serveLevenshtein(tok, q) <= fuzziness
       }) expanded += tok
     }
-    serveScore(spark, indexPath, st, expanded.toSeq, k)
+    serveScore(spark, indexPath, sv, expanded.toSeq, k)
   }
 
   /** Resident positioned postings of `tokens`, by token; the tokens that
     * miss load in ONE token-pushdown scan. */
-  private def servePosPostingsOf(spark: SparkSession, indexPath: String,
+  private def servePosPostingsOf(spark: SparkSession, indexPath: String, identity: String,
                                  tokens: Seq[String]): Map[String, Array[(Long, Array[Int])]] = {
     servePostings.refresh(spark)
-    tokens.zip(servePosPostings.getOrLoadAll(spark, indexPath, tokens) { miss =>
+    tokens.zip(servePosPostings.getOrLoadAll(spark, indexPath, identity, tokens) { miss =>
       val post = spark.read.parquet(paths(indexPath).postings)
       require(post.columns.contains("positions"),
         "phrase serving needs positions; this index was built with " +
@@ -2023,11 +2006,10 @@ object Fts {
     * sorted ascending. Zero Spark jobs once the phrase's tokens are warm. */
   def servePhrase(spark: SparkSession, indexPath: String,
                   rawTerms: Seq[String], slop: Int = 0): Seq[Long] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveStateOf(spark, indexPath)
-    val terms = rawTerms.flatMap(FtsTokenizer.tokens(_, st.cfg))
+    val sv = serving(spark, indexPath)
+    val terms = rawTerms.flatMap(FtsTokenizer.tokens(_, sv.st.cfg))
     require(terms.nonEmpty)
-    val post = servePosPostingsOf(spark, indexPath, terms)
+    val post = servePosPostingsOf(spark, indexPath, sv.ident, terms)
     // valid(doc) = positions where a prefix of the phrase ends
     var valid: Map[Long, Array[Int]] = post(terms.head).toMap
     terms.tail.foreach { t =>
@@ -2054,12 +2036,11 @@ object Fts {
   def serveBoost(spark: SparkSession, indexPath: String,
                  positive: Seq[String], negative: Seq[String],
                  negativeBoost: Double, k: Int): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveStateOf(spark, indexPath)
+    val sv = serving(spark, indexPath)
     def scores(terms: Seq[String]): collection.Map[Long, Double] = {
-      val toks = terms.flatMap(FtsTokenizer.tokens(_, st.cfg))
+      val toks = terms.flatMap(FtsTokenizer.tokens(_, sv.st.cfg))
       // unbounded k: the full per-doc score map (both legs need it whole)
-      serveScore(spark, indexPath, st, toks, Int.MaxValue)
+      serveScore(spark, indexPath, sv, toks, Int.MaxValue)
         .iterator.map(e => e._1 -> e._2).toMap
     }
     val pos = scores(positive)

@@ -762,57 +762,39 @@ object HnswIndex {
     * VERDICT r3 flagged happens once per index, not once per search. On a
     * cluster the persist is MEMORY_AND_DISK across executors.
     *
-    * Bounded (VERDICT r4 #6): an access-ordered LRU of at most
-    * [[cacheCapacity]] indexes — eviction unpersists, so a batch session
-    * touching many indexes cannot pin unbounded storage and squeeze
-    * execution memory. Each entry holds the [[IndexIdentity]] it was
-    * loaded under; a search that reads another identity (a rebuild or
-    * optimize by any process) unpersists it and reloads. Entries are also
-    * released explicitly ([[unpersist]]/[[unpersistAll]]).
+    * Bounded (VERDICT r4 #6): a [[ServeCache]] of at most
+    * [[currentCacheCapacity]] indexes whose release unpersists — eviction,
+    * a moved [[IndexIdentity]] (a rebuild or optimize by any process) and
+    * explicit release ([[unpersist]]/[[unpersistAll]]) all free the
+    * storage, so a batch session touching many indexes cannot pin
+    * unbounded storage and squeeze execution memory.
     * The budget is user-configurable via [[CacheBudgetKey]] (read on each
-    * graph materialization) and observable — entries/capacity/hit/miss —
-    * through `CALL g.system.cache_stats()` (VERDICT r12 #8; reference
-    * exposes the same through `session.index_cache`, `dataset.py:3039`). */
+    * graph lookup) and observable — entries/capacity/hit/miss — through
+    * `CALL g.system.cache_stats()` (VERDICT r12 #8; reference exposes the
+    * same through `session.index_cache`, `dataset.py:3039`). */
   val CacheBudgetKey = "spark.graft.cache.hnsw.indexes"
-  @volatile private var cacheCapacity = 4
-  def currentCacheCapacity: Int = cacheCapacity
   val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
   val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
-  private val graphCache =
-    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean = {
-        val evict = size() > cacheCapacity
-        if (evict) e.getValue._2.unpersist(blocking = false)
-        evict
-      }
-    }
+  private val graphs = new ServeCache[Unit, DataFrame](Some(CacheBudgetKey), 4,
+    cacheHits, cacheMisses, _.unpersist(blocking = false))
+  def currentCacheCapacity: Int = graphs.currentCapacity
 
   /** Drop one index's cached graph and release its storage. */
-  def unpersist(indexPath: String): Unit = graphCache.synchronized {
-    val old = graphCache.remove(indexPath)
-    if (old != null) old._2.unpersist(blocking = false)
-  }
+  def unpersist(indexPath: String): Unit = graphs.purge(indexPath)
 
   /** Release every cached graph (bench/gate hygiene between suites). */
-  def unpersistAll(): Unit = graphCache.synchronized {
-    val it = graphCache.values().iterator()
-    while (it.hasNext) { it.next()._2.unpersist(blocking = false); it.remove() }
-  }
+  def unpersistAll(): Unit = graphs.clear()
 
   /** Paths currently cached, most-recently-used last (spec hook). */
-  def cachedPaths(): Seq[String] = graphCache.synchronized {
-    import scala.jdk.CollectionConverters._
-    graphCache.keySet().asScala.toSeq
-  }
+  def cachedPaths(): Seq[String] = graphs.indexPaths
 
   /** Spark type of the cached graph's node payload (spec hook): ArrayType of
     * floats under flat storage, BinaryType (int8 SQ / PQ codes) under a
     * quantized storage — proof the cache does NOT carry raw vectors for a
     * quantized index. */
-  def cachedPayloadType(indexPath: String): Option[DataType] = graphCache.synchronized {
-    Option(graphCache.get(indexPath))
-      .map { case (_, df) => df.schema(df.schema.fieldIndex("__payload")).dataType }
-  }
+  def cachedPayloadType(indexPath: String): Option[DataType] =
+    graphs.resident(indexPath, ())
+      .map(df => df.schema(df.schema.fieldIndex("__payload")).dataType)
 
   /** Materialize the partitioned+persisted graph for an index — lets a
     * build step book the one-time shuffle/persist cost instead of the
@@ -859,90 +841,75 @@ object HnswIndex {
   // memory-for-latency trade through [[IvfIndex.servePartitions]].
   private type ServeGraph = mutable.Map[Long, (AnyRef, Int, Array[Array[Long]], Boolean)]
   private type ServeEntry = (Seq[ServeGraph], java.util.HashMap[Long, Array[Float]])
-  private val serveGraphs = new ServeCache[Int, ServeEntry](ServeCacheBudgetKey, 64)
+  private val serveGraphs = new ServeCache[Int, ServeEntry](Some(ServeCacheBudgetKey), 64)
   def currentServeCapacity: Int = serveGraphs.currentCapacity
   val serveHits: java.util.concurrent.atomic.AtomicLong = serveGraphs.hits
   val serveMisses: java.util.concurrent.atomic.AtomicLong = serveGraphs.misses
   def serveCacheSize: Int = serveGraphs.size
-  /** An index's IVF model + metric + node storage kind, plus the quantized
-    * codec (SQ bounds or PQ codebook/bits/variant) when the graph carries
-    * codes — loaded per call by [[search]], held per index for serving. */
+  /** An index's IVF model + metric + node storage kind, plus the
+    * quantizer's codec (SQ bounds, or PQ codebook/bits/variant) when the
+    * graph carries codes — loaded per call by [[search]], held per index
+    * for serving. */
   private final case class Loaded(
       model: IvfIndex.Model, metric: String, storage: String,
-      sq: SqIndex.SqModel = null, pq: PqIndex.PqModel = null,
-      pqBits: Int = 8, pqVariant: String = "raw")
-  private val serveModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
+      sq: SqIndex.Codec = null, pq: PqIndex.Codec = null)
+  private val serveStates = new ServeCache[Unit, Loaded](None, ServeCache.IndexStates)
 
   /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveModels.remove(indexPath)
-    serveFresh.forget(indexPath)
+    serveStates.purge(indexPath)
     serveGraphs.purge(indexPath)
+    IndexIdentity.forget(indexPath)
   }
 
-  // the serve LRU is keyed on (indexPath, pid): when the index's identity
-  // moves (rebuild, delta add/merge, remap), its graphs and model are
-  // purged
-  private val serveFresh = new ServeFreshness(p => {
-    serveModels.remove(p)
-    serveGraphs.purge(p)
-  })
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
-    serveFresh.ensure(spark, indexPath)
+  /** The index's identity (one read per call) and its serve state. */
+  private def serveState(spark: SparkSession, indexPath: String): (String, Loaded) = {
+    val ident = IndexIdentity.of(spark, indexPath)
+    (ident, serveStates.getOrLoad(spark, indexPath, ident, ())(load(spark, indexPath, ident)))
+  }
 
-  private def serveModel(spark: SparkSession, indexPath: String): Loaded =
-    serveModels.computeIfAbsent(indexPath, _ => load(spark, indexPath))
-
-  private def load(spark: SparkSession, indexPath: String): Loaded = {
+  private def load(spark: SparkSession, indexPath: String, identity: String): Loaded = {
     val meta = IvfIndex.vectorMeta(spark, indexPath)
-    val base = Loaded(IvfIndex.loadModel(spark, indexPath), meta.metric,
+    val base = Loaded(IvfIndex.modelUnder(spark, indexPath, identity), meta.metric,
       meta.storage)
     base.storage match {
       case "flat" => base
-      case "sq" => base.copy(sq = SqIndex.loadSq(spark, indexPath))
-      case "pq" => base.copy(pq = PqIndex.loadPq(spark, indexPath),
-        pqBits = meta.pqBits, pqVariant = meta.pqVariant)
+      case "sq" => base.copy(sq = SqIndex.loadCodec(spark, indexPath, meta))
+      case "pq" => base.copy(pq = PqIndex.loadCodec(spark, indexPath, meta))
       case other => throw new IllegalArgumentException(
         s"unknown hnsw node storage '$other' at $indexPath")
     }
   }
 
   /** ADC distance per probed partition over a quantized graph's codes, for
-    * a query already metric-adjusted — one closure for the batched beam
+    * a query already metric-adjusted, scored by the quantizer's own driver
+    * scorer ([[SqIndex]], [[PqIndex]]) — one closure for the batched beam
     * ([[search]] ships it to tasks) and for [[serveLocal]]. Residual-PQ
     * graphs rank against a per-probed-pid table over q − centroid(pid)
-    * (nprobes·m·k floats); SQ and legacy raw PQ use one global table. */
+    * (nprobes·m·k floats); SQ and legacy raw PQ use one global scorer. */
   private def codeDistFor(st: Loaded, query: Array[Float], probes: Seq[Int])
-      : Int => Array[Byte] => Double =
+      : Int => Array[Byte] => Double = {
+    def dist(s: IvfQuantized.CodeScorer): Array[Byte] => Double = c => s(c, 0f)
     if (st.storage == "sq") {
-      val lo = st.sq.lo; val step = st.sq.steps
-      _ => c => SqIndex.adc(query, c, lo, step)
+      val d = dist(SqIndex.scorer(st.model, st.sq, query, 0))
+      _ => d
+    } else if (st.pq.residual) {
+      val byPid = probes.map(p => p -> dist(PqIndex.scorer(st.model, st.pq, query, p))).toMap
+      pid => byPid.getOrElse(pid, _ => Double.MaxValue) // unprobed pid cannot occur
     } else {
-      val bits = st.pqBits
-      if (st.pqVariant == "residual") {
-        val tables: Map[Int, Array[Array[Float]]] = probes.map { p =>
-          val cent = st.model.centroids(p)
-          p -> st.pq.adcTable(Array.tabulate(query.length)(i => query(i) - cent(i)))
-        }.toMap
-        pid => tables.get(pid) match {
-          case Some(t) => c => PqIndex.adc(t, c, bits)
-          case None    => _ => Double.MaxValue // unprobed pid cannot occur
-        }
-      } else {
-        val table = st.pq.adcTable(query)
-        _ => c => PqIndex.adc(table, c, bits)
-      }
+      val d = dist(PqIndex.scorer(st.model, st.pq, query, 0))
+      _ => d
     }
+  }
 
   // the partitions a call misses load outside the cache lock
   // ([[ServeCache.getOrLoadAll]]) in ONE scan per generation directory:
   // pid is a pushed-down parquet predicate, so only the partitions' row
   // groups are touched; a quantized graph reads codes (the beam payload)
   // AND vec (the refine lookup) in the same pass
-  private def servePartitions(spark: SparkSession, indexPath: String,
+  private def servePartitions(spark: SparkSession, indexPath: String, identity: String,
                               pids: Seq[Int], storage: String): Seq[ServeEntry] =
-    serveGraphs.getOrLoadAll(spark, indexPath, pids) { miss =>
+    serveGraphs.getOrLoadAll(spark, indexPath, identity, pids) { miss =>
       val quant = storage != "flat"
       val cols = Seq(col(PidCol), col("id"),
         (if (quant) col("codes") else col("vec")).as("__payload"),
@@ -978,11 +945,10 @@ object HnswIndex {
     * like [[warm]] does for the batched cache. */
   def serveWarm(spark: SparkSession, indexPath: String,
                 pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveModel(spark, indexPath)
+    val (ident, st) = serveState(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until st.model.nlist
     serveGraphs.requireFits(spark, targets.size, "serve")
-    servePartitions(spark, indexPath, targets, st.storage)
+    servePartitions(spark, indexPath, ident, targets, st.storage)
       .map(_._1.map(_.size.toLong).sum).sum
   }
 
@@ -1006,8 +972,7 @@ object HnswIndex {
                  k: Int, nprobes: Int, ef: Int = 64,
                  refineFactor: Int = 10,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveModel(spark, indexPath)
+    val (ident, st) = serveState(spark, indexPath)
     val query2 = if (st.metric == "cosine") IvfIndex.normalize(query) else query
     val probes = st.model.rank(query2).take(math.min(nprobes, st.model.nlist))
     val efq = math.max(ef, k)
@@ -1015,7 +980,7 @@ object HnswIndex {
       case Some(keep) => id => !keep(id)
       case None       => _ => false
     }
-    val entries = probes.zip(servePartitions(spark, indexPath, probes, st.storage))
+    val entries = probes.zip(servePartitions(spark, indexPath, ident, probes, st.storage))
     if (st.storage == "flat") {
       entries.iterator.flatMap { case (_, (graphs, _)) =>
         graphs.iterator.flatMap { g =>
@@ -1050,51 +1015,38 @@ object HnswIndex {
   }
 
   private def partitionedGraph(spark: SparkSession, indexPath: String): DataFrame = {
-    val id = IndexIdentity.read(spark, indexPath)
-    graphCache.synchronized {
-      // budget refresh: cheap conf read; a shrink takes effect on the next
-      // insertion's eviction pass
-      cacheCapacity = math.max(1,
-        scala.util.Try(spark.conf.get(CacheBudgetKey, "4").toInt).getOrElse(4))
-      while (graphCache.size() > cacheCapacity) {
-        val it = graphCache.entrySet().iterator()
-        it.next().getValue._2.unpersist(blocking = false)
-        it.remove()
-      }
-      val hit = graphCache.get(indexPath)
-      // a graph loaded under another identity is the dead index's: drop it
-      if (hit != null && hit._1 != id) hit._2.unpersist(blocking = false)
-      // self-healing: an external spark.catalog.clearCache() may have
-      // unpersisted the frame under us — re-pin and re-materialize
-      val live = hit != null && hit._1 == id &&
-        hit._2.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-      if (live) cacheHits.incrementAndGet() else cacheMisses.incrementAndGet()
-      if (live) hit._2
-      else {
-        // quantized storage: the cached/shuffled graph carries codes, NOT
-        // the float vectors — parquet column pruning leaves `vec` on disk
-        // for the refine pass only (the whole point of quantized node
-        // storage)
-        val payload =
-          if (IvfIndex.vectorMeta(spark, indexPath).storage != "flat") col("codes")
-          else col("vec")
-        // base graph = generation 0; each delta-optimize dataset is its own
-        // generation: (pid, gen) pairs beam independently and merge in the
-        // global top-k (reference delta indices, optimize.rs)
-        val dirs = "graph" +: deltaDirs(spark, indexPath)
-        val fresh = dirs.zipWithIndex.map { case (dname, gen) =>
-            spark.read.parquet(s"$indexPath/$dname")
-              .select(col("id"), payload.as("__payload"), col("level"),
-                col("nbrs"), col(AddrCol), col(PidCol).as("pid"),
-                lit(gen).as("__gen"))
-          }.reduce(_.unionByName(_))
-          .repartition(col("pid"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        fresh.count() // materialize once so every query reuses the shuffle
-        graphCache.put(indexPath, (id, fresh))
-        fresh
-      }
+    val ident = IndexIdentity.read(spark, indexPath)
+    val hit = graphs.getOrLoad(spark, indexPath, ident, ())(materializeGraph(spark, indexPath))
+    // self-healing: an external spark.catalog.clearCache() may have
+    // unpersisted the frame under us — re-pin and re-materialize
+    if (hit.storageLevel != org.apache.spark.storage.StorageLevel.NONE) hit
+    else {
+      graphs.purge(indexPath)
+      graphs.getOrLoad(spark, indexPath, ident, ())(materializeGraph(spark, indexPath))
     }
+  }
+
+  private def materializeGraph(spark: SparkSession, indexPath: String): DataFrame = {
+    // quantized storage: the cached/shuffled graph carries codes, NOT the
+    // float vectors — parquet column pruning leaves `vec` on disk for the
+    // refine pass only (the whole point of quantized node storage)
+    val payload =
+      if (IvfIndex.vectorMeta(spark, indexPath).storage != "flat") col("codes")
+      else col("vec")
+    // base graph = generation 0; each delta-optimize dataset is its own
+    // generation: (pid, gen) pairs beam independently and merge in the
+    // global top-k (reference delta indices, optimize.rs)
+    val dirs = "graph" +: deltaDirs(spark, indexPath)
+    val fresh = dirs.zipWithIndex.map { case (dname, gen) =>
+        spark.read.parquet(s"$indexPath/$dname")
+          .select(col("id"), payload.as("__payload"), col("level"),
+            col("nbrs"), col(AddrCol), col(PidCol).as("pid"),
+            lit(gen).as("__gen"))
+      }.reduce(_.unionByName(_))
+      .repartition(col("pid"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    fresh.count() // materialize once so every query reuses the shuffle
+    fresh
   }
 
   /** ANN search: greedy HNSW per probed partition, global top-k.
@@ -1110,7 +1062,7 @@ object HnswIndex {
              refineFactor: Int = 10,
              distanceRange: Option[(Double, Double)] = None): DataFrame = {
     import spark.implicits._
-    val st = load(spark, indexPath)
+    val st = load(spark, indexPath, IndexIdentity.read(spark, indexPath))
     val metric = st.metric
     val storage = st.storage
     val query2 = if (metric == "cosine") IvfIndex.normalize(query) else query

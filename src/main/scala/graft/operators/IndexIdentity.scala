@@ -5,20 +5,22 @@ import org.apache.spark.sql.SparkSession
 /** The published identity of an index directory: a fresh UUID in
   * `<indexPath>/_GRAFT_INDEX_ID`, written by every build and optimize after
   * its last data write (the reference names index dirs by UUID for the
-  * same reason). Every per-JVM index cache — the serve LRUs, the IVF
-  * centroid cache, FTS's stats memos, HNSW's persisted graph — remembers
-  * the identity it loaded under and reloads when it changes, so a rebuild
-  * at the same path, by this process or another one, is never answered
-  * from the dead index. The leading `_` keeps the file out of Spark's
-  * readers and out of every generation listing.
+  * same reason). The leading `_` keeps the file out of Spark's readers and
+  * out of every generation listing.
+  *
+  * The freshness rule of every per-JVM index cache: a caller reads the
+  * identity once per call and passes it to each [[ServeCache]] it reads;
+  * the cache drops an index's entries when the identity moves, so a
+  * rebuild at the same path, by this process or another one, is never
+  * answered from the dead index.
   *
   * Two reads: [[of]] (serve paths) answers from a JVM-local memo within
   * [[TtlKey]], so a warm query makes no filesystem call; [[read]]
-  * (Spark-path caches) opens the file every call. [[publish]] records the
-  * new identity in the memo at once, so this JVM sees its own rebuild
-  * whatever the TTL; another process's rebuild is seen at most one TTL
-  * later. An absent file (an index written before identities existed)
-  * reads as [[Legacy]].
+  * (Spark paths) opens the file every call. [[publish]] records the new
+  * identity in the memo at once, so this JVM sees its own rebuild whatever
+  * the TTL; another process's rebuild is seen at most one TTL later. A
+  * [[read]] refreshes the memo too. An absent file (an index written before
+  * identities existed) reads as [[Legacy]].
   */
 private[graft] object IndexIdentity {
   val FileName = "_GRAFT_INDEX_ID"
@@ -72,27 +74,4 @@ private[graft] object IndexIdentity {
   // overwrite the published identity with the one it read
   private def remember(indexPath: String, at: Long, id: String): Unit =
     memo.compute(indexPath, (_, prev) => if (prev != null && prev._1 > at) prev else (at, id))
-}
-
-/** Freshness guard for a family's driver-local serve caches, shared by
-  * every serve family (IVF/HNSW/PQ/SQ/RQ/hamming/FTS): remembers the
-  * [[IndexIdentity]] each index's resident state was loaded under and
-  * purges that state (the `purge` hook) when the identity moves. */
-private[operators] final class ServeFreshness(purge: String => Unit) {
-  private val seen =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Purge the family's resident state for `indexPath` if the index's
-    * identity moved since the last check. */
-  def ensure(spark: SparkSession, indexPath: String): Unit = {
-    val id = IndexIdentity.of(spark, indexPath)
-    val prev = seen.put(indexPath, id)
-    if (prev != null && prev != id) purge(indexPath)
-  }
-
-  /** Forget an index entirely (serveUnpersist): the next check rereads. */
-  def forget(indexPath: String): Unit = {
-    seen.remove(indexPath)
-    IndexIdentity.forget(indexPath)
-  }
 }

@@ -257,45 +257,28 @@ object IvfIndex {
   val CentroidCacheBudgetKey = "spark.graft.cache.centroids.indexes"
   val centroidCacheHits = new java.util.concurrent.atomic.AtomicLong(0)
   val centroidCacheMisses = new java.util.concurrent.atomic.AtomicLong(0)
-  @volatile private var centroidCapacity = 64
-  def currentCentroidCapacity: Int = centroidCapacity
-  // indexPath → (identity loaded under, parsed model): one read of the
-  // index's [[IndexIdentity]] per call decides a hit, so a rebuild by any
-  // process is never answered from the old centroids
-  private val centroidCache =
-    new java.util.LinkedHashMap[String, (String, Model)](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, (String, Model)]): Boolean =
-        size() > centroidCapacity
-    }
+  // each index's parsed model, shared by the Spark paths and serving
+  private val models = new ServeCache[Unit, Model](Some(CentroidCacheBudgetKey), 64,
+    centroidCacheHits, centroidCacheMisses)
+  def currentCentroidCapacity: Int = models.currentCapacity
+  def centroidCacheSize: Int = models.size
 
-  def centroidCacheSize: Int = centroidCache.synchronized(centroidCache.size())
+  /** The index's centroids; reads its [[IndexIdentity]] from disk. */
+  def loadModel(spark: SparkSession, indexPath: String): Model =
+    modelUnder(spark, indexPath, IndexIdentity.read(spark, indexPath))
 
-  def loadModel(spark: SparkSession, indexPath: String): Model = {
-    val id = IndexIdentity.read(spark, indexPath)
-    centroidCache.synchronized {
-      centroidCapacity = math.max(1, scala.util.Try(
-        spark.conf.get(CentroidCacheBudgetKey, "64").toInt).getOrElse(64))
-      while (centroidCache.size() > centroidCapacity) {
-        val it = centroidCache.entrySet().iterator(); it.next(); it.remove()
-      }
-      val hit = centroidCache.get(indexPath)
-      if (hit != null && hit._1 == id) {
-        centroidCacheHits.incrementAndGet()
-        return hit._2
-      }
-      centroidCacheMisses.incrementAndGet()
+  /** The index's centroids as loaded under `identity`. */
+  private[operators] def modelUnder(spark: SparkSession, indexPath: String,
+                                    identity: String): Model =
+    models.getOrLoad(spark, indexPath, identity, ()) {
+      val rows = spark.read.parquet(s"$indexPath/centroids").orderBy("pid").collect()
+      Model(rows.map(r => r.getSeq[Float](1).toArray))
     }
-    val rows = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("pid").collect()
-    val model = Model(rows.map(r => r.getSeq[Float](1).toArray))
-    centroidCache.synchronized { centroidCache.put(indexPath, (id, model)) }
-    model
-  }
 
   // ------------------------------------------------------------------
   // Driver-local single-query serving (r14) — the IVF_FLAT twin of
   // [[HnswIndex.serveLocal]] for the interactive regime: centroids rank
-  // on the driver (the model is held in a per-index serve state), probed
+  // on the driver (the model comes from the centroid cache above), probed
   // partitions' (id, vec) rows come from a driver-local [[ServeCache]]
   // (every partition a call misses loads in ONE directory-pruned scan of
   // `vectors/` — it is partitioned BY pid — split by pid on the driver;
@@ -307,68 +290,48 @@ object IvfIndex {
   // ------------------------------------------------------------------
 
   val ServeCacheBudgetKey = "spark.graft.cache.ivf.serve.partitions"
-  /** One resident partition: (id, vector) rows. */
+  /** (id, vector) rows. */
   private[operators] type FloatRows = Array[(Long, Array[Float])]
-  private val serveRows = new ServeCache[Int, FloatRows](ServeCacheBudgetKey, 64)
+  /** One resident partition: its rows, and whether they were decoded from
+    * packed f16 storage (every partition of an index shares the build's
+    * storage). */
+  private[operators] final case class Resident(rows: FloatRows, f16: Boolean)
+  private val serveRows = new ServeCache[Int, Resident](Some(ServeCacheBudgetKey), 64)
   def currentServeCapacity: Int = serveRows.currentCapacity
   val serveHits: java.util.concurrent.atomic.AtomicLong = serveRows.hits
   val serveMisses: java.util.concurrent.atomic.AtomicLong = serveRows.misses
   def serveCacheSize: Int = serveRows.size
-  private val serveModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
 
-  /** Release an index's driver-resident serve state. */
+  /** Release an index's driver-resident serve partitions. Its centroids
+    * stay in the centroid cache, which the Spark paths read too. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveFresh.forget(indexPath)
-    purgeServe(indexPath)
-  }
-
-  private def purgeServe(indexPath: String): Unit = {
-    serveModels.remove(indexPath)
-    serveStorageF16.remove(indexPath)
     serveRows.purge(indexPath)
+    IndexIdentity.forget(indexPath)
   }
-
-  // the serve LRU is keyed on (indexPath, pid): when the index's identity
-  // moves, its model and rows are purged
-  private val serveFresh = new ServeFreshness(purgeServe)
-  private[operators] def ensureServeFresh(spark: SparkSession, indexPath: String): Unit =
-    serveFresh.ensure(spark, indexPath)
-
-  private def serveModel(spark: SparkSession, indexPath: String): Model =
-    serveModels.computeIfAbsent(indexPath, _ => loadModel(spark, indexPath))
 
   /** Refuse a warm of `partitions` float partitions the budget cannot hold. */
   private[operators] def requireServeFits(spark: SparkSession, partitions: Int): Unit =
     serveRows.requireFits(spark, partitions, "serve")
 
-  // storage flavor of an index's resident partitions (r16: f16 serving —
-  // the last "falls back to batched" storage refusal). Set on partition
-  // load, purged with the serve rows; consistent per index since every
-  // partition shares the build's storage.
-  private val serveStorageF16 =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private[operators] def serveIsF16(indexPath: String): Boolean =
-    serveStorageF16.getOrDefault(indexPath, java.lang.Boolean.FALSE)
-
-  /** Resident (id, vec) rows of `pids`, in request order. The partitions
-    * that miss load in ONE scan, except those whose rows a caller's own
-    * batched scan already `fetched` (the quantized families read codes and
-    * refine vectors together). */
+  /** Resident partitions `pids` under `identity`, in request order. The
+    * partitions that miss load in ONE scan, except those whose float rows a
+    * caller's own batched scan already `fetched` (the quantized families
+    * read codes and refine vectors together). */
   private[operators] def servePartitions(spark: SparkSession, indexPath: String,
-                                         idCol: String, vecCol: String, pids: Seq[Int],
+                                         identity: String, idCol: String, vecCol: String,
+                                         pids: Seq[Int],
                                          fetched: collection.Map[Int, FloatRows] = Map.empty)
-      : Seq[FloatRows] =
-    serveRows.getOrLoadAll(spark, indexPath, pids) { miss =>
+      : Seq[Resident] =
+    serveRows.getOrLoadAll(spark, indexPath, identity, pids) { miss =>
       val rest = miss.filterNot(fetched.contains)
       val scanned =
-        if (rest.isEmpty) Map.empty[Int, FloatRows]
+        if (rest.isEmpty) Map.empty[Int, Resident]
         else rest.zip(scanPartitions(spark, indexPath, idCol, vecCol, rest)).toMap
-      miss.map(p => fetched.getOrElse(p, scanned(p)))
+      miss.map(p => fetched.get(p).map(Resident(_, f16 = false)).getOrElse(scanned(p)))
     }
 
   private def scanPartitions(spark: SparkSession, indexPath: String, idCol: String,
-                             vecCol: String, pids: Seq[Int]): Seq[FloatRows] = {
+                             vecCol: String, pids: Seq[Int]): Seq[Resident] = {
     val df = spark.read.parquet(s"$indexPath/vectors")
       .filter(col(PidCol).isin(pids: _*))
     // packed f16 storage (r16): decode ONCE at load into resident floats.
@@ -377,22 +340,22 @@ object IvfIndex {
     // per element, so [[serveDist]] over these floats with an f16-ROUNDED
     // query ([[serveLocal]]) is bit-identical to the batched f16 ranking.
     val f16 = isF16(df, vecCol)
-    serveStorageF16.put(indexPath, f16)
     val rows = df.select(col(PidCol), col(idCol).cast("long"), col(vecCol)).collect()
-    ServeCache.splitBy(pids, rows)(_.getInt(0)).map(_.map(r => (r.getLong(1),
+    ServeCache.splitBy(pids, rows)(_.getInt(0)).map(g => Resident(g.map(r => (r.getLong(1),
       if (f16) graft.functions.Float16.unpack(r.getAs[Array[Byte]](2))
-      else r.getSeq[Float](2).toArray)))
+      else r.getSeq[Float](2).toArray)), f16))
   }
 
   /** Preload the serve cache (all partitions by default) in one scan;
     * returns resident row count. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val model = serveModel(spark, indexPath)
+    val ident = IndexIdentity.of(spark, indexPath)
+    val model = modelUnder(spark, indexPath, ident)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
     requireServeFits(spark, targets.size)
-    servePartitions(spark, indexPath, idCol, vecCol, targets).map(_.length.toLong).sum
+    servePartitions(spark, indexPath, ident, idCol, vecCol, targets)
+      .map(_.rows.length.toLong).sum
   }
 
   /** Same accumulation order and widening as the codegen'd distance
@@ -427,25 +390,24 @@ object IvfIndex {
                  vecCol: String, query: Array[Float], k: Int, nprobes: Int,
                  metric: String = "l2",
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val model = serveModel(spark, indexPath)
+    val ident = IndexIdentity.of(spark, indexPath)
+    val model = modelUnder(spark, indexPath, ident)
     // centroid ranking always uses the raw float query (the batched path
     // does too: [[Model.rank]] precedes any storage-flavor handling)
     val probes = model.rank(query).take(math.min(nprobes, model.nlist))
     // packed-f16 storage (r16): the batched ranking compares f16 query
     // bytes against f16 stored bytes, so the serve query must round
-    // through f16 exactly like f16Lit's pack (the flag is set by the
-    // partition load)
-    val parts = servePartitions(spark, indexPath, idCol, vecCol, probes)
-    val qq = if (serveIsF16(indexPath))
+    // through f16 exactly like f16Lit's pack
+    val parts = servePartitions(spark, indexPath, ident, idCol, vecCol, probes)
+    val qq = if (parts.exists(_.f16))
       graft.functions.Float16.unpack(graft.functions.Float16.pack(query))
     else query
     // prefilter (r16): dropped BEFORE the top-k cut, the batched
     // `prefilter` contract — the result is the true top-k of the
     // allowed set, never a short post-filtered list
     val keep = allowed.getOrElse((_: Long) => true)
-    parts.iterator.flatMap { rows =>
-      rows.iterator.collect {
+    parts.iterator.flatMap { part =>
+      part.rows.iterator.collect {
         case (id, v) if keep(id) => (id, serveDist(metric, qq, v))
       }
     }.toSeq.sortBy { case (id, d) => (d, id) }.take(k)

@@ -35,7 +35,7 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   *    bit; the exact refine reads [[IvfIndex]]'s shared float LRU. Ids
   *    AND distances equal [[search]] at equal refineFactor, and a warm
   *    query runs no Spark job. Freshness and budget refusal follow the
-  *    contract of every serve path ([[ServeFreshness]], [[ServeCache]]).
+  *    contract of every serve path ([[ServeCache]]).
   *
   * Cosine indexes store NORMALIZED vectors: on the unit sphere the l2²
   * estimators are cosine-rank-equivalent, and the exact refine computes
@@ -48,7 +48,7 @@ trait IvfQuantized {
   import IvfQuantized.CodeScorer
 
   /** Quantizer state beside the IVF model (codebook, bounds, ...). */
-  protected type Codec
+  private[operators] type Codec
 
   /** Manifest index type, e.g. "IVF_PQ". */
   protected def indexType: String
@@ -60,8 +60,8 @@ trait IvfQuantized {
     * the scorer receives as its `norm` (0 when absent). */
   protected def codeCols: Seq[String]
 
-  protected def loadCodec(spark: SparkSession, indexPath: String,
-                          meta: IvfIndex.VectorMeta): Codec
+  private[operators] def loadCodec(spark: SparkSession, indexPath: String,
+                                   meta: IvfIndex.VectorMeta): Codec
 
   /** Add the code column(s) to rows carrying the float, metric-adjusted
     * vector and [[IvfIndex.PidCol]]. */
@@ -74,9 +74,10 @@ trait IvfQuantized {
                             probes: Seq[Int]): Column
 
   /** Driver twin of [[scoreColumn]] for one probed partition: built once
-    * per partition, called once per resident row. */
-  protected def scorer(ivf: IvfIndex.Model, codec: Codec, q: Array[Float],
-                       pid: Int): CodeScorer
+    * per partition, called once per resident row (HNSW's quantized beam
+    * scores its graph nodes with it too). */
+  private[operators] def scorer(ivf: IvfIndex.Model, codec: Codec, q: Array[Float],
+                                pid: Int): CodeScorer
 
   // ------------------------------------------------------------ build
 
@@ -149,9 +150,12 @@ trait IvfQuantized {
   /** An index's IVF model, build metric and codec. */
   protected final class Loaded(val ivf: IvfIndex.Model, val metric: String, val codec: Codec)
 
-  private def load(spark: SparkSession, indexPath: String): Loaded = {
+  private def load(spark: SparkSession, indexPath: String): Loaded =
+    loadUnder(spark, indexPath, IndexIdentity.read(spark, indexPath))
+
+  private def loadUnder(spark: SparkSession, indexPath: String, identity: String): Loaded = {
     val meta = IvfIndex.vectorMeta(spark, indexPath)
-    new Loaded(IvfIndex.loadModel(spark, indexPath), meta.metric,
+    new Loaded(IvfIndex.modelUnder(spark, indexPath, identity), meta.metric,
       loadCodec(spark, indexPath, meta))
   }
 
@@ -229,46 +233,37 @@ trait IvfQuantized {
   // ------------------------------------------------------------ serving
 
   private type Codes = Array[(Long, Array[Byte], Float)]
-  private lazy val serveCodes = new ServeCache[Int, Codes](ServeCodesBudgetKey, 256)
+  private lazy val serveCodes = new ServeCache[Int, Codes](Some(ServeCodesBudgetKey), 256)
   def currentServeCapacity: Int = serveCodes.currentCapacity
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
   def serveCacheSize: Int = serveCodes.size
-  private lazy val serveStates =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
-  private lazy val serveFresh = new ServeFreshness(p => {
-    serveStates.remove(p)
-    serveCodes.purge(p)
-  })
+  private lazy val serveStates = new ServeCache[Unit, Loaded](None, ServeCache.IndexStates)
 
   /** Release an index's driver-resident serve state. The refine vectors
     * live in [[IvfIndex]]'s shared serve LRU and retire through its own
     * unpersist, so both caches retire together. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveStates.remove(indexPath)
-    serveFresh.forget(indexPath)
+    serveStates.purge(indexPath)
     serveCodes.purge(indexPath)
     IvfIndex.serveUnpersist(indexPath)
   }
 
-  private def ensureServeFresh(spark: SparkSession, indexPath: String): Unit = {
-    serveFresh.ensure(spark, indexPath)
-    // keep the shared refine-vector LRU on the same identity
-    IvfIndex.ensureServeFresh(spark, indexPath)
+  /** The index's identity (one read per call) and its serve state. */
+  private def serveState(spark: SparkSession, indexPath: String): (String, Loaded) = {
+    val ident = IndexIdentity.of(spark, indexPath)
+    (ident, serveStates.getOrLoad(spark, indexPath, ident, ())(loadUnder(spark, indexPath, ident)))
   }
-
-  private def serveState(spark: SparkSession, indexPath: String): Loaded =
-    serveStates.computeIfAbsent(indexPath, _ => load(spark, indexPath))
 
   /** Resident codes (+ norm) of `pids`, in request order. The pids that
     * miss load in ONE scan that reads their refine vectors too: those go
     * into `fetched`, for [[IvfIndex.servePartitions]] to take instead of
     * scanning again. */
-  private def serveCodesOf(spark: SparkSession, indexPath: String, idCol: String,
-                           vecCol: String, pids: Seq[Int],
+  private def serveCodesOf(spark: SparkSession, indexPath: String, identity: String,
+                           idCol: String, vecCol: String, pids: Seq[Int],
                            fetched: collection.mutable.Map[Int, IvfIndex.FloatRows])
       : Seq[Codes] =
-    serveCodes.getOrLoadAll(spark, indexPath, pids) { miss =>
+    serveCodes.getOrLoadAll(spark, indexPath, identity, pids) { miss =>
       val withNorm = codeCols.size > 1
       val rows = spark.read.parquet(s"$indexPath/vectors")
         .filter(col(IvfIndex.PidCol).isin(miss: _*))
@@ -286,15 +281,14 @@ trait IvfQuantized {
     * budgets are checked before anything is read. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
+    val (ident, st) = serveState(spark, indexPath)
     val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
     IvfIndex.requireServeFits(spark, targets.size)
     val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]
-    val n = serveCodesOf(spark, indexPath, idCol, vecCol, targets, fetched)
+    val n = serveCodesOf(spark, indexPath, ident, idCol, vecCol, targets, fetched)
       .map(_.length.toLong).sum
-    IvfIndex.servePartitions(spark, indexPath, idCol, vecCol, targets, fetched)
+    IvfIndex.servePartitions(spark, indexPath, ident, idCol, vecCol, targets, fetched)
     n
   }
 
@@ -311,12 +305,11 @@ trait IvfQuantized {
                  vecCol: String, query: Array[Float], k: Int, nprobes: Int,
                  refineFactor: Int = 10,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    ensureServeFresh(spark, indexPath)
-    val st = serveState(spark, indexPath)
+    val (ident, st) = serveState(spark, indexPath)
     val (q, probes) = probe(st, query, nprobes, "serve")
     val keep = allowed.getOrElse((_: Long) => true)
     val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]
-    val resident = serveCodesOf(spark, indexPath, idCol, vecCol, probes, fetched)
+    val resident = serveCodesOf(spark, indexPath, ident, idCol, vecCol, probes, fetched)
     // pass 1: estimated distances over resident codes
     val cands = probes.iterator.zip(resident.iterator).flatMap { case (pid, rows) =>
       val score = scorer(st.ivf, st.codec, q, pid)
@@ -326,11 +319,11 @@ trait IvfQuantized {
     // pass 2: exact refine from the shared float-vector serve LRU (stored
     // vectors are normalized under cosine, like the batched pass 2)
     val byPid = cands.groupBy(_._3).toSeq
-    val vecs = IvfIndex.servePartitions(spark, indexPath, idCol, vecCol,
+    val vecs = IvfIndex.servePartitions(spark, indexPath, ident, idCol, vecCol,
       byPid.map(_._1), fetched)
-    byPid.iterator.zip(vecs.iterator).flatMap { case ((_, cs), rows) =>
-      val lookup = new java.util.HashMap[Long, Array[Float]](rows.length * 2)
-      rows.foreach { case (id, v) => lookup.put(id, v) }
+    byPid.iterator.zip(vecs.iterator).flatMap { case ((_, cs), part) =>
+      val lookup = new java.util.HashMap[Long, Array[Float]](part.rows.length * 2)
+      part.rows.foreach { case (id, v) => lookup.put(id, v) }
       cs.iterator.flatMap { case (id, _, _) =>
         Option(lookup.get(id)).map(v => (id, IvfIndex.serveDist(st.metric, q, v)))
       }
@@ -342,8 +335,8 @@ object IvfQuantized {
   /** Estimated distance of one resident code row (`norm` is the float
     * column after the codes, 0 when the quantizer stores none). A SAM
     * trait rather than a Function2, whose Float argument would box on
-    * every row. */
-  trait CodeScorer {
+    * every row; serializable, since HNSW's batched beam ships it to tasks. */
+  trait CodeScorer extends Serializable {
     def apply(codes: Array[Byte], norm: Float): Double
   }
 }

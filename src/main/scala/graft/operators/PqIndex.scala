@@ -212,13 +212,13 @@ object PqIndex extends IvfQuantized {
 
   // ------------------------------------------------------------ quantizer
 
-  protected case class Codec(pq: PqModel, residual: Boolean, numBits: Int)
+  private[operators] case class Codec(pq: PqModel, residual: Boolean, numBits: Int)
   protected val indexType = "IVF_PQ"
   val ServeCodesBudgetKey = "spark.graft.cache.pq.serve.partitions"
   protected val codeCols = Seq(CodeCol)
 
-  protected def loadCodec(spark: SparkSession, indexPath: String,
-                          meta: IvfIndex.VectorMeta): Codec =
+  private[operators] def loadCodec(spark: SparkSession, indexPath: String,
+                                   meta: IvfIndex.VectorMeta): Codec =
     Codec(loadPq(spark, indexPath), meta.pqVariant == "residual", meta.pqBits)
 
   /** The column PQ quantizes: the residual against the row's (already
@@ -253,8 +253,8 @@ object PqIndex extends IvfQuantized {
       ColumnBridge.expression(col(IvfIndex.PidCol).cast("int")), tables, c.numBits))
   }
 
-  protected def scorer(ivf: IvfIndex.Model, c: Codec, q: Array[Float],
-                       pid: Int): IvfQuantized.CodeScorer = {
+  private[operators] def scorer(ivf: IvfIndex.Model, c: Codec, q: Array[Float],
+                                pid: Int): IvfQuantized.CodeScorer = {
     val t = table(ivf, c, q, pid)
     val bits = c.numBits
     (codes, _) => adc(t, codes, bits)

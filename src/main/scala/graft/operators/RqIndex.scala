@@ -57,13 +57,13 @@ object RqIndex extends IvfQuantized {
 
   // ------------------------------------------------------------ quantizer
 
-  protected type Codec = Unit
+  private[operators] type Codec = Unit
   protected val indexType = "IVF_RQ"
   val ServeCodesBudgetKey = "spark.graft.cache.rq.serve.partitions"
   protected val codeCols = Seq(CodeCol, NormCol)
 
-  protected def loadCodec(spark: SparkSession, indexPath: String,
-                          meta: IvfIndex.VectorMeta): Unit = ()
+  private[operators] def loadCodec(spark: SparkSession, indexPath: String,
+                                   meta: IvfIndex.VectorMeta): Unit = ()
 
   protected def encode(withPid: DataFrame, vecCol: String, ivf: IvfIndex.Model,
                        codec: Unit): DataFrame =
@@ -83,8 +83,8 @@ object RqIndex extends IvfQuantized {
 
   /** [[RqAdc]]'s per-partition precomputation and row arithmetic,
     * driver-side, for one probed partition. */
-  protected def scorer(ivf: IvfIndex.Model, codec: Unit, q: Array[Float],
-                       pid: Int): IvfQuantized.CodeScorer = {
+  private[operators] def scorer(ivf: IvfIndex.Model, codec: Unit, q: Array[Float],
+                                pid: Int): IvfQuantized.CodeScorer = {
     val c = ivf.centroids(pid)
     val qcp = Array.tabulate(c.length)(i => q(i) - c(i))
     val qcSum = qcp.foldLeft(0.0)(_ + _)

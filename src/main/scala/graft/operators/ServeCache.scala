@@ -3,40 +3,61 @@ package graft.operators
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 
-/** Driver-resident LRU shared by every driver-local serve path:
-  * (indexPath, key) → one partition's or term's resident payload `V` —
-  * float rows ([[IvfIndex]]), quantized codes ([[IvfQuantized]],
-  * [[BinaryIvfIndex]]), per-generation graphs ([[HnswIndex]]) keyed by
-  * pid, or postings ([[Fts]]) keyed by token. One contract for all of
-  * them: an access-order LRU whose capacity (resident entries) is read from
-  * the conf key `budgetKey`, immediate eviction when that budget shrinks
-  * (ADVICE r14), per-entry hit/miss counters for `cache_stats` (pass shared
-  * counters to count several caches as one), per-index purge for the epoch
-  * staleness guard ([[ServeFreshness]]), and ONE batched load per call for
-  * every key that missed ([[getOrLoadAll]]). */
-private[operators] final class ServeCache[K, V <: AnyRef](
-    val budgetKey: String, defaultCapacity: Int,
+/** The per-JVM index cache: every cache an index keeps in this JVM is one
+  * of these (reference `session.index_cache`, `dataset.py:3039`) — the
+  * driver-local serve payloads keyed by pid or token (float rows, quantized
+  * codes, per-generation graphs, postings), each serve family's per-index
+  * state, the IVF centroid models, HNSW's persisted graph frames, FTS's
+  * stats memos and the scalar-index rule's coverage, marker-uuid and bloom
+  * caches (whose identity is the rule's cache epoch). One contract for all
+  * of them:
+  *
+  *  - an access-order LRU over `(indexPath, key)` whose capacity (resident
+  *    entries) is read from the conf key `budgetKey` on every access, or
+  *    fixed at `defaultCapacity` when there is none; a shrunk budget evicts
+  *    LRU-first at once (ADVICE r14);
+  *  - per-key hit/miss counters for `cache_stats` (pass shared counters to
+  *    count several caches as one);
+  *  - freshness: every access passes the [[IndexIdentity]] its caller read
+  *    ([[IndexIdentity.of]] on serve paths, [[IndexIdentity.read]] on Spark
+  *    paths). The cache remembers the identity each index's entries were
+  *    loaded under and drops all of them when a caller passes another, so
+  *    no caller is ever answered from an entry of a different identity, and
+  *    a load that finishes after the identity moved is handed to its caller
+  *    but not kept;
+  *  - `release` runs once for every entry that leaves: evicted, purged,
+  *    replaced by a racing load, or loaded too late to be kept (HNSW
+  *    unpersists its graph frames through it);
+  *  - ONE batched load per access for every key that missed
+  *    ([[getOrLoadAll]]). */
+private[graft] final class ServeCache[K, V <: AnyRef](
+    budgetKey: Option[String], defaultCapacity: Int,
     val hits: AtomicLong = new AtomicLong(0),
-    val misses: AtomicLong = new AtomicLong(0)) {
+    val misses: AtomicLong = new AtomicLong(0),
+    release: V => Unit = (_: V) => ()) {
   @volatile private var capacity = defaultCapacity
   def currentCapacity: Int = capacity
   private val rows =
     new java.util.LinkedHashMap[(String, K), V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(String, K), V]): Boolean =
-        this.size() > capacity
+      override def removeEldestEntry(e: java.util.Map.Entry[(String, K), V]): Boolean = {
+        val evict = this.size() > capacity
+        if (evict) release(e.getValue)
+        evict
+      }
     }
+  /** indexPath → the identity its resident entries were loaded under. */
+  private val loadedUnder = new java.util.HashMap[String, String]()
 
   def size: Int = rows.synchronized(rows.size())
 
   /** Re-read the budget conf; shrinking evicts LRU-first immediately. */
   def refresh(spark: SparkSession): Int = {
-    val cap = math.max(1, scala.util.Try(
-      spark.conf.get(budgetKey, defaultCapacity.toString).toInt)
-      .getOrElse(defaultCapacity))
+    val cap = budgetKey.fold(defaultCapacity)(key => math.max(1, scala.util.Try(
+      spark.conf.get(key, defaultCapacity.toString).toInt).getOrElse(defaultCapacity)))
     if (cap < capacity) rows.synchronized {
       capacity = cap
       val it = rows.entrySet().iterator() // access-order: LRU first
-      while (rows.size() > cap && it.hasNext) { it.next(); it.remove() }
+      while (rows.size() > cap && it.hasNext) { release(it.next().getValue); it.remove() }
     } else capacity = cap
     cap
   }
@@ -49,29 +70,70 @@ private[operators] final class ServeCache[K, V <: AnyRef](
     val cap = refresh(spark)
     require(entries <= cap,
       s"serveWarm($entries $unit) exceeds the $what budget " +
-        s"$cap — raise $budgetKey or warm a subset")
+        s"$cap — raise ${budgetKey.mkString} or warm a subset")
   }
 
-  /** Drop one index's resident entries. */
+  /** Drop one index's entries and the identity they were loaded under. */
   def purge(indexPath: String): Unit = rows.synchronized {
-    val it = rows.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == indexPath) it.remove()
+    loadedUnder.remove(indexPath)
+    dropEntries(indexPath)
   }
 
-  /** Resident payloads of `keys` of one index, in request order. Hits come
-    * from the cache; every distinct key that missed is loaded by ONE call
-    * of `loadMissing` (missed keys in request order → one payload each, in
-    * that order), outside the lock — a racing duplicate load is benign, a
-    * blocked warm query is not. Counting is per key, as if the keys were
-    * fetched one by one: each distinct missed key is one miss, every other
-    * access one hit. Entries are touched and inserted in request order, so
-    * the LRU order is the one a key-by-key load leaves. */
-  def getOrLoadAll(spark: SparkSession, indexPath: String, keys: Seq[K])
+  /** Drop every entry. */
+  def clear(): Unit = rows.synchronized {
+    rows.values().forEach(v => release(v))
+    rows.clear()
+    loadedUnder.clear()
+  }
+
+  /** Indexes with a resident entry, least-recently-used first. */
+  def indexPaths: Seq[String] = rows.synchronized {
+    import scala.jdk.CollectionConverters._
+    rows.keySet().asScala.iterator.map(_._1).toSeq.distinct
+  }
+
+  /** The resident entry, whatever identity it was loaded under. */
+  def resident(indexPath: String, key: K): Option[V] =
+    rows.synchronized(Option(rows.get((indexPath, key))))
+
+  private def dropEntries(indexPath: String): Unit = {
+    val it = rows.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey._1 == indexPath) { release(e.getValue); it.remove() }
+    }
+  }
+
+  // under the lock: a caller's identity that differs from the one the
+  // index's entries were loaded under drops them all. Identities of indexes
+  // with no entry left are forgotten once they outnumber the budget.
+  private def admit(indexPath: String, identity: String): Unit = {
+    val prev = loadedUnder.put(indexPath, identity)
+    if (prev == null) {
+      if (loadedUnder.size() > 2 * capacity + 16) {
+        val live = new java.util.HashSet[String]()
+        rows.keySet().forEach(k => live.add(k._1))
+        live.add(indexPath)
+        loadedUnder.keySet().retainAll(live)
+      }
+    } else if (prev != identity) dropEntries(indexPath)
+  }
+
+  /** Resident payloads of `keys` of one index, under `identity`, in request
+    * order. Hits come from the cache; every distinct key that missed is
+    * loaded by ONE call of `loadMissing` (missed keys in request order → one
+    * payload each, in that order), outside the lock — a racing duplicate
+    * load is benign, a blocked warm query is not. Counting is per key, as
+    * if the keys were fetched one by one: each distinct missed key is one
+    * miss, every other access one hit. Entries are touched and inserted in
+    * request order, so the LRU order is the one a key-by-key load leaves. */
+  def getOrLoadAll(spark: SparkSession, indexPath: String, identity: String, keys: Seq[K])
                   (loadMissing: Seq[K] => Seq[V]): Seq[V] = {
     refresh(spark)
     val found = new java.util.HashMap[K, V]()
     val missed = scala.collection.mutable.LinkedHashSet.empty[K]
     rows.synchronized {
+      admit(indexPath, identity)
       keys.foreach { k =>
         if (!found.containsKey(k) && !missed.contains(k)) {
           val hit = rows.get((indexPath, k))
@@ -88,17 +150,32 @@ private[operators] final class ServeCache[K, V <: AnyRef](
         s"serve load returned ${loaded.size} payloads for ${want.size} keys")
       want.iterator.zip(loaded.iterator).foreach { case (k, v) => found.put(k, v) }
       rows.synchronized {
-        keys.foreach { k =>
-          if (missed.remove(k)) rows.put((indexPath, k), found.get(k))
-          else rows.get((indexPath, k)) // touch: keep key-by-key recency
-        }
+        val current = loadedUnder.get(indexPath)
+        if (current == null || current == identity) {
+          loadedUnder.put(indexPath, identity)
+          keys.foreach { k =>
+            if (missed.remove(k)) {
+              val v = found.get(k)
+              val old = rows.put((indexPath, k), v)
+              if (old != null && (old ne v)) release(old)
+            } else rows.get((indexPath, k)) // touch: keep key-by-key recency
+          }
+        } else want.foreach(k => release(found.get(k)))
       }
     }
     keys.map(found.get)
   }
+
+  /** [[getOrLoadAll]] of one key. */
+  def getOrLoad(spark: SparkSession, indexPath: String, identity: String, key: K)
+               (load: => V): V =
+    getOrLoadAll(spark, indexPath, identity, key :: Nil)(_ => load :: Nil).head
 }
 
-private[operators] object ServeCache {
+private[graft] object ServeCache {
+  /** Fixed capacity, in indexes, of a family's per-index serve state. */
+  val IndexStates = 64
+
   /** Split one batched scan's `rows` by key into one group per requested
     * key, in request order; each group keeps the scan's row order, and a
     * key with no rows gets an empty group. */

@@ -76,13 +76,13 @@ object SqIndex extends IvfQuantized {
 
   // ------------------------------------------------------------ quantizer
 
-  protected type Codec = SqModel
+  private[operators] type Codec = SqModel
   protected val indexType = "IVF_SQ"
   val ServeCodesBudgetKey = "spark.graft.cache.sq.serve.partitions"
   protected val codeCols = Seq(CodeCol)
 
-  protected def loadCodec(spark: SparkSession, indexPath: String,
-                          meta: IvfIndex.VectorMeta): SqModel = loadSq(spark, indexPath)
+  private[operators] def loadCodec(spark: SparkSession, indexPath: String,
+                                   meta: IvfIndex.VectorMeta): SqModel = loadSq(spark, indexPath)
 
   protected def encode(withPid: DataFrame, vecCol: String, ivf: IvfIndex.Model,
                        sq: SqModel): DataFrame =
@@ -93,8 +93,8 @@ object SqIndex extends IvfQuantized {
                             probes: Seq[Int]): Column =
     ColumnBridge.column(SqAdc(ColumnBridge.expression(col(CodeCol)), q, sq.lo, sq.steps))
 
-  protected def scorer(ivf: IvfIndex.Model, sq: SqModel, q: Array[Float],
-                       pid: Int): IvfQuantized.CodeScorer = {
+  private[operators] def scorer(ivf: IvfIndex.Model, sq: SqModel, q: Array[Float],
+                                pid: Int): IvfQuantized.CodeScorer = {
     val lo = sq.lo; val steps = sq.steps
     (codes, _) => adc(q, codes, lo, steps)
   }

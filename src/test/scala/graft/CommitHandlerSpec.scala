@@ -162,6 +162,38 @@ class CommitHandlerSpec extends AnyFunSuite {
     assert(!handler.commit(hfs(dest2), dest2, "thief".getBytes))
   }
 
+  test("recover skips a staging object its claimant deletes as it finalizes") {
+    val dir = tmp("graft_recover_race_")
+    val dest = new Path(s"$dir/v1.json")
+    val kv = MemKv("spec-recover-race")
+    val handler = new ExternalKvCommitHandler(kv)
+    val local = hfs(dest)
+    def put(p: Path, body: String): Unit = {
+      val out = local.create(p, true)
+      try out.write(body.getBytes) finally out.close()
+    }
+    // a claimant has staged its payload and won the claim ...
+    val staging = new Path(s"$dir/.stage-v1.json-claim01")
+    put(staging, "claimed")
+    kv.put(dest.toString, staging.toString)
+    // ... and finishes its commit (dest written, claim FINAL, staging
+    // deleted) in the window between recover() listing the claim and
+    // opening the staging it names
+    val racing = new org.apache.hadoop.fs.FilterFileSystem(local) {
+      override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+        if (f == staging && local.exists(staging)) {
+          put(dest, "claimed")
+          kv.put(dest.toString, "FINAL")
+          local.delete(staging, false)
+        }
+        super.open(f, bufferSize)
+      }
+    }
+    handler.recover(racing, new Path(dir))
+    assert(new String(readBytes(dest), "UTF-8") == "claimed")
+    assert(kv.get(dest.toString).contains("FINAL"))
+  }
+
   test("WAL ownership fence holds through the external handler") {
     val session = spark.newSession()
     session.conf.set(CommitHandler.ConfKey, "kvmem:spec-wal")

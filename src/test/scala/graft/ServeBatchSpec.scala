@@ -13,7 +13,9 @@ import graft.operators._
   * one scan, so a warm's Spark job count does not grow with nlist (the term
   * count); an over-budget warm refuses before it reads anything; and
   * serving right after an in-process build or optimize answers from the
-  * new index. Synthetic data only. */
+  * new index. The shared index cache ([[ServeCache]]) is checked on its
+  * own too: identity moves, budget shrinks, hit/miss counting. Synthetic
+  * data only. */
 class ServeBatchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
@@ -352,5 +354,73 @@ class ServeBatchSpec extends AnyFunSuite {
       f.unpersist(a); f.unpersist(b)
       HnswIndex.unpersist(a); HnswIndex.unpersist(b)
     } finally spark.conf.unset(IndexIdentity.TtlKey)
+  }
+
+  test("ServeCache: an identity move drops only that index's entries, releasing each once") {
+    val released = collection.mutable.ArrayBuffer.empty[String]
+    val c = new ServeCache[Int, String](None, 16, release = v => released += v)
+    c.getOrLoadAll(spark, "a", "a1", Seq(0, 1, 2))(_.map(k => s"a1/$k"))
+    c.getOrLoadAll(spark, "b", "b1", Seq(0, 1))(_.map(k => s"b1/$k"))
+    assert(c.size == 5 && released.isEmpty)
+    assert(c.getOrLoad(spark, "a", "a1", 1)(fail("a resident entry was loaded")) == "a1/1")
+    // a's identity moves: its three entries go, each released once
+    assert(c.getOrLoad(spark, "a", "a2", 1)("a2/1") == "a2/1")
+    assert(released.sorted == Seq("a1/0", "a1/1", "a1/2"), released)
+    assert(c.size == 3)
+    assert(c.getOrLoadAll(spark, "b", "b1", Seq(0, 1))(_ => fail("b was dropped")) ==
+      Seq("b1/0", "b1/1"))
+    c.purge("a")
+    assert(released.size == 4 && c.indexPaths == Seq("b"))
+    c.clear()
+    assert(released.size == 6 && c.size == 0)
+  }
+
+  test("ServeCache: a shrunk budget evicts least-recently-used entries at once") {
+    val key = "spark.graft.test.serve.cache.entries"
+    val released = collection.mutable.ArrayBuffer.empty[String]
+    val c = new ServeCache[Int, String](Some(key), 8, release = v => released += v)
+    withConf(key -> "4") {
+      c.getOrLoadAll(spark, "i", "x", Seq(0, 1, 2, 3))(_.map(_.toString))
+      c.getOrLoad(spark, "i", "x", 0)(fail("0 is resident")) // recency: 1, 2, 3, 0
+    }
+    withConf(key -> "2")(assert(c.refresh(spark) == 2))
+    assert(c.size == 2 && c.currentCapacity == 2)
+    assert(released == Seq("1", "2"), released)
+    assert(c.resident("i", 3).contains("3") && c.resident("i", 0).contains("0"))
+  }
+
+  test("ServeCache: one batched access counts hits and misses as key-by-key loading does") {
+    val batched = new ServeCache[Int, String](None, 64)
+    val single = new ServeCache[Int, String](None, 64)
+    val loads = collection.mutable.ArrayBuffer.empty[Seq[Int]]
+    for (keys <- Seq(Seq(1, 2, 2, 3), Seq(3, 4, 1, 4), Seq(5, 5, 5))) {
+      val got = batched.getOrLoadAll(spark, "i", "x", keys) { miss =>
+        loads += miss
+        miss.map(_.toString)
+      }
+      assert(got == keys.map(_.toString))
+      keys.foreach(k => single.getOrLoad(spark, "i", "x", k)(k.toString))
+    }
+    // one load per access, each missed key in it once
+    assert(loads == Seq(Seq(1, 2, 3), Seq(4), Seq(5)), loads)
+    assert(batched.misses.get == 5 && batched.hits.get == 6)
+    assert(single.misses.get == batched.misses.get && single.hits.get == batched.hits.get)
+  }
+
+  test("ServeCache: callers passing different identities of one index never get each other's entry") {
+    // the serve path's memoized identity (IndexIdentity.of) and a Spark
+    // path's fresh read (IndexIdentity.read) can differ within one TTL
+    val c = new ServeCache[Unit, String](None, 8)
+    for (round <- 1 to 2; ident <- Seq("old", "new"))
+      assert(c.getOrLoad(spark, "i", ident, ())(s"$ident $round") == s"$ident $round")
+    // a load that finishes after another caller moved the identity is
+    // handed to its own caller only
+    val late = c.getOrLoad(spark, "i", "old", ()) {
+      assert(c.getOrLoad(spark, "i", "new", ())("newest") == "newest")
+      "late old"
+    }
+    assert(late == "late old")
+    assert(c.getOrLoad(spark, "i", "new", ())(fail("the late load was kept")) == "newest")
+    assert(c.getOrLoad(spark, "i", "old", ())("old 3") == "old 3")
   }
 }
