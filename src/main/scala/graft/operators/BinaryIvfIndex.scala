@@ -222,12 +222,6 @@ object BinaryIvfIndex {
     IndexIdentity.forget(indexPath)
   }
 
-  /** The index's identity (one read per call) and its serve model. */
-  private def serveModel(spark: SparkSession, indexPath: String): (String, Model) = {
-    val ident = IndexIdentity.of(spark, indexPath)
-    (ident, serveModels.getOrLoad(spark, indexPath, ident, ())(loadModel(spark, indexPath)))
-  }
-
   /** Resident (id, bits) rows of `pids`, in request order; the pids that
     * miss load in ONE directory-pruned scan. */
   private def serveCodesOf(spark: SparkSession, indexPath: String, identity: String,
@@ -243,7 +237,7 @@ object BinaryIvfIndex {
   /** Preload the serve cache in one scan; returns resident row count. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    val (ident, model) = serveModel(spark, indexPath)
+    val (ident, model) = serveModels.serve(spark, indexPath, ())(_ => loadModel(spark, indexPath))
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
     serveCodesOf(spark, indexPath, ident, idCol, vecCol, targets).map(_.length.toLong).sum
@@ -257,7 +251,7 @@ object BinaryIvfIndex {
   def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
                  vecCol: String, query: Array[Byte], k: Int, nprobes: Int,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Long)] = {
-    val (ident, model) = serveModel(spark, indexPath)
+    val (ident, model) = serveModels.serve(spark, indexPath, ())(_ => loadModel(spark, indexPath))
     val probes = model.rank(query).take(math.min(nprobes, model.nlist))
     val keep = allowed.getOrElse((_: Long) => true)
     serveCodesOf(spark, indexPath, ident, idCol, vecCol, probes).iterator.flatMap { rows =>

@@ -862,12 +862,6 @@ object HnswIndex {
     IndexIdentity.forget(indexPath)
   }
 
-  /** The index's identity (one read per call) and its serve state. */
-  private def serveState(spark: SparkSession, indexPath: String): (String, Loaded) = {
-    val ident = IndexIdentity.of(spark, indexPath)
-    (ident, serveStates.getOrLoad(spark, indexPath, ident, ())(load(spark, indexPath, ident)))
-  }
-
   private def load(spark: SparkSession, indexPath: String, identity: String): Loaded = {
     val meta = IvfIndex.vectorMeta(spark, indexPath)
     val base = Loaded(IvfIndex.modelUnder(spark, indexPath, identity), meta.metric,
@@ -945,7 +939,7 @@ object HnswIndex {
     * like [[warm]] does for the batched cache. */
   def serveWarm(spark: SparkSession, indexPath: String,
                 pids: Seq[Int] = Nil): Long = {
-    val (ident, st) = serveState(spark, indexPath)
+    val (ident, st) = serveStates.serve(spark, indexPath, ())(load(spark, indexPath, _))
     val targets = if (pids.nonEmpty) pids else 0 until st.model.nlist
     serveGraphs.requireFits(spark, targets.size, "serve")
     servePartitions(spark, indexPath, ident, targets, st.storage)
@@ -972,7 +966,7 @@ object HnswIndex {
                  k: Int, nprobes: Int, ef: Int = 64,
                  refineFactor: Int = 10,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    val (ident, st) = serveState(spark, indexPath)
+    val (ident, st) = serveStates.serve(spark, indexPath, ())(load(spark, indexPath, _))
     val query2 = if (st.metric == "cosine") IvfIndex.normalize(query) else query
     val probes = st.model.rank(query2).take(math.min(nprobes, st.model.nlist))
     val efq = math.max(ef, k)

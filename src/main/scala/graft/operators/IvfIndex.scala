@@ -296,7 +296,7 @@ object IvfIndex {
     * packed f16 storage (every partition of an index shares the build's
     * storage). */
   private[operators] final case class Resident(rows: FloatRows, f16: Boolean)
-  private val serveRows = new ServeCache[Int, Resident](Some(ServeCacheBudgetKey), 64)
+  private[operators] val serveRows = new ServeCache[Int, Resident](Some(ServeCacheBudgetKey), 64)
   def currentServeCapacity: Int = serveRows.currentCapacity
   val serveHits: java.util.concurrent.atomic.AtomicLong = serveRows.hits
   val serveMisses: java.util.concurrent.atomic.AtomicLong = serveRows.misses
@@ -308,10 +308,6 @@ object IvfIndex {
     serveRows.purge(indexPath)
     IndexIdentity.forget(indexPath)
   }
-
-  /** Refuse a warm of `partitions` float partitions the budget cannot hold. */
-  private[operators] def requireServeFits(spark: SparkSession, partitions: Int): Unit =
-    serveRows.requireFits(spark, partitions, "serve")
 
   /** Resident partitions `pids` under `identity`, in request order. The
     * partitions that miss load in ONE scan, except those whose float rows a
@@ -353,7 +349,7 @@ object IvfIndex {
     val ident = IndexIdentity.of(spark, indexPath)
     val model = modelUnder(spark, indexPath, ident)
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
-    requireServeFits(spark, targets.size)
+    serveRows.requireFits(spark, targets.size, "serve")
     servePartitions(spark, indexPath, ident, idCol, vecCol, targets)
       .map(_.rows.length.toLong).sum
   }

@@ -249,12 +249,6 @@ trait IvfQuantized {
     IvfIndex.serveUnpersist(indexPath)
   }
 
-  /** The index's identity (one read per call) and its serve state. */
-  private def serveState(spark: SparkSession, indexPath: String): (String, Loaded) = {
-    val ident = IndexIdentity.of(spark, indexPath)
-    (ident, serveStates.getOrLoad(spark, indexPath, ident, ())(loadUnder(spark, indexPath, ident)))
-  }
-
   /** Resident codes (+ norm) of `pids`, in request order. The pids that
     * miss load in ONE scan that reads their refine vectors too: those go
     * into `fetched`, for [[IvfIndex.servePartitions]] to take instead of
@@ -281,10 +275,10 @@ trait IvfQuantized {
     * budgets are checked before anything is read. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    val (ident, st) = serveState(spark, indexPath)
+    val (ident, st) = serveStates.serve(spark, indexPath, ())(loadUnder(spark, indexPath, _))
     val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
-    IvfIndex.requireServeFits(spark, targets.size)
+    IvfIndex.serveRows.requireFits(spark, targets.size, "serve")
     val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]
     val n = serveCodesOf(spark, indexPath, ident, idCol, vecCol, targets, fetched)
       .map(_.length.toLong).sum
@@ -305,7 +299,7 @@ trait IvfQuantized {
                  vecCol: String, query: Array[Float], k: Int, nprobes: Int,
                  refineFactor: Int = 10,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    val (ident, st) = serveState(spark, indexPath)
+    val (ident, st) = serveStates.serve(spark, indexPath, ())(loadUnder(spark, indexPath, _))
     val (q, probes) = probe(st, query, nprobes, "serve")
     val keep = allowed.getOrElse((_: Long) => true)
     val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]

@@ -170,6 +170,14 @@ private[graft] final class ServeCache[K, V <: AnyRef](
   def getOrLoad(spark: SparkSession, indexPath: String, identity: String, key: K)
                (load: => V): V =
     getOrLoadAll(spark, indexPath, identity, key :: Nil)(_ => load :: Nil).head
+
+  /** A serve call's entry `key` of an index, and the identity it read for
+    * it — once per call, through [[IndexIdentity.of]] — to pass to every
+    * other cache the call reads. */
+  def serve(spark: SparkSession, indexPath: String, key: K)(load: String => V): (String, V) = {
+    val ident = IndexIdentity.of(spark, indexPath)
+    (ident, getOrLoad(spark, indexPath, ident, key)(load(ident)))
+  }
 }
 
 private[graft] object ServeCache {
