@@ -213,11 +213,11 @@ object BinaryIvfIndex {
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
   def serveCacheSize: Int = serveCodes.size
-  private val serveModels = new ServeCache[Unit, Model](None, ServeCache.IndexStates)
+  private val indexStates = new ServeCache[Unit, Model](None, ServeCache.IndexStates)
 
   /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveModels.purge(indexPath)
+    indexStates.purge(indexPath)
     serveCodes.purge(indexPath)
     IndexIdentity.forget(indexPath)
   }
@@ -237,7 +237,7 @@ object BinaryIvfIndex {
   /** Preload the serve cache in one scan; returns resident row count. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    val (ident, model) = serveModels.serve(spark, indexPath, ())(_ => loadModel(spark, indexPath))
+    val (ident, model) = indexStates.serve(spark, indexPath, ())(_ => loadModel(spark, indexPath))
     val targets = if (pids.nonEmpty) pids else 0 until model.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
     serveCodesOf(spark, indexPath, ident, idCol, vecCol, targets).map(_.length.toLong).sum
@@ -251,7 +251,7 @@ object BinaryIvfIndex {
   def serveLocal(spark: SparkSession, indexPath: String, idCol: String,
                  vecCol: String, query: Array[Byte], k: Int, nprobes: Int,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Long)] = {
-    val (ident, model) = serveModels.serve(spark, indexPath, ())(_ => loadModel(spark, indexPath))
+    val (ident, model) = indexStates.serve(spark, indexPath, ())(_ => loadModel(spark, indexPath))
     val probes = model.rank(query).take(math.min(nprobes, model.nlist))
     val keep = allowed.getOrElse((_: Long) => true)
     serveCodesOf(spark, indexPath, ident, idCol, vecCol, probes).iterator.flatMap { rows =>

@@ -1768,7 +1768,7 @@ object Fts {
   private case class ServeState(cfg: FtsConfig,
       df: java.util.HashMap[String, java.lang.Double],
       dl: java.util.HashMap[java.lang.Long, java.lang.Double])
-  private val serveStates = new ServeCache[Unit, ServeState](None, ServeCache.IndexStates)
+  private val indexStates = new ServeCache[Unit, ServeState](None, ServeCache.IndexStates)
   /** Per-token (doc, tf) postings for scoring. */
   private val servePostings = new ServeCache[String, Array[(Long, Double)]](
     Some(ServeTermBudgetKey), 4096, serveHits, serveMisses)
@@ -1783,7 +1783,7 @@ object Fts {
   /** Release an index's driver-resident serve state. Its meta memo stays:
     * the Spark paths read it too. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveStates.purge(indexPath)
+    indexStates.purge(indexPath)
     servePostings.purge(indexPath)
     servePosPostings.purge(indexPath)
     IndexIdentity.forget(indexPath)
@@ -1796,7 +1796,7 @@ object Fts {
   private def serving(spark: SparkSession, indexPath: String): Served = {
     val ident = IndexIdentity.of(spark, indexPath)
     val (n, avgdl) = metaUnder(spark, paths(indexPath), ident)
-    Served(ident, serveStates.getOrLoad(spark, indexPath, ident, ())(
+    Served(ident, indexStates.getOrLoad(spark, indexPath, ident, ())(
       loadServeState(spark, indexPath, n)), n, avgdl)
   }
 

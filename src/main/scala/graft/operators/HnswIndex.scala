@@ -853,11 +853,11 @@ object HnswIndex {
   private final case class Loaded(
       model: IvfIndex.Model, metric: String, storage: String,
       sq: SqIndex.Codec = null, pq: PqIndex.Codec = null)
-  private val serveStates = new ServeCache[Unit, Loaded](None, ServeCache.IndexStates)
+  private val indexStates = new ServeCache[Unit, Loaded](None, ServeCache.IndexStates)
 
   /** Release an index's driver-resident serve state. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveStates.purge(indexPath)
+    indexStates.purge(indexPath)
     serveGraphs.purge(indexPath)
     IndexIdentity.forget(indexPath)
   }
@@ -939,7 +939,7 @@ object HnswIndex {
     * like [[warm]] does for the batched cache. */
   def serveWarm(spark: SparkSession, indexPath: String,
                 pids: Seq[Int] = Nil): Long = {
-    val (ident, st) = serveStates.serve(spark, indexPath, ())(load(spark, indexPath, _))
+    val (ident, st) = indexStates.serve(spark, indexPath, ())(load(spark, indexPath, _))
     val targets = if (pids.nonEmpty) pids else 0 until st.model.nlist
     serveGraphs.requireFits(spark, targets.size, "serve")
     servePartitions(spark, indexPath, ident, targets, st.storage)
@@ -966,7 +966,7 @@ object HnswIndex {
                  k: Int, nprobes: Int, ef: Int = 64,
                  refineFactor: Int = 10,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    val (ident, st) = serveStates.serve(spark, indexPath, ())(load(spark, indexPath, _))
+    val (ident, st) = indexStates.serve(spark, indexPath, ())(load(spark, indexPath, _))
     val query2 = if (st.metric == "cosine") IvfIndex.normalize(query) else query
     val probes = st.model.rank(query2).take(math.min(nprobes, st.model.nlist))
     val efq = math.max(ef, k)

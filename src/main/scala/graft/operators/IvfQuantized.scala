@@ -238,13 +238,13 @@ trait IvfQuantized {
   def serveHits: java.util.concurrent.atomic.AtomicLong = serveCodes.hits
   def serveMisses: java.util.concurrent.atomic.AtomicLong = serveCodes.misses
   def serveCacheSize: Int = serveCodes.size
-  private lazy val serveStates = new ServeCache[Unit, Loaded](None, ServeCache.IndexStates)
+  private lazy val indexStates = new ServeCache[Unit, Loaded](None, ServeCache.IndexStates)
 
   /** Release an index's driver-resident serve state. The refine vectors
     * live in [[IvfIndex]]'s shared serve LRU and retire through its own
     * unpersist, so both caches retire together. */
   def serveUnpersist(indexPath: String): Unit = {
-    serveStates.purge(indexPath)
+    indexStates.purge(indexPath)
     serveCodes.purge(indexPath)
     IvfIndex.serveUnpersist(indexPath)
   }
@@ -275,7 +275,7 @@ trait IvfQuantized {
     * budgets are checked before anything is read. */
   def serveWarm(spark: SparkSession, indexPath: String, idCol: String,
                 vecCol: String, pids: Seq[Int] = Nil): Long = {
-    val (ident, st) = serveStates.serve(spark, indexPath, ())(loadUnder(spark, indexPath, _))
+    val (ident, st) = indexStates.serve(spark, indexPath, ())(loadUnder(spark, indexPath, _))
     val targets = if (pids.nonEmpty) pids else 0 until st.ivf.nlist
     serveCodes.requireFits(spark, targets.size, "code-cache")
     IvfIndex.serveRows.requireFits(spark, targets.size, "serve")
@@ -299,7 +299,7 @@ trait IvfQuantized {
                  vecCol: String, query: Array[Float], k: Int, nprobes: Int,
                  refineFactor: Int = 10,
                  allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] = {
-    val (ident, st) = serveStates.serve(spark, indexPath, ())(loadUnder(spark, indexPath, _))
+    val (ident, st) = indexStates.serve(spark, indexPath, ())(loadUnder(spark, indexPath, _))
     val (q, probes) = probe(st, query, nprobes, "serve")
     val keep = allowed.getOrElse((_: Long) => true)
     val fetched = collection.mutable.Map.empty[Int, IvfIndex.FloatRows]
