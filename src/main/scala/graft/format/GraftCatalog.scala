@@ -1912,7 +1912,7 @@ private[format] object GraftProcedures {
       throw new IllegalArgumentException(s"index ${e.name} records no idCol"))
     val idxPath = s"$path/_indices/${e.name}"
     lazy val flatMetric =
-      if (e.indexType == "IVF_FLAT") IvfIndex.readVectorMeta(spark, idxPath)
+      if (e.indexType == "IVF_FLAT") IvfIndex.vectorMeta(spark, idxPath).metric
       else "l2"
     e.indexType match {
       case "IVF_FLAT" if flatMetric == "hamming" =>

@@ -275,11 +275,10 @@ class GraftScalarIndexRule(session: SparkSession) extends Rule[LogicalPlan]
     splitConjunctivePredicates(cond).iterator.flatMap { p =>
       ngramShape(p).flatMap { case (colName, needle) =>
         val grams = needle.toLowerCase.sliding(3).filter(_.length == 3).toSeq.distinct
-        // epoch-memoized crash recovery for the compaction swap: without
-        // it a crashed optimize leaves the dir missing and a warm marker
-        // cache would fail every contains() query on a dead path
+        // epoch-memoized crash recovery for the compaction commit: a
+        // crashed optimize's sealed stage is finished before the lookup
         candidateNames(gfi, colName).foreach(n =>
-          graft.index.ScalarIndex.recoverNgramSwapMemo(
+          graft.index.ScalarIndex.recoverNgramMemo(
             session, s"${gfi.tablePath}/_indices/ngram_$n"))
         if (grams.isEmpty) None
         else firstUsable(gfi, colName,

@@ -199,7 +199,7 @@ object ScanAnalyze {
     import graft.operators.{BinaryIvfIndex, IvfIndex}
     import org.apache.spark.sql.functions.{count, lit}
     val ip = s"$tablePath/_indices/${e.name}"
-    val metric = IvfIndex.readVectorMeta(spark, ip)
+    val metric = IvfIndex.vectorMeta(spark, ip).metric
     val (nlist, probes): (Int, Seq[Int]) =
       if (metric == "hamming") {
         val bm = BinaryIvfIndex.loadModel(spark, ip)

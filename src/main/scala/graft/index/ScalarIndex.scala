@@ -73,15 +73,10 @@ object ScalarIndex {
     val out = fs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     // POSIX rename replaces atomically (zero-gap); HDFS refuses a clobber,
-    // so fall back to delete-then-rename (a rename-width unavailability
-    // window, still never a truncated read)
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(p)) fs.delete(p, false)
-      if (!fs.rename(tmp, p)) {
-        fs.delete(tmp, false)
-        throw new IllegalStateException(s"atomic marker write failed: $path")
-      }
-    }
+    // so renameOver falls back to delete-then-rename (a rename-width
+    // unavailability window, still never a truncated read)
+    try StagedSwap.renameOver(fs, tmp, p)
+    catch { case e: IllegalStateException => fs.delete(tmp, false); throw e }
   }
 
   /** (covered version, physical column identity if recorded, build uuid if
@@ -193,11 +188,18 @@ object ScalarIndex {
 
   private[graft] def writeCoverage(spark: SparkSession, dir: String,
                                    version: Long, fragmentIds: Seq[Long]): Unit = {
-    val json = s"""{"version": $version, "fragmentIds": [${fragmentIds.sorted.mkString(",")}]}"""
-    atomicWrite(spark, s"$dir/_GRAFT_INDEX_COVERAGE", json)
+    stageCoverage(spark, dir, version, fragmentIds)
     // keep the plain version marker in sync for older readers
     writeVersionMarker(spark, dir, version)
   }
+
+  /** The coverage marker alone, written into `dir` — a [[StagedSwap]]
+    * stage moves it into the index root together with the data it
+    * describes. */
+  private[graft] def stageCoverage(spark: SparkSession, dir: String,
+                                   version: Long, fragmentIds: Seq[Long]): Unit =
+    atomicWrite(spark, s"$dir/_GRAFT_INDEX_COVERAGE",
+      s"""{"version": $version, "fragmentIds": [${fragmentIds.sorted.mkString(",")}]}""")
 
   /** Coverage + manifest inventory for TABLE-LOCAL vector/FTS index builds
     * (`<table>/_indices/<name>`): writes the coverage marker all search
@@ -406,7 +408,7 @@ object ScalarIndex {
   def optimizeNgram(spark: SparkSession, tablePath: String, column: String,
                     indexPath: String, maxSegmentFiles: Int = 32): Long = {
     val dir = s"$indexPath/ngram_$column"
-    recoverNgramSwap(spark, dir)
+    if (StagedSwap.recover(spark, dir)) graft.format.GraftScalarIndexRule.invalidateCache()
     val vi = indexedVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"$dir has no version marker — build first"))
     val dirP = new org.apache.hadoop.fs.Path(dir)
@@ -439,77 +441,36 @@ object ScalarIndex {
     val nFiles = if (!fs.exists(dirP)) 0
       else fs.listStatus(dirP).count(s => s.getPath.getName.endsWith(".parquet"))
     if (nFiles > maxSegmentFiles) {
-      val tmp = s"${dir}__compacttmp"
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
-      val old = new org.apache.hadoop.fs.Path(s"${dir}__old")
-      fs.delete(tmpP, true); fs.delete(old, true)
+      // the compacted files move in before the old ones go: a reader in
+      // between sees every posting at least once, which the lookups'
+      // countDistinct tolerates. The dir's identity marker stays — a
+      // compaction changes layout, not content.
+      val stage = StagedSwap.stage(spark, dir)
+      val old = fs.listStatus(dirP).map(_.getPath.getName)
+        .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq
       spark.read.parquet(dir)
         .repartitionByRange(8, col("gram"))
         .sortWithinPartitions(col("gram"), col(A))
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      // the compacted dir carries the SAME identity marker (version,
-      // column, build uuid) — a compaction changes layout, not content, so
-      // the manifest entry's uuid must keep verifying against the dir
-      readMarker(spark, dir).foreach { case (v, c, u) =>
-        writeVersionMarker(spark, tmp, v, c, u)
-      }
-      // completion marker LAST: the swap below is two renames, and a crash
-      // between them must roll FORWARD (same recovery contract as the FTS
-      // segment merge and the HNSW delta merge)
-      atomicWrite(spark, s"$tmp/$NgramCompactReady", "1")
-      if (!fs.rename(dirP, old))
-        throw new IllegalStateException(s"ngram compact: rename $dir aside failed")
-      if (!fs.rename(tmpP, dirP))
-        throw new IllegalStateException(s"ngram compact: rename $tmp in failed")
-      fs.delete(new org.apache.hadoop.fs.Path(dirP, NgramCompactReady), false)
-      fs.delete(old, true)
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/ngram")
+      StagedSwap.commit(spark, dir,
+        StagedSwap.MoveFiles("ngram", "") +: old.map(StagedSwap.Delete))
     }
     finishBuild(spark, tablePath, indexPath, s"ngram_$column", "NGRAM",
       physicalOf(spark, tablePath, column), m, freshUuid = false)
     freshFrags.map(_.rows).sum
   }
 
-  private val NgramCompactReady = "_GRAFT_COMPACT_READY"
-
-  /** Crash recovery for [[optimizeNgram]]'s postings-compaction swap —
-    * idempotent, called (epoch-memoized) from the lookup, optimizer-rule,
-    * and optimize entry points. A crash window leaves the live dir missing
-    * with the replacement one rename away: a READY-marked tmp rolls
-    * forward (the compaction had fully landed), a surviving `__old` rolls
-    * back. With the live dir PRESENT nothing is touched — a tmp/old
-    * sighting there may be a concurrent optimize mid-swap, and deleting
-    * its fully-written tmp would fail that swap and lose the live dir;
-    * stale leftovers are reclaimed by the next optimize's own pre-swap
-    * cleanup (single-writer, so no race there). */
-  private[graft] def recoverNgramSwap(spark: SparkSession, dir: String): Unit = {
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmpP = new org.apache.hadoop.fs.Path(s"${dir}__compacttmp")
-    val oldP = new org.apache.hadoop.fs.Path(s"${dir}__old")
-    if (!fs.exists(dirP)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmpP, NgramCompactReady))) {
-        fs.rename(tmpP, dirP)
-        fs.delete(new org.apache.hadoop.fs.Path(dirP, NgramCompactReady), false)
-        fs.delete(oldP, true)
-        graft.format.GraftScalarIndexRule.invalidateCache()
-      } else if (fs.exists(oldP)) {
-        fs.delete(tmpP, true)
-        fs.rename(oldP, dirP)
-        graft.format.GraftScalarIndexRule.invalidateCache()
-      }
-    }
-  }
-
-  /** [[recoverNgramSwap]] at most once per dir per cache epoch: the
-    * steady-state query path (hot loop at serving time) pays zero
-    * filesystem probes; marker writes bump the epoch and re-arm it. */
+  /** Finish a crashed [[optimizeNgram]] compaction ([[StagedSwap.recover]])
+    * at most once per dir per cache epoch: the steady-state query path (hot
+    * loop at serving time) pays zero filesystem probes; marker writes bump
+    * the epoch and re-arm it. */
   private val ngramRecoverMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def recoverNgramSwapMemo(spark: SparkSession, dir: String): Unit = {
+  private[graft] def recoverNgramMemo(spark: SparkSession, dir: String): Unit = {
     val ep = graft.format.GraftScalarIndexRule.cacheEpoch
     val last = ngramRecoverMemo.get(dir)
     if (last == null || last.longValue() != ep) {
-      recoverNgramSwap(spark, dir)
+      if (StagedSwap.recover(spark, dir)) graft.format.GraftScalarIndexRule.invalidateCache()
       ngramRecoverMemo.put(dir, java.lang.Long.valueOf(ep))
     }
   }
@@ -519,7 +480,7 @@ object ScalarIndex {
     * shorter than 3 chars fall back to full-scan semantics (None). */
   def lookupNgramCandidates(spark: SparkSession, indexPath: String, column: String,
                             needle: String): Option[DataFrame] = {
-    recoverNgramSwapMemo(spark, s"$indexPath/ngram_$column")
+    recoverNgramMemo(spark, s"$indexPath/ngram_$column")
     val grams = needle.toLowerCase.sliding(3).filter(_.length == 3).toSeq.distinct
     if (grams.isEmpty) None
     else Some(

@@ -119,6 +119,7 @@ object BinaryIvfIndex {
     val model = train(df, idCol, vecCol, nlist, maxIter)
     val assigned = df.withColumn(PidCol,
       ColumnBridge.column(BinaryIvfAssign(ColumnBridge.expression(col(vecCol)), model.centroids)))
+    graft.index.StagedSwap.discard(df.sparkSession, indexPath) // a full build rewrites it all
     assigned.write.mode(SaveMode.Overwrite).partitionBy(PidCol).parquet(s"$indexPath/vectors")
     val spark = df.sparkSession
     val rows = model.centroids.zipWithIndex.map { case (c, i) => (i, c) }

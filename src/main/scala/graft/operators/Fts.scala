@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
+import graft.index.StagedSwap
 
 /** Tokenizer configuration (reference `InvertedIndexParams` / tokenizer
   * builder, `rust/lance-index/src/scalar/inverted/tokenizer.rs:36-108`):
@@ -776,6 +777,8 @@ object Fts {
   def buildIndex(df: DataFrame, idCol: String, textCol: String, indexPath: String,
                  numPostingFiles: Int = -1, config: FtsConfig = FtsConfig()): Index = {
     val p = paths(indexPath)
+    // a full build rewrites every output a crashed maintenance stage holds
+    StagedSwap.discard(df.sparkSession, indexPath)
     // a name-referenced dictionary resolves through the dict home HERE,
     // once; the stored config below carries the resolved entries
     val cfg = DictLoader.resolveConfig(df.sparkSession, config)
@@ -842,9 +845,6 @@ object Fts {
             .coalesce(1).write.mode(SaveMode.Overwrite).parquet(p.meta)))
       } finally postings.unpersist()
     } finally tokenized.unpersist()
-    // a full build rewrites stats outright — any crashed-optimize intent
-    // marker is moot now
-    clearOptimizeIntent(df.sparkSession, indexPath)
     // adopt the freshly built segments as the merged base (sidecars were
     // dropped by the Overwrite) so later optimizes track only true deltas
     mergeDeltaSegments(df.sparkSession, indexPath)
@@ -919,6 +919,7 @@ object Fts {
         "terms could not segment like the corpus")
     val indexPath = s"$tablePath/_indices/fts_$textCol"
     val p = paths(indexPath)
+    StagedSwap.discard(spark, indexPath) // the merge rewrites every output
     writeConfig(spark, indexPath, cfgs.head)
     // ONE postings exchange (r16, guide §2.4): hash-partition the merged
     // postings by token up front — the write layout AND the termstats df
@@ -953,7 +954,6 @@ object Fts {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(p.meta)
       ds.count()
     } finally postings.unpersist()
-    clearOptimizeIntent(spark, indexPath) // stats rewritten from the parts
     mergeDeltaSegments(spark, indexPath)
     IndexIdentity.publish(spark, indexPath)
     val mV = GraftTable.loadManifest(spark, tablePath, Some(v))
@@ -973,15 +973,19 @@ object Fts {
   /** Incremental FTS maintenance for a table-local index: tokenize ONLY the
     * fragments the coverage marker does not include yet, append their
     * postings/docstats/blockstats, recompute global stats, and move the
-    * coverage + manifest entry forward. O(delta) tokenization. Every
-    * branch that rewrites the index publishes a new [[IndexIdentity]]
-    * once; a coverage-only remap changes no cached content and publishes
-    * none. Returns the number of newly indexed rows. */
+    * coverage + manifest entry forward. O(delta) tokenization. The
+    * appended segments, the new stats and the coverage marker land in ONE
+    * [[StagedSwap]] commit, so a crashed call either indexed the fresh docs
+    * or did not, and a retry indexes each doc exactly once. Every branch
+    * that rewrites the index publishes a new [[IndexIdentity]] once; a
+    * coverage-only remap changes no cached content and publishes none.
+    * Returns the number of newly indexed rows. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        textCol: String, maxDeltaFiles: Int = 0): Long = {
     import graft.format.GraftTable
     val m = GraftTable.loadManifest(spark, tablePath)
     val indexPath = s"$tablePath/_indices/fts_$textCol"
+    if (StagedSwap.recover(spark, indexPath)) IndexIdentity.publish(spark, indexPath)
     val covered = graft.index.ScalarIndex.readCoverage(spark, indexPath)
       .map(_.fragmentIds.toSet)
       .getOrElse(throw new IllegalStateException(
@@ -1016,9 +1020,9 @@ object Fts {
     }
     val freshFrags = m.fragments.filterNot(f => coveredNow.contains(f.id))
     if (freshFrags.nonEmpty) {
-      optimizeIndex(GraftTable.readFragments(spark, tablePath, m, freshFrags,
+      optimizeStaged(GraftTable.readFragments(spark, tablePath, m, freshFrags,
           withRowId = idCol == GraftTable.RowIdCol),
-        idCol, textCol, indexPath, maxDeltaFiles)
+        idCol, textCol, indexPath, maxDeltaFiles, Some(m))
     } else if (maxDeltaFiles > 0) {
       // no fresh docs, but the caller asked for a tighter segment budget
       // (reference OptimizeOptions.num_indices_to_merge with no appends):
@@ -1041,26 +1045,24 @@ object Fts {
     * already handles. At 100 TB, maintenance cost is O(delta) + one
     * aggregate over postings keys. */
   def optimizeIndex(newDocs: DataFrame, idCol: String, textCol: String,
-                    indexPath: String, maxDeltaFiles: Int = 0): Index = {
+                    indexPath: String, maxDeltaFiles: Int = 0): Index =
+    optimizeStaged(newDocs, idCol, textCol, indexPath, maxDeltaFiles, None)
+
+  /** [[optimizeIndex]] as one [[StagedSwap]] commit: the three delta
+    * segments, the new termstats and meta, and (from [[optimizeForTable]])
+    * the coverage marker of `covering` are staged, then land together.
+    * Blockstats and docstats land before postings, so a reader between the
+    * steps never meets a posting that WAND's block bounds or the doc
+    * lengths do not know. The stored termstats therefore always cover the
+    * stored postings exactly, and the O(delta) termstats merge (stored df +
+    * delta df — exact: deltas are doc-disjoint from the indexed corpus and
+    * df values are integer-valued doubles) is always sound. */
+  private def optimizeStaged(newDocs: DataFrame, idCol: String, textCol: String,
+                             indexPath: String, maxDeltaFiles: Int,
+                             covering: Option[graft.format.GraftManifest]): Index = {
     val p = paths(indexPath)
     val spark = newDocs.sparkSession
-    // Intent marker (r17, VERDICT r16 #2): the window between the delta
-    // postings append and the termstats swap is not atomic. The O(delta)
-    // termstats merge below (stored df + delta df — EXACT: deltas are
-    // doc-disjoint from the indexed corpus, and df values are
-    // integer-valued doubles, so the per-token two-term sum is bit-exact)
-    // would silently under-count FOREVER if a previous optimize crashed
-    // inside that window: its orphaned delta postings are on disk but not
-    // in the stored termstats. The marker pins the window — present at
-    // entry means "a previous optimize may have died mid-swap", and this
-    // run self-heals with the full O(corpus-keys) recompute the pre-r17
-    // code always paid; absent means the stored termstats exactly cover
-    // the stored postings and the O(delta) merge is sound.
-    val fsRoot = new org.apache.hadoop.fs.Path(indexPath)
-    val fsys = fsRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    val intent = new org.apache.hadoop.fs.Path(indexPath, OptimizeIntentMarker)
-    val heal = fsys.exists(intent)
-    fsys.create(intent, /*overwrite=*/ true).close()
+    val stage = StagedSwap.stage(spark, indexPath)
     // delta docs MUST tokenize under the index's stored config
     val cfg = loadConfig(spark, indexPath)
     val tokenized = newDocs.select(col(idCol).as("doc_id"),
@@ -1090,68 +1092,52 @@ object Fts {
         .persist()
       try {
         deltaPost.count() // materialize at full width before coalesced writes
-        // three independent delta appends to three directories, all off
-        // the materialized caches — one concurrent wave (guide §2.6);
-        // ordering vs the stats swap below is irrelevant to crash
-        // correctness because the intent marker wraps the whole window
+        // three independent delta segments to three staged directories,
+        // all off the materialized caches — one concurrent wave (guide §2.6)
         inParallel(Seq(
           () => deltaPost.drop("dl")
             .coalesce(2)
             .sortWithinPartitions(col("token"), col("doc_id"))
-            .write.mode(SaveMode.Append).parquet(p.postings),
+            .write.parquet(s"$stage/postings"),
           () => tokenized.select(col("doc_id"), col("dl"))
-            .coalesce(1).write.mode(SaveMode.Append).parquet(p.docstats),
-          // delta block-max stats append; duplicate (token, block) entries
-          // merge at query time (max/min are idempotent under re-aggregation)
+            .coalesce(1).write.parquet(s"$stage/docstats"),
+          // delta block-max stats; duplicate (token, block) entries merge
+          // at query time (max/min are idempotent under re-aggregation)
           () => deltaPost.groupBy(col("token"), wandBlock(col("doc_id")).as("block"))
             .agg(max(col("tf")).as("max_tf"), min(col("dl")).as("min_dl"))
             .coalesce(1).sortWithinPartitions(col("token"))
-            .write.mode(SaveMode.Append).parquet(s"$indexPath/blockstats")))
-        FtsTestHooks.beforeStatsSwap(indexPath) // crash-window injection (specs)
-        // termstats: O(delta) in the healthy case — the stored dictionary
-        // (one row per distinct token, NOT the corpus postings) unioned
-        // with the delta's per-token df and summed; only a detected crash
-        // window re-derives from the full merged postings (self-heal)
-        val termstats = (
-          if (heal)
-            spark.read.parquet(p.postings)
-              .groupBy(col("token")).agg(count(lit(1)).cast("double").as("df"))
-          else
-            spark.read.parquet(p.termstats).select(col("token"), col("df"))
-              .unionByName(deltaPost.groupBy(col("token"))
-                .agg(count(lit(1)).cast("double").as("df")))
-              .groupBy(col("token")).agg(sum(col("df")).as("df"))
-        ).repartition(2, col("token")).sortWithinPartitions(col("token"))
-        val tmpTs = s"${p.termstats}__tmp"
-        termstats.write.mode(SaveMode.Overwrite).parquet(tmpTs)
-        replaceDir(spark, tmpTs, p.termstats)
+            .write.parquet(s"$stage/blockstats")))
+        // termstats: O(delta) — the stored dictionary (one row per distinct
+        // token, NOT the corpus postings) unioned with the delta's
+        // per-token df and summed
+        spark.read.parquet(p.termstats).select(col("token"), col("df"))
+          .unionByName(deltaPost.groupBy(col("token"))
+            .agg(count(lit(1)).cast("double").as("df")))
+          .groupBy(col("token")).agg(sum(col("df")).as("df"))
+          .repartition(2, col("token")).sortWithinPartitions(col("token"))
+          .write.parquet(s"$stage/termstats")
       } finally deltaPost.unpersist()
     } finally tokenized.unpersist()
-    // meta from the merged docstats (per-doc rows, aggregate-only IO; kept
-    // as a full recompute so avgdl stays bit-identical to a from-scratch
-    // build — a running-mean merge would drift in the last float ulps)
-    val docstats = spark.read.parquet(p.docstats)
-    val tmpMeta = s"${p.meta}__tmp"
-    docstats.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpMeta)
-    replaceDir(spark, tmpMeta, p.meta)
-    // stats now exactly cover the postings on disk — close the window
-    fsys.delete(intent, false)
+    // meta from the stored and staged docstats (per-doc rows,
+    // aggregate-only IO; kept as a full recompute so avgdl stays
+    // bit-identical to a from-scratch build — a running-mean merge would
+    // drift in the last float ulps)
+    spark.read.parquet(p.docstats, s"$stage/docstats")
+      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
+      .coalesce(1).write.parquet(s"$stage/meta")
+    covering.foreach(m => graft.index.ScalarIndex.stageCoverage(spark, s"$stage/root",
+      m.version, m.fragments.map(_.id)))
+    StagedSwap.commit(spark, indexPath, Seq(
+      StagedSwap.MoveFiles("blockstats", "blockstats"),
+      StagedSwap.MoveFiles("docstats", "docstats"),
+      StagedSwap.MoveFiles("postings", "postings"),
+      StagedSwap.Replace("termstats", "termstats"),
+      StagedSwap.Replace("meta", "meta")) ++
+      covering.map(_ => StagedSwap.MoveFiles("root", "")))
     mergeDeltaSegments(spark, indexPath,
       if (maxDeltaFiles > 0) maxDeltaFiles else 16)
     IndexIdentity.publish(spark, indexPath)
     p
-  }
-
-  /** Intent marker pinning [[optimizeIndex]]'s append→stats-swap window
-    * (see there). Leading underscore keeps it invisible to the parquet
-    * readers; build/merge clear it because they rewrite the stats outright. */
-  private[graft] val OptimizeIntentMarker = "_GRAFT_OPTIMIZE_INTENT"
-
-  private def clearOptimizeIntent(spark: SparkSession, indexPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, OptimizeIntentMarker)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    f.delete(p, false)
   }
 
   /** Run independent Spark actions CONCURRENTLY from driver threads
@@ -1172,14 +1158,6 @@ object Fts {
         }).asJava
       pool.invokeAll(jobs).asScala.foreach(_.get()) // propagate failures
     } finally pool.shutdown()
-  }
-
-  /** Crash-injection seams for the maintenance specs (the [[graft.format
-    * .GraftTable.DmlTestHooks]] device): no-ops in production. */
-  private[graft] object FtsTestHooks {
-    /** Fires between [[optimizeIndex]]'s delta appends and its stats swap
-      * — the window the intent marker pins. */
-    @volatile var beforeStatsSwap: String => Unit = _ => ()
   }
 
   // -------------------------------------------------------- segment merge
@@ -1222,84 +1200,47 @@ object Fts {
     * max/min are idempotent), and rewritten as one compact segment that
     * joins the base. The base segments are never rewritten: merge cost is
     * O(sum of delta sizes), not O(corpus). Indexes predating the sidecar
-    * adopt their current files as base on first touch. */
+    * adopt their current files as base on first touch.
+    *
+    * Every merged segment, with its dir's new base list, is staged and
+    * lands in one [[StagedSwap]] commit: the retired deltas are deleted
+    * before the merged files move in, so a reader between the steps sees
+    * at worst a transient gap of the newest deltas, never doubled postings
+    * (wrong tf / BM25). */
   def mergeDeltaSegments(spark: SparkSession, indexPath: String,
                          maxDeltaFiles: Int = 16): Unit = {
-    val p = paths(indexPath)
-    val conf = spark.sessionState.newHadoopConf()
-    // Roll-forward recovery makes the merge crash-atomic: the intent
-    // marker (written only AFTER the merged segment is fully on disk)
-    // lists the delta files to retire; from that point any crash is
-    // finished forward — deltas deleted, merged parts renamed in, base
-    // list rewritten — instead of leaving duplicated postings (wrong tf /
-    // BM25 forever) or orphaned tmp dirs. Deletes precede the renames so a
-    // concurrent query sees at worst a transient gap of the newest deltas,
-    // never doubled postings.
-    def recoverOne(fs: org.apache.hadoop.fs.FileSystem, dirStr: String): Unit = {
-      val tmpP = new org.apache.hadoop.fs.Path(s"${dirStr}__mergetmp")
-      if (!fs.exists(tmpP)) return
-      val marker = new org.apache.hadoop.fs.Path(tmpP, "_MERGE_INTENT")
-      if (!fs.exists(marker)) { fs.delete(tmpP, true); return } // abandoned
-      val dir = new org.apache.hadoop.fs.Path(dirStr)
-      val in = fs.open(marker)
-      val retire = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .split("\n").map(_.trim).filter(_.nonEmpty).toSeq finally in.close()
-      retire.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(dir, f), false))
-      fs.listStatus(tmpP).iterator.map(_.getPath)
-        .filter(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
-        .foreach(q => fs.rename(q, new org.apache.hadoop.fs.Path(dir, q.getName)))
-      writeBaseList(fs, dir, dataFileNames(fs, dir))
-      fs.delete(tmpP, true)
-    }
-    def mergeOne(dirStr: String, rewrite: DataFrame => DataFrame): Unit = {
-      val dir = new org.apache.hadoop.fs.Path(dirStr)
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return
-      recoverOne(fs, dirStr) // finish (or discard) a died merge first
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    if (StagedSwap.recover(spark, indexPath)) IndexIdentity.publish(spark, indexPath)
+    val stage = StagedSwap.stage(spark, indexPath)
+    def mergeOne(name: String, rewrite: DataFrame => DataFrame): Seq[StagedSwap.Step] = {
+      val dir = new org.apache.hadoop.fs.Path(indexPath, name)
+      if (!fs.exists(dir)) return Nil
       val current = dataFileNames(fs, dir)
       readBaseList(fs, dir) match {
-        case None => writeBaseList(fs, dir, current)
+        case None => writeBaseList(fs, dir, current); Nil
         case Some(base) =>
           val delta = (current -- base).toSeq.sorted
-          if (delta.size > maxDeltaFiles) {
-            val tmp = s"${dirStr}__mergetmp"
-            rewrite(spark.read.parquet(delta.map(f => s"$dirStr/$f"): _*))
-              .write.mode(SaveMode.Overwrite).parquet(tmp)
-            val marker = new org.apache.hadoop.fs.Path(
-              new org.apache.hadoop.fs.Path(tmp), "_MERGE_INTENT")
-            val out = fs.create(marker, true)
-            try out.write(delta.mkString("\n").getBytes("UTF-8"))
-            finally out.close()
-            recoverOne(fs, dirStr) // the durable roll-forward IS the commit
+          if (delta.size <= maxDeltaFiles) Nil
+          else {
+            val staged = new org.apache.hadoop.fs.Path(stage, name)
+            rewrite(spark.read.parquet(delta.map(f => s"$dir/$f"): _*))
+              .write.parquet(staged.toString)
+            writeBaseList(fs, staged, base ++ dataFileNames(fs, staged))
+            delta.map(f => StagedSwap.Delete(s"$name/$f")) :+
+              StagedSwap.MoveFiles(name, name)
           }
       }
     }
-    mergeOne(p.postings, df => df.repartition(2, col("token"))
-      .sortWithinPartitions(col("token"), col("doc_id")))
-    mergeOne(p.docstats, df => df.coalesce(1))
-    mergeOne(s"$indexPath/blockstats", df => df
-      .groupBy(col("token"), col("block"))
-      .agg(max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
-      .repartition(1, col("token")).sortWithinPartitions(col("token")))
-  }
-
-  /** Directory swap via rename-aside (dest → dest__old, src → dest, delete
-    * dest__old): a concurrent query sees the old stats or the new ones; the
-    * unavailable window is two renames, not a full recursive delete — the
-    * earlier delete-then-rename order left a path-not-found window as long
-    * as the delete. */
-  private def replaceDir(spark: SparkSession, src: String, dest: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val d = new org.apache.hadoop.fs.Path(dest)
-    val s = new org.apache.hadoop.fs.Path(src)
-    val fs = d.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(dest + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(d) && !fs.rename(d, old))
-      throw new IllegalStateException(s"rename $dest aside failed")
-    if (!fs.rename(s, d)) throw new IllegalStateException(s"rename $src -> $dest failed")
-    fs.delete(old, true)
+    val steps =
+      mergeOne("blockstats", df => df
+        .groupBy(col("token"), col("block"))
+        .agg(max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
+        .repartition(1, col("token")).sortWithinPartitions(col("token"))) ++
+      mergeOne("docstats", df => df.coalesce(1)) ++
+      mergeOne("postings", df => df.repartition(2, col("token"))
+        .sortWithinPartitions(col("token"), col("doc_id")))
+    if (steps.nonEmpty) StagedSwap.commit(spark, indexPath, steps)
   }
 
   /** idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)) — reference scorer. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
+import graft.index.StagedSwap
 
 /** HNSW sub-index: per-IVF-partition navigable small-world graphs.
   *
@@ -43,7 +44,7 @@ import org.apache.spark.sql.types._
   * exactness gates go through IVF_FLAT, which shares the coarse layout.
   */
 object HnswIndex {
-  val PidCol = "__ivf_pid"
+  import IvfIndex.{PidCol, l2sq}
   private val AddrCol = graft.format.GraftTable.RowAddrCol
 
   /** Session conf bounding the per-IVF-partition vector payload a single
@@ -59,13 +60,6 @@ object HnswIndex {
     val u = ((h >>> 11).toDouble + 0.5) / (1L << 53).toDouble
     val mL = 1.0 / math.log(m.toDouble)
     math.min((-math.log(u) * mL).toInt, 16)
-  }
-
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
-    var acc = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { val d = a(i).toDouble - b(i); acc += d * d; i += 1 }
-    acc
   }
 
   private case class Node(id: Long, vec: Array[Float], level: Int,
@@ -510,36 +504,6 @@ object HnswIndex {
       .sortBy(_.stripPrefix("graph_delta_").toInt).toSeq
   }
 
-  private val MergeTmpName = "graph_delta_merged__tmp"
-  private val MergeMarkerName = "_MERGED_SOURCES"
-
-  /** Finish a merge whose process died between writing the merged graph and
-    * completing the swap. The marker (written only AFTER the merged graph
-    * is fully on disk) lists `head :: sources`; recovery deletes any
-    * surviving sources and renames the tmp dir into the head slot —
-    * idempotent, safe to call from search and optimize paths. A tmp dir
-    * WITHOUT a marker is an in-progress (or abandoned) write and is left
-    * for the single-writer optimize path to discard. A finished merge
-    * changes the generations, so it publishes a new [[IndexIdentity]]. */
-  private def recoverCompletedMerge(spark: SparkSession, indexPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(p, MergeTmpName)
-    val marker = new org.apache.hadoop.fs.Path(tmp, MergeMarkerName)
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val lines = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").split("\n").toSeq
-      finally in.close()
-    val head = lines.head.trim
-    lines.tail.map(_.trim).filter(_.nonEmpty).foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, s), true)
-    }
-    fs.delete(marker, false) // the merged dir becomes a plain generation
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(p, head))
-    IndexIdentity.publish(spark, indexPath)
-  }
-
   /** Exact float vectors across the base graph AND every delta sub-graph —
     * the refine pass's source (column-pruned to id+vec on disk). */
   private def graphVectors(spark: SparkSession, indexPath: String): DataFrame =
@@ -552,10 +516,10 @@ object HnswIndex {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     deltaDirs(spark, indexPath).foreach(d =>
       fs.delete(new org.apache.hadoop.fs.Path(p, d), true))
-    // a crashed merge's tmp (marker-bearing or not) holds PRE-REBUILD delta
-    // rows; left behind, the next search's recoverCompletedMerge would
-    // resurrect it as a live generation over the fresh base graph
-    fs.delete(new org.apache.hadoop.fs.Path(p, MergeTmpName), true)
+    // a crashed maintenance stage holds PRE-REBUILD generations; left
+    // behind, the next search's recovery would land them over the fresh
+    // base graph
+    StagedSwap.discard(spark, indexPath)
   }
 
   /** Build over a graft table snapshot, recording covered version + fragment
@@ -597,10 +561,14 @@ object HnswIndex {
     * so optimize cost is O(delta), not O(corpus). A compaction that
     * retires covered fragments invalidates node addresses ⇒ full rebuild
     * (which collapses the deltas), same contract as the other families.
-    * Publishes a new [[IndexIdentity]] before it returns. */
+    * The remapped generations, the new delta and the coverage marker land
+    * in one [[StagedSwap]] commit, a delta merge in another. Publishes a
+    * new [[IndexIdentity]] before it returns. */
   def optimizeForTable(spark: SparkSession, tablePath: String, idCol: String,
                        vecCol: String, indexPath: String,
                        maxDeltas: Int = 0): Long = {
+    // a crashed maintenance's sealed stage lands before coverage is read
+    StagedSwap.recover(spark, indexPath)
     // checked before the try: a path holding no index gets no identity
     val cov = graft.index.ScalarIndex.readCoverage(spark, indexPath)
       .getOrElse(throw new IllegalStateException(
@@ -625,19 +593,17 @@ object HnswIndex {
     val metric = params.getOrElse("metric", meta.metric)
     val m = params.getOrElse("m", "16").toInt
     val efc = params.getOrElse("efConstruction", "64").toInt
+    val stage = StagedSwap.stage(spark, indexPath)
     // compaction retired covered fragments: REMAP every generation's
     // addresses to the rows' new locations ([[remapGraphs]] — adjacency,
     // codes, and levels untouched, deleted/mixed rows become routing-only
     // dead nodes) instead of rebuilding; the delta path below then indexes
     // whatever stays uncovered
-    val coveredNow =
-      if (covered.diff(liveIds).isEmpty) covered
-      else remapGraphs(spark, tablePath, mf, indexPath, idCol)
+    val (coveredNow, remapped) =
+      if (covered.diff(liveIds).isEmpty) (covered, Nil)
+      else remapGraphs(spark, tablePath, mf, indexPath, idCol, stage)
     val freshFrags = mf.fragments.filterNot(f => coveredNow.contains(f.id))
-    if (freshFrags.nonEmpty) {
-      // a prior merge whose process died mid-swap is finished forward
-      // before anything lists generations
-      recoverCompletedMerge(spark, indexPath)
+    val delta = if (freshFrags.isEmpty) Nil else {
       val model = IvfIndex.loadModel(spark, indexPath)
       val df = {
         val raw = GraftTable.readFragments(spark, tablePath, mf, freshFrags,
@@ -649,18 +615,23 @@ object HnswIndex {
       // max+1, not count: a prior merge leaves gaps in the numbering
       val next = deltaDirs(spark, indexPath)
         .map(_.stripPrefix("graph_delta_").toInt).maxOption.map(_ + 1).getOrElse(0)
-      writeGraphRows(df, idCol, vecCol, model.centroids, encode, m, efc,
-        f"$indexPath/graph_delta_$next%03d")
+      val gen = f"graph_delta_$next%03d"
+      writeGraphRows(df, idCol, vecCol, model.centroids, encode, m, efc, s"$stage/$gen")
+      Seq(StagedSwap.Replace(gen, gen))
+    }
+    if (remapped.nonEmpty || delta.nonEmpty) {
+      graft.index.ScalarIndex.stageCoverage(spark, s"$stage/root", mf.version,
+        mf.fragments.map(_.id))
+      StagedSwap.commit(spark, indexPath,
+        remapped ++ delta :+ StagedSwap.MoveFiles("root", ""))
+    }
+    // with nothing fresh, a caller's maxDeltas still compacts the existing
+    // generations down to the request (reference
+    // OptimizeOptions.num_indices_to_merge with no appends)
+    if (delta.nonEmpty || maxDeltas > 0)
       mergeDeltas(spark, indexPath, storage, m, efc,
         if (maxDeltas > 0) maxDeltas
         else params.getOrElse("maxDeltas", "4").toInt)
-    } else if (maxDeltas > 0) {
-      // nothing fresh, but the caller asked for a tighter generation
-      // budget (reference OptimizeOptions.num_indices_to_merge with no
-      // appends): compact the existing generations down to the request
-      recoverCompletedMerge(spark, indexPath)
-      mergeDeltas(spark, indexPath, storage, m, efc, maxDeltas)
-    }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
       indexType(storage), vecCol, mf, params ++ Map("idCol" -> idCol))
     freshFrags.map(_.rows).sum
@@ -679,16 +650,10 @@ object HnswIndex {
   private def mergeDeltas(spark: SparkSession, indexPath: String,
                           storage: String, m: Int, efConstruction: Int,
                           maxDeltas: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // single-writer maintenance path: finish a died merge's swap, then
-    // discard any MARKERLESS tmp (an abandoned in-progress write)
-    recoverCompletedMerge(spark, indexPath)
-    val tmpP = new org.apache.hadoop.fs.Path(p, MergeTmpName)
-    if (fs.exists(tmpP)) fs.delete(tmpP, true)
     val dirs = deltaDirs(spark, indexPath)
     if (maxDeltas <= 0 || dirs.size <= maxDeltas) return
     val toMerge = dirs.take(dirs.size - maxDeltas + 1)
+    val stage = StagedSwap.stage(spark, indexPath)
     val model = IvfIndex.loadModel(spark, indexPath)
     val encode = loadEncoder(spark, indexPath, storage, model.centroids)
     val union = toMerge.map(d => spark.read.parquet(s"$indexPath/$d")
@@ -696,16 +661,11 @@ object HnswIndex {
       .reduce(_.unionByName(_))
       .filter(col(AddrCol).isNotNull)
     writeGraphRows(union, "id", "vec", model.centroids, encode, m,
-      efConstruction, tmpP.toString)
-    // marker AFTER the graph is fully written: from here the merge is
-    // durable — a crash at any later point is finished forward by
-    // recoverCompletedMerge (sources deleted, tmp renamed into the head
-    // slot, so generation order stays monotone with surviving deltas)
-    val marker = new org.apache.hadoop.fs.Path(tmpP, MergeMarkerName)
-    val out = fs.create(marker, true)
-    try out.write((toMerge.head +: toMerge).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    recoverCompletedMerge(spark, indexPath)
+      efConstruction, s"$stage/merged")
+    // the sources go, then the merged graph takes the oldest slot, so
+    // generation order stays monotone with the surviving deltas
+    StagedSwap.commit(spark, indexPath,
+      toMerge.tail.map(StagedSwap.Delete) :+ StagedSwap.Replace("merged", toMerge.head))
   }
 
   /** Post-compaction graph maintenance WITHOUT a rebuild ([[IndexRemap]]):
@@ -722,17 +682,18 @@ object HnswIndex {
     * (`rust/lance/src/dataset/optimize.rs` `remap_indices`). */
   private def remapGraphs(spark: SparkSession, tablePath: String,
                           mf: graft.format.GraftManifest, indexPath: String,
-                          idCol: String): Set[Long] = {
+                          idCol: String, stage: String)
+      : (Set[Long], Seq[StagedSwap.Step]) = {
     import spark.implicits._
     val covered = graft.index.ScalarIndex.readCoverage(spark, indexPath)
       .map(_.fragmentIds.toSet).getOrElse(throw new IllegalStateException(
         s"$indexPath has no coverage marker — rebuild with buildForTable"))
     val liveIds = mf.fragments.map(_.id).toSet
-    if (covered.subsetOf(liveIds)) return covered
+    if (covered.subsetOf(liveIds)) return (covered, Nil)
     val deadIds = covered.diff(liveIds)
-    val dirs = ("graph" +: deltaDirs(spark, indexPath)).map(d => s"$indexPath/$d")
+    val dirs = "graph" +: deltaDirs(spark, indexPath)
     val staleIdsDf = dirs.map(d =>
-        IndexRemap.fragIn(spark, spark.read.parquet(d), deadIds, col(AddrCol))
+        IndexRemap.fragIn(spark, spark.read.parquet(s"$indexPath/$d"), deadIds, col(AddrCol))
           .select(col("id").as("__rid")))
       .reduce(_.unionByName(_))
     val p = IndexRemap.plan(spark, tablePath, mf, covered, staleIdsDf, idCol)
@@ -740,7 +701,7 @@ object HnswIndex {
       val newAddrs = p.newAddrs.withColumnRenamed("__rid", "id")
       val deadDf = broadcast(deadIds.toSeq.toDF("__deadfrag"))
       for (d <- dirs) {
-        val g = spark.read.parquet(d)
+        val g = spark.read.parquet(s"$indexPath/$d")
         g.join(deadDf,
             shiftrightunsigned(col(AddrCol), 32) === col("__deadfrag"), "left_outer")
           .join(newAddrs, Seq("id"), "left_outer")
@@ -749,11 +710,9 @@ object HnswIndex {
               .otherwise(col(AddrCol)))
           .drop("__deadfrag", "__new_addr")
           .select(g.columns.map(col).toSeq: _*)
-          .write.mode(SaveMode.Overwrite).partitionBy(PidCol)
-          .parquet(s"${d}__fresh")
-        IvfIndex.swapInDir(spark, s"${d}__fresh", d)
+          .write.partitionBy(PidCol).parquet(s"$stage/$d")
       }
-      p.newCovered
+      (p.newCovered, dirs.map(d => StagedSwap.Replace(d, d)))
     } finally p.done()
   }
 
@@ -1152,9 +1111,9 @@ object HnswIndex {
                      maskCap: Int = 1 << 20,
                      distanceRange: Option[(Double, Double)] = None): DataFrame = {
     import graft.format.GraftTable
-    // a merge that died mid-swap would otherwise hide its generations from
-    // this search until the next optimize; finishing it here is idempotent
-    recoverCompletedMerge(spark, indexPath)
+    // a maintenance that died after its commit point would otherwise hide
+    // its generations from this search until the next optimize
+    if (StagedSwap.recover(spark, indexPath)) IndexIdentity.publish(spark, indexPath)
     val m = GraftTable.loadManifest(spark, tablePath)
     val covered = graft.index.ScalarIndex.readCoverage(spark, indexPath)
       .map(_.fragmentIds.toSet)
@@ -1205,7 +1164,7 @@ object HnswIndex {
       if (marked.columns.contains("__live_frag")) marked.drop("__live_frag")
       else marked
     }
-    val metric = IvfIndex.readVectorMeta(spark, indexPath)
+    val metric = IvfIndex.vectorMeta(spark, indexPath).metric
     val markDeadPf: DataFrame => DataFrame = prefilter match {
       case None => markDead
       case Some(pred) =>

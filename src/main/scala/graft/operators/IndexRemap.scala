@@ -126,11 +126,12 @@ object IndexRemap {
     * dead fragments move to their rows' new addresses when the whole target
     * fragment is index-composed, and are dropped otherwise (the caller's
     * fresh-fragment path re-encodes those fragments wholesale, codes and
-    * assignments of everything else untouched). Returns the fragment set
-    * the dataset covers after the rewrite; the caller appends anything
-    * still uncovered and records coverage. */
-  def remapVectors(spark: SparkSession, tablePath: String, m: GraftManifest,
-                   indexPath: String, idCol: String): Set[Long] = {
+    * assignments of everything else untouched). The rewritten dataset goes
+    * to `out` (the caller's stage). Returns the fragment set it covers; the
+    * caller appends anything still uncovered and records coverage. */
+  private[operators] def remapVectors(spark: SparkSession, tablePath: String,
+                                      m: GraftManifest, indexPath: String,
+                                      idCol: String, out: String): Set[Long] = {
     val covered = graft.index.ScalarIndex.readCoverage(spark, indexPath)
       .map(_.fragmentIds.toSet)
       .getOrElse(throw new IllegalStateException(
@@ -153,9 +154,7 @@ object IndexRemap {
         .drop("__rid", "__new_addr")
         .select(rows.columns.map(col).toSeq: _*)
       keep.unionByName(remapped)
-        .write.mode(SaveMode.Overwrite).partitionBy(IvfIndex.PidCol)
-        .parquet(s"${dir}__fresh")
-      IvfIndex.swapInDir(spark, s"${dir}__fresh", dir)
+        .write.mode(SaveMode.Overwrite).partitionBy(IvfIndex.PidCol).parquet(out)
       p.newCovered
     } finally p.done()
   }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
+import graft.index.StagedSwap
 
 /** IVF (inverted-file) vector index: coarse k-means partitioning + partition-
   * pruned search.
@@ -45,7 +46,7 @@ object IvfIndex {
       centroids.indices.sortBy(i => l2sq(centroids(i), query))
   }
 
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
+  private[operators] def l2sq(a: Array[Float], b: Array[Float]): Double = {
     var acc = 0.0
     var i = 0
     val n = math.min(a.length, b.length)
@@ -246,6 +247,7 @@ object IvfIndex {
     val assigned = df.withColumn(PidCol,
       ColumnBridge.column(IvfAssign(
         ColumnBridge.expression(floatSide(df, vecCol)), model.centroids)))
+    StagedSwap.discard(df.sparkSession, indexPath) // a full build rewrites it all
     assigned.write.mode(SaveMode.Overwrite).partitionBy(PidCol).parquet(s"$indexPath/vectors")
     writeCentroids(df.sparkSession, indexPath, model)
     IndexIdentity.publish(df.sparkSession, indexPath)
@@ -517,23 +519,6 @@ object IvfIndex {
     }
   }
 
-  /** Atomic-ish dataset swap for index rewrites: rename the live dir aside,
-    * move the fresh one in, delete the old — a concurrent reader sees the
-    * old or the new dataset, with only a rename-width race window. */
-  private[operators] def swapInDir(spark: SparkSession, fresh: String, live: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val livePath = new Path(live)
-    val freshPath = new Path(fresh)
-    val fs = livePath.getFileSystem(conf)
-    val old = new Path(live + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(livePath) && !fs.rename(livePath, old))
-      throw new IllegalStateException(s"rename $live aside failed")
-    if (!fs.rename(freshPath, livePath))
-      throw new IllegalStateException(s"rename $fresh -> $live failed")
-    fs.delete(old, true)
-  }
-
   /** Incremental index maintenance (reference `optimize_indices`,
     * `rust/lance/src/dataset/index.rs`): assign ONLY the fragments the
     * index does not cover yet to the EXISTING centroids and append them —
@@ -564,6 +549,9 @@ object IvfIndex {
       assignPid: DataFrame => DataFrame,
       extraMeta: Map[String, String] = Map.empty): Long = {
     import graft.format.GraftTable
+    // a crashed rewrite's sealed stage lands before coverage is read (the
+    // callers publish the index's identity on the way out)
+    StagedSwap.recover(spark, indexPath)
     val m = GraftTable.loadManifest(spark, tablePath)
     val covered = coveredFragmentIds(spark, indexPath, m)
     val liveIds = m.fragments.map(_.id).toSet
@@ -579,44 +567,45 @@ object IvfIndex {
     // records it as such.
     val legacy = graft.index.ScalarIndex.readCoverage(spark, indexPath).isEmpty
     val needRid = idCol == GraftTable.RowIdCol
+    def assigned(frags: Seq[graft.format.FragmentMeta]): DataFrame =
+      assignPid(GraftTable.readFragments(spark, tablePath, m, frags,
+        withRowAddr = true, withRowId = needRid))
     var newlyEncoded = freshFrags.map(_.rows).sum
-    if (!legacy && staleIds.nonEmpty) {
-      // compaction retired covered fragments: REMAP the dataset to the
-      // rows' new addresses (O(delta) join, assignments and codes
-      // untouched — [[IndexRemap]]) and fall through to appending whatever
-      // stays uncovered (mixed rewrite outputs, post-build appends)
-      val cov = IndexRemap.remapVectors(spark, tablePath, m, indexPath, idCol)
-      val fresh2 = m.fragments.filterNot(f => cov.contains(f.id))
-      newlyEncoded = fresh2.map(_.rows).sum
-      if (fresh2.nonEmpty) {
-        assignPid(GraftTable.readFragments(spark, tablePath, m, fresh2,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append).partitionBy(PidCol)
-          .parquet(s"$indexPath/vectors")
-      }
-    } else if (staleIds.isEmpty && !legacy) {
+    if (staleIds.isEmpty && !legacy) {
       if (freshFrags.nonEmpty) {
-        assignPid(GraftTable.readFragments(spark, tablePath, m, freshFrags,
-            withRowAddr = true, withRowId = needRid))
-          .write.mode(SaveMode.Append).partitionBy(PidCol)
+        assigned(freshFrags).write.mode(SaveMode.Append).partitionBy(PidCol)
           .parquet(s"$indexPath/vectors")
       }
     } else {
-      // legacy (version-marker-only) index: estimated coverage cannot name
-      // dead fragments, so prove the dataset clean via a filtered rewrite
-      // (drop anything non-live, assign uncovered fragments in the same
-      // pass) before recording the first real coverage marker
-      val keep = liveFragmentFilter(spark,
-        spark.read.parquet(s"$indexPath/vectors"), covered.intersect(liveIds))
-      val freshAssigned =
-        if (freshFrags.isEmpty) None
-        else Some(assignPid(GraftTable.readFragments(spark, tablePath, m, freshFrags,
-          withRowAddr = true, withRowId = needRid)))
-      val merged = freshAssigned.map(keep.unionByName(_, allowMissingColumns = true))
-        .getOrElse(keep)
-      merged.write.mode(SaveMode.Overwrite).partitionBy(PidCol)
-        .parquet(s"$indexPath/vectors__fresh")
-      swapInDir(spark, s"$indexPath/vectors__fresh", s"$indexPath/vectors")
+      // a rewrite of the whole dataset, staged with the coverage marker it
+      // earns and swapped in by one StagedSwap commit
+      val stage = StagedSwap.stage(spark, indexPath)
+      val staged = s"$stage/vectors"
+      if (!legacy) {
+        // compaction retired covered fragments: REMAP the dataset to the
+        // rows' new addresses (O(delta) join, assignments and codes
+        // untouched — [[IndexRemap]]) and append whatever stays uncovered
+        // (mixed rewrite outputs, post-build appends)
+        val cov = IndexRemap.remapVectors(spark, tablePath, m, indexPath, idCol, staged)
+        val fresh2 = m.fragments.filterNot(f => cov.contains(f.id))
+        newlyEncoded = fresh2.map(_.rows).sum
+        if (fresh2.nonEmpty)
+          assigned(fresh2).write.mode(SaveMode.Append).partitionBy(PidCol).parquet(staged)
+      } else {
+        // legacy (version-marker-only) index: estimated coverage cannot
+        // name dead fragments, so prove the dataset clean via a filtered
+        // rewrite (drop anything non-live, assign uncovered fragments in
+        // the same pass) before recording the first real coverage marker
+        val keep = liveFragmentFilter(spark,
+          spark.read.parquet(s"$indexPath/vectors"), covered.intersect(liveIds))
+        (if (freshFrags.isEmpty) keep
+         else keep.unionByName(assigned(freshFrags), allowMissingColumns = true))
+          .write.partitionBy(PidCol).parquet(staged)
+      }
+      graft.index.ScalarIndex.stageCoverage(spark, s"$stage/root", m.version,
+        m.fragments.map(_.id))
+      StagedSwap.commit(spark, indexPath, Seq(
+        StagedSwap.Replace("vectors", "vectors"), StagedSwap.MoveFiles("root", "")))
     }
     graft.index.ScalarIndex.writeCoverageAndCommit(spark, tablePath, indexPath,
       indexType, vecCol, m, Map("idCol" -> idCol) ++ extraMeta)
@@ -716,18 +705,6 @@ object IvfIndex {
         case _ => 8
       })
   }
-
-  /** The index's build metric ([[vectorMeta]]`.metric`). */
-  private[graft] def readVectorMeta(spark: SparkSession, indexPath: String): String =
-    vectorMeta(spark, indexPath).metric
-
-  /** [[vectorMeta]]`.pqVariant`. */
-  private[graft] def readPqVariant(spark: SparkSession, indexPath: String): String =
-    vectorMeta(spark, indexPath).pqVariant
-
-  /** [[vectorMeta]]`.pqBits`. */
-  private[graft] def readPqBits(spark: SparkSession, indexPath: String): Int =
-    vectorMeta(spark, indexPath).pqBits
 
   /** Metadata-only serving decision for retired coverage (reference
     * `defer_index_remap` + FragReuseIndex, `optimize.rs:155-166`):

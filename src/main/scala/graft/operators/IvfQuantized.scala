@@ -107,6 +107,7 @@ trait IvfQuantized {
     * is written too. */
   protected final def writeIndex(withPid: DataFrame, vecCol: String, indexPath: String,
                                  ivf: IvfIndex.Model, codec: Codec): Unit = {
+    graft.index.StagedSwap.discard(withPid.sparkSession, indexPath) // a full build rewrites it all
     encode(withPid, vecCol, ivf, codec).write.mode(SaveMode.Overwrite)
       .partitionBy(IvfIndex.PidCol).parquet(s"$indexPath/vectors")
     IvfIndex.writeCentroids(withPid.sparkSession, indexPath, ivf)

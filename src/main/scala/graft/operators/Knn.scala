@@ -20,17 +20,6 @@ import graft.functions.VectorFunctions._
   */
 object Knn {
 
-  /** Driver-local single-query ANN serving (interactive regime, r14) —
-    * answers one query from driver-resident IVF centroids + HNSW partition
-    * graphs with no Spark job once warm; see [[HnswIndex.serveLocal]] /
-    * [[HnswIndex.serveWarm]]. The batched complement is
-    * [[HnswIndex.searchCombined]]. */
-  def serveLocal(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                 query: Array[Float], k: Int, nprobes: Int,
-                 ef: Int = 64, refineFactor: Int = 10,
-                 allowed: Option[Long => Boolean] = None): Seq[(Long, Double)] =
-    HnswIndex.serveLocal(spark, indexPath, query, k, nprobes, ef,
-      refineFactor, allowed)
   val DistanceCol = "_distance"
 
   def distanceExpr(metric: String, vec: Column, query: Column): Column = metric match {
@@ -104,33 +93,9 @@ object Knn {
                     distanceRange: Option[(Double, Double)] = None): DataFrame = {
     import graft.functions.F16Functions._
     val q = f16Lit(query)
-    val dist = metric match {
-      case "l2" => l2DistanceF16(col(vecCol), q)
-      case "cosine" => cosineDistanceF16(col(vecCol), q)
-      case "dot" => negate(dotProductF16(col(vecCol), q))
-      case m => throw new IllegalArgumentException(s"unknown metric: $m")
-    }
-    val base0 = prefilter.map(df.filter).getOrElse(df).withColumn(DistanceCol, dist)
-    def rangeFilter(d: DataFrame) = distanceRange.map { case (lo, hi) =>
-      d.filter(col(DistanceCol) >= lit(lo) && col(DistanceCol) < lit(hi))
-    }.getOrElse(d)
-    refineWith match {
-      case None =>
-        rangeFilter(base0).orderBy(col(DistanceCol) +: tieBreakers: _*).limit(k)
-      case Some(f32Col) =>
-        // candidate cut by f16 distance, exact re-rank by the f32 column;
-        // the candidate limit is a driver-merged top-(k·rf) — only
-        // k·rf rows move, then one cheap re-sort of that driver-sized set.
-        // distanceRange applies to the EXACT distances only (after the
-        // re-rank): the returned `_distance` must honor the range, and a
-        // pre-cut on the approximate distance would mis-classify rows near
-        // the range bounds in both directions.
-        rangeFilter(
-          base0.orderBy(col(DistanceCol) +: tieBreakers: _*).limit(k * refineFactor)
-            .withColumn(DistanceCol,
-              distanceExpr(metric, col(f32Col), vectorLit(query))))
-          .orderBy(col(DistanceCol) +: tieBreakers: _*).limit(k)
-    }
+    flatSearchPacked(df, query, k, metric, tieBreakers, prefilter, refineWith,
+      refineFactor, distanceRange, l2DistanceF16(col(vecCol), q),
+      cosineDistanceF16(col(vecCol), q), dotProductF16(col(vecCol), q))
   }
 
   /** Flat search over PACKED bf16 vectors (reference
@@ -149,10 +114,23 @@ object Knn {
                      distanceRange: Option[(Double, Double)] = None): DataFrame = {
     import graft.functions.Bf16Functions._
     val q = bf16Lit(query)
+    flatSearchPacked(df, query, k, metric, tieBreakers, prefilter, refineWith,
+      refineFactor, distanceRange, l2DistanceBf16(col(vecCol), q),
+      cosineDistanceBf16(col(vecCol), q), dotProductBf16(col(vecCol), q))
+  }
+
+  /** The body [[flatSearchF16]] and [[flatSearchBf16]] share: the codec
+    * supplies its three distance columns over the packed bytes. */
+  private def flatSearchPacked(df: DataFrame, query: Array[Float], k: Int,
+                               metric: String, tieBreakers: Seq[Column],
+                               prefilter: Option[Column], refineWith: Option[String],
+                               refineFactor: Int,
+                               distanceRange: Option[(Double, Double)],
+                               l2: Column, cosine: Column, dot: Column): DataFrame = {
     val dist = metric match {
-      case "l2" => l2DistanceBf16(col(vecCol), q)
-      case "cosine" => cosineDistanceBf16(col(vecCol), q)
-      case "dot" => negate(dotProductBf16(col(vecCol), q))
+      case "l2" => l2
+      case "cosine" => cosine
+      case "dot" => negate(dot)
       case m => throw new IllegalArgumentException(s"unknown metric: $m")
     }
     val base0 = prefilter.map(df.filter).getOrElse(df).withColumn(DistanceCol, dist)
@@ -163,6 +141,13 @@ object Knn {
       case None =>
         rangeFilter(base0).orderBy(col(DistanceCol) +: tieBreakers: _*).limit(k)
       case Some(f32Col) =>
+        // candidate cut by the packed distance, exact re-rank by the f32
+        // column; the candidate limit is a driver-merged top-(k·rf) — only
+        // k·rf rows move, then one cheap re-sort of that driver-sized set.
+        // distanceRange applies to the EXACT distances only (after the
+        // re-rank): the returned `_distance` must honor the range, and a
+        // pre-cut on the approximate distance would mis-classify rows near
+        // the range bounds in both directions.
         rangeFilter(
           base0.orderBy(col(DistanceCol) +: tieBreakers: _*).limit(k * refineFactor)
             .withColumn(DistanceCol,

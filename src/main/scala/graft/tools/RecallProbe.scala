@@ -143,7 +143,7 @@ object RecallProbe {
       val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
       val tS = System.nanoTime()
       val served = queries.map { case (qid, q) =>
-        qid -> Knn.serveLocal(spark, hnswDir, q, 10, nprobes).map(_._1)
+        qid -> HnswIndex.serveLocal(spark, hnswDir, q, 10, nprobes).map(_._1)
       }.toMap
       val msS = (System.nanoTime() - tS) / 1e6 / queries.length
       val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
@@ -182,7 +182,7 @@ object RecallProbe {
       val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
       val tS = System.nanoTime()
       val served = queries.map { case (qid, q) =>
-        qid -> Knn.serveLocal(spark, sqDir, q, 10, nprobes)
+        qid -> HnswIndex.serveLocal(spark, sqDir, q, 10, nprobes)
       }.toMap
       val msS = (System.nanoTime() - tS) / 1e6 / queries.length
       val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length

@@ -1021,27 +1021,18 @@ class FtsSpec extends AnyFunSuite {
     Fts.mergeDeltaSegments(spark, dir, maxDeltaFiles = 16) // records base list
     val want = Fts.matchQuery(spark, dir, Seq("brown", "fox"), 20)
       .as[(Long, Double)].collect().toSeq
-    // SIMULATED CRASH: a completed merged segment sits in __mergetmp with
-    // its intent marker, but the delta deletes / renames never ran. Build
-    // it exactly as mergeDeltaSegments would: merged = rewrite of current
-    // deltas (here: merge everything beyond the base list of one file).
-    val postings = s"$dir/postings"
-    val fs = new org.apache.hadoop.fs.Path(postings)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val all = fs.listStatus(new org.apache.hadoop.fs.Path(postings))
-      .map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet")).sorted.toSeq
-    val retire = all.drop(1) // pretend these are the deltas being merged
-    spark.read.parquet(retire.map(f => s"$postings/$f"): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${postings}__mergetmp")
-    val marker = new org.apache.hadoop.fs.Path(s"${postings}__mergetmp/_MERGE_INTENT")
-    val out = fs.create(marker, true)
-    try out.write(retire.mkString("\n").getBytes("UTF-8")) finally out.close()
-    // next merge call finds the intent and finishes the swap forward
+    // CRASH after the merge's seal, before any retired delta is deleted or
+    // merged segment moved in
+    graft.index.StagedSwap.TestHooks.at = pt =>
+      if (pt == "after-seal") throw new IllegalStateException("crash")
+    try intercept[IllegalStateException](Fts.mergeDeltaSegments(spark, dir, maxDeltaFiles = 1))
+    finally graft.index.StagedSwap.TestHooks.at = _ => ()
+    val stage = new org.apache.hadoop.fs.Path(s"$dir/_stage")
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.exists(new org.apache.hadoop.fs.Path(stage, "_SEALED")))
+    // the next merge call finds the sealed stage and finishes it forward
     Fts.mergeDeltaSegments(spark, dir, maxDeltaFiles = 1000)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${postings}__mergetmp")),
-      "tmp consumed by recovery")
+    assert(!fs.exists(stage), "stage consumed by recovery")
     val after = Fts.matchQuery(spark, dir, Seq("brown", "fox"), 20)
       .as[(Long, Double)].collect().toSeq
     assert(after == want, "recovered index scores identical (no duplicated postings)")

@@ -1460,8 +1460,8 @@ class GraftCatalogSpec extends AnyFunSuite {
         rows.contains("fts_serve") && rows.contains("pq_serve") &&
         rows.contains("sq_serve"), rows.keySet)
       val sh0 = HnswIndex.serveHits.get(); val sm0 = HnswIndex.serveMisses.get()
-      graft.operators.Knn.serveLocal(s, dirs.head, q, 3, nprobes = 1) // cold
-      graft.operators.Knn.serveLocal(s, dirs.head, q, 3, nprobes = 1) // hit
+      graft.operators.HnswIndex.serveLocal(s, dirs.head, q, 3, nprobes = 1) // cold
+      graft.operators.HnswIndex.serveLocal(s, dirs.head, q, 3, nprobes = 1) // hit
       assert(HnswIndex.serveMisses.get() > sm0 && HnswIndex.serveHits.get() > sh0)
     } finally {
       s.conf.unset(HnswIndex.CacheBudgetKey)

@@ -45,14 +45,14 @@ class HnswSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val tracker = spark.sparkContext.statusTracker
       val before = tracker.getJobIdsForGroup(null).length
-      val served = Knn.serveLocal(spark, idx, q, 10, nprobes = 4)
+      val served = HnswIndex.serveLocal(spark, idx, q, 10, nprobes = 4)
       assert(tracker.getJobIdsForGroup(null).length == before,
         "warm serveLocal must not launch a Spark job")
       assert(served == batched, s"qid=$qid: $served != $batched")
     }
     // serveUnpersist releases the resident graphs; next query re-warms
     HnswIndex.serveUnpersist(idx)
-    val again = Knn.serveLocal(spark, idx, queryVec(3L), 5, nprobes = 4)
+    val again = HnswIndex.serveLocal(spark, idx, queryVec(3L), 5, nprobes = 4)
     assert(again.length == 5)
     // warming more partitions than the LRU budget refuses instead of
     // silently evicting what it just loaded (r14 review)
@@ -86,7 +86,7 @@ class HnswSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         val tracker = spark.sparkContext.statusTracker
         val before = tracker.getJobIdsForGroup(null).length
-        val served = Knn.serveLocal(spark, dir, q, 10, nprobes = 4)
+        val served = HnswIndex.serveLocal(spark, dir, q, 10, nprobes = 4)
         assert(tracker.getJobIdsForGroup(null).length == before,
           s"$storage/$metric: warm quantized serveLocal launched a Spark job")
         assert(served == batched, s"$storage/$metric qid=$qid: $served != $batched")
@@ -111,7 +111,7 @@ class HnswSpec extends AnyFunSuite {
       val batched = HnswIndex.search(spark, dir, q, 10, nprobes = 4,
           markDead = Some(markDead))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val served = Knn.serveLocal(spark, dir, q, 10, nprobes = 4,
+      val served = HnswIndex.serveLocal(spark, dir, q, 10, nprobes = 4,
         allowed = Some(pred))
       assert(served == batched, s"$storage: $served != $batched")
       assert(served.forall(e => pred(e._1)))
@@ -129,7 +129,7 @@ class HnswSpec extends AnyFunSuite {
         "vec_id", "embedding", dir, nlist = 4, m = 16, efConstruction = 64)
       HnswIndex.serveUnpersist(dir)
       val q = queryVec(3L)
-      val servedOld = Knn.serveLocal(spark, dir, q, 5, nprobes = 4)
+      val servedOld = HnswIndex.serveLocal(spark, dir, q, 5, nprobes = 4)
       assert(servedOld.forall(_._1 < 250))
       // rebuild in place over a disjoint id range with NO explicit
       // serveUnpersist: the on-disk epoch check must purge the dead
@@ -138,7 +138,7 @@ class HnswSpec extends AnyFunSuite {
         embeddings.filter($"vec_id" >= 250 && $"vec_id" < 500)
           .select($"vec_id", $"embedding"),
         "vec_id", "embedding", dir, nlist = 4, m = 16, efConstruction = 64)
-      val servedNew = Knn.serveLocal(spark, dir, q, 5, nprobes = 4)
+      val servedNew = HnswIndex.serveLocal(spark, dir, q, 5, nprobes = 4)
       assert(servedNew.forall(e => e._1 >= 250 && e._1 < 500),
         s"stale serve cache answered for the dropped graph: $servedNew")
       val batched = HnswIndex.search(spark, dir, q, 5, nprobes = 4)
@@ -223,7 +223,7 @@ class HnswSpec extends AnyFunSuite {
     assert(HnswIndex.cachedPayloadType(dir)
       .contains(org.apache.spark.sql.types.BinaryType))
     // node codes live in residual space (recorded; beams rank per-pid)
-    assert(graft.operators.IvfIndex.readPqVariant(spark, dir) == "residual")
+    assert(graft.operators.IvfIndex.vectorMeta(spark, dir).pqVariant == "residual")
     // the persisted codes are pqM bytes — d/pqM× smaller than the d-byte SQ
     // codes and 4·d/pqM× smaller than the float vectors
     val d = embeddings.head().getSeq[Float](
@@ -260,7 +260,7 @@ class HnswSpec extends AnyFunSuite {
     HnswIndex.build(embeddings.select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir, nlist = 4, m = 16, efConstruction = 64,
       storage = "pq", pqM = 8, pqK = 16, pqBits = 4)
-    assert(graft.operators.IvfIndex.readPqBits(spark, dir) == 4)
+    assert(graft.operators.IvfIndex.vectorMeta(spark, dir).pqBits == 4)
     // nibble-packed: 4 bytes per node instead of 8
     val codeLens = spark.read.parquet(s"$dir/graph")
       .select(length(col("codes"))).distinct().as[Int].collect().toSeq
@@ -533,25 +533,28 @@ class HnswSpec extends AnyFunSuite {
       fs.listStatus(p).map(_.getPath.getName)
         .filter(n => n.startsWith("graph_delta_") &&
           n.stripPrefix("graph_delta_").forall(_.isDigit)).sorted.toSeq
+    val fresh2 = fresh.withColumn("vec_id", $"vec_id" + lit(10000L))
+    GraftTable.write(fresh2, t, "append")
+    HnswIndex.optimizeForTable(spark, t, "vec_id", "embedding", ix, maxDeltas = 8)
     val gen = deltas()
-    assert(gen.nonEmpty)
-    // SIMULATED CRASH: the merged graph sits fully-written in the tmp dir
-    // with its marker, but source deletes / the swap never ran. Use the
-    // existing generation's graph AS the merged product (content-valid).
-    val tmp = new org.apache.hadoop.fs.Path(p, "graph_delta_merged__tmp")
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(p, gen.head),
-      fs, tmp, false, spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(tmp, "_MERGED_SOURCES")
-    val out = fs.create(marker, true)
-    try out.write(s"${gen.head}\n${gen.head}".getBytes("UTF-8")) finally out.close()
-    // search triggers the roll-forward: tmp renamed into the head slot
+    assert(gen.size == 2)
+    // CRASH after the merge's first roll-forward step: the newer source
+    // generation is deleted, the merged graph not yet in the oldest slot
+    graft.index.StagedSwap.TestHooks.at = pt =>
+      if (pt == "after-step-0") throw new IllegalStateException("crash")
+    try intercept[IllegalStateException](
+      HnswIndex.optimizeForTable(spark, t, "vec_id", "embedding", ix, maxDeltas = 1))
+    finally graft.index.StagedSwap.TestHooks.at = _ => ()
+    val stage = new org.apache.hadoop.fs.Path(p, "_stage")
+    assert(fs.exists(stage) && deltas() == gen.take(1))
+    // search triggers the roll-forward: the merged graph lands in the head slot
     val q = queryVec(5L)
     val r = HnswIndex.searchCombined(spark, t, ix, "vec_id", "embedding", q,
         k = 10, nprobes = 4, ef = 600, refineFactor = 100, fastSearch = true)
       .select("vec_id").as[Long].collect().toSeq
-    assert(!fs.exists(tmp), "tmp consumed by recovery")
-    assert(deltas() == gen, "generation slot restored under its numeric name")
-    val exact = Knn.flatSearch(embeddings.union(fresh), "embedding", q, 10,
+    assert(!fs.exists(stage), "stage consumed by recovery")
+    assert(deltas() == gen.take(1), "merged generation under the oldest numeric name")
+    val exact = Knn.flatSearch(embeddings.union(fresh).union(fresh2), "embedding", q, 10,
         "l2", Seq($"vec_id"))
       .select("vec_id").as[Long].collect().toSeq
     assert(r == exact, s"post-recovery search exact: $r vs $exact")
@@ -567,27 +570,29 @@ class HnswSpec extends AnyFunSuite {
       .withColumn("vec_id", $"vec_id" + lit(10000L))
     GraftTable.write(fresh, t, "append")
     HnswIndex.optimizeForTable(spark, t, "vec_id", "embedding", ix, maxDeltas = 8)
+    val fresh2 = fresh.withColumn("vec_id", $"vec_id" + lit(10000L))
+    GraftTable.write(fresh2, t, "append")
+    HnswIndex.optimizeForTable(spark, t, "vec_id", "embedding", ix, maxDeltas = 8)
     val p = new org.apache.hadoop.fs.Path(ix)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val gen = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("graph_delta_")).head
-    // crashed merge: READY-marked tmp holding PRE-REBUILD delta rows
-    val tmp = new org.apache.hadoop.fs.Path(p, "graph_delta_merged__tmp")
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(p, gen),
-      fs, tmp, false, spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(tmp, "_MERGED_SOURCES")
-    val out = fs.create(marker, true)
-    try out.write(s"$gen\n$gen".getBytes("UTF-8")) finally out.close()
-    // FULL rebuild collapses the deltas — and must take the stale tmp with
-    // them, or the next search's recovery would resurrect pre-rebuild rows
+    // crashed merge: a SEALED stage holding PRE-REBUILD delta rows
+    graft.index.StagedSwap.TestHooks.at = pt =>
+      if (pt == "after-seal") throw new IllegalStateException("crash")
+    try intercept[IllegalStateException](
+      HnswIndex.optimizeForTable(spark, t, "vec_id", "embedding", ix, maxDeltas = 1))
+    finally graft.index.StagedSwap.TestHooks.at = _ => ()
+    val stage = new org.apache.hadoop.fs.Path(p, "_stage/_SEALED")
+    assert(fs.exists(stage))
+    // FULL rebuild collapses the deltas — and must take the stale stage
+    // with them, or the next search's recovery would land pre-rebuild rows
     // as a live generation over the fresh base graph
     HnswIndex.buildForTable(spark, t, "vec_id", "embedding", ix, nlist = 4)
-    assert(!fs.exists(tmp), "rebuild must discard the crashed merge tmp")
+    assert(!fs.exists(stage.getParent), "rebuild must discard the crashed merge stage")
     val q = queryVec(5L)
     val r = HnswIndex.searchCombined(spark, t, ix, "vec_id", "embedding", q,
         k = 10, nprobes = 4, ef = 600, refineFactor = 100, fastSearch = true)
       .select("vec_id").as[Long].collect().toSeq
-    val exact = Knn.flatSearch(embeddings.union(fresh), "embedding", q, 10,
+    val exact = Knn.flatSearch(embeddings.union(fresh).union(fresh2), "embedding", q, 10,
         "l2", Seq($"vec_id"))
       .select("vec_id").as[Long].collect().toSeq
     assert(r == exact, s"post-rebuild search exact: $r vs $exact")

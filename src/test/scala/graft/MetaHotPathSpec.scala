@@ -9,7 +9,7 @@ import graft.format.GraftTable
 
 /** r17 metadata hot-path optimizations: the latest-version hint (forward
   * probe instead of a directory listing per table op) and the FTS
-  * optimize intent marker (O(delta) termstats with crash self-heal).
+  * optimize's O(delta) termstats (crash-safe through its staged commit).
   * Every test here is a STALENESS or CRASH case — the fast paths must
   * never serve an answer the slow paths would not. */
 class MetaHotPathSpec extends AnyFunSuite {
@@ -129,9 +129,9 @@ class MetaHotPathSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("fts_delta_").toString
     Fts.buildIndex(docs(0 until 40), "id", "text", dir)
     Fts.optimizeIndex(docs(40 until 60), "id", "text", dir)
-    val marker = new Path(dir, Fts.OptimizeIntentMarker)
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(marker), "a completed optimize must clear its intent marker")
+    val stage = new Path(dir, "_stage")
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(stage), "a completed optimize must leave no stage")
     val ref = Files.createTempDirectory("fts_ref_").toString
     Fts.buildIndex(docs(0 until 60), "id", "text", ref)
     def ts(p: String): Map[String, Double] =
@@ -147,26 +147,28 @@ class MetaHotPathSpec extends AnyFunSuite {
       (i.toLong, s"token$i shared common text piece ${i % 3}")).toDF("id", "text")
     val dir = Files.createTempDirectory("fts_crash_").toString
     Fts.buildIndex(docs(0 until 40), "id", "text", dir)
-    // crash between the delta appends and the termstats swap
-    Fts.FtsTestHooks.beforeStatsSwap = _ => throw new RuntimeException("boom")
+    // crash between the delta postings landing and the termstats swap
+    // (steps: blockstats, docstats, postings, termstats, meta)
+    graft.index.StagedSwap.TestHooks.at = pt =>
+      if (pt == "after-step-2") throw new RuntimeException("boom")
     try intercept[Exception] {
       Fts.optimizeIndex(docs(40 until 60), "id", "text", dir)
-    } finally Fts.FtsTestHooks.beforeStatsSwap = _ => ()
-    val marker = new Path(dir, Fts.OptimizeIntentMarker)
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(marker),
-      "a crashed optimize must leave the intent marker for the next run")
-    // next batch detects the marker and recomputes from the merged
-    // postings — the orphaned 40..60 delta is re-counted, not lost
+    } finally graft.index.StagedSwap.TestHooks.at = _ => ()
+    val seal = new Path(dir, "_stage/_SEALED")
+    val fs = seal.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.exists(seal),
+      "a crashed optimize must leave its sealed stage for the next run")
+    // the next batch finishes the sealed stage first — the 40..60 delta
+    // lands with its stats, not lost and not counted twice
     Fts.optimizeIndex(docs(60 until 70), "id", "text", dir)
-    assert(!fs.exists(marker))
+    assert(!fs.exists(seal.getParent))
     val ref = Files.createTempDirectory("fts_crashref_").toString
     Fts.buildIndex(docs(0 until 70), "id", "text", ref)
     def ts(p: String): Map[String, Double] =
       spark.read.parquet(s"$p/termstats").collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(ts(dir) == ts(ref),
-      "the self-heal recompute must cover the orphaned delta exactly")
+      "the rolled-forward stats must cover both deltas exactly")
   }
 
   test("trigram_set matches the r16 higher-order pipeline bit for bit") {

@@ -40,7 +40,7 @@ class PqSpec extends AnyFunSuite {
       .select(PqIndex.CodeCol).as[Array[Byte]].collect()
     assert(codes.forall(_.length == 4), "4-bit m=8 codes must pack to 4 bytes")
     // the recorded width round-trips and search uses it: exact == flat
-    assert(graft.operators.IvfIndex.readPqBits(spark, dir) == 4)
+    assert(graft.operators.IvfIndex.vectorMeta(spark, dir).pqBits == 4)
     val q = queryVec(0L)
     val full = PqIndex.search(spark, dir, "vec_id", "embedding", q, 10,
       nprobes = 8, refineFactor = 100).select("vec_id").as[Long].collect().toSeq
@@ -165,8 +165,8 @@ class PqSpec extends AnyFunSuite {
     PqIndex.build(embeddings, "vec_id", "embedding", rawIdx, nlist = 8, m = 8, k = 16,
       residual = false)
     val resIdx = buildIdx() // default: residual
-    assert(graft.operators.IvfIndex.readPqVariant(spark, rawIdx) == "raw")
-    assert(graft.operators.IvfIndex.readPqVariant(spark, resIdx) == "residual")
+    assert(graft.operators.IvfIndex.vectorMeta(spark, rawIdx).pqVariant == "raw")
+    assert(graft.operators.IvfIndex.vectorMeta(spark, resIdx).pqVariant == "residual")
 
     def meanRecall(idx: String): Double = {
       val recalls = (0L until 15L).map { qid =>
@@ -201,7 +201,7 @@ class PqSpec extends AnyFunSuite {
   test("legacy meta without a pq field reads as raw") {
     val dir = Files.createTempDirectory("pq_legacy_").toString
     graft.operators.IvfIndex.writeVectorMeta(spark, dir, "l2")
-    assert(graft.operators.IvfIndex.readPqVariant(spark, dir) == "raw")
+    assert(graft.operators.IvfIndex.vectorMeta(spark, dir).pqVariant == "raw")
   }
 
   test("searchCombined: deletes + fresh appends == flat over the live set") {

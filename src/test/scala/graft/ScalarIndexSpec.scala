@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.format.GraftTable
-import graft.index.ScalarIndex
+import graft.index.{ScalarIndex, StagedSwap}
 
 class ScalarIndexSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -113,30 +113,36 @@ class ScalarIndexSpec extends AnyFunSuite {
     ScalarIndex.buildNgram(spark, t, "payload", idx)
     val truth = ScalarIndex.containsViaNgram(spark, t, idx, "payload", "number 13")
       .select("id").as[Long].collect().toSet
-    val conf = spark.sessionState.newHadoopConf()
-    val dirP = new org.apache.hadoop.fs.Path(s"$idx/ngram_payload")
-    val fs = dirP.getFileSystem(conf)
-    val tmpP = new org.apache.hadoop.fs.Path(s"$idx/ngram_payload__compacttmp")
-    val oldP = new org.apache.hadoop.fs.Path(s"$idx/ngram_payload__old")
-    // FORWARD crash: compacted output fully written (READY-marked tmp),
-    // live dir renamed aside, replacement rename never ran
-    org.apache.hadoop.fs.FileUtil.copy(fs, dirP, fs, tmpP, false, conf)
-    val out = fs.create(new org.apache.hadoop.fs.Path(tmpP, "_GRAFT_COMPACT_READY"), true)
-    try out.write("1".getBytes("UTF-8")) finally out.close()
-    assert(fs.rename(dirP, oldP))
-    graft.format.GraftScalarIndexRule.invalidateCache()
-    val got = ScalarIndex.containsViaNgram(spark, t, idx, "payload", "number 13")
-      .select("id").as[Long].collect().toSet
-    assert(got == truth, "roll-forward recovery must serve exact results")
-    assert(fs.exists(dirP) && !fs.exists(tmpP) && !fs.exists(oldP),
-      "recovery consumes the tmp and the set-aside dir")
-    // BACKWARD crash: dir renamed aside with NO ready-marked replacement
-    assert(fs.rename(dirP, oldP))
-    graft.format.GraftScalarIndexRule.invalidateCache()
-    val got2 = ScalarIndex.containsViaNgram(spark, t, idx, "payload", "number 13")
-      .select("id").as[Long].collect().toSet
-    assert(got2 == truth, "roll-back recovery must serve exact results")
-    assert(fs.exists(dirP) && !fs.exists(oldP))
+    // a few appends leave more segment files than the bound below
+    for (i <- 0 until 3) {
+      GraftTable.write(spark.range(1000 + 10 * i, 1010 + 10 * i).toDF("id")
+        .withColumn("category", lit("cat-0"))
+        .withColumn("payload", concat(lit("payload text number "), col("id"))), t, "append")
+      ScalarIndex.optimizeNgram(spark, t, "payload", idx)
+    }
+    val stage = new org.apache.hadoop.fs.Path(s"$idx/ngram_payload/_stage")
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
+    def compactCrashingAt(point: String): Unit = {
+      StagedSwap.TestHooks.at = pt => if (pt == point) throw new IllegalStateException("crash")
+      try intercept[IllegalStateException](
+        ScalarIndex.optimizeNgram(spark, t, "payload", idx, maxSegmentFiles = 4))
+      finally StagedSwap.TestHooks.at = _ => ()
+      graft.format.GraftScalarIndexRule.invalidateCache()
+    }
+    def lookup(): Set[Long] =
+      ScalarIndex.containsViaNgram(spark, t, idx, "payload", "number 13")
+        .select("id").as[Long].collect().toSet
+    // FORWARD crash: the compacted files moved in, no old file deleted yet
+    compactCrashingAt("after-step-0")
+    assert(lookup() == truth, "roll-forward recovery must serve exact results")
+    assert(!fs.exists(stage), "the lookup finishes the sealed stage")
+    // BACKWARD crash: the compacted output is staged but never sealed —
+    // the lookup leaves it alone, the next optimize throws it away
+    compactCrashingAt("before-seal")
+    assert(lookup() == truth, "an unsealed stage must not change results")
+    assert(fs.exists(stage), "a reader must not throw away an unsealed stage")
+    ScalarIndex.optimizeNgram(spark, t, "payload", idx, maxSegmentFiles = 4)
+    assert(!fs.exists(stage) && lookup() == truth)
   }
 
   test("ngram short-needle falls back to full scan semantics") {
